@@ -9,7 +9,6 @@ from __future__ import annotations
 import re
 
 import duckdb
-import numpy as np
 
 # ---------------------------------------------------------------------------
 # cfs_daily_etl: a DuckDB recompute of the aggregate must hash-match.
@@ -184,53 +183,3 @@ def check_curation(
     )
     return ok, detail, recall
 
-
-# ---------------------------------------------------------------------------
-# index_serve_mixed: exhaustive probes equal brute force; the view
-# equals a recompute.
-# ---------------------------------------------------------------------------
-
-
-def brute_topk_scores(vecs: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """Cosine of every row of ``vecs`` with ``q``, in float64."""
-    m = vecs.astype(np.float64)
-    qd = q.astype(np.float64)
-    return (m @ qd) / (np.linalg.norm(m, axis=1) * np.linalg.norm(qd))
-
-
-def check_topk(
-    got_ids: list[int],
-    ids: np.ndarray,
-    vecs: np.ndarray,
-    q: np.ndarray,
-    k: int,
-    tol: float = 1e-9,
-) -> bool:
-    """``got_ids`` (in rank order) must be a brute-force top-k: k distinct
-    live ids whose scores are non-increasing and none below the k-th
-    best score (up to float summation noise ``tol``)."""
-    scores = brute_topk_scores(vecs, q)
-    want_n = min(k, len(ids))
-    if len(got_ids) != want_n or len(set(got_ids)) != want_n:
-        return False
-    pos = {int(i): j for j, i in enumerate(ids)}
-    if any(int(i) not in pos for i in got_ids):
-        return False
-    kth = np.sort(scores)[::-1][want_n - 1]
-    got = [scores[pos[int(i)]] for i in got_ids]
-    return all(s >= kth - tol for s in got) and all(
-        a >= b - tol for a, b in zip(got, got[1:])
-    )
-
-
-def check_view(view: dict[int, tuple[int, int]], live: dict[int, tuple[int, int]]) -> bool:
-    """``view`` maps group -> (count, sum v); ``live`` maps id -> (g, v).
-    The view must equal a from-scratch aggregate of the live rows."""
-    want: dict[int, list[int]] = {}
-    for g, v in live.values():
-        acc = want.setdefault(int(g), [0, 0])
-        acc[0] += 1
-        acc[1] += int(v)
-    return {g: tuple(a) for g, a in want.items()} == {
-        int(g): (int(c), int(s)) for g, (c, s) in view.items()
-    }

@@ -3,7 +3,7 @@
 Every generator is a pure function of its seed and size arguments: the
 same seed gives byte-identical inputs (pinned by tests/test_perfbench.py).
 The engine only ever sees what these functions return; ground truth
-(planted clusters, the op sequence's expected effects) stays here.
+(the planted near-duplicate clusters) stays here.
 """
 
 from __future__ import annotations
@@ -211,82 +211,3 @@ def corpus(seed: int, n_base: int) -> Corpus:
     )
 
 
-# ---------------------------------------------------------------------------
-# index_serve_mixed: an embedding corpus plus a seeded op sequence.
-# ---------------------------------------------------------------------------
-
-SERVE_DIM = 32
-SERVE_GROUPS = 16
-
-
-@dataclass
-class ServeInputs:
-    base: pa.Table          # id, embedding, g, v
-    ops: list[tuple]        # ("probe", qid, vec) | ("write", changes) | ("point", id)
-    centers: np.ndarray
-
-
-def _serve_rows(rng, centers, ids):
-    n = len(ids)
-    c = centers[rng.integers(0, len(centers), n)]
-    vec = (c + 0.35 * rng.standard_normal((n, SERVE_DIM))).astype(np.float32)
-    return {
-        "id": np.asarray(ids, dtype=np.int64),
-        "embedding": vec,
-        "g": rng.integers(0, SERVE_GROUPS, n).astype(np.int32),
-        "v": rng.integers(0, 1000, n).astype(np.int64),
-    }
-
-
-def _serve_table(rows) -> pa.Table:
-    return pa.table({
-        "id": pa.array(rows["id"], pa.int64()),
-        "embedding": pa.array(list(rows["embedding"]), pa.list_(pa.float32())),
-        "g": pa.array(rows["g"], pa.int32()),
-        "v": pa.array(rows["v"], pa.int64()),
-    })
-
-
-def serve_inputs(
-    seed: int,
-    n_rows: int,
-    n_ops: int,
-    write_every: int = 8,
-    point_every: int = 4,
-    batch: int = 60,
-) -> ServeInputs:
-    """Base corpus of ``n_rows`` clustered vectors and ``n_ops`` ops in a
-    fixed order: every ``write_every``-th op is a write (a change batch
-    of ``batch`` rows: ~half upserts of live ids, ~a quarter inserts of
-    new ids, the rest deletes), every ``point_every``-th other op is a
-    point read of a live id, and the rest are top-k probes. Ids in each
-    op are drawn from the live set as it stands after every earlier op,
-    so any prefix of the sequence is valid on its own."""
-    rng = np.random.default_rng([seed, 3])
-    centers = rng.standard_normal((24, SERVE_DIM))
-    base = _serve_rows(rng, centers, range(n_rows))
-    live = list(range(n_rows))
-    next_id = n_rows
-    ops: list[tuple] = []
-    for i in range(n_ops):
-        if i % write_every == write_every - 1:
-            n_up, n_ins = batch // 2, batch // 4
-            n_del = batch - n_up - n_ins
-            # churn is key-clustered (a contiguous run of live ids), as
-            # CDC batches of recent records are
-            lo = int(rng.integers(0, len(live) - (n_up + n_del) + 1))
-            picked = rng.permutation(live[lo:lo + n_up + n_del])
-            up_ids = [int(x) for x in picked[:n_up]]
-            del_ids = [int(x) for x in picked[n_up:]]
-            ins_ids = list(range(next_id, next_id + n_ins))
-            next_id += n_ins
-            rows = _serve_rows(rng, centers, up_ids + ins_ids)
-            gone = set(del_ids)
-            live = [x for x in live if x not in gone] + ins_ids
-            ops.append(("write", _serve_table(rows), sorted(del_ids)))
-        elif i % point_every == point_every - 1:
-            ops.append(("point", int(live[int(rng.integers(0, len(live)))])))
-        else:
-            q = centers[rng.integers(0, len(centers))] + 0.35 * rng.standard_normal(SERVE_DIM)
-            ops.append(("probe", i, q.astype(np.float32)))
-    return ServeInputs(base=_serve_table(base), ops=ops, centers=centers)

@@ -2,17 +2,19 @@
 
     python3 perfbench/run.py --workload cfs_daily_etl --seed 1 --seconds 20 --trace 0
 
-Runs one seeded workload (see BENCHMARK.json) on ``local[nproc]`` from
-this process with one closed-loop client, checks the engine's outputs,
-prints a human-readable summary and, as the last line of stdout, one
-JSON object: ``{"correct", "attempted", "failed", "metrics"}``. With
-``--trace 0`` the metrics are the end-to-end ones; with ``--trace 1``
-ops alternate between traced and untraced and the metrics are the
-per-layer ones (plus the tracing overhead).
+Runs one seeded workload (see BENCHMARK.json and perfbench/README.md)
+on ``local[nproc]`` from this process with one closed-loop client,
+checks the engine's outputs, prints a human-readable summary and, as
+the last line of stdout, one JSON object with the keys ``correct``,
+``attempted``, ``failed`` and ``metrics``. With ``--trace 0`` the
+metrics are the end-to-end ones; with ``--trace 1`` jobs alternate
+between traced and untraced and the metrics are the per-layer ones,
+including the tracing overhead.
 
-All generated inputs, tables, document-store output and spans live in
-a scratch directory under ``.perfbench_tmp/`` in the checkout, which
-is also the Spark driver's working directory; it is removed on exit.
+Generated inputs and job outputs live in a scratch directory under
+``.perfbench_tmp/`` in the checkout, which is also the Spark driver's
+working directory; it is removed on exit. A traced run leaves its spans
+in ``.perfbench_tmp/spans-<workload>-seed<seed>.jsonl``.
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ import json
 import os
 import shutil
 import statistics
+import subprocess
 import sys
 import time
 import traceback
@@ -29,11 +32,11 @@ import traceback
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "cincinnati_police_calls_for_service_etl_using_python_dask_spark"
 SETUP_REPS = 3
+MIN_JOBS = 3  # measured jobs per run, whatever --seconds says
 END_TO_END = [
     ("setup_s", "s"),
     ("job_s", "s"),
-    ("op_p50_ms", "ms"),
-    ("ops_per_s", "ops/s"),
+    ("rows_per_s", "rows/s"),
     ("peak_rss_mb", "MB"),
 ]
 
@@ -64,14 +67,16 @@ def _start_spark(scratch: str):
 
     cpus = len(os.sched_getaffinity(0))
     jtmp = os.path.join(scratch, "jvm-tmp")
-    os.makedirs(jtmp, exist_ok=True)
+    os.makedirs(jtmp)
     spark = get_spark(
         app_name="perfbench",
         master=f"local[{cpus}]",
         shuffle_partitions=2 * cpus,
         extra_conf={
             "spark.local.dir": os.path.join(scratch, "spark-local"),
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={jtmp}",
+            # a fixed young generation: G1's adaptive sizing otherwise
+            # swings the JVM's resident set ±15% from run to run
+            "spark.driver.extraJavaOptions": f"-Xmn512m -Djava.io.tmpdir={jtmp}",
             "spark.ui.showConsoleProgress": "false",
             "spark.sql.warehouse.dir": os.path.join(scratch, "warehouse"),
         },
@@ -80,22 +85,46 @@ def _start_spark(scratch: str):
     return spark
 
 
-def measure(args, scratch: str) -> tuple[dict, list[str]]:
-    from perfbench.trace import Tracer
-    from perfbench.workloads import LAYER_METRICS, WORKLOADS
+def _stop_spark(spark) -> None:
+    """Stop the session and wait for the JVM to exit: it exits when its
+    stdin pipe closes (and its Python workers with it)."""
+    from pyspark import SparkContext
 
+    gateway = SparkContext._gateway
+    spark.stop()
+    if gateway is None:
+        return
+    gateway.shutdown()
+    proc = gateway.proc
+    proc.stdin.close()
+    try:
+        proc.wait(timeout=60)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        proc.wait()
+    SparkContext._gateway = None
+    SparkContext._jvm = None
+
+
+def measure(args, scratch: str) -> tuple[dict, list[str]]:
     t0 = time.perf_counter()
     spark = _start_spark(scratch)
     session_s = time.perf_counter() - t0
-    tr = Tracer(spark, enabled=False)
-    if args.trace:
-        tr = Tracer(spark, enabled=True)
-        tr.enabled = False
-    wl = WORKLOADS[args.workload](spark, args.seed, tr)
-    wl.trace_init()
+    try:
+        return _measure(spark, session_s, args, scratch)
+    finally:
+        _stop_spark(spark)
 
-    # set-up: generation + table/index initialisation, repeated into
-    # fresh directories; the last one is used
+
+def _measure(spark, session_s: float, args, scratch: str) -> tuple[dict, list[str]]:
+    from perfbench.trace import Tracer
+    from perfbench.workloads import LAYER_METRICS, WORKLOADS
+
+    tr = Tracer(spark, capture=bool(args.trace))
+    wl = WORKLOADS[args.workload](spark, args.seed, tr)
+
+    # set-up: input generation, repeated into fresh directories; the
+    # last one is used
     setups = []
     for r in range(SETUP_REPS):
         work = os.path.join(scratch, f"setup{r}")
@@ -106,39 +135,32 @@ def measure(args, scratch: str) -> tuple[dict, list[str]]:
         if r:
             shutil.rmtree(os.path.join(scratch, f"setup{r - 1}"))
 
-    i = 0
+    # warm-up: one job on part of the input starts every Python worker
+    # and compiles the hot paths; one full job then settles the JIT
     t = time.perf_counter()
-    for _ in range(wl.WARMUP):
-        wl.op(i)
-        i += 1
+    wl.op(0, warmup=True)
+    wl.op(1)
     warmup_s = time.perf_counter() - t
 
-    lat: dict[str, list[float]] = {}
-    traced_lat: dict[str, list[float]] = {}
-    traced_ops: list[tuple[int, str]] = []
-    seen: dict[str, int] = {}
+    jobs: list[float] = []
+    traced_jobs: list[float] = []
     attempted = failed = 0
     errors: list[str] = []
     start = time.perf_counter()
-    while time.perf_counter() - start < args.seconds or attempted < wl.MIN_OPS:
-        kind = wl.kind_of(i)
-        seen[kind] = seen.get(kind, 0) + 1
-        # trace run: every other op of each kind is traced
-        traced = bool(args.trace) and seen[kind] % 2 == 0
+    while time.perf_counter() - start < args.seconds or attempted < MIN_JOBS:
+        # trace run: every other job is traced
+        traced = bool(args.trace) and attempted % 2 == 1
         tr.enabled = traced
-        if traced:
-            traced_ops.append((tr.next_op(), kind))
+        tr.op += 1
         attempted += 1
         try:
-            kind, dt = wl.op(i)
-            (traced_lat if traced else lat).setdefault(kind, []).append(dt)
+            dt = wl.op(1 + attempted)
+            (traced_jobs if traced else jobs).append(dt)
         except Exception:
             failed += 1
             errors.append(traceback.format_exc(limit=3))
-        i += 1
     wall = time.perf_counter() - start
     tr.enabled = False
-    done = attempted - failed
 
     t = time.perf_counter()
     try:
@@ -151,67 +173,62 @@ def measure(args, scratch: str) -> tuple[dict, list[str]]:
     attempted += 1  # the output check counts as one attempt
 
     med = statistics.median
-    jobs = lat.get(wl.job_kind, [])
-    primary = lat.get(wl.primary_kind, [])
     job_s = med(jobs) if jobs else float("nan")
+    jvm_pid = spark.sparkContext._jvm.ProcessHandle.current().pid()
     values = {
         "setup_s": session_s + med(setups),
         "job_s": job_s,
-        "op_p50_ms": med(primary) * 1e3 if primary else float("nan"),
-        "ops_per_s": done / wall,
-        "peak_rss_mb": _hwm_mb("self") + _hwm_mb(spark.sparkContext._jvm.ProcessHandle.current().pid()),
+        "rows_per_s": wl.input_rows / job_s,
+        "peak_rss_mb": _hwm_mb("self") + _hwm_mb(jvm_pid),
     }
     lines = [
         f"workload {args.workload} seed {args.seed}: {attempted} attempted, "
         f"{failed} failed, check {'ok' if ok else 'FAILED'}: {detail}",
-        f"setup: session {session_s:.3f} s, reps "
+        f"setup: session {session_s:.3f} s, generation reps "
         + ", ".join(f"{s:.3f}" for s in setups) + " s",
         f"phases: warm-up {warmup_s:.1f} s, measured {wall:.1f} s, "
         f"check {check_s:.1f} s",
+        f"input: {wl.input_rows} {wl.rows_name}, {wl.input_bytes} parquet bytes per job",
+        f"failed_ratio {failed / attempted:.4f} ratio",
     ]
-    for kind, xs in sorted(lat.items()):
-        tail, pct = tail_percentile(xs)
+    if jobs:
+        tail, pct = tail_percentile(jobs)
         lines.append(
-            f"{kind}: n={len(xs)} p50 {med(xs) * 1e3:.1f} ms, "
-            f"p{pct:.0f} {tail * 1e3:.1f} ms"
+            f"job: n={len(jobs)} p50 {job_s:.3f} s, p{pct:.0f} {tail:.3f} s "
+            f"(in order: {', '.join(f'{x:.3f}' for x in jobs)})"
         )
-    if wl.input_rows_name:
-        lines.append(
-            f"rows_per_s {wl.input_units / job_s:.1f} {wl.input_rows_name}/s "
-            f"({wl.input_units} {wl.input_rows_name} per job)"
-        )
-    lines.append(f"failed_ratio {failed / attempted:.4f} ratio")
     lines += [e.rstrip() for e in errors[:3]]
 
     if not args.trace:
         metrics = {n: {"value": values[n], "unit": u} for n, u in END_TO_END}
-        lines += [f"{n} {values[n]:.4f} {u}" for n, u in END_TO_END]
     else:
         layer, blocking = wl.layer_metrics()
-        # session counters over the spans of traced primary ops
-        per_op: dict[int, dict[str, float]] = {}
-        prim = {op for op, kind in traced_ops if kind == wl.primary_kind}
+        # session counters per traced job, over its non-prefix spans
+        per_job: dict[int, dict[str, int]] = {}
         for s in tr.spans:
-            if s.op in prim and not s.name.startswith("prefix:"):
-                acc = per_op.setdefault(s.op, {"jobs": 0, "tasks": 0, "gc_ms": 0})
+            if not s.name.startswith("prefix:"):
+                acc = per_job.setdefault(s.op, {"jobs": 0, "tasks": 0, "gc_ms": 0})
                 for k in acc:
                     acc[k] += s.counts.get(k, 0)
-        tjobs = traced_lat.get(wl.job_kind, [])
-        trace_job_s = med(tjobs) if tjobs else 0.0
+        accs = list(per_job.values()) or [{"jobs": 0, "tasks": 0, "gc_ms": 0}]
+        trace_job_s = med(traced_jobs) if traced_jobs else 0.0
         layer.update({
-            "session.jobs_per_op": med([a["jobs"] for a in per_op.values()] or [0]),
-            "session.tasks_per_op": med([a["tasks"] for a in per_op.values()] or [0]),
-            "session.gc_s": med([a["gc_ms"] for a in per_op.values()] or [0]) / 1e3,
+            "session.jobs_per_op": med([a["jobs"] for a in accs]),
+            "session.tasks_per_op": med([a["tasks"] for a in accs]),
+            "session.gc_s": med([a["gc_ms"] for a in accs]) / 1e3,
             "trace.job_s": trace_job_s,
-            "trace.overhead_s": trace_job_s - job_s if jobs and tjobs else 0.0,
+            "trace.overhead_s": trace_job_s - job_s if jobs and traced_jobs else 0.0,
             "trace.self_coverage": blocking / trace_job_s if trace_job_s else 0.0,
         })
         metrics = {
             n: {"value": float(layer.get(n, 0.0)), "unit": u} for n, u in LAYER_METRICS
         }
-        lines += [f"{n} {metrics[n]['value']:.4f} {u}" for n, u in LAYER_METRICS]
-        tr.dump(os.path.join(scratch, "spans.jsonl"))
-    spark.stop()
+        spans = os.path.join(
+            os.path.dirname(scratch), f"spans-{args.workload}-seed{args.seed}.jsonl"
+        )
+        tr.dump(spans)
+        lines.append(f"spans: {os.path.relpath(spans, ROOT)}")
+    lines += [f"{n} {m['value']:.4f} {m['unit']}" for n, m in metrics.items()]
     result = {
         "correct": bool(ok) and failed == 0,
         "attempted": attempted,
@@ -241,6 +258,8 @@ def main(argv=None) -> int:
     base = os.path.join(ROOT, ".perfbench_tmp")
     scratch = os.path.join(base, f"{args.workload}-{os.getpid()}")
     os.makedirs(scratch)
+    # Python workers must import the package and the benchmark's own
+    # modules; every temp file stays inside the scratch directory
     os.environ["PYSPARK_PYTHON"] = sys.executable
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p

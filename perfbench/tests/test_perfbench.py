@@ -10,7 +10,6 @@ import os
 import re
 import sys
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -57,34 +56,6 @@ def test_corpus_generator_is_deterministic():
     assert (a.ids, a.texts, a.clusters) == (b.ids, b.texts, b.clusters)
     assert a.texts != gen.corpus(6, 300).texts
     assert a.clusters and sorted(a.ids) == list(range(1, len(a.ids) + 1))
-
-
-def test_serve_generator_is_deterministic():
-    a, b = gen.serve_inputs(9, 500, 40), gen.serve_inputs(9, 500, 40)
-    assert _ipc(a.base) == _ipc(b.base)
-    assert len(a.ops) == len(b.ops) == 40
-    for x, y in zip(a.ops, b.ops):
-        assert x[0] == y[0]
-        if x[0] == "write":
-            assert _ipc(x[1]) == _ipc(y[1]) and x[2] == y[2]
-        elif x[0] == "probe":
-            assert x[1] == y[1] and np.array_equal(x[2], y[2])
-        else:
-            assert x == y
-    kinds = {op[0] for op in a.ops}
-    assert kinds == {"probe", "write", "point"}
-
-
-def test_serve_ops_only_touch_live_ids():
-    inp = gen.serve_inputs(2, 300, 64)
-    live = set(inp.base.column("id").to_pylist())
-    for op in inp.ops:
-        if op[0] == "point":
-            assert op[1] in live
-        elif op[0] == "write":
-            ids = op[1].column("id").to_pylist()
-            assert set(op[2]) <= live and not set(op[2]) & set(ids)
-            live = (live - set(op[2])) | set(ids)
 
 
 # ---------------------------------------------------------------------------
@@ -171,26 +142,6 @@ def test_curation_check_accepts_ideal_and_rejects_planted_errors():
     )
     assert not checks.check_curation(
         texts, corpus.clusters, pairs, comps, kept + [dup], 0.7)[0]
-
-
-def test_topk_check_rejects_wrong_neighbour():
-    rng = np.random.default_rng(0)
-    ids = np.arange(100, 300)
-    vecs = rng.standard_normal((200, 8)).astype(np.float32)
-    q = rng.standard_normal(8).astype(np.float32)
-    order = np.argsort(-checks.brute_topk_scores(vecs, q), kind="stable")
-    best = [int(ids[j]) for j in order[:5]]
-    assert checks.check_topk(best, ids, vecs, q, 5)
-    assert not checks.check_topk(best[:4] + [int(ids[order[-1]])], ids, vecs, q, 5)
-    assert not checks.check_topk(best[:4], ids, vecs, q, 5)
-    assert not checks.check_topk(best[::-1], ids, vecs, q, 5)
-
-
-def test_view_check_rejects_wrong_group():
-    live = {1: (0, 5), 2: (0, 7), 3: (1, 1)}
-    assert checks.check_view({0: (2, 12), 1: (1, 1)}, live)
-    assert not checks.check_view({0: (2, 13), 1: (1, 1)}, live)
-    assert not checks.check_view({0: (2, 12)}, live)
 
 
 @pytest.mark.parametrize("n,expect", [(5, (5.0, 100.0)), (20, (10.0, 50.0))])

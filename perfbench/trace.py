@@ -19,14 +19,15 @@ import time
 from contextlib import contextmanager
 from dataclasses import asdict, dataclass, field
 
+from py4j.protocol import Py4JError
+
 
 @dataclass
 class Span:
     name: str
     start: float
     end: float
-    parent: str | None
-    op: int
+    op: int  # the job that caused the span; its spans share this id
     counts: dict = field(default_factory=dict)
 
     @property
@@ -35,16 +36,18 @@ class Span:
 
 
 class Tracer:
-    """Records spans when enabled; a disabled tracer is a no-op context
-    manager, so workload code is written once for both kinds of run."""
+    """Records spans while ``enabled``; otherwise ``span`` is a no-op
+    context manager, so workload code is written once for both kinds of
+    run. ``capture`` binds the JVM handles, which enabling requires;
+    ``op`` tags spans with the job they belong to."""
 
-    def __init__(self, spark, enabled: bool):
-        self.enabled = enabled
+    def __init__(self, spark, capture: bool):
+        self.enabled = False
         self.spans: list[Span] = []
         self.op = 0
         self._spark = spark
         self._ids = itertools.count()
-        if enabled:
+        if capture:
             jsc = spark.sparkContext._jsc.sc()
             self._store = jsc.statusStore()
             self._bus = jsc.listenerBus()
@@ -52,10 +55,6 @@ class Tracer:
                 spark.sparkContext._jvm.java.lang.management.ManagementFactory
                 .getGarbageCollectorMXBeans()
             )
-
-    def next_op(self) -> int:
-        self.op += 1
-        return self.op
 
     def _gc_ms(self) -> int:
         return sum(max(0, int(b.getCollectionTime())) for b in self._gcs)
@@ -67,12 +66,13 @@ class Tracer:
         jobs = tracker.getJobIdsForGroup(group)
         stages = tasks = 0
         in_b = shuf_b = 0
+        per_stage: dict[int, int] = {}  # stage id -> shuffle-write bytes
         for jid in jobs:
             info = tracker.getJobInfo(jid)
             for sid in (info.stageIds if info else ()):
                 try:
                     sd = self._store.lastStageAttempt(sid)
-                except Exception:  # evicted or never submitted
+                except Py4JError:  # evicted, or never submitted
                     continue
                 if str(sd.status()) != "COMPLETE":
                     continue
@@ -80,16 +80,18 @@ class Tracer:
                 tasks += int(sd.numCompleteTasks())
                 in_b += int(sd.inputBytes())
                 shuf_b += int(sd.shuffleWriteBytes())
+                per_stage[sid] = int(sd.shuffleWriteBytes())
         return {
             "jobs": len(jobs),
             "stages": stages,
             "tasks": tasks,
             "input_bytes": in_b,
             "shuffle_write_bytes": shuf_b,
+            "stage_shuffle_write_bytes": [per_stage[s] for s in sorted(per_stage)],
         }
 
     @contextmanager
-    def span(self, name: str, parent: str | None = None):
+    def span(self, name: str):
         if not self.enabled:
             yield None
             return
@@ -97,7 +99,7 @@ class Tracer:
         group = f"perfbench-{next(self._ids)}"
         sc.setJobGroup(group, name)
         gc0 = self._gc_ms()
-        rec = Span(name, time.perf_counter(), 0.0, parent, self.op)
+        rec = Span(name, time.perf_counter(), 0.0, self.op)
         try:
             yield rec
         finally:

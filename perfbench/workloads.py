@@ -1,10 +1,12 @@
-"""The three workloads. Each drives the engine's public functions from
-outside the package and exposes the same surface to the runner:
+"""The benchmark's workloads: seeded batch jobs that drive the engine's
+public functions from outside the package. Each exposes the same
+surface to the runner:
 
-- ``setup(work_dir)``: generate inputs from the seed and initialise
-  tables/indexes under ``work_dir`` (timed, repeated by the runner);
-- ``op(i)``: run op ``i`` of the workload's fixed sequence and return
-  ``(kind, seconds)`` — a whole job for the batch workloads;
+- ``setup(work_dir)``: generate inputs from the seed under ``work_dir``
+  (timed, repeated by the runner);
+- ``op(i)``: run job ``i`` and return its wall time in seconds — with
+  tracing on, first force each lazy pipeline prefix through the
+  ``noop`` sink so per-layer self times are prefix differences;
 - ``check()``: verify the engine's outputs, ``(ok, detail)``;
 - ``layer_metrics()``: per-layer figures from the traced spans.
 """
@@ -17,8 +19,6 @@ import shutil
 import statistics
 import time
 
-import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
@@ -40,14 +40,6 @@ from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators.d
     lsh_candidate_pairs,
     minhash_signatures,
 )
-from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators.ivm import (
-    finalize_state,
-    refresh_view,
-)
-from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators.similarity import (
-    ivf_index_topk,
-    refresh_ivf_index,
-)
 from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators.text import (
     add_text_stats,
     gopher_pass,
@@ -68,8 +60,8 @@ from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.txt
 
 from . import checks, gen
 
-# every per-layer metric: (name, unit). Layers a workload does not
-# exercise report 0.
+# every per-layer metric: (name, unit). A layer a workload does not
+# exercise reports 0 on it.
 LAYER_METRICS = [
     ("sources.rest.self_s", "s"),
     ("sources.rest.partitions", "count"),
@@ -98,17 +90,6 @@ LAYER_METRICS = [
     ("sources.files.bytes_written_per_input_byte", "ratio"),
     ("sources.txtable.commit_s", "s"),
     ("sources.txtable.bytes_written_per_input_byte", "ratio"),
-    ("sources.txtable.merge_ms", "ms"),
-    ("sources.txtable.files_rewritten_per_merge", "count"),
-    ("sources.txtable.snapshot_ms", "ms"),
-    ("sources.txtable.log_versions", "count"),
-    ("sources.txtable.point_read_ms", "ms"),
-    ("sources.txtable.files_kept_ratio", "ratio"),
-    ("operators.similarity.probe_plan_ms", "ms"),
-    ("operators.similarity.probe_exec_ms", "ms"),
-    ("operators.similarity.probe_input_mb", "MB"),
-    ("operators.similarity.refresh_ms", "ms"),
-    ("operators.ivm.refresh_ms", "ms"),
     ("session.jobs_per_op", "count"),
     ("session.tasks_per_op", "count"),
     ("session.gc_s", "s"),
@@ -126,12 +107,32 @@ def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def _force_prefixes(tr, names, plans) -> None:
+    """Force each cumulative pipeline prefix through the ``noop`` sink,
+    one span each. The first prefix also runs once untimed before: the
+    first plan forced after a job pays a one-off cost (measured ~1 s on
+    the REST source) that would otherwise land on its layer."""
+    _noop(plans[0])
+    for name, df in zip(names, plans):
+        with tr.span(f"prefix:{name}"):
+            _noop(df)
+
+
 def _dir_bytes(path: str) -> int:
     return sum(
         os.path.getsize(p)
         for p in glob.glob(os.path.join(path, "**", "*"), recursive=True)
         if os.path.isfile(p)
     )
+
+
+def _lines(pattern: str) -> int:
+    """Total line count of the files matching ``pattern``."""
+    n = 0
+    for p in glob.glob(pattern):
+        with open(p, encoding="utf-8") as fh:
+            n += sum(1 for _ in fh)
+    return n
 
 
 def _median(xs) -> float:
@@ -164,25 +165,13 @@ class CountingClient(JsonLinesClient):
 
 class _Workload:
     name = ""
-    # op kind whose median is job_s, and the one whose median is op_p50_ms
-    job_kind = "job"
-    primary_kind = "job"
-    input_rows_name = ""  # unit of input_units for rows_per_s, if any
-    WARMUP = 1
-    MIN_OPS = 3
+    rows_name = ""  # what one input row is, for rows_per_s
 
     def __init__(self, spark, seed: int, tracer):
         self.spark = spark
         self.seed = seed
         self.tr = tracer
-        self.input_units = 0
-        self.jobs_done = 0
-
-    def kind_of(self, i: int) -> str:
-        return "job"
-
-    def trace_init(self) -> None:
-        pass
+        self.input_rows = 0
 
     def _self(self, name: str) -> list[float]:
         return [s.seconds for s in self.tr.named(name)]
@@ -209,7 +198,7 @@ class CfsDailyEtl(_Workload):
     aggregate → parquet + document-store full refresh."""
 
     name = "cfs_daily_etl"
-    input_rows_name = "rows"
+    rows_name = "rows"
     N_EVENTS = 40_000
     PREFIXES = (
         "sources.rest",
@@ -223,20 +212,21 @@ class CfsDailyEtl(_Workload):
         table = gen.cfs_calls(self.seed, self.N_EVENTS)
         self.fixture = os.path.join(work, "cfs_raw.parquet")
         pq.write_table(table, self.fixture, row_group_size=8192)
-        self.input_units = table.num_rows
+        self.input_rows = table.num_rows
         self.input_bytes = os.path.getsize(self.fixture)
         self.spark.dataSource.register(SocrataSource)
         self.docs_root = os.path.join(work, "docstore")
         self.out = None
+        self.jobs_done = 0
 
-    def _plans(self):
+    def _plans(self, end: str):
         raw = (
             self.spark.read.format("socrata_cfs")
             .option("mode", "fixture")
             .option("fixture_path", self.fixture)
             .option("ts_column", "create_time_incident")
             .option("start", gen.CFS_START.isoformat())
-            .option("end", gen.CFS_END.isoformat())
+            .option("end", end)
             .option("schema_json", _CFS_SCHEMA.json())
             .load()
         )
@@ -268,12 +258,12 @@ class CfsDailyEtl(_Workload):
         )
         return raw, timed, latest, agg
 
-    def op(self, i: int):
-        plans = self._plans()
+    def op(self, i: int, warmup: bool = False):
+        # warm-up: the first monthly window only — compiles every stage
+        # at a fraction of a cold full job
+        plans = self._plans("2021-01-31" if warmup else gen.CFS_END.isoformat())
         if self.tr.enabled:
-            for name, df in zip(self.PREFIXES, plans):
-                with self.tr.span(f"prefix:{name}"):
-                    _noop(df)
+            _force_prefixes(self.tr, self.PREFIXES, plans)
         out = os.path.join(self.work, f"agg_{i}.parquet")
         root = self.docs_root
         t0 = time.perf_counter()
@@ -291,46 +281,40 @@ class CfsDailyEtl(_Workload):
         if self.out:
             shutil.rmtree(self.out, ignore_errors=True)
         self.out = out
-        return "job", dt
+        return dt
 
     def _docs(self) -> int:
-        return sum(
-            1
-            for p in glob.glob(os.path.join(self.docs_root, "cfs_agg", "*.jsonl"))
-            for _ in open(p, encoding="utf-8")
-        )
+        return _lines(os.path.join(self.docs_root, "cfs_agg", "*.jsonl"))
 
     def check(self):
         return checks.check_cfs(
             self.fixture, os.path.join(self.out, "*.parquet"), self._docs()
         )
 
-    def layer_metrics(self) -> dict:
+    def layer_metrics(self):
         pre = {n: _median(self._self(f"prefix:{n}")) for n in self.PREFIXES}
-        shuf = {
-            n: _median(self._count(f"prefix:{n}", "shuffle_write_bytes"))
-            for n in self.PREFIXES
-        }
+        # shuffle bytes from the real job's stages: the first stage
+        # writes the window's shuffle, every later one an aggregate
+        # level's (prefix differences would mix in column pruning)
+        stages = self._count("sources.files.write", "stage_shuffle_write_bytes")
         files = _median(self._self("sources.files.write"))
         docsink = _median(self._self("sources.docsink.write"))
-        attempts = sum(
-            sum(1 for _ in open(p, encoding="utf-8"))
-            for p in glob.glob(os.path.join(self.docs_root, "_attempts", "*.log"))
-        )
+        attempts = _lines(os.path.join(self.docs_root, "_attempts", "*.log"))
         parts = len(glob.glob(os.path.join(self.docs_root, "cfs_agg", "*.jsonl")))
         m = {
             "sources.rest.self_s": pre["sources.rest"],
             "sources.rest.partitions": _median(
                 self._count("prefix:sources.rest", "tasks")),
-            "sources.rest.rows": self.input_units,
+            "sources.rest.rows": self.input_rows,
             "functions.temporal.self_s": pre["functions.temporal"] - pre["sources.rest"],
             "operators.dedup.window_self_s":
                 pre["operators.dedup.window"] - pre["functions.temporal"],
-            "operators.dedup.window_shuffle_mb": shuf["operators.dedup.window"] / _MB,
+            "operators.dedup.window_shuffle_mb":
+                _median([s[0] for s in stages if s]) / _MB,
             "operators.aggregates.self_s":
                 pre["operators.aggregates"] - pre["operators.dedup.window"],
             "operators.aggregates.shuffle_mb":
-                (shuf["operators.aggregates"] - shuf["operators.dedup.window"]) / _MB,
+                _median([sum(s[1:]) for s in stages if s]) / _MB,
             "sources.files.self_s": files - pre["operators.aggregates"],
             "sources.files.bytes_written_per_input_byte":
                 _dir_bytes(self.out) / self.input_bytes,
@@ -355,7 +339,7 @@ class CorpusCuration(_Workload):
     components → one doc per component → TxTable write."""
 
     name = "corpus_curation"
-    input_rows_name = "docs"
+    rows_name = "docs"
     N_BASE = 3000
     SHARDS = 8
     THRESHOLD = 0.7
@@ -385,14 +369,15 @@ class CorpusCuration(_Workload):
                 table.slice(s * step, step),
                 os.path.join(self.path, f"part-{s:03d}.parquet"),
             )
-        self.input_units = table.num_rows
+        self.input_rows = table.num_rows
         self.input_bytes = _dir_bytes(self.path)
         self.out = None
         self.result = None
         self.counts: dict[str, int] = {}
 
-    def _plans(self):
-        docs = self.spark.read.parquet(self.path)
+    def _plans(self, shards: int):
+        paths = sorted(glob.glob(os.path.join(self.path, "*.parquet")))
+        docs = self.spark.read.parquet(*paths[:shards])
         kept = add_text_stats(docs).filter(gopher_pass("text") == 1)
         keep_ids = exact_dedup(kept).select(F.col("keep_id").alias("doc_id"))
         uniq = kept.join(keep_ids, "doc_id", "left_semi")
@@ -401,15 +386,22 @@ class CorpusCuration(_Workload):
         pairs = jaccard_on_pairs(cands, uniq, threshold=self.THRESHOLD)
         return docs, (kept, uniq, sigs, cands, pairs)
 
-    def op(self, i: int):
-        docs, plans = self._plans()
+    def op(self, i: int, warmup: bool = False):
+        # the previous job's cached kept set must go first: the cache is
+        # matched by plan, so this job would otherwise reuse it
+        if self.result is not None:
+            self.result[0].unpersist()
+        # warm-up: one shard
+        docs, plans = self._plans(1 if warmup else self.SHARDS)
         uniq, pairs = plans[1], plans[-1]
         if self.tr.enabled:
-            for name, df in zip(self.PREFIXES, plans):
-                with self.tr.span(f"prefix:{name}"):
-                    _noop(df)
+            _force_prefixes(self.tr, self.PREFIXES, plans)
         out = os.path.join(self.work, f"curated_{i}")
         t0 = time.perf_counter()
+        # the kept set feeds both the pair search and the final join back:
+        # cache it (filled by the first CC round) instead of recomputing
+        # the text stats and the exact dedup for the write
+        uniq.persist()
         with self.tr.span("operators.dedup.cc"):
             comps = connected_components(pairs)
         final = (
@@ -433,14 +425,16 @@ class CorpusCuration(_Workload):
                 "cands": plans[3].count(),
                 "pairs": pairs.count(),
             }
-        self.result = (pairs, comps)
+        # kept cached until the next job, so the check re-derives the
+        # reported pairs without recomputing the text stages
+        self.result = (uniq, pairs, comps)
         if self.out:
             shutil.rmtree(self.out, ignore_errors=True)
         self.out = out
-        return "job", dt
+        return dt
 
     def check(self):
-        pairs_df, comps_df = self.result
+        _, pairs_df, comps_df = self.result
         pairs = [(r["id_a"], r["id_b"], r["jaccard"]) for r in pairs_df.collect()]
         comps = {r["node"]: r["component"] for r in comps_df.collect()}
         kept = [r["doc_id"] for r in TxTable(self.spark, self.out).read().select("doc_id").collect()]
@@ -457,12 +451,10 @@ class CorpusCuration(_Workload):
         create = _median(self._self("sources.txtable.create"))
         c = self.counts
         m = {
-            # the keep step recomputes the text stats and the exact
-            # dedup, so both layers sit on the blocking path twice
-            "operators.text.self_s": 2 * pre["operators.text"],
+            "operators.text.self_s": pre["operators.text"],
             "operators.text.kept_ratio": c["kept"] / c["docs"],
             "operators.dedup.exact_self_s":
-                2 * (pre["operators.dedup.exact"] - pre["operators.text"]),
+                pre["operators.dedup.exact"] - pre["operators.text"],
             "operators.dedup.minhash_self_s":
                 pre["operators.dedup.minhash"] - pre["operators.dedup.exact"],
             "operators.dedup.lsh_self_s":
@@ -473,7 +465,8 @@ class CorpusCuration(_Workload):
             "operators.dedup.pair_precision": c["pairs"] / max(1, c["cands"]),
             "operators.dedup.cc_self_s": cc - pre["operators.dedup.verify"],
             "operators.dedup.cc_jobs": _median(self._count("operators.dedup.cc", "jobs")),
-            "operators.dedup.keep_self_s": keep - pre["operators.dedup.exact"],
+            # the keep prefix runs with the kept set cached: the join only
+            "operators.dedup.keep_self_s": keep,
             "operators.dedup.cluster_recall": self.recall,
             "sources.txtable.commit_s": create - keep,
             "sources.txtable.bytes_written_per_input_byte":
@@ -482,224 +475,5 @@ class CorpusCuration(_Workload):
         return m, _blocking(m)
 
 
-# ---------------------------------------------------------------------------
-# index_serve_mixed
-# ---------------------------------------------------------------------------
 
-_SERVE_SCHEMA = "id long, embedding array<float>, g int, v long"
-_CHANGE_SCHEMA = _SERVE_SCHEMA + ", op string"
-
-
-class IndexServeMixed(_Workload):
-    """Top-k probes against a CDC-maintained IVF index, beside MERGE
-    write batches (each folded into the index and an aggregate view
-    before the op completes) and bloom-skipped point reads."""
-
-    name = "index_serve_mixed"
-    job_kind = "write"
-    primary_kind = "probe"
-    # the op sequence repeats [probe, probe, point, probe, probe, write]
-    WRITE_EVERY = 6
-    POINT_EVERY = 3
-    WARMUP = 3
-    MIN_OPS = 6
-    N_ROWS = 10_000
-    N_OPS = 2000
-    N_LISTS = 16
-    N_PROBE = 4
-    K = 10
-    EXHAUSTIVE_SAMPLE = 3
-
-    def setup(self, work: str) -> None:
-        self.work = work
-        self.inputs = gen.serve_inputs(
-            self.seed, self.N_ROWS, self.N_OPS,
-            write_every=self.WRITE_EVERY, point_every=self.POINT_EVERY,
-        )
-        base = self.inputs.base
-        self.input_units = base.num_rows
-        self.src_path = os.path.join(work, "src")
-        self.idx_path = os.path.join(work, "ivf")
-        self.view_path = os.path.join(work, "view")
-        df = self.spark.createDataFrame(base.to_pandas(), _SERVE_SCHEMA)
-        self.src = TxTable.create(
-            self.spark,
-            self.src_path,
-            df.repartitionByRange(self.N_LISTS, "id"),
-            stats_columns=["id"],
-            bloom_columns=["id"],
-            change_data_feed=True,
-        )
-        refresh_ivf_index(
-            self.spark, self.src, self.idx_path,
-            n_lists=self.N_LISTS, id_col="id", vec_col="embedding",
-        )
-        self._refresh_view()
-        self.done: list[int] = []
-
-    def kind_of(self, i: int) -> str:
-        return self.inputs.ops[i][0]
-
-    def trace_init(self) -> None:
-        self.snap_ms: list[float] = []
-        self.kept_ratio: list[float] = []
-
-    def _refresh_view(self):
-        refresh_view(
-            self.spark, self.src, self.view_path,
-            keys=["g"], sums=["v"], feed_key="id",
-        )
-
-    def _probe(self, qid: int, q: np.ndarray, n_probe: int):
-        vec = ",".join(f"CAST({float(x)!r} AS FLOAT)" for x in q)
-        queries = self.spark.sql(
-            f"SELECT {qid}L AS query_id, array({vec}) AS query_vec"
-        )
-        return ivf_index_topk(
-            self.spark, self.idx_path, queries, k=self.K, n_probe=n_probe,
-            id_col="id", vec_col="embedding", dim=gen.SERVE_DIM,
-        )
-
-    def op(self, i: int):
-        op = self.inputs.ops[i]
-        kind = op[0]
-        if self.tr.enabled:
-            t = time.perf_counter()
-            self.src.snapshot()
-            self.snap_ms.append((time.perf_counter() - t) * 1e3)
-        t0 = time.perf_counter()
-        if kind == "probe":
-            with self.tr.span("operators.similarity.probe_plan"):
-                df = self._probe(op[1], op[2], self.N_PROBE)
-            with self.tr.span("operators.similarity.probe_exec"):
-                rows = df.collect()
-            if len(rows) != self.K:
-                raise RuntimeError(f"probe returned {len(rows)} rows")
-        elif kind == "write":
-            upserts, deletes = op[1], op[2]
-            pdf = upserts.to_pandas()
-            pdf["op"] = None
-            dels = {"id": deletes, "embedding": [None] * len(deletes),
-                    "g": [None] * len(deletes), "v": [None] * len(deletes),
-                    "op": ["D"] * len(deletes)}
-            changes = self.spark.createDataFrame(
-                pd.concat([pdf, pd.DataFrame(dels)], ignore_index=True),
-                _CHANGE_SCHEMA,
-            )
-            with self.tr.span("sources.txtable.merge"):
-                self.src.merge(changes, key="id")
-            with self.tr.span("operators.similarity.refresh"):
-                refresh_ivf_index(
-                    self.spark, self.src, self.idx_path,
-                    n_lists=self.N_LISTS, id_col="id", vec_col="embedding",
-                )
-            with self.tr.span("operators.ivm.refresh"):
-                self._refresh_view()
-        else:
-            with self.tr.span("sources.txtable.point_read"):
-                rows = self.src.read_point("id", op[1]).collect()
-            if len(rows) != 1:
-                raise RuntimeError(f"point read of {op[1]} returned {len(rows)} rows")
-        dt = time.perf_counter() - t0
-        if self.tr.enabled and kind == "point":
-            kept = len(self.src.bloom_keep_files("id", op[1]))
-            self.kept_ratio.append(kept / max(1, len(self.src.snapshot().files)))
-        self.done.append(i)
-        return kind, dt
-
-    def check(self):
-        live = {}
-        base = self.inputs.base.to_pydict()
-        for j, key in enumerate(base["id"]):
-            live[key] = (base["g"][j], base["v"][j], base["embedding"][j])
-        for i in self.done:
-            op = self.inputs.ops[i]
-            if op[0] == "write":
-                up = op[1].to_pydict()
-                for j, key in enumerate(up["id"]):
-                    live[key] = (up["g"][j], up["v"][j], up["embedding"][j])
-                for key in op[2]:
-                    live.pop(key, None)
-        snap = self.src.read().toPandas()
-        got = {
-            int(r.id): (int(r.g), int(r.v), [float(x) for x in r.embedding])
-            for r in snap.itertuples()
-        }
-        want = {
-            int(k): (int(g), int(v), [float(x) for x in np.float32(e)])
-            for k, (g, v, e) in live.items()
-        }
-        problems = []
-        if got != want:
-            problems.append("table snapshot differs from the replayed op sequence")
-        ids = snap["id"].to_numpy()
-        vecs = np.stack(snap["embedding"].to_numpy())
-        probes = [op for op in self.inputs.ops if op[0] == "probe"]
-        rng = np.random.default_rng([self.seed, 4])
-        bad = 0
-        for j in rng.choice(len(probes), self.EXHAUSTIVE_SAMPLE, replace=False):
-            _, qid, q = probes[int(j)]
-            rows = self._probe(qid, q, self.N_LISTS).collect()
-            ranked = [r["id"] for r in sorted(rows, key=lambda r: r["rank"])]
-            if not checks.check_topk(ranked, ids, vecs, q, self.K):
-                bad += 1
-        if bad:
-            problems.append(f"{bad} exhaustive probes differ from brute force")
-        view = {
-            r["g"]: (r["n_rows"], r["sum_v"])
-            for r in finalize_state(
-                TxTable(self.spark, self.view_path).read(), ["g"], sums=["v"]
-            ).collect()
-        }
-        if not checks.check_view(view, {k: (g, v) for k, (g, v, _) in live.items()}):
-            problems.append("view differs from a recompute")
-        ok = not problems
-        n_writes = sum(1 for i in self.done if self.inputs.ops[i][0] == "write")
-        return ok, "; ".join(problems) or (
-            f"{len(got)} live rows match {n_writes} replayed writes, "
-            f"{self.EXHAUSTIVE_SAMPLE} exhaustive probes exact, view exact"
-        )
-
-    def layer_metrics(self):
-        merges = self.tr.named("sources.txtable.merge")
-        # files a MERGE rewrote = files of the previous snapshot that
-        # its own snapshot no longer holds
-        rewritten = []
-        hist = self.src.history()
-        for h in hist:
-            if h["operation"] == "MERGE":
-                before = set(self.src.snapshot(h["version"] - 1).files)
-                after = set(self.src.snapshot(h["version"]).files)
-                rewritten.append(len(before - after))
-        exec_spans = self.tr.named("operators.similarity.probe_exec")
-        m = {
-            "sources.txtable.merge_ms": _median([s.seconds for s in merges]) * 1e3,
-            "sources.txtable.files_rewritten_per_merge": _median(rewritten),
-            "sources.txtable.snapshot_ms": _median(self.snap_ms),
-            "sources.txtable.log_versions": self.src.latest_version() + 1,
-            "sources.txtable.point_read_ms":
-                _median(self._self("sources.txtable.point_read")) * 1e3,
-            "sources.txtable.files_kept_ratio": _median(self.kept_ratio),
-            "operators.similarity.probe_plan_ms":
-                _median(self._self("operators.similarity.probe_plan")) * 1e3,
-            "operators.similarity.probe_exec_ms":
-                _median([s.seconds for s in exec_spans]) * 1e3,
-            "operators.similarity.probe_input_mb":
-                _median([s.counts["input_bytes"] for s in exec_spans]) / _MB,
-            "operators.similarity.refresh_ms":
-                _median(self._self("operators.similarity.refresh")) * 1e3,
-            "operators.ivm.refresh_ms":
-                _median(self._self("operators.ivm.refresh")) * 1e3,
-        }
-        # a write op's blocking path: MERGE, then the two folds
-        blocking = sum(
-            m[k] for k in (
-                "sources.txtable.merge_ms",
-                "operators.similarity.refresh_ms",
-                "operators.ivm.refresh_ms",
-            )
-        ) / 1e3
-        return m, blocking
-
-
-WORKLOADS = {w.name: w for w in (CfsDailyEtl, CorpusCuration, IndexServeMixed)}
+WORKLOADS = {w.name: w for w in (CfsDailyEtl, CorpusCuration)}
