@@ -1,4 +1,5 @@
-"""Output checks, one per workload. Each returns ``(ok, detail)``.
+"""Output checks, one per workload. Each returns ``ok`` and a one-line
+``detail`` first.
 
 The checks are plain Python/DuckDB over the generated inputs and the
 engine's outputs, so they never share code with the engine they check.

@@ -12,7 +12,7 @@ between traced and untraced and the metrics are the per-layer ones,
 including the tracing overhead.
 
 Generated inputs and job outputs live in a scratch directory under
-``.perfbench_tmp/`` in the checkout, which is also the Spark driver's
+``.perfbench_tmp/`` in the checkout, which is also the process's
 working directory; it is removed on exit. A traced run leaves its spans
 in ``.perfbench_tmp/spans-<workload>-seed<seed>.jsonl``.
 """
@@ -172,8 +172,10 @@ def _measure(spark, session_s: float, args, scratch: str) -> tuple[dict, list[st
         failed += 1
     attempted += 1  # the output check counts as one attempt
 
+    if not jobs:
+        raise RuntimeError("no measured job completed:\n" + "\n".join(errors[:3]))
     med = statistics.median
-    job_s = med(jobs) if jobs else float("nan")
+    job_s = med(jobs)
     jvm_pid = spark.sparkContext._jvm.ProcessHandle.current().pid()
     values = {
         "setup_s": session_s + med(setups),
@@ -191,12 +193,11 @@ def _measure(spark, session_s: float, args, scratch: str) -> tuple[dict, list[st
         f"input: {wl.input_rows} {wl.rows_name}, {wl.input_bytes} parquet bytes per job",
         f"failed_ratio {failed / attempted:.4f} ratio",
     ]
-    if jobs:
-        tail, pct = tail_percentile(jobs)
-        lines.append(
-            f"job: n={len(jobs)} p50 {job_s:.3f} s, p{pct:.0f} {tail:.3f} s "
-            f"(in order: {', '.join(f'{x:.3f}' for x in jobs)})"
-        )
+    tail, pct = tail_percentile(jobs)
+    lines.append(
+        f"job: n={len(jobs)} p50 {job_s:.3f} s, p{pct:.0f} {tail:.3f} s "
+        f"(in order: {', '.join(f'{x:.3f}' for x in jobs)})"
+    )
     lines += [e.rstrip() for e in errors[:3]]
 
     if not args.trace:
@@ -217,7 +218,7 @@ def _measure(spark, session_s: float, args, scratch: str) -> tuple[dict, list[st
             "session.tasks_per_op": med([a["tasks"] for a in accs]),
             "session.gc_s": med([a["gc_ms"] for a in accs]) / 1e3,
             "trace.job_s": trace_job_s,
-            "trace.overhead_s": trace_job_s - job_s if jobs and traced_jobs else 0.0,
+            "trace.overhead_s": trace_job_s - job_s if traced_jobs else 0.0,
             "trace.self_coverage": blocking / trace_job_s if trace_job_s else 0.0,
         })
         metrics = {
