@@ -135,8 +135,9 @@ def _measure(spark, session_s: float, args, scratch: str) -> tuple[dict, list[st
         if r:
             shutil.rmtree(os.path.join(scratch, f"setup{r - 1}"))
 
-    # warm-up: one job on part of the input starts every Python worker
-    # and compiles the hot paths; one full job then settles the JIT
+    # warm-up: one job on part of the input pays the cold JVM's compile
+    # costs; one full job then settles the JIT (without it the first
+    # measured job runs 20-40% slower)
     t = time.perf_counter()
     wl.op(0, warmup=True)
     wl.op(1)

@@ -217,7 +217,6 @@ class CfsDailyEtl(_Workload):
         self.spark.dataSource.register(SocrataSource)
         self.docs_root = os.path.join(work, "docstore")
         self.out = None
-        self.jobs_done = 0
 
     def _plans(self, end: str):
         raw = (
@@ -266,6 +265,8 @@ class CfsDailyEtl(_Workload):
             _force_prefixes(self.tr, self.PREFIXES, plans)
         out = os.path.join(self.work, f"agg_{i}.parquet")
         root = self.docs_root
+        # insert attempts are counted per job
+        shutil.rmtree(os.path.join(root, "_attempts"), ignore_errors=True)
         t0 = time.perf_counter()
         with self.tr.span("sources.files.write"):
             write_parquet(plans[-1], out)
@@ -277,7 +278,6 @@ class CfsDailyEtl(_Workload):
                 retry_sleep_s=0.0,
             )
         dt = time.perf_counter() - t0
-        self.jobs_done += 1
         if self.out:
             shutil.rmtree(self.out, ignore_errors=True)
         self.out = out
@@ -320,10 +320,8 @@ class CfsDailyEtl(_Workload):
                 _dir_bytes(self.out) / self.input_bytes,
             "sources.docsink.self_s": docsink,
             "sources.docsink.docs": self._docs(),
-            # attempts accumulate over every job; the store holds the
-            # last job's partitions
-            "sources.docsink.attempts_per_partition":
-                attempts / max(1, parts * self.jobs_done),
+            # both from the last job: one part file per written partition
+            "sources.docsink.attempts_per_partition": attempts / max(1, parts),
         }
         return m, _blocking(m)
 
@@ -475,5 +473,4 @@ class CorpusCuration(_Workload):
         return m, _blocking(m)
 
 
-
-WORKLOADS = {w.name: w for w in (CfsDailyEtl, CorpusCuration)}
+WORKLOADS ={w.name: w for w in (CfsDailyEtl, CorpusCuration)}
