@@ -10,6 +10,7 @@ from __future__ import annotations
 import re
 
 import duckdb
+import numpy as np
 
 # ---------------------------------------------------------------------------
 # cfs_daily_etl: a DuckDB recompute of the aggregate must hash-match.
@@ -133,18 +134,30 @@ def jaccard(a: str, b: str) -> float:
 
 def check_curation(
     texts: dict[int, str],
-    clusters: list[list[int]],
+    truth,
     pairs: list[tuple[int, int, float]],
     components: dict[int, int],
+    unique: list[int],
     kept: list[int],
     threshold: float,
 ) -> tuple[bool, str, float]:
-    """Returns (ok, detail, cluster recall).
+    """Returns (ok, detail, cluster recall). ``truth`` is the generator's
+    corpus (its planted clusters, exact duplicates and must-keep docs);
+    ``unique`` are the docs the engine kept after the quality filter
+    and the exact dedup, ``kept`` the docs it output.
 
+    Nothing wrong is kept:
     - every reported pair's exact Jaccard is >= ``threshold``;
     - each component is labelled by its smallest member and is
       represented in the output by exactly that member;
     - no two kept docs are exact duplicates after normalization.
+
+    Nothing right is dropped:
+    - ``kept`` is exactly ``unique`` minus the non-representative
+      component members;
+    - every good doc in no cluster and with no exact copy is kept;
+    - one doc of each exact-duplicate pair is kept, and at least one
+      member of each planted cluster.
 
     Recall = planted clusters whose members all landed in one component
     and left exactly one member in the output, over planted clusters."""
@@ -171,16 +184,80 @@ def check_curation(
     norm = [texts[i].strip().lower() for i in kept_set & texts.keys()]
     if len(set(norm)) != len(norm):
         problems.append("exact duplicates kept")
+    want = {i for i in unique if components.get(i, i) == i}
+    if kept_set != want:
+        problems.append(
+            f"output is not the unique docs minus duplicates: "
+            f"{len(want - kept_set)} missing, {len(kept_set - want)} extra"
+        )
+    lost = [i for i in truth.singles if i not in kept_set]
+    if lost:
+        problems.append(f"{len(lost)} distinct good docs dropped")
+    if any((a in kept_set) == (b in kept_set) for a, b in truth.exact_dups):
+        problems.append("exact-duplicate pair not kept exactly once")
+    if any(not kept_set & set(cl) for cl in truth.clusters):
+        problems.append("planted cluster dropped entirely")
     collapsed = 0
-    for cl in clusters:
+    for cl in truth.clusters:
         comps = {components.get(m) for m in cl}
         if len(comps) == 1 and None not in comps and len(kept_set & set(cl)) == 1:
             collapsed += 1
-    recall = collapsed / len(clusters) if clusters else 1.0
+    recall = collapsed / len(truth.clusters) if truth.clusters else 1.0
     ok = not problems
     detail = "; ".join(problems) or (
         f"{len(pairs)} pairs verified, {len(members)} components, "
-        f"cluster recall {recall:.3f}"
+        f"{len(kept_set)} kept, cluster recall {recall:.3f}"
     )
     return ok, detail, recall
 
+
+# ---------------------------------------------------------------------------
+# corpus_curation, publish and serve: exhaustive probes equal brute
+# force over the served snapshot; the view equals a recompute.
+# ---------------------------------------------------------------------------
+
+
+def brute_topk_scores(vecs: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Cosine of every row of ``vecs`` with ``q``, in float64."""
+    m = vecs.astype(np.float64)
+    qd = q.astype(np.float64)
+    return (m @ qd) / (np.linalg.norm(m, axis=1) * np.linalg.norm(qd))
+
+
+def check_topk(
+    got_ids: list[int],
+    ids: np.ndarray,
+    vecs: np.ndarray,
+    q: np.ndarray,
+    k: int,
+    tol: float = 1e-6,
+) -> bool:
+    """``got_ids`` (in rank order) must be a brute-force top-k over
+    (``ids``, ``vecs``): k distinct ids whose scores are non-increasing
+    and none below the k-th best score, up to float32 noise ``tol``."""
+    scores = brute_topk_scores(vecs, q)
+    want_n = min(k, len(ids))
+    if len(got_ids) != want_n or len(set(got_ids)) != want_n:
+        return False
+    pos = {int(i): j for j, i in enumerate(ids)}
+    if any(int(i) not in pos for i in got_ids):
+        return False
+    kth = np.sort(scores)[::-1][want_n - 1]
+    got = [scores[pos[int(i)]] for i in got_ids]
+    return all(s >= kth - tol for s in got) and all(
+        a >= b - tol for a, b in zip(got, got[1:])
+    )
+
+
+def check_view(view: dict, rows: list[tuple]) -> bool:
+    """``view`` maps group -> (count, sum); ``rows`` are the served
+    table's (group, value) pairs. The view must equal a from-scratch
+    aggregate of them."""
+    want: dict = {}
+    for g, v in rows:
+        acc = want.setdefault(g, [0, 0])
+        acc[0] += 1
+        acc[1] += int(v)
+    return {g: tuple(a) for g, a in want.items()} == {
+        g: (int(c), int(s)) for g, (c, s) in view.items()
+    }

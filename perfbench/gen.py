@@ -3,7 +3,7 @@
 Every generator is a pure function of its seed and size arguments: the
 same seed gives byte-identical inputs (pinned by tests/test_perfbench.py).
 The engine only ever sees what these functions return; ground truth
-(the planted near-duplicate clusters) stays here.
+(the planted near-duplicate clusters and exact duplicates) stays here.
 """
 
 from __future__ import annotations
@@ -145,12 +145,22 @@ def cfs_calls(seed: int, n_events: int) -> pa.Table:
 # ---------------------------------------------------------------------------
 
 
+EMBED_DIM = 16
+
+
 @dataclass
 class Corpus:
     ids: list[int]
     texts: list[str]
-    # planted near-duplicate clusters (doc ids), ground truth only
+    # one embedding per doc (row i belongs to ids[i]), float32
+    embeddings: np.ndarray
+    # ground truth only: planted near-duplicate clusters, and
+    # (source, copy) pairs of exact duplicates, as doc ids
     clusters: list[list[int]] = field(default_factory=list)
+    exact_dups: list[tuple[int, int]] = field(default_factory=list)
+    # ids of the good base docs in no cluster and with no exact copy:
+    # every correct curation keeps all of them
+    singles: list[int] = field(default_factory=list)
 
 
 def _vocab(rng, size: int) -> list[str]:
@@ -190,8 +200,10 @@ def corpus(seed: int, n_base: int) -> Corpus:
                 texts.append(" ".join(toks))
             clusters.append(members)
     in_cluster = {m for c in clusters for m in c}
+    dups: list[tuple[int, int]] = []
     for b in range(n_base):
         if b not in in_cluster and rng.random() < 0.05:
+            dups.append((b, len(texts)))
             texts.append("  " + texts[b].upper() + " ")
     n_bad = n_base // 10
     for i in range(n_bad):
@@ -204,10 +216,65 @@ def corpus(seed: int, n_base: int) -> Corpus:
             texts.append(" ".join(str(x) for x in rng.integers(0, 10**6, 80)))
     perm = rng.permutation(len(texts))
     ids = [int(x) + 1 for x in perm]  # position -> doc id
+    duped = {b for b, _ in dups}
     return Corpus(
         ids=ids,
         texts=texts,
+        embeddings=_embeddings(seed, clusters, dups, len(texts)),
         clusters=[sorted(ids[m] for m in c) for c in clusters],
+        exact_dups=[(ids[b], ids[c]) for b, c in dups],
+        singles=sorted(
+            ids[b] for b in range(n_base) if b not in in_cluster and b not in duped
+        ),
     )
 
 
+def _embeddings(seed, clusters, dups, n) -> np.ndarray:
+    """Clustered doc embeddings from their own stream (the texts do not
+    depend on them): a near-duplicate variant sits close to its base
+    doc, an exact copy on it."""
+    rng = np.random.default_rng([seed, 4])
+    centers = rng.standard_normal((24, EMBED_DIM))
+    emb = centers[rng.integers(0, len(centers), n)] + 0.35 * rng.standard_normal(
+        (n, EMBED_DIM)
+    )
+    for c in clusters:
+        emb[c[1:]] = emb[c[0]] + 0.02 * rng.standard_normal((len(c) - 1, EMBED_DIM))
+    for b, c in dups:
+        emb[c] = emb[b]
+    return emb.astype(np.float32)
+
+
+@dataclass
+class ServeChanges:
+    upserts: list[int]       # doc ids re-embedded by the change batch
+    vectors: np.ndarray      # their new embeddings, float32
+    deletes: list[int]       # doc ids the change batch deletes
+    queries: np.ndarray      # top-k probe vectors, float32
+    points: list[int]        # doc ids for point reads (still served)
+
+
+def serve_changes(
+    seed: int, corpus: Corpus, n_upserts: int, n_deletes: int,
+    n_queries: int, n_points: int,
+) -> ServeChanges:
+    """The serve phase's inputs. Every id is a must-keep doc
+    (``corpus.singles``), so it is served whatever else curation drops;
+    upserts, deletes and point reads are disjoint."""
+    rng = np.random.default_rng([seed, 5])
+    picked = rng.choice(len(corpus.singles), n_upserts + n_deletes + n_points, replace=False)
+    ids = [corpus.singles[int(j)] for j in picked]
+    # the corpus's embedding centres (the first draw of its stream)
+    centers = np.random.default_rng([seed, 4]).standard_normal((24, EMBED_DIM))
+
+    def near_centers(n):
+        c = centers[rng.integers(0, len(centers), n)]
+        return (c + 0.35 * rng.standard_normal((n, EMBED_DIM))).astype(np.float32)
+
+    return ServeChanges(
+        upserts=ids[:n_upserts],
+        vectors=near_centers(n_upserts),
+        deletes=ids[n_upserts:n_upserts + n_deletes],
+        queries=near_centers(n_queries),
+        points=ids[n_upserts + n_deletes:],
+    )

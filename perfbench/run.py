@@ -1,15 +1,15 @@
 """Workload benchmark for the cfs-engine package.
 
-    python3 perfbench/run.py --workload cfs_daily_etl --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload cfs_daily_etl --seed 1 --seconds 10 --trace 0
 
 Runs one seeded workload (see BENCHMARK.json and perfbench/README.md)
 on ``local[nproc]`` from this process with one closed-loop client,
 checks the engine's outputs, prints a human-readable summary and, as
 the last line of stdout, one JSON object with the keys ``correct``,
 ``attempted``, ``failed`` and ``metrics``. With ``--trace 0`` the
-metrics are the end-to-end ones; with ``--trace 1`` jobs alternate
-between traced and untraced and the metrics are the per-layer ones,
-including the tracing overhead.
+metrics are the end-to-end ones; with ``--trace 1`` all jobs but the
+second are traced, a workload with a serve phase runs it once, and the
+metrics are the per-layer ones, including the tracing overhead.
 
 Generated inputs and job outputs live in a scratch directory under
 ``.perfbench_tmp/`` in the checkout, which is also the process's
@@ -32,7 +32,14 @@ import traceback
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "cincinnati_police_calls_for_service_etl_using_python_dask_spark"
 SETUP_REPS = 3
-MIN_JOBS = 3  # measured jobs per run, whatever --seconds says
+MIN_JOBS = 2  # measured jobs per untraced run
+MIN_TRACED = 3  # traced jobs per traced run, for real per-layer medians
+# past this many seconds since the process started (less the serve
+# phase's reserve, in a traced run that serves), a run measures no
+# further job once it has one of each kind it needs: the run must end
+# well within 180 s on a slow host
+RUN_BUDGET_S = 110.0
+T_START = time.perf_counter()
 END_TO_END = [
     ("setup_s", "s"),
     ("job_s", "s"),
@@ -136,21 +143,37 @@ def _measure(spark, session_s: float, args, scratch: str) -> tuple[dict, list[st
             shutil.rmtree(os.path.join(scratch, f"setup{r - 1}"))
 
     # warm-up: one job on part of the input pays the cold JVM's compile
-    # costs; one full job then settles the JIT (without it the first
-    # measured job runs 20-40% slower)
+    # costs at a fraction of a cold full job. In an untraced run one full
+    # job then settles the JIT (without it the first measured job runs
+    # 20-40% slower); in a traced run the first job's prefixes do.
     t = time.perf_counter()
     wl.op(0, warmup=True)
-    wl.op(1)
+    if not args.trace:
+        wl.op(1)
     warmup_s = time.perf_counter() - t
 
     jobs: list[float] = []
     traced_jobs: list[float] = []
     attempted = failed = 0
     errors: list[str] = []
+    budget = RUN_BUDGET_S - (wl.SERVE_RESERVE_S if args.trace else 0.0)
     start = time.perf_counter()
-    while time.perf_counter() - start < args.seconds or attempted < MIN_JOBS:
-        # trace run: every other job is traced
-        traced = bool(args.trace) and attempted % 2 == 1
+    while True:
+        if args.trace:
+            # the second job runs untraced, for the tracing overhead;
+            # every other job is traced
+            need = len(traced_jobs) < MIN_TRACED or not jobs
+            have = traced_jobs and jobs
+        else:
+            need = len(jobs) < MIN_JOBS
+            have = jobs
+        if not need and time.perf_counter() - start >= args.seconds:
+            break
+        if have and time.perf_counter() - T_START > budget:
+            break
+        if attempted >= 2 * MIN_TRACED + 2 and not have:
+            break  # every job fails
+        traced = bool(args.trace) and attempted != 1
         tr.enabled = traced
         tr.op += 1
         attempted += 1
@@ -161,7 +184,21 @@ def _measure(spark, session_s: float, args, scratch: str) -> tuple[dict, list[st
             failed += 1
             errors.append(traceback.format_exc(limit=3))
     wall = time.perf_counter() - start
-    tr.enabled = False
+
+    # a traced run then runs the workload's serve phase, if any, once
+    serve_s = serve_wall = 0.0
+    if wl.SERVES and args.trace:
+        tr.enabled = True
+        tr.op += 1
+        attempted += 1
+        t = time.perf_counter()
+        try:
+            serve_s = wl.serve()
+        except Exception:
+            failed += 1
+            errors.append(traceback.format_exc(limit=3))
+        serve_wall = time.perf_counter() - t
+        tr.enabled = False
 
     t = time.perf_counter()
     try:
@@ -190,7 +227,9 @@ def _measure(spark, session_s: float, args, scratch: str) -> tuple[dict, list[st
         f"setup: session {session_s:.3f} s, generation reps "
         + ", ".join(f"{s:.3f}" for s in setups) + " s",
         f"phases: warm-up {warmup_s:.1f} s, measured {wall:.1f} s, "
-        f"check {check_s:.1f} s",
+        + (f"serve {serve_wall:.1f} s (change batch and reads {serve_s:.1f} s), "
+           if serve_wall else "")
+        + f"check {check_s:.1f} s",
         f"input: {wl.input_rows} {wl.rows_name}, {wl.input_bytes} parquet bytes per job",
         f"failed_ratio {failed / attempted:.4f} ratio",
     ]
@@ -229,7 +268,11 @@ def _measure(spark, session_s: float, args, scratch: str) -> tuple[dict, list[st
             os.path.dirname(scratch), f"spans-{args.workload}-seed{args.seed}.jsonl"
         )
         tr.dump(spans)
-        lines.append(f"spans: {os.path.relpath(spans, ROOT)}")
+        lines.append(
+            f"traced jobs: n={len(traced_jobs)} "
+            f"({', '.join(f'{x:.3f}' for x in traced_jobs)}); "
+            f"spans: {os.path.relpath(spans, ROOT)}"
+        )
     lines += [f"{n} {m['value']:.4f} {m['unit']}" for n, m in metrics.items()]
     result = {
         "correct": bool(ok) and failed == 0,

@@ -10,6 +10,7 @@ import os
 import re
 import sys
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -54,8 +55,31 @@ def test_cfs_generator_properties():
 def test_corpus_generator_is_deterministic():
     a, b = gen.corpus(5, 300), gen.corpus(5, 300)
     assert (a.ids, a.texts, a.clusters) == (b.ids, b.texts, b.clusters)
+    assert (a.exact_dups, a.singles) == (b.exact_dups, b.singles)
+    assert a.embeddings.tobytes() == b.embeddings.tobytes()
     assert a.texts != gen.corpus(6, 300).texts
     assert a.clusters and sorted(a.ids) == list(range(1, len(a.ids) + 1))
+    assert a.embeddings.shape == (len(a.ids), gen.EMBED_DIM)
+
+
+def test_corpus_ground_truth_is_consistent():
+    c = gen.corpus(3, 400)
+    texts = dict(zip(c.ids, c.texts))
+    for src, copy in c.exact_dups:
+        assert texts[src].strip().lower() == texts[copy].strip().lower()
+    in_cluster = {m for cl in c.clusters for m in cl}
+    duped = {i for pair in c.exact_dups for i in pair}
+    assert c.singles and not set(c.singles) & (in_cluster | duped)
+
+
+def test_serve_changes_are_deterministic_and_disjoint():
+    c = gen.corpus(2, 400)
+    a, b = gen.serve_changes(2, c, 10, 5, 4, 2), gen.serve_changes(2, c, 10, 5, 4, 2)
+    assert (a.upserts, a.deletes, a.points) == (b.upserts, b.deletes, b.points)
+    assert a.vectors.tobytes() == b.vectors.tobytes()
+    assert a.queries.tobytes() == b.queries.tobytes()
+    ids = a.upserts + a.deletes + a.points
+    assert len(set(ids)) == len(ids) == 17 and set(ids) <= set(c.singles)
 
 
 # ---------------------------------------------------------------------------
@@ -111,37 +135,90 @@ def _curation_answer(corpus):
         (cl[0], m, checks.jaccard(texts[cl[0]], texts[m]))
         for cl in corpus.clusters for m in cl[1:]
     ]
-    seen, kept = set(), []
+    seen, unique = set(), []
     for i in sorted(texts):
         norm = texts[i].strip().lower()
-        if norm in seen or (i in comps and comps[i] != i):
+        if norm in seen:
             continue
         seen.add(norm)
-        kept.append(i)
-    return texts, pairs, comps, kept
+        unique.append(i)
+    kept = [i for i in unique if comps.get(i, i) == i]
+    return texts, pairs, comps, unique, kept
 
 
 def test_curation_check_accepts_ideal_and_rejects_planted_errors():
     corpus = gen.corpus(11, 200)
-    texts, pairs, comps, kept = _curation_answer(corpus)
-    ok, _, recall = checks.check_curation(texts, corpus.clusters, pairs, comps, kept, 0.7)
+    texts, pairs, comps, unique, kept = _curation_answer(corpus)
+
+    def check(pairs=pairs, comps=comps, unique=unique, kept=kept):
+        return checks.check_curation(texts, corpus, pairs, comps, unique, kept, 0.7)
+
+    ok, _, recall = check()
     assert ok and recall == 1.0
     # a reported pair that is not a near duplicate
     a, b = corpus.clusters[0][0], next(i for i in texts if i not in comps)
-    bad_pairs = pairs + [(a, b, 0.9)]
-    assert not checks.check_curation(texts, corpus.clusters, bad_pairs, comps, kept, 0.7)[0]
+    assert not check(pairs=pairs + [(a, b, 0.9)])[0]
     # two members of one component kept
     extra = corpus.clusters[0][1]
-    assert not checks.check_curation(
-        texts, corpus.clusters, pairs, comps, kept + [extra], 0.7)[0]
+    assert not check(kept=kept + [extra])[0]
     # an exact duplicate kept
     norm = {}
     dup = next(
         i for i in sorted(texts)
         if norm.setdefault(texts[i].strip().lower(), i) != i
     )
-    assert not checks.check_curation(
-        texts, corpus.clusters, pairs, comps, kept + [dup], 0.7)[0]
+    assert not check(kept=kept + [dup])[0]
+
+
+def test_curation_check_rejects_dropped_docs():
+    corpus = gen.corpus(12, 200)
+    texts, pairs, comps, unique, kept = _curation_answer(corpus)
+
+    def check(unique=unique, kept=kept):
+        return checks.check_curation(texts, corpus, pairs, comps, unique, kept, 0.7)
+
+    # a distinct good doc dropped by the quality filter: missing from the
+    # unique docs and from the output alike
+    single = corpus.singles[0]
+    assert not check(
+        unique=[i for i in unique if i != single], kept=[i for i in kept if i != single]
+    )[0]
+    # a unique doc lost by the final join (an inner join, say)
+    assert not check(kept=[i for i in kept if i != single])[0]
+    # both docs of an exact-duplicate pair dropped
+    gone = set(corpus.exact_dups[0])
+    assert not check(
+        unique=[i for i in unique if i not in gone], kept=[i for i in kept if i not in gone]
+    )[0]
+    # a whole planted cluster dropped
+    gone = set(corpus.clusters[0])
+    assert not check(
+        unique=[i for i in unique if i not in gone], kept=[i for i in kept if i not in gone]
+    )[0]
+    # an empty result
+    assert not check(unique=[], kept=[])[0]
+
+
+def test_topk_check_rejects_wrong_neighbour():
+    rng = np.random.default_rng(0)
+    ids = np.arange(100, 150)
+    vecs = rng.standard_normal((50, gen.EMBED_DIM)).astype(np.float32)
+    q = rng.standard_normal(gen.EMBED_DIM).astype(np.float32)
+    order = np.argsort(-checks.brute_topk_scores(vecs, q), kind="stable")
+    best = [int(ids[j]) for j in order[:5]]
+    assert checks.check_topk(best, ids, vecs, q, 5)
+    assert not checks.check_topk(best[:4] + [int(ids[order[-1]])], ids, vecs, q, 5)
+    assert not checks.check_topk(best[:4], ids, vecs, q, 5)
+    assert not checks.check_topk(best[::-1], ids, vecs, q, 5)
+    assert not checks.check_topk(best[:4] + [999], ids, vecs, q, 5)
+
+
+def test_view_check_rejects_wrong_aggregate():
+    rows = [(1, 10), (1, 5), (2, 7)]
+    assert checks.check_view({1: (2, 15), 2: (1, 7)}, rows)
+    assert not checks.check_view({1: (2, 15), 2: (1, 8)}, rows)
+    assert not checks.check_view({1: (2, 15)}, rows)
+    assert not checks.check_view({1: (3, 15), 2: (1, 7)}, rows)
 
 
 @pytest.mark.parametrize("n,expect", [(5, (5.0, 100.0)), (20, (10.0, 50.0))])

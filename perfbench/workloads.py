@@ -8,7 +8,9 @@ surface to the runner:
   tracing on, first force each lazy pipeline prefix through the
   ``noop`` sink so per-layer self times are prefix differences;
 - ``check()``: verify the engine's outputs, ``(ok, detail)``;
-- ``layer_metrics()``: per-layer figures from the traced spans.
+- ``layer_metrics()``: per-layer figures from the traced spans;
+- ``serve()``: with ``SERVES``, a phase a traced run runs once after
+  the measured jobs; returns its timed part in seconds.
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ import shutil
 import statistics
 import time
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
@@ -39,6 +42,14 @@ from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators.d
     latest_per_key,
     lsh_candidate_pairs,
     minhash_signatures,
+)
+from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators.ivm import (
+    finalize_state,
+    refresh_view,
+)
+from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators.similarity import (
+    ivf_index_topk,
+    refresh_ivf_index,
 )
 from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators.text import (
     add_text_stats,
@@ -88,8 +99,21 @@ LAYER_METRICS = [
     ("sources.docsink.attempts_per_partition", "ratio"),
     ("sources.files.self_s", "s"),
     ("sources.files.bytes_written_per_input_byte", "ratio"),
-    ("sources.txtable.commit_s", "s"),
+    ("sources.txtable.create_self_s", "s"),
+    ("sources.txtable.merge_ms", "ms"),
+    ("sources.txtable.files_rewritten_per_merge", "count"),
+    ("sources.txtable.snapshot_ms", "ms"),
+    ("sources.txtable.log_versions", "count"),
+    ("sources.txtable.point_read_ms", "ms"),
+    ("sources.txtable.files_kept_ratio", "ratio"),
     ("sources.txtable.bytes_written_per_input_byte", "ratio"),
+    ("operators.similarity.build_ms", "ms"),
+    ("operators.similarity.refresh_ms", "ms"),
+    ("operators.similarity.probe_plan_ms", "ms"),
+    ("operators.similarity.probe_exec_ms", "ms"),
+    ("operators.similarity.probe_input_mb", "MB"),
+    ("operators.ivm.build_ms", "ms"),
+    ("operators.ivm.refresh_ms", "ms"),
     ("session.jobs_per_op", "count"),
     ("session.tasks_per_op", "count"),
     ("session.gc_s", "s"),
@@ -107,12 +131,13 @@ def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _force_prefixes(tr, names, plans) -> None:
+def _force_prefixes(tr, names, plans, pre=None) -> None:
     """Force each cumulative pipeline prefix through the ``noop`` sink,
-    one span each. The first prefix also runs once untimed before: the
-    first plan forced after a job pays a one-off cost (measured ~1 s on
-    the REST source) that would otherwise land on its layer."""
-    _noop(plans[0])
+    one span each. A plan over the same source (``pre``, by default the
+    first prefix) runs once untimed before: the first plan forced after
+    a job pays a one-off cost (measured ~1 s on the REST source) that
+    would otherwise land on its layer."""
+    _noop(plans[0] if pre is None else pre)
     for name, df in zip(names, plans):
         with tr.span(f"prefix:{name}"):
             _noop(df)
@@ -140,14 +165,11 @@ def _median(xs) -> float:
 
 
 def _blocking(m: dict) -> float:
-    """Sum of the per-layer self times (``*self_s`` and ``commit_s``)
-    on a batch job's blocking path. They partition the job by
-    construction (prefix differences), so the sum falls short of the
-    traced job time only where a difference came out negative."""
-    return sum(
-        max(0.0, v) for k, v in m.items()
-        if k.endswith("self_s") or k.endswith("commit_s")
-    )
+    """Sum of the per-layer self times (``*self_s``) on a batch job's
+    blocking path. They partition the job by construction (prefix
+    differences), so the sum falls short of the traced job time only
+    where a difference came out negative."""
+    return sum(max(0.0, v) for k, v in m.items() if k.endswith("self_s"))
 
 
 class CountingClient(JsonLinesClient):
@@ -166,6 +188,8 @@ class CountingClient(JsonLinesClient):
 class _Workload:
     name = ""
     rows_name = ""  # what one input row is, for rows_per_s
+    SERVES = False
+    SERVE_RESERVE_S = 0.0  # run time kept for the serve phase
 
     def __init__(self, spark, seed: int, tracer):
         self.spark = spark
@@ -200,6 +224,7 @@ class CfsDailyEtl(_Workload):
     name = "cfs_daily_etl"
     rows_name = "rows"
     N_EVENTS = 40_000
+    WARMUP_END = "2021-01-31"  # the warm-up job reads the first window only
     PREFIXES = (
         "sources.rest",
         "functions.temporal",
@@ -217,6 +242,7 @@ class CfsDailyEtl(_Workload):
         self.spark.dataSource.register(SocrataSource)
         self.docs_root = os.path.join(work, "docstore")
         self.out = None
+        self.rest_rows = 0
 
     def _plans(self, end: str):
         raw = (
@@ -260,9 +286,15 @@ class CfsDailyEtl(_Workload):
     def op(self, i: int, warmup: bool = False):
         # warm-up: the first monthly window only — compiles every stage
         # at a fraction of a cold full job
-        plans = self._plans("2021-01-31" if warmup else gen.CFS_END.isoformat())
+        plans = self._plans(self.WARMUP_END if warmup else gen.CFS_END.isoformat())
         if self.tr.enabled:
-            _force_prefixes(self.tr, self.PREFIXES, plans)
+            # the untimed pre-run reads the warm-up window only
+            _force_prefixes(
+                self.tr, self.PREFIXES, plans, pre=self._plans(self.WARMUP_END)[0]
+            )
+            if not self.rest_rows:
+                # the rows the source really yields, once, untimed
+                self.rest_rows = plans[0].count()
         out = os.path.join(self.work, f"agg_{i}.parquet")
         root = self.docs_root
         # insert attempts are counted per job
@@ -305,7 +337,7 @@ class CfsDailyEtl(_Workload):
             "sources.rest.self_s": pre["sources.rest"],
             "sources.rest.partitions": _median(
                 self._count("prefix:sources.rest", "tasks")),
-            "sources.rest.rows": self.input_rows,
+            "sources.rest.rows": self.rest_rows,
             "functions.temporal.self_s": pre["functions.temporal"] - pre["sources.rest"],
             "operators.dedup.window_self_s":
                 pre["operators.dedup.window"] - pre["functions.temporal"],
@@ -330,18 +362,36 @@ class CfsDailyEtl(_Workload):
 # corpus_curation
 # ---------------------------------------------------------------------------
 
+_SERVED = ("doc_id", "text", "n_tokens", "bucket", "embedding")
+
 
 class CorpusCuration(_Workload):
     """LLM-data curation: quality stats + Gopher filter → exact dedup →
     MinHash → LSH candidates → exact Jaccard verification → connected
-    components → one doc per component → TxTable write."""
+    components → one doc per component → TxTable write, one job each.
+
+    A traced run then serves the last job's output once: it is copied
+    into a table with a CDC feed and a bloom filter on ``doc_id``, an
+    IVF index and an aggregate view are built on it, a change batch is
+    MERGEd and folded into both, and top-k probes and point reads run
+    on the result."""
 
     name = "corpus_curation"
     rows_name = "docs"
+    SERVES = True
+    SERVE_RESERVE_S = 20.0
     N_BASE = 3000
     SHARDS = 8
     THRESHOLD = 0.7
     NUM_HASHES = 16
+    N_LISTS = 8
+    N_PROBE = 2
+    K = 10
+    N_PROBES = 4
+    N_POINTS = 2
+    N_UPSERTS = 40
+    N_DELETES = 20
+    EXHAUSTIVE_SAMPLE = 3
     PREFIXES = (
         "operators.text",
         "operators.dedup.exact",
@@ -353,6 +403,10 @@ class CorpusCuration(_Workload):
     def setup(self, work: str) -> None:
         self.work = work
         self.corpus = gen.corpus(self.seed, self.N_BASE)
+        self.changes = gen.serve_changes(
+            self.seed, self.corpus, self.N_UPSERTS, self.N_DELETES,
+            self.N_PROBES, self.N_POINTS,
+        )
         # a corpus arrives sharded: one file per shard, so the scan
         # splits across every core
         self.path = os.path.join(work, "corpus")
@@ -360,6 +414,7 @@ class CorpusCuration(_Workload):
         table = pa.table({
             "doc_id": pa.array(self.corpus.ids, pa.int64()),
             "text": pa.array(self.corpus.texts, pa.string()),
+            "embedding": pa.array(list(self.corpus.embeddings), pa.list_(pa.float32())),
         })
         step = -(-table.num_rows // self.SHARDS)
         for s in range(self.SHARDS):
@@ -372,6 +427,10 @@ class CorpusCuration(_Workload):
         self.out = None
         self.result = None
         self.counts: dict[str, int] = {}
+        self.idx_path = os.path.join(work, "ivf")
+        self.view_path = os.path.join(work, "view")
+        self.served = None
+        self.snap_ms = self.kept_ratio = 0.0
 
     def _plans(self, shards: int):
         paths = sorted(glob.glob(os.path.join(self.path, "*.parquet")))
@@ -405,7 +464,8 @@ class CorpusCuration(_Workload):
         final = (
             uniq.join(comps, uniq["doc_id"] == comps["node"], "left")
             .filter(F.col("component").isNull() | (F.col("component") == F.col("doc_id")))
-            .select("doc_id", "text", "n_tokens", "quality", "lang_guess")
+            .withColumn("bucket", F.floor(F.col("n_tokens") / 20).cast("int"))
+            .select(*_SERVED)
         )
         dt = time.perf_counter() - t0
         if self.tr.enabled:
@@ -429,24 +489,163 @@ class CorpusCuration(_Workload):
         if self.out:
             shutil.rmtree(self.out, ignore_errors=True)
         self.out = out
+        self.out_bytes = _dir_bytes(out)
+        return dt
+
+    def _probe(self, qid: int, q, n_probe: int):
+        vec = ",".join(f"CAST({float(x)!r} AS FLOAT)" for x in q)
+        queries = self.spark.sql(f"SELECT {qid}L AS query_id, array({vec}) AS query_vec")
+        return ivf_index_topk(
+            self.spark, self.idx_path, queries, k=self.K, n_probe=n_probe,
+            id_col="doc_id", vec_col="embedding", dim=gen.EMBED_DIM,
+        )
+
+    def _refresh_index(self):
+        refresh_ivf_index(
+            self.spark, self.served, self.idx_path, n_lists=self.N_LISTS,
+            id_col="doc_id", vec_col="embedding",
+        )
+
+    def _refresh_view(self):
+        refresh_view(
+            self.spark, self.served, self.view_path,
+            keys=["bucket"], sums=["n_tokens"], feed_key="doc_id",
+        )
+
+    def serve(self) -> float:
+        """Serve the last job's output once; returns the wall time of the
+        change batch and the reads (the copy and the builds excluded)."""
+        ch = self.changes
+        self.served = TxTable.create(
+            self.spark,
+            os.path.join(self.work, "served"),
+            TxTable(self.spark, self.out).read(),
+            stats_columns=["doc_id"],
+            bloom_columns=["doc_id"],
+            change_data_feed=True,
+        )
+        with self.tr.span("operators.similarity.build"):
+            self._refresh_index()
+        with self.tr.span("operators.ivm.build"):
+            self._refresh_view()
+        new_vecs = self.spark.createDataFrame(
+            [(int(i), [float(x) for x in v]) for i, v in zip(ch.upserts, ch.vectors)],
+            "doc_id long, embedding array<float>",
+        )
+        cur = self.served.read()
+        changes = (
+            cur.join(new_vecs.withColumnRenamed("embedding", "_new"), "doc_id")
+            .withColumn("embedding", F.col("_new"))
+            .withColumn("op", F.lit(None).cast("string"))
+            .select(*_SERVED, "op")
+            .unionByName(
+                cur.filter(F.col("doc_id").isin(list(ch.deletes)))
+                .withColumn("op", F.lit("D")).select(*_SERVED, "op")
+            )
+        )
+        t0 = time.perf_counter()
+        with self.tr.span("sources.txtable.merge"):
+            self.served.merge(changes, key="doc_id")
+        with self.tr.span("operators.similarity.refresh"):
+            self._refresh_index()
+        with self.tr.span("operators.ivm.refresh"):
+            self._refresh_view()
+        for qid, q in enumerate(ch.queries):
+            with self.tr.span("operators.similarity.probe_plan"):
+                df = self._probe(qid, q, self.N_PROBE)
+            with self.tr.span("operators.similarity.probe_exec"):
+                rows = df.collect()
+            if len(rows) != self.K:
+                raise RuntimeError(f"probe {qid} returned {len(rows)} rows")
+        for point in ch.points:
+            with self.tr.span("sources.txtable.point_read"):
+                rows = self.served.read_point("doc_id", point).collect()
+            if [r["doc_id"] for r in rows] != [point]:
+                raise RuntimeError(f"point read of {point} returned {len(rows)} rows")
+        dt = time.perf_counter() - t0
+        if self.tr.enabled:
+            # outside every timed region: snapshot reconstruction and
+            # bloom skipping
+            t = time.perf_counter()
+            snap = self.served.snapshot()
+            self.snap_ms = (time.perf_counter() - t) * 1e3
+            self.kept_ratio = _median([
+                len(self.served.bloom_keep_files("doc_id", p)) / max(1, len(snap.files))
+                for p in ch.points
+            ])
         return dt
 
     def check(self):
-        _, pairs_df, comps_df = self.result
+        uniq, pairs_df, comps_df = self.result
         pairs = [(r["id_a"], r["id_b"], r["jaccard"]) for r in pairs_df.collect()]
         comps = {r["node"]: r["component"] for r in comps_df.collect()}
-        kept = [r["doc_id"] for r in TxTable(self.spark, self.out).read().select("doc_id").collect()]
+        unique = [r["doc_id"] for r in uniq.select("doc_id").collect()]
+        kept = [
+            r["doc_id"]
+            for r in TxTable(self.spark, self.out).read().select("doc_id").collect()
+        ]
         texts = dict(zip(self.corpus.ids, self.corpus.texts))
         ok, detail, self.recall = checks.check_curation(
-            texts, self.corpus.clusters, pairs, comps, kept, self.THRESHOLD
+            texts, self.corpus, pairs, comps, unique, kept, self.THRESHOLD
         )
-        return ok, detail
+        problems = [] if ok else [detail]
+        if self.served is None:
+            return ok, detail
+        # served rows: the kept docs after the change batch, as generated
+        ch = self.changes
+        emb = dict(zip(self.corpus.ids, self.corpus.embeddings))
+        emb.update(zip(ch.upserts, ch.vectors))
+        want = set(kept) - set(ch.deletes)
+        served = self.served.read().collect()
+        if {r["doc_id"] for r in served} != want or len(served) != len(want):
+            problems.append("served ids differ from the kept docs after the change batch")
+        elif any(
+            r["text"] != texts[r["doc_id"]]
+            or list(r["embedding"]) != emb[r["doc_id"]].tolist()
+            for r in served
+        ):
+            problems.append("served rows differ from the generated docs")
+        ids = np.array([r["doc_id"] for r in served], dtype=np.int64)
+        vecs = np.stack([emb[int(i)] for i in ids])
+        bad = 0
+        for qid in range(self.EXHAUSTIVE_SAMPLE):
+            q = ch.queries[qid]
+            rows = self._probe(qid, q, self.N_LISTS).collect()
+            ranked = [r["doc_id"] for r in sorted(rows, key=lambda r: r["rank"])]
+            if not checks.check_topk(ranked, ids, vecs, q, self.K):
+                bad += 1
+        if bad:
+            problems.append(f"{bad} exhaustive probes differ from brute force")
+        view = {
+            r["bucket"]: (r["n_rows"], r["sum_n_tokens"])
+            for r in finalize_state(
+                TxTable(self.spark, self.view_path).read(), ["bucket"], sums=["n_tokens"]
+            ).collect()
+        }
+        if not checks.check_view(view, [(r["bucket"], r["n_tokens"]) for r in served]):
+            problems.append("view differs from a recompute")
+        if problems:
+            return False, "; ".join(problems)
+        return True, (
+            f"{detail}; {len(served)} served rows match the change batch, "
+            f"{self.EXHAUSTIVE_SAMPLE} exhaustive probes exact, view exact"
+        )
 
     def layer_metrics(self):
         pre = {n: _median(self._self(f"prefix:{n}")) for n in self.PREFIXES}
         keep = _median(self._self("prefix:operators.dedup.keep"))
         cc = _median(self._self("operators.dedup.cc"))
         create = _median(self._self("sources.txtable.create"))
+        execs = self.tr.named("operators.similarity.probe_exec")
+        # files a MERGE rewrote = files of the previous snapshot that its
+        # own snapshot no longer holds
+        rewritten = []
+        for h in self.served.history() if self.served else ():
+            if h["operation"] == "MERGE":
+                before = set(self.served.snapshot(h["version"] - 1).files)
+                after = set(self.served.snapshot(h["version"]).files)
+                rewritten.append(len(before - after))
+        ms = lambda name: _median(self._self(name)) * 1e3  # noqa: E731
         c = self.counts
         m = {
             "operators.text.self_s": pre["operators.text"],
@@ -466,11 +665,28 @@ class CorpusCuration(_Workload):
             # the keep prefix runs with the kept set cached: the join only
             "operators.dedup.keep_self_s": keep,
             "operators.dedup.cluster_recall": self.recall,
-            "sources.txtable.commit_s": create - keep,
+            "sources.txtable.create_self_s": create - keep,
             "sources.txtable.bytes_written_per_input_byte":
-                _dir_bytes(self.out) / self.input_bytes,
+                self.out_bytes / self.input_bytes,
+            # the serve phase
+            "sources.txtable.merge_ms": ms("sources.txtable.merge"),
+            "sources.txtable.files_rewritten_per_merge": _median(rewritten),
+            "sources.txtable.snapshot_ms": self.snap_ms,
+            "sources.txtable.log_versions":
+                self.served.latest_version() + 1 if self.served else 0,
+            "sources.txtable.point_read_ms": ms("sources.txtable.point_read"),
+            "sources.txtable.files_kept_ratio": self.kept_ratio,
+            "operators.similarity.build_ms": ms("operators.similarity.build"),
+            "operators.similarity.refresh_ms": ms("operators.similarity.refresh"),
+            "operators.similarity.probe_plan_ms": ms("operators.similarity.probe_plan"),
+            "operators.similarity.probe_exec_ms":
+                _median([s.seconds for s in execs]) * 1e3,
+            "operators.similarity.probe_input_mb":
+                _median([s.counts["input_bytes"] for s in execs]) / _MB,
+            "operators.ivm.build_ms": ms("operators.ivm.build"),
+            "operators.ivm.refresh_ms": ms("operators.ivm.refresh"),
         }
         return m, _blocking(m)
 
 
-WORKLOADS ={w.name: w for w in (CfsDailyEtl, CorpusCuration)}
+WORKLOADS = {w.name: w for w in (CfsDailyEtl, CorpusCuration)}
