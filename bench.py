@@ -421,7 +421,6 @@ _UNBENCHED_TWINS = {
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     only: list[str] | None = None
     if len(sys.argv) > 2 and sys.argv[1] == "--only":
         only = [s for s in sys.argv[2].split(",") if s]
@@ -429,12 +428,15 @@ def main() -> None:
     sf = float(m.group(1)) if m else None
 
     from cincinnati_police_calls_for_service_etl_using_python_dask_spark.session import (
+        _DEFAULT_CPUS,
         data_scaled_conf,
         get_spark,
     )
     from cincinnati_police_calls_for_service_etl_using_python_dask_spark.queries import (
         spark_queries,
     )
+
+    cpus = _DEFAULT_CPUS
 
     total_bytes = sum(
         os.path.getsize(os.path.join(sf_dir, f))

@@ -826,9 +826,11 @@ def _train_spherical_kmeans(
     """Lloyd's iterations on the unit sphere (cosine k-means) over a
     driver-side sample — one BLAS matmul per iteration. Returns unit
     centroids of shape (n_lists, dim). Deterministic for a fixed
-    (sample, seed)."""
+    (sample, seed). Zero-norm rows stay zero instead of NaN-poisoning
+    the centroids (the same guard as the assignment kernel)."""
     rng = np.random.RandomState(seed)
-    unit = sample / np.linalg.norm(sample, axis=1, keepdims=True)
+    norms = np.linalg.norm(sample, axis=1, keepdims=True)
+    unit = np.divide(sample, norms, out=np.zeros_like(sample), where=norms > 0)
     centroids = unit[rng.choice(len(unit), size=n_lists, replace=False)]
     for _ in range(n_iter):
         assign = np.argmax(unit @ centroids.T, axis=1)
@@ -836,107 +838,8 @@ def _train_spherical_kmeans(
             members = unit[assign == c]
             if len(members):
                 centroids[c] = members.mean(axis=0)
-        centroids /= np.linalg.norm(centroids, axis=1, keepdims=True)
-    return centroids
-
-
-def _train_spherical_kmeans_distributed(
-    vectors: DataFrame,
-    n_lists: int,
-    n_iter: int,
-    seed: int,
-    vec_col: str = "embedding",
-    dim: int | None = None,
-):
-    """Distributed Lloyd's on the unit sphere — removes the bounded
-    driver-sample ceiling of :func:`_train_spherical_kmeans` (VERDICT
-    r4 #6): training sees EVERY corpus row at any scale.
-
-    Shape per iteration: ONE Spark job. Executors stream Arrow batches
-    through ``mapInPandas``, assign each unit vector to its nearest
-    centroid with one BLAS matmul per batch, and scatter-add into a
-    per-PARTITION (n_lists × (dim+1)) partial-sufficient-statistics
-    block (count + vector sum per list). Only those partials cross to
-    the driver — n_partitions × n_lists rows of dim+1 doubles, i.e.
-    kilobytes regardless of corpus size — where they are combined in
-    partition order (deterministic summation for a fixed layout) and
-    the centroids renormalized. No shuffle at all: the reduction is
-    map-side partial + driver combine, the same allreduce shape
-    distributed k-means uses on any engine.
-
-    Init is a tiny hash-spread driver sample (``n_lists`` rows ordered
-    by ``xxhash64(vec)`` — deterministic and corpus-order-free); the
-    iterations themselves are what see the full data. Empty lists keep
-    their previous centroid, matching the sample trainer.
-
-    Cost: ``n_iter`` corpus passes vs the sample trainer's single
-    bounded ``limit().toPandas()``. Use for corpora where 100k rows
-    under-represents the embedding distribution; the probe/assign
-    stages downstream are identical for either trainer.
-    """
-    seed_rows = (
-        vectors.select(
-            _to_double(F.col(vec_col)).alias("_v"),
-            F.xxhash64(F.col(vec_col), F.lit(seed)).alias("_h"),
-        )
-        .orderBy("_h")
-        .limit(n_lists)
-        .toPandas()["_v"]
-    )
-    centroids = np.stack(seed_rows.to_numpy()).astype(np.float64)
-    centroids /= np.linalg.norm(centroids, axis=1, keepdims=True)
-    if dim is None:
-        dim = centroids.shape[1]
-
-    import pandas as pd  # local: executor-side import mirrors kernel use
-
-    partial_schema = "pid long, list_id int, cnt double, vsum array<double>"
-    unit_src = vectors.select(_to_double(F.col(vec_col)).alias("_v"))
-
-    for _ in range(n_iter):
-        cen = centroids  # closure-captured; (n_lists × dim) doubles, pickled per job
-
-        def partials(batches):
-            cnt = np.zeros(len(cen), dtype=np.float64)
-            sums = np.zeros_like(cen)
-            seen = False
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                seen = True
-                mat = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-                mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-                assign = np.argmax(mat @ cen.T, axis=1)
-                cnt += np.bincount(assign, minlength=len(cen))
-                np.add.at(sums, assign, mat)
-            if not seen:
-                return
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            yield pd.DataFrame(
-                {
-                    "pid": pid,
-                    "list_id": np.arange(len(cen), dtype=np.int32),
-                    "cnt": cnt,
-                    "vsum": list(sums),
-                }
-            )
-
-        agg = (
-            unit_src.mapInPandas(partials, partial_schema)
-            .toPandas()
-            .sort_values(["pid", "list_id"], kind="mergesort")
-        )
-        new_cnt = np.zeros(n_lists, dtype=np.float64)
-        new_sum = np.zeros((n_lists, dim), dtype=np.float64)
-        for lid, cnt_v, vsum in zip(agg["list_id"], agg["cnt"], agg["vsum"]):
-            new_cnt[lid] += cnt_v
-            new_sum[lid] += np.asarray(vsum, dtype=np.float64)
-        nonempty = new_cnt > 0
-        centroids = centroids.copy()
-        centroids[nonempty] = new_sum[nonempty] / new_cnt[nonempty, None]
-        centroids /= np.linalg.norm(centroids, axis=1, keepdims=True)
+        cnorms = np.linalg.norm(centroids, axis=1, keepdims=True)
+        np.divide(centroids, cnorms, out=centroids, where=cnorms > 0)
     return centroids
 
 
@@ -962,6 +865,95 @@ def _ivf_cache_put(key, value) -> None:
         _IVF_CENTROID_CACHE.pop(next(iter(_IVF_CENTROID_CACHE)))
 
 
+def _sample_centroids(
+    vectors: DataFrame,
+    n_lists: int,
+    train_sample: int,
+    n_iter: int,
+    seed: int,
+    vec_col: str,
+    index_cache_key: str | None = None,
+) -> np.ndarray:
+    """The coarse quantizer of every IVF and SemDeDup path: spherical
+    k-means (:func:`_train_spherical_kmeans`) over the first
+    ``train_sample`` rows, pulled to the driver in one bounded
+    ``limit().toPandas()`` — how production IVF indexes train their
+    quantizers at any corpus size. With an ``index_cache_key`` the
+    centroids are shared through the trained-index LRU, keyed also by
+    the training hyperparameters (staleness contract: see
+    :func:`ivf_ann_topk`)."""
+    key = (
+        (index_cache_key, n_lists, train_sample, n_iter, seed)
+        if index_cache_key is not None
+        else None
+    )
+    centroids = _ivf_cache_get(key) if key else None
+    if centroids is None:
+        sample = np.stack(
+            vectors.select(vec_col).limit(train_sample).toPandas()[vec_col].to_numpy()
+        ).astype(np.float64)
+        centroids = _train_spherical_kmeans(sample, n_lists, n_iter, seed)
+        if key:
+            _ivf_cache_put(key, centroids)
+    return centroids
+
+
+def _unit_rows(v: pd.Series) -> np.ndarray:
+    """Stack an Arrow batch of vectors into unit rows; zero-norm rows
+    stay zero instead of NaN-poisoning the argmax/argsort downstream,
+    so every path that assigns or probes agrees on degenerate inputs."""
+    mat = np.stack(v.to_numpy()).astype(np.float64)
+    norms = np.linalg.norm(mat, axis=1, keepdims=True)
+    np.divide(mat, norms, out=mat, where=norms > 0)
+    return mat
+
+
+def _probe_order(mat: np.ndarray, centroids: np.ndarray, n_probe: int) -> np.ndarray:
+    """Each unit row's ``n_probe`` nearest centroid ids, nearest first."""
+    return np.argsort(-(mat @ centroids.T), axis=1)[:, :n_probe].astype(np.int32)
+
+
+# Centroid assignment and probe selection stay Arrow-batched pandas
+# UDFs by design: one BLAS matmul per batch is the right kernel at any
+# corpus size, and Python crosses the boundary once per batch, not per
+# row. Two native spellings were tried and rejected: unrolled-literal
+# assignment (n_lists × dim literal terms per row) blew JIT
+# scalar-replacement memory at 8×64 already, and a literal-coefficient
+# probe projection cost ~2.5 s of Catalyst analysis per plan while
+# saving nothing at execution (A/B at sf0.1: 1.8 s vs 4.2 s per cold
+# plan, identical warm execution). Centroids are closure-captured, so
+# they ship with the task.
+
+
+def _assign_list_udf(centroids: np.ndarray):
+    """Nearest-centroid list id per vector — the one assignment kernel
+    shared by index build, CDC refresh, ad-hoc probes and SemDeDup."""
+    from pyspark.sql.functions import pandas_udf
+
+    cen = centroids
+
+    @pandas_udf("int")
+    def assign_list(v: pd.Series) -> pd.Series:
+        return pd.Series(np.argmax(_unit_rows(v) @ cen.T, axis=1).astype(np.int32))
+
+    return assign_list
+
+
+def _probe_lists_udf(centroids: np.ndarray, n_probe: int):
+    """The ``n_probe`` nearest list ids per query vector — the one
+    probe-selection kernel of every DataFrame-side probe; the driver
+    probes run the same :func:`_probe_order` over collected rows."""
+    from pyspark.sql.functions import pandas_udf
+
+    cen = centroids
+
+    @pandas_udf("array<int>")
+    def probe_lists(v: pd.Series) -> pd.Series:
+        return pd.Series(list(_probe_order(_unit_rows(v), cen, n_probe)))
+
+    return probe_lists
+
+
 def ivf_ann_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -977,32 +969,24 @@ def ivf_ann_topk(
     query_vec_col: str = "query_vec",
     index_cache_key: str | None = None,
     dim: int | None = None,
-    train: str = "sample",
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the data-adaptive
     counterpart of :func:`lsh_ann_topk`.
 
     Index: a spherical k-means coarse quantizer is trained on a
-    bounded driver-side sample (``train_sample`` rows — how production
-    IVF indexes train their quantizers at any corpus size; pass
-    ``train="distributed"`` to instead run full-corpus mini-batch
-    Lloyd's via :func:`_train_spherical_kmeans_distributed`, removing
-    the sample ceiling at the cost of ``n_iter`` corpus passes at
-    index-build time), then every
-    corpus vector is assigned to its nearest centroid by an
-    Arrow-batched pandas UDF (one numpy matmul per batch, map-side, no
-    shuffle). Probe: each query searches its ``n_probe`` nearest
-    centroid lists — candidates come from a broadcast hash join on
-    ``list_id``, never a cross product — and is exactly cosine-reranked
-    within them.
+    bounded driver-side sample (``train_sample`` rows, see
+    :func:`_sample_centroids`), then every corpus vector is assigned
+    to its nearest centroid by an Arrow-batched pandas UDF (one numpy
+    matmul per batch, map-side, no shuffle). Probe: each query
+    searches its ``n_probe`` nearest centroid lists — candidates come
+    from a broadcast hash join on ``list_id``, never a cross product —
+    and is exactly cosine-reranked within them.
 
     Scale: corpus touched once for assignment; candidate volume is
     ~``n_probe``/``n_lists`` of the corpus per query. Recall/latency
     trades via (n_lists, n_probe); recall gate in tests vs the
     brute-force tier.
     """
-    from pyspark.sql.functions import pandas_udf
-
     # Index reuse: a real IVF index is TRAINED ONCE and probed many
     # times — retraining the quantizer per query would be like
     # rebuilding a B-tree per lookup. Callers that know their corpus
@@ -1018,57 +1002,19 @@ def ivf_ann_topk(
     # tiers like n_probe=n_lists stay correct: coverage is exhaustive
     # regardless of centroid quality). The cache is a small LRU
     # (_IVF_CACHE_MAX), so retired corpora age out.
-    cache_key = (
-        (index_cache_key, n_lists, train_sample, n_iter, seed, train)
-        if index_cache_key is not None
-        else None
+    centroids = _sample_centroids(
+        vectors, n_lists, train_sample, n_iter, seed, vec_col, index_cache_key
     )
-    centroids = _ivf_cache_get(cache_key) if cache_key else None
-    if centroids is None:
-        if train == "distributed":
-            centroids = _train_spherical_kmeans_distributed(
-                vectors, n_lists, n_iter, seed, vec_col=vec_col, dim=dim
-            )
-        else:
-            sample = np.stack(
-                vectors.select(vec_col).limit(train_sample).toPandas()[vec_col].to_numpy()
-            ).astype(np.float64)
-            centroids = _train_spherical_kmeans(sample, n_lists, n_iter, seed)
-        if cache_key:
-            _ivf_cache_put(cache_key, centroids)
 
-    # Centroid assignment stays an Arrow-batched pandas UDF by design:
-    # one BLAS matmul per batch is the right kernel at any corpus size,
-    # and an unrolled-literal codegen spelling (n_lists × dim literal
-    # terms per row) was tried and rejected — the generated method blew
-    # JIT scalar-replacement memory at 8×64 already. Python crosses the
-    # boundary once per batch, not per row.
-    @pandas_udf("int")
-    def assign_list(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy()).astype(np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        return pd.Series(np.argmax(mat @ centroids.T, axis=1).astype(np.int32))
-
-    # Probe-side selection stays an Arrow-batched pandas UDF like the
-    # corpus side. A native literal-coefficient spelling (n_lists × dim
-    # terms in one projection) was TRIED in round 5 and REJECTED: the
-    # 512-node expression tree cost ~2.5 s of Catalyst analysis per
-    # plan construction while saving nothing at execution — the probe
-    # crossing fully overlaps the corpus-assignment crossing in the
-    # stage DAG (A/B-measured at sf0.1: 1.8 s vs 4.2 s per cold plan,
-    # identical warm execution).
-    @pandas_udf("array<int>")
-    def probe_lists(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy()).astype(np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        top = np.argsort(-(mat @ centroids.T), axis=1)[:, :n_probe].astype(np.int32)
-        return pd.Series(list(top))
-
-    indexed = vectors.withColumn("_list", assign_list(F.col(vec_col)))
+    indexed = vectors.withColumn(
+        "_list", _assign_list_udf(centroids)(F.col(vec_col))
+    )
     probes = queries.select(
         query_id_col,
         query_vec_col,
-        F.explode(probe_lists(F.col(query_vec_col))).alias("_list"),
+        F.explode(
+            _probe_lists_udf(centroids, n_probe)(F.col(query_vec_col))
+        ).alias("_list"),
     )
     candidates = indexed.join(F.broadcast(probes), on="_list", how="inner")
     scored = candidates.select(
@@ -1104,7 +1050,6 @@ def build_ivf_index(
     seed: int = 7,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    train: str = "sample",
 ) -> None:
     """Train the coarse quantizer and persist the index:
 
@@ -1115,29 +1060,10 @@ def build_ivf_index(
     Assignment is the same Arrow-batched BLAS kernel as the ad-hoc
     tier (one matmul per batch, map-side); the corpus is scanned once
     at build time and never again in full at query time."""
-    from pyspark.sql.functions import pandas_udf
-
-    spark = vectors.sparkSession
-    if train == "distributed":
-        centroids = _train_spherical_kmeans_distributed(
-            vectors, n_lists, n_iter, seed, vec_col=vec_col
-        )
-    else:
-        sample = np.stack(
-            vectors.select(vec_col).limit(train_sample).toPandas()[vec_col].to_numpy()
-        ).astype(np.float64)
-        centroids = _train_spherical_kmeans(sample, n_lists, n_iter, seed)
-
-    spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "list_id int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-
-    @pandas_udf("int")
-    def assign_list(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy()).astype(np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        return pd.Series(np.argmax(mat @ centroids.T, axis=1).astype(np.int32))
+    centroids = _sample_centroids(
+        vectors, n_lists, train_sample, n_iter, seed, vec_col
+    )
+    _write_centroids(vectors.sparkSession, path, centroids)
 
     # Cluster rows by list BEFORE the partitioned write: without it
     # every map task emits a file into every list dir (tasks × n_lists
@@ -1147,7 +1073,7 @@ def build_ivf_index(
     # corpora Spark splits big files on read, so probe parallelism is
     # preserved while file count stays O(n_lists).
     (
-        vectors.withColumn("_list", assign_list(F.col(vec_col)))
+        vectors.withColumn("_list", _assign_list_udf(centroids)(F.col(vec_col)))
         .repartition(F.col("_list"))
         .write.mode("overwrite")
         .partitionBy("_list")
@@ -1155,24 +1081,11 @@ def build_ivf_index(
     )
 
 
-def _assign_list_udf(centroids: np.ndarray):
-    """Arrow-batched nearest-centroid assignment (one BLAS matmul per
-    batch, centroids closure-captured → broadcast with the task).
-    Zero-norm rows stay zero instead of NaN-poisoning the argmax (the
-    same guard as the probe kernels), so every path that assigns —
-    index build, CDC refresh, probe — agrees on degenerate inputs."""
-    from pyspark.sql.functions import pandas_udf
-
-    cen = centroids
-
-    @pandas_udf("int")
-    def assign_list(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        np.divide(mat, norms, out=mat, where=norms > 0)
-        return pd.Series(np.argmax(mat @ cen.T, axis=1).astype(np.int32))
-
-    return assign_list
+def _write_centroids(spark, path: str, centroids: np.ndarray) -> None:
+    spark.createDataFrame(
+        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+        "list_id int, centroid array<double>",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
 
 
 def _load_centroids(spark, path: str) -> np.ndarray:
@@ -1297,7 +1210,6 @@ def refresh_ivf_index(
     seed: int = 7,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    train: str = "sample",
     centroids: "np.ndarray | None" = None,
     app_id: str | None = None,
     log_store=None,
@@ -1332,7 +1244,7 @@ def refresh_ivf_index(
     :func:`ivf_index_topk` probes both layouts transparently.
 
     First call initializes: train the coarse quantizer on the source
-    snapshot (``train``/``train_sample``/``n_iter``/``seed`` as in
+    snapshot (``train_sample``/``n_iter``/``seed`` as in
     :func:`build_ivf_index`) — or adopt a caller-trained ``centroids``
     matrix (r12, the FAISS bring-your-own-quantizer shape: train the
     model offline/elsewhere, hand the index its frozen artifact; also
@@ -1373,22 +1285,11 @@ def refresh_ivf_index(
         if centroids is not None:
             centroids = np.asarray(centroids, dtype=np.float64)
             n_lists = len(centroids)
-        elif train == "distributed":
-            centroids = _train_spherical_kmeans_distributed(
-                vectors, n_lists, n_iter, seed, vec_col=vec_col
-            )
         else:
-            sample = np.stack(
-                vectors.select(vec_col)
-                .limit(train_sample)
-                .toPandas()[vec_col]
-                .to_numpy()
-            ).astype(np.float64)
-            centroids = _train_spherical_kmeans(sample, n_lists, n_iter, seed)
-        spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "list_id int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+            centroids = _sample_centroids(
+                vectors, n_lists, train_sample, n_iter, seed, vec_col
+            )
+        _write_centroids(spark, path, centroids)
         # Range-cluster with an EXPLICIT partition count: contiguous
         # _list ranges give each file a tight [min, max] zone map
         # (hash repartition scatters arbitrary lists per partition —
@@ -1588,7 +1489,6 @@ def rebuild_ivf_index(
     seed: int = 7,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    train: str = "sample",
     centroids: "np.ndarray | None" = None,
     app_id: str | None = None,
     log_store=None,
@@ -1651,18 +1551,10 @@ def rebuild_ivf_index(
     if centroids is not None:
         centroids = np.asarray(centroids, dtype=np.float64)
         n_lists = len(centroids)
-    elif train == "distributed":
-        centroids = _train_spherical_kmeans_distributed(
-            vectors, n_lists, n_iter, seed, vec_col=vec_col
-        )
     else:
-        sample = np.stack(
-            vectors.select(vec_col)
-            .limit(train_sample)
-            .toPandas()[vec_col]
-            .to_numpy()
-        ).astype(np.float64)
-        centroids = _train_spherical_kmeans(sample, n_lists, n_iter, seed)
+        centroids = _sample_centroids(
+            vectors, n_lists, train_sample, n_iter, seed, vec_col
+        )
 
     _write_versioned_model(
         f"{path}/centroids_v{src_v}.parquet",
@@ -1740,7 +1632,6 @@ def refresh_pq_codes(
     train_sample: int = 100_000,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    train: str = "sample",
     codebooks: "np.ndarray | None" = None,
     app_id: str | None = None,
     log_store=None,
@@ -1755,8 +1646,8 @@ def refresh_pq_codes(
     prunes both its affected-file discovery and its conflict interval.
 
     First call initializes: train codebooks on the source snapshot
-    via :func:`train_pq` (``train``/``train_sample``/``n_iter``/
-    ``seed``) — or adopt a caller-trained ``codebooks`` array (the
+    via :func:`train_pq` (``train_sample``/``n_iter``/``seed``) — or
+    adopt a caller-trained ``codebooks`` array (the
     bring-your-own-model shape; also the replay-oracle hook, since
     the caller controls the training rows) — encode every row
     (:func:`pq_encode`, one Arrow crossing), create the table stamped
@@ -1786,7 +1677,7 @@ def refresh_pq_codes(
         else:
             books = train_pq(
                 vectors, m=m, ksub=ksub, n_iter=n_iter, seed=seed,
-                train_sample=train_sample, vec_col=vec_col, train=train,
+                train_sample=train_sample, vec_col=vec_col,
             )
         mm, kk, _ = books.shape
         spark.createDataFrame(
@@ -1847,7 +1738,6 @@ def rebuild_pq_codes(
     train_sample: int = 100_000,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    train: str = "sample",
     codebooks: "np.ndarray | None" = None,
     app_id: str | None = None,
     log_store=None,
@@ -1890,7 +1780,7 @@ def rebuild_pq_codes(
     else:
         books = train_pq(
             vectors, m=m, ksub=ksub, n_iter=n_iter, seed=seed,
-            train_sample=train_sample, vec_col=vec_col, train=train,
+            train_sample=train_sample, vec_col=vec_col,
         )
     mm_, kk, _ = books.shape
     _write_versioned_model(
@@ -2114,22 +2004,12 @@ def pq_codes_maintained_topk(
         raise ValueError("pass n_probe with ivf_path")
 
     if probe == "join":
-        from pyspark.sql.functions import pandas_udf
-
         lut = _lut_frame(queries, books, query_id_col, query_vec_col)
         if ivf_path is not None:
             psnap = TxTable(spark, f"{ivf_path}/postings_tx").snapshot()
-            cen = _maintained_centroids(spark, ivf_path, psnap)
-            npr = n_probe
-
-            @pandas_udf("array<int>")
-            def probe_lists(v: pd.Series) -> pd.Series:
-                mat = np.stack(v.to_numpy()).astype(np.float64)
-                norms = np.linalg.norm(mat, axis=1, keepdims=True)
-                np.divide(mat, norms, out=mat, where=norms > 0)
-                top = np.argsort(-(mat @ cen.T), axis=1)[:, :npr]
-                return pd.Series(list(top.astype(np.int32)))
-
+            probe_lists = _probe_lists_udf(
+                _maintained_centroids(spark, ivf_path, psnap), n_probe
+            )
             probes = queries.select(
                 query_id_col,
                 F.explode(probe_lists(F.col(query_vec_col))).alias("_list"),
@@ -2193,12 +2073,10 @@ def pq_codes_maintained_topk(
             queries, [query_id_col, query_vec_col],
             "pq_codes_maintained_topk driver probe", max_driver_queries,
         )
-        q_mat = np.stack(
-            [np.asarray(r[query_vec_col], dtype=np.float64) for r in q_rows]
+        probe_mat = _probe_order(
+            _unit_rows(pd.Series([r[query_vec_col] for r in q_rows])),
+            centroids, n_probe,
         )
-        q_norms = np.linalg.norm(q_mat, axis=1, keepdims=True)
-        np.divide(q_mat, q_norms, out=q_mat, where=q_norms > 0)
-        probe_mat = np.argsort(-(q_mat @ centroids.T), axis=1)[:, :n_probe]
         probed_lists = sorted({int(l) for row in probe_mat for l in row})
         qid_field = queries.select(query_id_col).schema.fields[0]
         if isinstance(qid_field.dataType, (T.LongType, T.IntegerType)):
@@ -2333,22 +2211,12 @@ def ivf_index_topk(
         )
 
     if probe == "join":
-        from pyspark.sql.functions import pandas_udf
-
-        cen = centroids
-
-        @pandas_udf("array<int>")
-        def probe_lists(v: pd.Series) -> pd.Series:
-            mat = np.stack(v.to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            np.divide(mat, norms, out=mat, where=norms > 0)
-            top = np.argsort(-(mat @ cen.T), axis=1)[:, :n_probe]
-            return pd.Series(list(top.astype(np.int32)))
-
         probes = queries.select(
             query_id_col,
             query_vec_col,
-            F.explode(probe_lists(F.col(query_vec_col))).alias("_list"),
+            F.explode(
+                _probe_lists_udf(centroids, n_probe)(F.col(query_vec_col))
+            ).alias("_list"),
         )
         # bounded: ≤ n_lists ints — partition pruning needs literals
         probed_lists = sorted(
@@ -2370,16 +2238,13 @@ def ivf_index_topk(
         queries, [query_id_col, query_vec_col],
         "ivf_index_topk driver probe", max_driver_queries,
     )
-    q_mat = np.stack(
-        [np.asarray(r[query_vec_col], dtype=np.float64) for r in q_rows]
+    # the 'join' probe kernel's math over the collected rows: an
+    # all-zero query stays zero (arbitrary-but-defined probe order)
+    # instead of NaN-poisoning its argsort, so both modes agree on it
+    probe = _probe_order(
+        _unit_rows(pd.Series([r[query_vec_col] for r in q_rows])),
+        centroids, n_probe,
     )
-    # same zero-norm guard as the 'join' probe kernel: an all-zero
-    # query vector must stay zero (arbitrary-but-defined probe order),
-    # not NaN-poison its argsort — keeps the two probe modes
-    # row-identical on degenerate inputs (r10, r9 advisory).
-    q_norms = np.linalg.norm(q_mat, axis=1, keepdims=True)
-    np.divide(q_mat, q_norms, out=q_mat, where=q_norms > 0)
-    probe = np.argsort(-(q_mat @ centroids.T), axis=1)[:, :n_probe]
     probed_lists = sorted({int(l) for row in probe for l in row})
 
     # Probes as a VALUES LocalRelation, not createDataFrame: an
@@ -2512,7 +2377,6 @@ def semdedup(
     n_iter: int = 8,
     seed: int = 7,
     index_cache_key: str | None = None,
-    train: str = "sample",
 ) -> DataFrame:
     """Keep/drop labels for semantic dedup.
 
@@ -2527,8 +2391,8 @@ def semdedup(
       ground-truth/oracle spelling — run it on samples, not corpora).
     - ``n_clusters=k`` — SemDeDup proper: the scope is the vector's
       k-means cluster. Assignment is one map-side Arrow-batched matmul
-      against the (tiny, driver-trained — see ivf_ann_topk's
-      train_sample rationale) centroid matrix; pairs are one dense
+      against the (tiny, driver-trained — see
+      :func:`_sample_centroids`) centroid matrix; pairs are one dense
       Gram per cluster via applyInPandas, so each vector ships ONCE
       and the work is sum of squared CLUSTER sizes, not corpus size
       squared. Cross-cluster near-dups are missed — SemDeDup's
@@ -2560,39 +2424,16 @@ def semdedup(
             )
         )
 
-    from pyspark.sql.functions import pandas_udf
-
-    cache_key = (
-        (index_cache_key, n_clusters, train_sample, n_iter, seed, train)
-        if index_cache_key is not None
-        else None
+    centroids = _sample_centroids(
+        vectors, n_clusters, train_sample, n_iter, seed, vec_col,
+        index_cache_key,
     )
-    centroids = _ivf_cache_get(cache_key) if cache_key else None
-    if centroids is None:
-        if train == "distributed":
-            centroids = _train_spherical_kmeans_distributed(
-                vectors, n_clusters, n_iter, seed, vec_col=vec_col
-            )
-        else:
-            sample = np.stack(
-                vectors.select(vec_col).limit(train_sample).toPandas()[vec_col].to_numpy()
-            ).astype(np.float64)
-            centroids = _train_spherical_kmeans(sample, n_clusters, n_iter, seed)
-        if cache_key:
-            _ivf_cache_put(cache_key, centroids)
-
-    @pandas_udf("int")
-    def assign_cluster(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy()).astype(np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        return pd.Series(np.argmax(mat @ centroids.T, axis=1).astype(np.int32))
-
     vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     assigned = vectors.select(
         F.col(id_col).alias("__id"),
         vd.alias("_v"),
         l2_norm(vd).alias("_n"),
-        assign_cluster(F.col(vec_col)).alias("_cluster"),
+        _assign_list_udf(centroids)(F.col(vec_col)).alias("_cluster"),
     )
 
     def _cluster_labels(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -2808,7 +2649,6 @@ def train_pq(
     seed: int = 7,
     train_sample: int = 100_000,
     vec_col: str = "embedding",
-    train: str = "sample",
 ) -> np.ndarray:
     """Train per-subspace PQ codebooks on a bounded driver-side sample.
 
@@ -2819,23 +2659,7 @@ def train_pq(
     (sample, seed). Returns float64 codebooks of shape
     ``(m, ksub, dim // m)``; raises if ``dim % m != 0`` or the sample
     has fewer than ``ksub`` rows.
-
-    ``train="distributed"`` (r9, VERDICT r8 #2) switches to
-    :func:`_train_pq_distributed`: every Lloyd's iteration sees the
-    FULL corpus via the same mapInPandas partial-sufficient-statistics
-    allreduce the IVF coarse quantizer uses — no
-    ``limit().toPandas()`` corpus sample anywhere on that path
-    (``train_sample`` is then ignored). Use it when a bounded sample
-    under-represents a skewed corpus; encode/ADC downstream are
-    identical for either trainer.
     """
-    if train == "distributed":
-        return _train_pq_distributed(
-            vectors, m=m, ksub=ksub, n_iter=n_iter, seed=seed,
-            vec_col=vec_col,
-        )
-    if train != "sample":
-        raise ValueError(f"train must be 'sample' or 'distributed', got {train!r}")
     pdf = vectors.select(vec_col).limit(train_sample).toPandas()
     if not len(pdf):
         raise ValueError("train_pq: empty training sample")
@@ -2873,123 +2697,6 @@ def _train_pq_numpy(
                 if len(members):
                     cen[c] = members.mean(axis=0)
         books[s] = cen
-    return books
-
-
-def _train_pq_distributed(
-    vectors: DataFrame,
-    m: int = 8,
-    ksub: int = 16,
-    n_iter: int = 10,
-    seed: int = 7,
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Distributed per-subspace PQ codebook training — removes
-    :func:`train_pq`'s bounded driver-sample ceiling (VERDICT r8 #2)
-    by reusing the partial-sufficient-statistics allreduce built for
-    the IVF coarse quantizer (:func:`_train_spherical_kmeans_distributed`).
-
-    Shape per iteration: ONE Spark job trains ALL ``m`` subspaces at
-    once. Executors stream Arrow batches through ``mapInPandas``,
-    unit-normalize, assign every subspace slice to its nearest
-    centroid (one BLAS matmul per subspace per batch), and scatter-add
-    into a per-partition (m × ksub) block of (count, dsub-dim sum)
-    partials. Only those partials cross to the driver —
-    n_partitions × m × ksub rows of dsub+1 doubles, kilobytes at any
-    corpus size — where they combine in (pid, sub, code) order
-    (deterministic summation for a fixed layout) and the centroids
-    update as plain L2 means (no renormalization: PQ subspace k-means
-    is Euclidean, matching the sample trainer). Empty codes keep their
-    previous centroid, also matching.
-
-    Init is a tiny hash-spread driver read of ``ksub`` rows (ordered
-    by ``xxhash64(vec, seed)`` — deterministic, corpus-order-free; the
-    same init contract as the distributed IVF trainer); the iterations
-    themselves see every corpus row. No corpus-sized
-    ``limit().toPandas()`` anywhere.
-    """
-    seed_rows = (
-        vectors.select(
-            _to_double(F.col(vec_col)).alias("_v"),
-            F.xxhash64(F.col(vec_col), F.lit(seed)).alias("_h"),
-        )
-        .orderBy("_h")
-        .limit(ksub)
-        .toPandas()["_v"]
-    )
-    if not len(seed_rows):
-        raise ValueError("train_pq(distributed): empty corpus")
-    init = np.stack(seed_rows.to_numpy()).astype(np.float64)
-    if len(init) < ksub:
-        raise ValueError(
-            f"train_pq(distributed): corpus of {len(init)} rows < ksub={ksub}"
-        )
-    dim = init.shape[1]
-    if dim % m:
-        raise ValueError(f"train_pq: dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    norms = np.linalg.norm(init, axis=1, keepdims=True)
-    np.divide(init, norms, out=init, where=norms > 0)
-    books = np.stack(
-        [init[:, s * dsub:(s + 1) * dsub].copy() for s in range(m)]
-    )  # (m, ksub, dsub)
-
-    import pandas as pd  # local: executor-side import mirrors kernel use
-
-    partial_schema = "pid long, sub int, code int, cnt double, vsum array<double>"
-    unit_src = vectors.select(_to_double(F.col(vec_col)).alias("_v"))
-
-    for _ in range(n_iter):
-        cen = books  # closure-captured; (m × ksub × dsub) doubles per job
-
-        def partials(batches):
-            cnt = np.zeros((m, ksub), dtype=np.float64)
-            sums = np.zeros((m, ksub, dsub), dtype=np.float64)
-            seen = False
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                seen = True
-                mat = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-                nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-                np.divide(mat, nrm, out=mat, where=nrm > 0)
-                for s in range(m):
-                    sub = mat[:, s * dsub:(s + 1) * dsub]
-                    d = -2.0 * (sub @ cen[s].T) + (cen[s] * cen[s]).sum(axis=1)
-                    assign = np.argmin(d, axis=1)
-                    cnt[s] += np.bincount(assign, minlength=ksub)
-                    np.add.at(sums[s], assign, sub)
-            if not seen:
-                return
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            subs, codes = np.divmod(np.arange(m * ksub), ksub)
-            yield pd.DataFrame(
-                {
-                    "pid": pid,
-                    "sub": subs.astype(np.int32),
-                    "code": codes.astype(np.int32),
-                    "cnt": cnt.reshape(-1),
-                    "vsum": list(sums.reshape(m * ksub, dsub)),
-                }
-            )
-
-        agg = (
-            unit_src.mapInPandas(partials, partial_schema)
-            .toPandas()
-            .sort_values(["pid", "sub", "code"], kind="mergesort")
-        )
-        new_cnt = np.zeros((m, ksub), dtype=np.float64)
-        new_sum = np.zeros((m, ksub, dsub), dtype=np.float64)
-        for s, c, cnt_v, vsum in zip(
-            agg["sub"], agg["code"], agg["cnt"], agg["vsum"]
-        ):
-            new_cnt[s, c] += cnt_v
-            new_sum[s, c] += np.asarray(vsum, dtype=np.float64)
-        books = books.copy()
-        nonempty = new_cnt > 0
-        books[nonempty] = new_sum[nonempty] / new_cnt[nonempty, None]
     return books
 
 
@@ -3163,14 +2870,11 @@ def pq_adc_topk(
     query_vec_col: str = "query_vec",
     dim: int | None = None,
     index_cache_key: str | None = None,
-    train: str = "sample",
     probe: str = "driver",
     max_driver_queries: int | None = None,
 ) -> DataFrame:
     """Two-stage PQ retrieval: integer-ADC shortlist over PQ codes →
     exact float cosine rerank → (query_id, vec_id, rank 1..k).
-    ``train="distributed"`` trains the codebooks on the full corpus
-    (see :func:`train_pq`).
 
     ``probe`` picks where the ADC lookup tables are built (r10,
     VERDICT r9 #1 — the same split as :func:`ivf_index_topk`):
@@ -3199,7 +2903,7 @@ def pq_adc_topk(
     trained-index LRU (see :func:`ivf_ann_topk` for the staleness
     contract)."""
     cache_key = (
-        ("pq", index_cache_key, m, ksub, n_iter, seed, train_sample, train)
+        ("pq", index_cache_key, m, ksub, n_iter, seed, train_sample)
         if index_cache_key is not None
         else None
     )
@@ -3207,7 +2911,7 @@ def pq_adc_topk(
     if books is None:
         books = train_pq(
             vectors, m=m, ksub=ksub, n_iter=n_iter, seed=seed,
-            train_sample=train_sample, vec_col=vec_col, train=train,
+            train_sample=train_sample, vec_col=vec_col,
         )
         if cache_key:
             _ivf_cache_put(cache_key, books)
@@ -3262,8 +2966,8 @@ def pq_adc_topk(
 # Distributed PCA / whitening (round 8): dimensionality reduction for
 # embedding columns — the standard pre-step before clustering /
 # SemDeDup / ANN on high-dim vectors (and the whitening transform that
-# makes cosine structure isotropic). Spark-first shape, the same
-# allreduce pattern as the distributed k-means trainer above:
+# makes cosine structure isotropic). Spark-first shape, a map-side
+# partial-statistics allreduce:
 #
 # - FIT in ONE corpus pass: executors stream Arrow batches through
 #   mapInPandas and reduce each PARTITION to (count, Σx, XᵀX) — a
@@ -3409,7 +3113,6 @@ def ivf_pq_topk(
     query_vec_col: str = "query_vec",
     dim: int | None = None,
     index_cache_key: str | None = None,
-    train: str = "sample",
     probe: str = "driver",
     max_driver_queries: int | None = None,
 ) -> DataFrame:
@@ -3442,42 +3145,17 @@ def ivf_pq_topk(
     small LUT and shuffle-joins an unbounded one: the true
     corpus-vs-corpus scale path. Row-identical to ``"driver"``
     (shared :func:`_pq_luts` integers; parity-tested)."""
-    from pyspark.sql.functions import pandas_udf
-
     # --- coarse quantizer (same contract as ivf_ann_topk) ----------
-    ckey = (
-        ("ivfpq-coarse", index_cache_key, n_lists, train_sample, n_iter, seed)
-        if index_cache_key is not None
-        else None
+    centroids = _sample_centroids(
+        vectors, n_lists, train_sample, n_iter, seed, vec_col, index_cache_key
     )
-    centroids = _ivf_cache_get(ckey) if ckey else None
-    if centroids is None:
-        sample = np.stack(
-            vectors.select(vec_col).limit(train_sample).toPandas()[vec_col].to_numpy()
-        ).astype(np.float64)
-        centroids = _train_spherical_kmeans(sample, n_lists, n_iter, seed)
-        if ckey:
-            _ivf_cache_put(ckey, centroids)
-
-    @pandas_udf("int")
-    def assign_list(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        np.divide(mat, norms, out=mat, where=norms > 0)
-        return pd.Series(np.argmax(mat @ centroids.T, axis=1).astype(np.int32))
-
-    @pandas_udf("array<int>")
-    def probe_lists(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        np.divide(mat, norms, out=mat, where=norms > 0)
-        top = np.argsort(-(mat @ centroids.T), axis=1)[:, :n_probe].astype(np.int32)
-        return pd.Series(list(top))
+    assign_list = _assign_list_udf(centroids)
+    probe_lists = _probe_lists_udf(centroids, n_probe)
 
     # --- PQ codebooks + integer LUTs (same contract as pq_adc_topk) -
     pkey = (
         ("ivfpq-books", index_cache_key, m, ksub, pq_iter, seed,
-         train_sample, train)
+         train_sample)
         if index_cache_key is not None
         else None
     )
@@ -3485,7 +3163,7 @@ def ivf_pq_topk(
     if books is None:
         books = train_pq(
             vectors, m=m, ksub=ksub, n_iter=pq_iter, seed=seed,
-            train_sample=train_sample, vec_col=vec_col, train=train,
+            train_sample=train_sample, vec_col=vec_col,
         )
         if pkey:
             _ivf_cache_put(pkey, books)

@@ -18,9 +18,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-# One knob for local parallelism; the driver may run us under its own
-# session, so every operator in this package is session-agnostic.
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# One knob for local parallelism (default: this process's cores); the driver
+# may run us under its own session, so every operator here is session-agnostic.
+_DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def _default_driver_mem() -> str:
@@ -101,7 +101,7 @@ def get_spark(
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     else:
-        builder = builder.config("spark.sql.shuffle.partitions", _DEFAULT_CPUS)
+        builder = builder.config("spark.sql.shuffle.partitions", str(_DEFAULT_CPUS))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -76,7 +76,7 @@ class SocrataReader(DataSourceReader):
         self.options = options
         self.ts_column = options.get("ts_column", "ts")
         self.start = _parse_date(options.get("start", "2019-01-01"))
-        self.end = _parse_date(options.get("end", dt.date(2024, 12, 31).isoformat()))
+        self.end = _parse_date(options.get("end", dt.date.today().isoformat()))
         self.mode = options.get("mode", "http")
 
     # -- predicate pushdown (S2) --------------------------------------

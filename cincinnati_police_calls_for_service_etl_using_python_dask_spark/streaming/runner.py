@@ -179,7 +179,7 @@ class CadenceRunner:
         the postings table's txn action).
 
         ``refresh_kwargs`` passes index hyperparameters
-        (n_lists/n_iter/seed/train/...) through to the INITIALIZING
+        (n_lists/n_iter/seed/...) through to the INITIALIZING
         call; they are inert once the index exists (centroids frozen).
         ``kw`` passes through to the runner (clock/sleep, catch_up,
         interval).

@@ -388,37 +388,6 @@ def test_semdedup_cluster1_equals_exact(spark):
     assert len(clustered_drops) > 0
 
 
-def test_semdedup_distributed_trainer_properties(spark):
-    """The distributed quantizer tier holds the same semantic
-    invariants as the sample trainer: n_clusters=1 collapses to the
-    exact sweep, and clustered drops are a subset of exact drops."""
-    from .conftest import SF_SMOKE
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators import (
-        similarity as sim,
-    )
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.files import (
-        read_testdata,
-    )
-
-    emb = read_testdata(spark, SF_SMOKE, "embeddings")
-    exact = {r["vec_id"]: r["status"] for r in sim.semdedup(emb, threshold=0.4).collect()}
-    one = {
-        r["vec_id"]: r["status"]
-        for r in sim.semdedup(
-            emb, threshold=0.4, n_clusters=1, n_iter=2, train="distributed"
-        ).collect()
-    }
-    assert exact == one
-    drops = {
-        r["vec_id"]
-        for r in sim.semdedup(
-            emb, threshold=0.4, n_clusters=8, n_iter=3, train="distributed"
-        ).collect()
-        if r["status"] == "drop"
-    }
-    assert drops <= {k for k, v in exact.items() if v == "drop"}
-
-
 def test_chunk_documents_overlap_invariants(spark):
     text = " ".join(f"w{i}" for i in range(100))
     df = _docs_df(spark, [(1, text)])

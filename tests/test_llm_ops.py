@@ -168,36 +168,6 @@ def test_lsh_multi_table_recall_dominates_single(spark):
     assert r4 >= 0.25, f"4-table recall too low: {r4}"
 
 
-def test_ivf_distributed_training_recall_and_determinism(spark):
-    """VERDICT r4 #6: the distributed quantizer tier (full-corpus
-    mini-batch Lloyd's via mapInPandas partial sums) must match or
-    beat the bounded-sample trainer's recall gate — training saw every
-    row, so it cannot be worse-than-floor — and be deterministic for a
-    fixed corpus layout (partial sums combined in partition order)."""
-    emb = read_testdata(spark, SF_SMOKE, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    exact = {(r["query_id"], r["vec_id"])
-             for r in sim.brute_force_topk(emb, queries, k=5).collect()}
-    approx = {(r["query_id"], r["vec_id"])
-              for r in sim.ivf_ann_topk(
-                  emb, queries, k=5, n_lists=8, n_probe=4, n_iter=4,
-                  train="distributed").collect()}
-    for q in range(10):
-        assert (q, q) in approx
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.6, f"distributed-trained IVF recall degenerated: {recall}"
-    # determinism: same corpus + seed → identical centroids
-    c1 = sim._train_spherical_kmeans_distributed(emb, n_lists=4, n_iter=3, seed=7)
-    c2 = sim._train_spherical_kmeans_distributed(emb, n_lists=4, n_iter=3, seed=7)
-    assert (c1 == c2).all()
-    # unit-sphere invariant
-    import numpy as np
-
-    assert np.allclose(np.linalg.norm(c1, axis=1), 1.0)
-
-
 def test_ivf_ann_deterministic_across_runs(spark):
     emb = read_testdata(spark, SF_SMOKE, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3).select(
@@ -206,6 +176,14 @@ def test_ivf_ann_deterministic_across_runs(spark):
     a = sorted(map(tuple, sim.ivf_ann_topk(emb, queries, k=5).collect()))
     b = sorted(map(tuple, sim.ivf_ann_topk(emb, queries, k=5).collect()))
     assert a == b
+    # the sample trainer itself: same corpus + seed → identical
+    # centroids, all on the unit sphere
+    import numpy as np
+
+    c1 = sim._sample_centroids(emb, 4, 100_000, 3, 7, "embedding")
+    c2 = sim._sample_centroids(emb, 4, 100_000, 3, 7, "embedding")
+    assert (c1 == c2).all()
+    assert np.allclose(np.linalg.norm(c1, axis=1), 1.0)
 
 
 def _pq_reference_encode(mat, books):
@@ -274,6 +252,11 @@ def test_pq_adc_deterministic_across_runs(spark):
     a = sorted(map(tuple, sim.pq_adc_topk(emb, queries, k=5).collect()))
     b = sorted(map(tuple, sim.pq_adc_topk(emb, queries, k=5).collect()))
     assert a == b
+    # the codebooks themselves are run-to-run deterministic
+    b1 = sim.train_pq(emb, m=8, ksub=16)
+    b2 = sim.train_pq(emb, m=8, ksub=16)
+    assert b1.shape == (8, 16, 8)
+    assert (b1 == b2).all(), "PQ training not deterministic"
 
 
 def test_pq_train_validates_inputs(spark):
@@ -757,11 +740,6 @@ def test_ivf_persistent_index_matches_adhoc_and_prunes(spark, tmp_path):
         sim.ivf_index_topk(spark, path, queries, k=5, n_probe=2).explain("formatted")
     plan = buf.getvalue()
     assert "PartitionFilters" in plan and "_list" in plan
-    # distributed-trainer build path works end to end
-    path2 = str(tmp_path / "ivf2")
-    sim.build_ivf_index(emb, path2, n_lists=4, n_iter=2, train="distributed")
-    out = sim.ivf_index_topk(spark, path2, queries, k=5, n_probe=4).collect()
-    assert {(r["query_id"], r["vec_id"]) for r in out} >= {(q, q) for q in range(5)}
 
 
 def test_refresh_ivf_index_maintains_under_dml(spark, tmp_path):
@@ -889,12 +867,14 @@ def test_maintained_index_probe_prunes_postings_files(spark, tmp_path):
         spark.createDataFrame(rows, "vec_id long, embedding array<float>"),
     )
     idx = str(tmp_path / "idx")
-    sim.refresh_ivf_index(spark, src, idx, n_lists=4, n_iter=6, seed=7)
+    # pinned axis centroids: the four clusters land in four equal lists,
+    # so the range partitioner writes one list per file by construction
+    sim.refresh_ivf_index(spark, src, idx, centroids=np.eye(4))
     postings = TxTable(spark, f"{idx}/postings_tx")
     lists = sorted(
         r["_list"] for r in postings.read().select("_list").distinct().collect()
     )
-    assert len(lists) >= 2  # well-separated clusters occupy >1 list
+    assert lists == [0, 1, 2, 3]
     total = len(postings.snapshot().files)
     assert total >= len(lists)  # init clustered one list per file
     pruned = sim._postings_frame(spark, idx, [lists[0]])
@@ -1061,7 +1041,8 @@ def test_optimize_ivf_index_retightens_zone_maps(spark, tmp_path):
 
     src = TxTable.create(spark, str(tmp_path / "src"), frame(range(32)))
     idx = str(tmp_path / "idx")
-    sim.refresh_ivf_index(spark, src, idx, n_lists=4, n_iter=6, seed=7)
+    # pinned axis centroids: four equal lists, one per file at init
+    sim.refresh_ivf_index(spark, src, idx, centroids=np.eye(4))
     postings = TxTable(spark, f"{idx}/postings_tx")
     assert _max_probe_opens(postings, 4) == 1  # init: range-clustered
 
@@ -2438,41 +2419,6 @@ def test_ivf_pq_deterministic_and_subsets_probed_lists(spark):
     assert full == pq_only
 
 
-def test_pq_distributed_training_recall_and_determinism(spark):
-    """r9 (VERDICT r8 #2): the distributed PQ trainer must match the
-    sample tier's recall gate and be run-to-run deterministic; its
-    codebooks drive the identical encode/ADC path."""
-    emb = read_testdata(spark, SF_SMOKE, "embeddings")
-    b1 = sim.train_pq(emb, m=8, ksub=16, train="distributed")
-    b2 = sim.train_pq(emb, m=8, ksub=16, train="distributed")
-    assert b1.shape == (8, 16, 8)
-    assert (b1 == b2).all(), "distributed PQ training not deterministic"
-
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    exact = {(r["query_id"], r["vec_id"])
-             for r in sim.brute_force_topk(emb, queries, k=5).collect()}
-    approx = {(r["query_id"], r["vec_id"])
-              for r in sim.pq_adc_topk(
-                  emb, queries, k=5, shortlist=50, train="distributed"
-              ).collect()}
-    for q in range(10):
-        assert (q, q) in approx
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.6, f"distributed-PQ recall degenerated: {recall}"
-
-
-def test_pq_distributed_validates_inputs(spark):
-    emb = read_testdata(spark, SF_SMOKE, "embeddings")
-    with pytest.raises(ValueError, match="not divisible"):
-        sim.train_pq(emb, m=7, train="distributed")
-    with pytest.raises(ValueError, match="< ksub"):
-        sim.train_pq(emb.limit(3), m=8, ksub=16, train="distributed")
-    with pytest.raises(ValueError, match="sample.*distributed"):
-        sim.train_pq(emb, train="bogus")
-
-
 def test_ivf_index_join_probe_matches_driver_probe(spark, tmp_path):
     """r9 (VERDICT r8 #7): the distributed probe path (query set stays
     a DataFrame; probes shuffle by _list) must be row-identical to the
@@ -2507,9 +2453,24 @@ def test_ivf_index_join_probe_matches_driver_probe(spark, tmp_path):
 def test_ivf_index_probe_modes_agree_on_zero_norm_query(spark, tmp_path):
     """r10 (r9 advisory): an all-zero query vector must not NaN-poison
     the driver probe's argsort — both probe modes normalize with the
-    same where=norm>0 guard and stay row-identical on it."""
-    emb = read_testdata(spark, SF_SMOKE, "embeddings")
-    dim = len(emb.select("embedding").first()[0])
+    same where=norm>0 guard and stay row-identical on it. An all-zero
+    CORPUS row gets the same list from every path that assigns (static
+    build, CDC refresh, ad-hoc probe: one shared kernel), trains no
+    NaN into the centroids, and scores NULL, so it ranks last."""
+    import numpy as np
+
+    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.txtable import (
+        TxTable,
+    )
+
+    zid = 9002
+    base = read_testdata(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
+    dim = len(base.select("embedding").first()[0])
+    emb = base.unionByName(
+        spark.createDataFrame(
+            [(zid, [0.0] * dim)], "vec_id long, embedding array<float>"
+        )
+    )
     zq = spark.createDataFrame(
         [(9001, [0.0] * dim)], "query_id long, query_vec array<float>"
     )
@@ -2525,6 +2486,33 @@ def test_ivf_index_probe_modes_agree_on_zero_norm_query(spark, tmp_path):
         spark, path, queries, k=3, n_probe=2, probe="join").collect()))
     assert drv == jnd
     assert all(r == r for t in drv for r in t if isinstance(r, float))  # no NaN
+
+    cen = sim._load_centroids(spark, path)
+    assert np.isfinite(cen).all()
+
+    def zero_list(postings) -> int:
+        return postings.filter(F.col("vec_id") == zid).select("_list").first()[0]
+
+    built = zero_list(spark.read.parquet(f"{path}/postings"))
+    src = TxTable.create(spark, str(tmp_path / "src"), emb)
+    maint = str(tmp_path / "maint")
+    sim.refresh_ivf_index(spark, src, maint, centroids=cen)
+    refreshed = zero_list(TxTable(spark, f"{maint}/postings_tx").read())
+    # ad hoc: each centroid, as a one-list probe, returns its whole list
+    cq = spark.createDataFrame(
+        [(i, [float(x) for x in c]) for i, c in enumerate(cen)],
+        "query_id long, query_vec array<double>",
+    )
+    adhoc = sim.ivf_ann_topk(
+        emb, cq, k=emb.count(), n_lists=4, n_probe=1, n_iter=3, seed=7
+    ).collect()
+    hits = [r for r in adhoc if r["vec_id"] == zid]
+    assert len(hits) == 1
+    assert built == refreshed == hits[0]["query_id"]
+    # a NaN score would sort FIRST under desc; NULL sorts last
+    assert hits[0]["rank"] == max(
+        r["rank"] for r in adhoc if r["query_id"] == built
+    )
 
 
 def test_pq_adc_join_probe_matches_driver_probe(spark):

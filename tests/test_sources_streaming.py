@@ -106,6 +106,8 @@ def test_http_window_query_half_open_upper_bound():
     )
 
     reader = SocrataReader(DEFAULT_SCHEMA, {"ts_column": "ts", "mode": "http"})
+    # unbounded by default: the reference fetches 2019 → now
+    assert (reader.start, reader.end) == (dt.date(2019, 1, 1), dt.date.today())
     q = reader._window_query(_WindowPartition("2024-01-01", "2024-01-31"), limit=1000, offset=0)
     assert "ts>='2024-01-01'" in q
     assert "ts<'2024-02-01'" in q

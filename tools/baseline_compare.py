@@ -29,7 +29,6 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # window attribution (VERDICT r14 #8): record load at both ends so
     # a committed COMPARE carries its own weather evidence
     load_start = [round(x, 2) for x in os.getloadavg()]
@@ -39,9 +38,12 @@ def main() -> None:
     import bench
     from __spark_entry__ import oracle_sql, queries
     from cincinnati_police_calls_for_service_etl_using_python_dask_spark.session import (
+        _DEFAULT_CPUS,
         data_scaled_conf,
         get_spark,
     )
+
+    cpus = _DEFAULT_CPUS
 
     oracles = oracle_sql()
     qs = queries()

@@ -34,16 +34,18 @@ QUERIES = [
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from cincinnati_police_calls_for_service_etl_using_python_dask_spark.queries import (
         oracle_sqls,
         spark_queries,
     )
     from cincinnati_police_calls_for_service_etl_using_python_dask_spark.session import (
+        _DEFAULT_CPUS,
         data_scaled_conf,
         get_spark,
     )
+
+    cpus = _DEFAULT_CPUS
 
     total_bytes = sum(
         os.path.getsize(os.path.join(sf_dir, f))

@@ -27,15 +27,17 @@ def main() -> None:
     suffix = sys.argv[1]
     names = [s for s in sys.argv[2].split(",") if s]
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from cincinnati_police_calls_for_service_etl_using_python_dask_spark.queries import (
         spark_queries,
     )
     from cincinnati_police_calls_for_service_etl_using_python_dask_spark.session import (
+        _DEFAULT_CPUS,
         data_scaled_conf,
         get_spark,
     )
+
+    cpus = _DEFAULT_CPUS
 
     total_bytes = sum(
         os.path.getsize(os.path.join(sf_dir, f))

@@ -41,11 +41,13 @@ def main() -> None:
         pii_synth_col,
     )
     from cincinnati_police_calls_for_service_etl_using_python_dask_spark.session import (
+        _DEFAULT_CPUS,
         data_scaled_conf,
         get_spark,
     )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _DEFAULT_CPUS
+
     total_bytes = sum(
         os.path.getsize(os.path.join(SF_DIR, f))
         for f in os.listdir(SF_DIR)

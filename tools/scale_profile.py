@@ -309,11 +309,13 @@ def time_spark(sf_dir: str) -> dict[str, float]:
         spark_queries,
     )
     from cincinnati_police_calls_for_service_etl_using_python_dask_spark.session import (
+        _DEFAULT_CPUS,
         data_scaled_conf,
         get_spark,
     )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _DEFAULT_CPUS
+
     total = sum(
         os.path.getsize(os.path.join(sf_dir, f)) for f in os.listdir(sf_dir)
     )
@@ -348,9 +350,12 @@ def time_duckdb(sf_dir: str) -> dict[str, float]:
     from cincinnati_police_calls_for_service_etl_using_python_dask_spark.queries import (
         oracle_sqls,
     )
+    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.session import (
+        _DEFAULT_CPUS,
+    )
 
     con = duckdb.connect()
-    con.execute(f"SET threads TO {os.environ.get('SPARK_GRAFT_CPUS', '32')}")
+    con.execute(f"SET threads TO {_DEFAULT_CPUS}")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
