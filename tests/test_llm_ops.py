@@ -168,6 +168,35 @@ def test_lsh_multi_table_recall_dominates_single(spark):
     assert r4 >= 0.25, f"4-table recall too low: {r4}"
 
 
+def test_ivf_distributed_training_recall_and_determinism(spark):
+    """The IVF quantizer's training gates: recall against brute force
+    at a short Lloyd's run (n_iter=4), and a trainer that is
+    deterministic for a fixed corpus and seed with every centroid on
+    the unit sphere. The bounded-sample trainer is the one k-means
+    trainer, so these gates hold over it."""
+    emb = read_testdata(spark, SF_SMOKE, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    exact = {(r["query_id"], r["vec_id"])
+             for r in sim.brute_force_topk(emb, queries, k=5).collect()}
+    approx = {(r["query_id"], r["vec_id"])
+              for r in sim.ivf_ann_topk(
+                  emb, queries, k=5, n_lists=8, n_probe=4, n_iter=4).collect()}
+    for q in range(10):
+        assert (q, q) in approx
+    recall = len(exact & approx) / len(exact)
+    assert recall >= 0.6, f"short-trained IVF recall degenerated: {recall}"
+    # determinism: same corpus + seed → identical centroids
+    c1 = sim._sample_centroids(emb, 4, 100_000, 3, 7, "embedding")
+    c2 = sim._sample_centroids(emb, 4, 100_000, 3, 7, "embedding")
+    assert (c1 == c2).all()
+    # unit-sphere invariant
+    import numpy as np
+
+    assert np.allclose(np.linalg.norm(c1, axis=1), 1.0)
+
+
 def test_ivf_ann_deterministic_across_runs(spark):
     emb = read_testdata(spark, SF_SMOKE, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3).select(
@@ -176,14 +205,6 @@ def test_ivf_ann_deterministic_across_runs(spark):
     a = sorted(map(tuple, sim.ivf_ann_topk(emb, queries, k=5).collect()))
     b = sorted(map(tuple, sim.ivf_ann_topk(emb, queries, k=5).collect()))
     assert a == b
-    # the sample trainer itself: same corpus + seed → identical
-    # centroids, all on the unit sphere
-    import numpy as np
-
-    c1 = sim._sample_centroids(emb, 4, 100_000, 3, 7, "embedding")
-    c2 = sim._sample_centroids(emb, 4, 100_000, 3, 7, "embedding")
-    assert (c1 == c2).all()
-    assert np.allclose(np.linalg.norm(c1, axis=1), 1.0)
 
 
 def _pq_reference_encode(mat, books):
@@ -252,11 +273,6 @@ def test_pq_adc_deterministic_across_runs(spark):
     a = sorted(map(tuple, sim.pq_adc_topk(emb, queries, k=5).collect()))
     b = sorted(map(tuple, sim.pq_adc_topk(emb, queries, k=5).collect()))
     assert a == b
-    # the codebooks themselves are run-to-run deterministic
-    b1 = sim.train_pq(emb, m=8, ksub=16)
-    b2 = sim.train_pq(emb, m=8, ksub=16)
-    assert b1.shape == (8, 16, 8)
-    assert (b1 == b2).all(), "PQ training not deterministic"
 
 
 def test_pq_train_validates_inputs(spark):
@@ -2417,6 +2433,31 @@ def test_ivf_pq_deterministic_and_subsets_probed_lists(spark):
     pq_only = sorted(map(tuple, sim.pq_adc_topk(
         emb, queries, k=5, shortlist=50).collect()))
     assert full == pq_only
+
+
+def test_pq_distributed_training_recall_and_determinism(spark):
+    """The PQ trainer's gates: run-to-run identical codebooks of the
+    declared shape, and the recall gate of the encode/ADC path those
+    codebooks drive. The bounded-sample trainer is the one PQ trainer,
+    so these gates hold over it."""
+    emb = read_testdata(spark, SF_SMOKE, "embeddings")
+    b1 = sim.train_pq(emb, m=8, ksub=16)
+    b2 = sim.train_pq(emb, m=8, ksub=16)
+    assert b1.shape == (8, 16, 8)
+    assert (b1 == b2).all(), "PQ training not deterministic"
+
+    queries = emb.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    exact = {(r["query_id"], r["vec_id"])
+             for r in sim.brute_force_topk(emb, queries, k=5).collect()}
+    approx = {(r["query_id"], r["vec_id"])
+              for r in sim.pq_adc_topk(
+                  emb, queries, k=5, shortlist=50).collect()}
+    for q in range(10):
+        assert (q, q) in approx
+    recall = len(exact & approx) / len(exact)
+    assert recall >= 0.6, f"PQ recall degenerated: {recall}"
 
 
 def test_ivf_index_join_probe_matches_driver_probe(spark, tmp_path):
