@@ -46,26 +46,12 @@ def money_sum(col: Column | str, scale: int = 2) -> Column:
     return F.round(F.sum(dec2(col)), scale).cast("double")
 
 
-def discounted_revenue_sum(price_col: str, discount_col: str) -> Column:
-    """Σ price·(1−discount), exact and cross-engine hash-stable, via
-    integer arithmetic: price→cents (long), discount→basis points
-    (long), per-row product summed as long — all map-side codegen'd
-    integer ops. Only the final per-GROUP conversion touches decimal
-    (÷10^6, round 2, → double).
-
-    ~3× cheaper than summing DECIMAL(18,2) products (decimal multiply
-    is software arithmetic in every engine) with identical results —
-    both compute the same exact rational. DuckDB mirror:
-    :data:`DUCKDB_DISCOUNTED_REVENUE_SUM`.
-    """
-    return finalize_revenue_micros(F.sum(revenue_micros(price_col, discount_col)))
-
-
 def revenue_micros(price_col: str, discount_col: str) -> Column:
     """Per-row price·(1−discount) in exact integer micro-dollars
-    (cents × basis points): the associative building block of
-    :func:`discounted_revenue_sum`, usable at any aggregation level
-    (partial sums re-sum exactly).
+    (cents × basis points): the associative building block of an exact
+    Σ price·(1−discount), usable at any aggregation level (partial sums
+    re-sum exactly; :func:`finalize_revenue_micros` converts the total,
+    :data:`DUCKDB_DISCOUNTED_REVENUE_SUM` is the DuckDB mirror).
 
     Spelled as ``cast(x + 0.5 as long)`` rather than ``F.round``:
     Spark's Round on DoubleType allocates a BigDecimal PER ROW, and

@@ -1,9 +1,7 @@
 from .relational import (
     bucketed_range_join,
-    keep_columns,
     multiway_join,
     rename_all,
-    salted_join,
     semi_join,
     anti_join,
     top_k,
@@ -13,7 +11,6 @@ from .aggregates import (
     group_agg,
     group_agg_bitmap_fused,
     group_agg_single_distinct,
-    group_agg_split_distinct,
     null_profile,
     pivot_count_distinct,
     value_counts,
@@ -39,7 +36,6 @@ __all__ = [
     "group_agg",
     "group_agg_bitmap_fused",
     "group_agg_single_distinct",
-    "group_agg_split_distinct",
     "delta_state",
     "distinct_delta_state",
     "distinct_state_of",
@@ -51,14 +47,12 @@ __all__ = [
     "state_of",
     "hash_sample",
     "hash_split",
-    "keep_columns",
     "latest_per_key",
     "multiway_join",
     "null_profile",
     "pack_sequences",
     "pivot_count_distinct",
     "rename_all",
-    "salted_join",
     "semi_join",
     "stratified_hash_sample",
     "top_k",

@@ -98,9 +98,8 @@ def group_agg_single_distinct(
     the same name → callable applied to the combined sum (e.g. cents →
     rounded dollars). ``count_alias`` adds a COUNT(*) column.
 
-    See :func:`group_agg_split_distinct` for the shuffle-minimal
-    spelling when level-1 cardinality is a large fraction of the
-    input (VERDICT r9 #3).
+    See :func:`group_agg_bitmap_fused` for the one-scan spelling over
+    an integral ``distinct_col``.
     """
     int_sums = dict(int_sums or {})
     finalizers = dict(finalize or {})
@@ -129,132 +128,6 @@ def group_agg_single_distinct(
     return level1.groupBy(*keys).agg(*aggs)
 
 
-def group_agg_split_distinct(
-    df: DataFrame,
-    keys: Sequence[str],
-    distinct_col: str,
-    avg: Sequence[str] = (),
-    avg_scale: int | None = 4,
-    int_sums: Mapping[str, Column] | None = None,
-    finalize: Mapping[str, "object"] | None = None,
-    count_alias: str | None = None,
-) -> DataFrame:
-    """A1 fast path, SPLIT spelling (r10, VERDICT r9 #3): the same
-    semantics as :func:`group_agg_single_distinct`, planned as two
-    independent branches over the scan joined on the (tiny) group
-    keys instead of one cascade:
-
-      branch N: groupBy(keys) → avgs (as Σ/count), int sums, COUNT(*)
-                — map-side partials collapse to ≈|groups| rows per
-                task, so the shuffle carries kilobytes;
-      branch D: groupBy(keys, distinct_col) with NO payload →
-                groupBy(keys) count — the only data-proportional
-                shuffle, and it carries just the key+distinct columns
-                (map-side partial dedup), not the sum payload;
-      join: |groups| rows ⋈ |groups| rows — broadcast-trivial.
-
-    vs the cascade: when level-1 cardinality is a large fraction of
-    the input (the flagship Q1 shape: 438k distinct (flag, status,
-    orderkey) of 600k rows at sf0.1), the cascade shuffles ~73% of
-    the table WIDENED by every partial-sum column. Here the wide
-    payload never shuffles at all; the price is a second scan, which
-    columnar pruning makes far cheaper than the avoided wide shuffle
-    (measured 0.86 s vs 1.08 s at sf0.1; at cluster scale
-    scan-twice-shuffle-narrow beats scan-once-shuffle-wide by more —
-    shuffle is write+network+read, the scan is local columnar read).
-    Avg semantics follow F.avg (NULLs excluded from the
-    denominator); NULL handling matches the cascade exactly.
-
-    r11 (VERDICT r10 #4): for an INTEGRAL ``distinct_col`` the
-    distinct branch is spelled as an exact 64-bit BITMAP aggregate
-    instead of ``distinct()``: map k → (k >> 6, 1 << (k & 63)) — a
-    bijection over all longs — then ``bit_or`` masks per (keys,
-    bucket) and ``Σ bit_count(mask)`` per keys. Every step is
-    codegen'd JVM; the map-side partial ``bit_or`` collapses up to 64
-    neighboring ids into ONE 8-byte mask row, so for dense id spaces
-    (surrogate keys — the TPC-H orderkey shape) the dedup shuffle
-    shrinks ~64×: measured 1.14 → 0.31 s on the branch at sf0.1. For
-    sparse/hashed id spaces buckets degenerate to ~1 id each and the
-    volume equals the distinct() spelling's — never worse, since the
-    mask row is the same width as the value it replaces. Non-integral
-    columns keep the distinct() spelling. NULL ids are excluded up
-    front (countDistinct semantics); a group whose ids are ALL NULL
-    then has no bitmap row, so the final join is LEFT with
-    coalesce(0) — exactly the 0 the distinct() spelling counts.
-    """
-    int_sums = dict(int_sums or {})
-    finalizers = dict(finalize or {})
-    aggs: list[Column] = []
-    for c in avg:
-        a = F.sum(c) / F.count(F.col(c))
-        if avg_scale is not None:
-            a = F.round(a, avg_scale)
-        aggs.append(a.alias(f"avg_{c}"))
-    for n, e in int_sums.items():
-        s = F.sum(e)
-        fn = finalizers.get(n)
-        aggs.append((fn(s) if fn is not None else s).alias(n))
-    if count_alias:
-        aggs.append(F.count(F.lit(1)).alias(count_alias))
-    nond = df.groupBy(*keys).agg(*aggs) if aggs else None
-    nuniq = f"nunique_{distinct_col}"
-    integral = nond is not None and isinstance(
-        df.schema[distinct_col].dataType,
-        (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-    )
-    if integral:
-        d = F.col(distinct_col)
-        dist = (
-            df.filter(d.isNotNull())
-            .select(
-                *keys,
-                F.shiftright(d.cast("long"), 6).alias("__bkt"),
-                F.expr(
-                    f"shiftleft(CAST(1 AS BIGINT), "
-                    f"CAST({distinct_col} & 63 AS INT))"
-                ).alias("__one"),
-            )
-            .groupBy(*keys, "__bkt")
-            .agg(F.expr("bit_or(__one)").alias("__mask"))
-            .groupBy(*keys)
-            .agg(F.sum(F.bit_count("__mask")).alias(nuniq))
-        )
-    else:
-        dist = (
-            df.select(*keys, distinct_col)
-            .distinct()
-            .groupBy(*keys)
-            .agg(F.count(F.col(distinct_col)).alias(nuniq))
-        )
-    if nond is None:
-        return dist
-    # NULL grouping keys form groups in both branches and must pair up,
-    # so the join is null-safe. LEFT (not inner): the bitmap branch
-    # has no row for a group whose ids are all NULL — coalesce
-    # restores its 0. For the distinct() branch the key sets are
-    # identical and the left join degenerates to the old inner.
-    # The distinct branch's keys are renamed first: both branches share
-    # the source frame's lineage, and same-name references would
-    # resolve ambiguously (Spark warns "trivially true predicate").
-    dist = dist.select(
-        *[F.col(kcol).alias(f"__dk_{i}") for i, kcol in enumerate(keys)],
-        nuniq,
-    )
-    cond = None
-    for i, kcol in enumerate(keys):
-        c = nond[kcol].eqNullSafe(F.col(f"__dk_{i}"))
-        cond = c if cond is None else (cond & c)
-    out = nond.join(dist, cond, "left")
-    order = (
-        [nond[kcol] for kcol in keys]
-        + [F.coalesce(dist[nuniq], F.lit(0).cast("long")).alias(nuniq)]
-        + [nond[f"avg_{c}"] for c in avg]
-        + [nond[n] for n in int_sums]
-        + ([nond[count_alias]] if count_alias else [])
-    )
-    return out.select(*order)
-
-
 def group_agg_bitmap_fused(
     df: DataFrame,
     keys: Sequence[str],
@@ -277,16 +150,13 @@ def group_agg_bitmap_fused(
     collapse happens at BUCKET granularity: for dense id spaces
     (surrogate keys) up to 64 ids fold into one 8-byte mask row
     before anything shuffles, so the payload rides ~rows/64 level-1
-    rows instead of the cascade's ~|level-1| wide rows — and unlike
-    :func:`group_agg_split_distinct` the scan happens once (measured
-    0.37 s fused vs 0.44 s split vs 1.08 s cascade at sf0.1).
+    rows instead of the cascade's ~|level-1| wide rows, and the scan
+    happens once (measured 0.37 s fused vs 1.08 s cascade at sf0.1).
 
     Choose FUSED for dense integral ids (the TPC-H key shape: the
-    bucket collapse is real and the one saved scan dominates). Choose
-    SPLIT when ids are sparse/hashed (buckets degenerate to ~1 id
-    each, making level 1 as wide as the cascade's — split keeps the
-    wide payload off the big shuffle entirely) or when the payload
-    column list is very wide. Both are exact; both avoid Expand.
+    bucket collapse is real). For sparse/hashed or non-integral ids
+    use the cascade, :func:`group_agg_single_distinct`. Both are
+    exact; both avoid Expand.
 
     NULL semantics match ``countDistinct``/``F.avg``/``COUNT(*)``
     exactly: NULL ids land in a per-key NULL bucket that contributes
@@ -304,7 +174,7 @@ def group_agg_bitmap_fused(
     ):
         raise ValueError(
             f"group_agg_bitmap_fused: {distinct_col!r} must be an "
-            "integral column (use group_agg_split_distinct otherwise)"
+            "integral column (use group_agg_single_distinct otherwise)"
         )
     int_sums = dict(int_sums or {})
     finalizers = dict(finalize or {})
@@ -406,19 +276,6 @@ def distinct_values(df: DataFrame, columns: Sequence[str]) -> DataFrame:
     return df.select(*columns).distinct()
 
 
-def cube_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    aggs: Mapping[str, Column],
-) -> DataFrame:
-    """Multi-dimensional rollup via ``CUBE`` — SURVEY.md §2.4 "Not
-    present" row: the reference assembles its wide per-year view with a
-    filter-loop + stack + reduce-join (app.py:350-403); grouping sets
-    compute every subtotal combination in one shuffle (Spark expands
-    the grouping-set id map-side, so the input is scanned once)."""
-    return df.cube(*keys).agg(*[c.alias(n) for n, c in aggs.items()])
-
-
 def cube_from_partials(
     df: DataFrame,
     keys: Sequence[str],
@@ -428,7 +285,7 @@ def cube_from_partials(
     finest_partitions: int | None = None,
 ) -> DataFrame:
     """CUBE over DECOMPOSABLE aggregates via partial re-aggregation —
-    the scale spelling of :func:`cube_agg`.
+    the scale spelling of ``df.cube(*keys).agg(...)``.
 
     Native ``CUBE(k1..kn)`` plans an Expand that materializes 2^n
     copies of EVERY input row before the partial aggregate, so the

@@ -8,9 +8,8 @@ deltas + AC run/size pairs with byte stuffing, zigzag ordering,
 quantization, and the type-II DCT. The decoder is GENERAL for that
 profile — it builds Huffman tables from the file's own DHT segments,
 handles ZRL/EOB, dequantizes with the file's DQT, and runs a
-vectorized float64 IDCT over all blocks at once. Pillow, when
-importable, is preferred at the operator layer (multimodal.py); this
-module keeps the path real when no codec library exists.
+vectorized float64 IDCT over all blocks at once, so the operator
+layer (multimodal.py) decodes real bytes with no codec library.
 
 Cross-engine exactness: the DuckDB oracle cannot replay a DCT, so the
 FIXTURE (attach_jpeg_payload) synthesizes images whose 8×8 blocks are
@@ -599,7 +598,7 @@ def decode_jpeg_gray(data: bytes) -> tuple:
 # table pair (standard chroma tables, Annex K.3), and the color
 # transform.
 #
-# COLOR TRANSFORM CONTRACT: YCbCr↔RGB runs in 16.16 FIXED-POINT
+# COLOR TRANSFORM CONTRACT: YCbCr→RGB runs in 16.16 FIXED-POINT
 # INTEGER arithmetic (libjpeg's constants), not floats — so a DuckDB
 # oracle can replay the decoder's output bit-exactly with integer
 # `//` math. The bias-then-shift spelling keeps every intermediate
@@ -637,7 +636,7 @@ _DC_CODES_C = _canonical_codes(DC_BITS_C, DC_VALUES_C)
 _AC_CODES_C = _canonical_codes(AC_BITS_C, AC_VALUES_C)
 _CHROMA_T = _code_arrays(_DC_CODES_C, 16) + _code_arrays(_AC_CODES_C, 256)
 
-# 16.16 fixed-point color constants (libjpeg jdcolor.c / jccolor.c).
+# 16.16 fixed-point color constants (libjpeg jdcolor.c).
 _FIX_R_CR = 91881       # 1.40200
 _FIX_G_CB = 22554       # 0.34414
 _FIX_G_CR = 46802       # 0.71414
@@ -658,20 +657,6 @@ def ycbcr_to_rgb_int(y: np.ndarray, cb: np.ndarray, cr: np.ndarray):
     b = ((y << 16) + _FIX_B_CB * cbb + half + _BIAS >> 16) - 4096
     clip = lambda v: np.clip(v, 0, 255).astype(np.uint8)  # noqa: E731
     return clip(r), clip(g), clip(b)
-
-
-def rgb_to_ycbcr_int(r: np.ndarray, g: np.ndarray, b: np.ndarray):
-    """Integer 16.16 RGB→YCbCr. Luma weights sum to exactly 65536 so
-    white maps to Y=255 (the off-by-one every naive rounding hits)."""
-    r = r.astype(np.int64)
-    g = g.astype(np.int64)
-    b = b.astype(np.int64)
-    half = 32768
-    y = (19595 * r + 38470 * g + 7471 * b + half) >> 16
-    cb = ((-11059 * r - 21712 * g + 32768 * b + half + _BIAS) >> 16) - 4096 + 128
-    cr = ((32768 * r - 27439 * g - 5329 * b + half + _BIAS) >> 16) - 4096 + 128
-    clip = lambda v: np.clip(v, 0, 255).astype(np.uint8)  # noqa: E731
-    return clip(y), clip(cb), clip(cr)
 
 
 def _pad_to(plane: np.ndarray, mh: int, mw: int) -> np.ndarray:

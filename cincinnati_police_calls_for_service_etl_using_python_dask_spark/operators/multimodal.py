@@ -8,9 +8,9 @@ Two decode tiers:
 
 - :func:`decode_metadata` — deterministic codec-free STUB kernel (the
   fixture path for environments with no codecs and non-image payloads).
-- :func:`decode_image_metadata` — REAL decode: Pillow when importable,
-  else the built-in pure-Python PNG codec (:func:`decode_png`: chunk
-  walk + CRC validation + inflate + filter reconstruction).
+- :func:`decode_image_metadata` — REAL decode through the built-in
+  pure-Python PNG codec (:func:`decode_png`: chunk walk + CRC
+  validation + inflate + filter reconstruction).
   :func:`resize_image` resamples REAL pixels (nearest/box, exact
   integer arithmetic) on top of the same codec.
 
@@ -59,9 +59,8 @@ def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def _decode_batch(pdf):
     """STUB decode kernel — deterministic fake metadata from the raw
-    bytes. A real implementation would do
-    ``PIL.Image.open(io.BytesIO(b))`` per payload; PIL is not in this
-    container. Keep the same return contract when swapping it in."""
+    bytes, for payloads that are not images. Real PNG payloads go
+    through :func:`decode_image_metadata` instead."""
     import pandas as pd
 
     n_bytes = pdf["payload"].map(len)
@@ -285,21 +284,16 @@ def extract_features(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Real decode kernel (VERDICT r2 #3): an actual PNG codec. Pillow is
-# used when importable; otherwise a dependency-free PNG parser
-# (signature + chunk walk with CRC validation + IHDR + zlib-inflate +
-# full filter reconstruction) decodes real bytes. The deterministic
-# stub above stays as the no-codec fixture path.
+# Real decode kernel (VERDICT r2 #3): an actual PNG codec. A
+# dependency-free PNG parser (signature + chunk walk with CRC
+# validation + IHDR + zlib-inflate + full filter reconstruction)
+# decodes real bytes. The deterministic stub above stays as the
+# no-codec fixture path.
 # ---------------------------------------------------------------------------
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _PNG_MODE = {0: "L", 2: "RGB", 3: "P", 4: "LA", 6: "RGBA"}
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-
-try:  # pragma: no cover - Pillow absent in this container
-    from PIL import Image as _PIL_Image
-except ImportError:
-    _PIL_Image = None
 
 
 def encode_png(width: int, height: int, pixels: bytes) -> bytes:
@@ -450,8 +444,7 @@ def decode_png(data: bytes) -> tuple[int, int, str, bytes]:
     inflates the IDAT stream, and reconstructs scanlines through the
     five standard filters. 8-bit non-interlaced images only (the format
     subset the test harness and our encoder produce); anything else —
-    or any corruption — raises ValueError. Pillow, when importable,
-    replaces this whole function (see _decode_real_batch)."""
+    or any corruption — raises ValueError."""
     width, height, color_type, raw = _png_parse(data)
     px = _unfilter_single(raw, width, height, _PNG_CHANNELS[color_type])
     return width, height, _PNG_MODE[color_type], px
@@ -460,8 +453,7 @@ def decode_png(data: bytes) -> tuple[int, int, str, bytes]:
 # Batched unfilter applies only when every image in the group fits this
 # bounding box: the Average/Paeth recurrence costs one numpy op-chain
 # per byte COLUMN, so the x-loop must stay short. Beyond it, the
-# per-image scanline path above takes over (real corpora at that size
-# would use Pillow anyway, see REAL_CODECS_AVAILABLE).
+# per-image scanline path above takes over.
 _BATCH_MAX_H = 64
 _BATCH_MAX_STRIDE = 64
 # Memory bound for one padded block: g * H * S int16 elements.
@@ -591,11 +583,6 @@ def _decode_payloads(payloads, want_pixels: bool = True):
     return ws, hs, cts, chunks
 
 
-# True when a real codec library (Pillow) is importable; the built-in
-# PNG codec above works either way.
-REAL_CODECS_AVAILABLE = _PIL_Image is not None
-
-
 def _encode_png_batch(datas: list) -> list:
     """Batched fixture encoder: byte-identical output to
     ``encode_png(w, h, px)`` per image (w = n%16+1, h = n%12+1, pixels
@@ -700,39 +687,13 @@ def attach_png_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _decode_real_batch(pdf):
-    """Real decode kernel over one Arrow batch: Pillow when available,
-    else the built-in PNG codec — batch front-end (:func:`_decode_payloads`)
-    so scanline reconstruction vectorizes across the whole batch instead
-    of per-byte Python per row. Bad payloads yield status='error' with
+    """Real decode kernel over one Arrow batch: the built-in PNG codec's
+    batch front-end (:func:`_decode_payloads`), so scanline
+    reconstruction vectorizes across the whole batch instead of
+    per-byte Python per row. Bad payloads yield status='error' with
     NULL geometry — a poisoned row must never kill the batch."""
-    import io
-
     import pandas as pd
 
-    if _PIL_Image is not None:  # pragma: no cover - Pillow absent here
-        widths, heights, modes, statuses = [], [], [], []
-        for b in pdf["payload"]:
-            try:
-                with _PIL_Image.open(io.BytesIO(bytes(b))) as im:
-                    w, h, mode = im.width, im.height, im.mode
-                widths.append(w)
-                heights.append(h)
-                modes.append(mode)
-                statuses.append("png-decoded")
-            except Exception:
-                widths.append(None)
-                heights.append(None)
-                modes.append(None)
-                statuses.append("error")
-        return pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "width": pd.array(widths, dtype="Int32"),
-                "height": pd.array(heights, dtype="Int32"),
-                "mode": modes,
-                "status": statuses,
-            }
-        )
     ws, hs, cts, _chunks = _decode_payloads(pdf["payload"].tolist(), want_pixels=True)
     ok = cts >= 0
     return pd.DataFrame(
@@ -764,7 +725,7 @@ DECODE_REAL_SCHEMA = T.StructType(
 def decode_image_metadata(df: DataFrame) -> DataFrame:
     """REAL image decode via ``mapInPandas``: same batching/pruning
     contract as :func:`decode_metadata`, but the kernel actually parses
-    the bytes (Pillow or the built-in PNG codec). Use this on columns
+    the bytes (the built-in PNG codec). Use this on columns
     holding real image payloads; ``decode_metadata`` remains the
     codec-free deterministic fixture."""
 
@@ -800,13 +761,6 @@ RESIZE_IMAGE_SCHEMA = T.StructType(
         T.StructField("status", T.StringType()),
     ]
 )
-
-
-def _nearest_indices(src: int, out: int):
-    """Integer-exact center-sampling map: floor((i+0.5)*src/out)."""
-    import numpy as np
-
-    return ((2 * np.arange(out, dtype=np.int64) + 1) * src) // (2 * out)
 
 
 def _resize_kernel(pdf, max_w: int, max_h: int, method: str):
@@ -1197,55 +1151,6 @@ def decode_jpeg_metadata(df: DataFrame) -> DataFrame:
                 yield _decode_jpeg_batch(pdf)
 
     return df.select("doc_id", "payload").mapInPandas(run, DECODE_JPEG_SCHEMA)
-
-
-def synth_decode_jpeg(
-    df: DataFrame, text_col: str = "text", parallelism: int | None = None
-) -> DataFrame:
-    """One-crossing spelling of
-    ``decode_jpeg_metadata(attach_jpeg_payload(df))``."""
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = [
-                _jpeg_fixture_bytes(("" if t is None else t).encode("utf-8"))
-                for t in pdf[text_col]
-            ]
-            yield _decode_jpeg_batch(
-                pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-            )
-
-    return _with_parallelism(df.select("doc_id", text_col), parallelism).mapInPandas(
-        run, DECODE_JPEG_SCHEMA
-    )
-
-
-def synth_decode_png(
-    df: DataFrame, text_col: str = "text", parallelism: int | None = None
-) -> DataFrame:
-    """One-crossing spelling of
-    ``decode_image_metadata(attach_png_payload(df))``."""
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = _encode_png_batch(
-                [("" if t is None else t).encode("utf-8") for t in pdf[text_col]]
-            )
-            yield _decode_real_batch(
-                pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-            )
-
-    return _with_parallelism(df.select("doc_id", text_col), parallelism).mapInPandas(
-        run, DECODE_REAL_SCHEMA
-    )
 
 
 # Fused media-decode crossing (round 6): all four real-codec segs —

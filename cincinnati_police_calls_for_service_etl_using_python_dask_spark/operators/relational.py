@@ -17,13 +17,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def keep_columns(df: DataFrame, columns: Sequence[str]) -> DataFrame:
-    """P1 — keep-list projection (the reference's 26-col reorder after
-    its join, app.py:491-516). Catalyst's ColumnPruning pushes this all
-    the way into the parquet ReadSchema."""
-    return df.select(*columns)
-
-
 def rename_all(df: DataFrame, names: Sequence[str]) -> DataFrame:
     """P3 — positional bulk rename (app.py:434-461)."""
     if len(names) != len(df.columns):
@@ -68,41 +61,6 @@ def multiway_join(
     for df, key in zip(dfs[1:], keys):
         result = result.join(df, on=key, how=how)
     return result
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    how: str = "inner",
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Skew-resistant equi-join (SURVEY.md §7.2 M6): spread each hot
-    ``left`` key over ``salt_buckets`` sub-keys so no single reducer
-    owns a whole key's rows.
-
-    Left rows get a deterministic content-derived salt (xxhash64 of
-    the row, so re-runs partition identically); the right side is
-    replicated once per salt value via a posexplode-free
-    ``array``+``explode`` (map-side, no shuffle of its own). The join
-    then runs on (key, salt): a key holding 20% of the fact table
-    becomes ``salt_buckets`` evenly-sized joins.
-
-    Result is row-identical to ``left.join(right, on, how)`` for
-    inner/left joins. Cost: the right side ships ``salt_buckets``×, so
-    use when right is modest and left is skewed; prefer AQE's
-    skew-join splitting when it can see the skew (it can't when the
-    skew appears mid-pipeline after AQE stats were taken, or in
-    first-shuffle joins of freshly scanned skewed data).
-    """
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join supports inner/left (semantics proof)")
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(salt_buckets))
-    l_salted = left.withColumn("__salt", salt)
-    r_salted = right.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
-    )
-    return l_salted.join(r_salted, on=[on, "__salt"], how=how).drop("__salt")
 
 
 def bucketed_range_join(

@@ -34,16 +34,6 @@ def _to_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
 
 
-def _fold(terms) -> Column:
-    """0.0 + t1 + t2 + … — the same left-to-right fold (including the
-    0.0 seed, for -0.0 bit-parity) as the F.aggregate spelling, but as
-    a flat codegen expression tree."""
-    acc: Column = F.lit(0.0)
-    for t in terms:
-        acc = acc + t
-    return acc
-
-
 def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     """Σ a_i·b_i in double precision, left-to-right (deterministic).
 
@@ -1106,7 +1096,6 @@ def _load_centroids(spark, path: str) -> np.ndarray:
 # loads exactly the artifact that snapshot references — rebuilds are
 # atomic end-to-end, with no new-centroids/old-postings window.
 _CENTROIDS_TXN = "__ivf_centroids__"
-_CODEBOOKS_TXN = "__pq_codebooks__"
 
 
 def _maintained_centroids(spark, path: str, snap) -> np.ndarray:
@@ -1581,23 +1570,22 @@ def rebuild_ivf_index(
 # source DML by folding the change feed, codebooks frozen exactly like
 # the maintained IVF's centroids (the FAISS IndexIVFPQ add/remove
 # model: incremental adds encode against the existing codebooks;
-# retraining on drift is a REBUILD). Composing the codes table with
-# the maintained postings table gives a fully maintained IVF-PQ index:
-# both artifacts fold the same feed as idempotent txn-watermarked
-# MERGEs, so index memory (codes) and index routing (postings) stay
-# consistent with the source to the version, crash-safe, with no
-# nightly re-encode of the corpus — at the 100 TB design point the
-# nightly pq_encode re-crosses every vector through Arrow; this
-# re-encodes O(changed rows).
+# retraining means re-initializing at a fresh path). Composing the
+# codes table with the maintained postings table gives a fully
+# maintained IVF-PQ index: both artifacts fold the same feed as
+# idempotent txn-watermarked MERGEs, so index memory (codes) and index
+# routing (postings) stay consistent with the source to the version,
+# crash-safe, with no nightly re-encode of the corpus — at the 100 TB
+# design point the nightly pq_encode re-crosses every vector through
+# Arrow; this re-encodes O(changed rows).
 # ---------------------------------------------------------------------------
 
 
-def _load_pq_codebooks(spark, path: str, parquet: str | None = None) -> np.ndarray:
-    """(m, ksub, dsub) float64 codebooks from a codebook parquet —
-    the ``{path}/codebooks`` init sidecar by default, or an explicit
-    versioned rebuild artifact."""
+def _load_pq_codebooks(spark, path: str) -> np.ndarray:
+    """(m, ksub, dsub) float64 codebooks from the frozen
+    ``{path}/codebooks`` model artifact."""
     rows = sorted(
-        spark.read.parquet(parquet or f"{path}/codebooks").collect(),
+        spark.read.parquet(f"{path}/codebooks").collect(),
         key=lambda r: (r["sub"], r["code"]),
     )
     m = 1 + max(r["sub"] for r in rows)
@@ -1606,18 +1594,6 @@ def _load_pq_codebooks(spark, path: str, parquet: str | None = None) -> np.ndarr
         [r["centroid"] for r in rows], dtype=np.float64
     ).reshape(m, ksub, -1)
     return books
-
-
-def _maintained_codebooks(spark, path: str, snap) -> np.ndarray:
-    """Codebooks for a maintained-codes SNAPSHOT — resolves the
-    snapshot's codebook-version marker (:data:`_CODEBOOKS_TXN`), the
-    PQ twin of :func:`_maintained_centroids`."""
-    epoch = snap.txns.get(_CODEBOOKS_TXN, -1)
-    if epoch >= 0:
-        return _load_pq_codebooks(
-            spark, path, f"{path}/codebooks_v{epoch}.parquet"
-        )
-    return _load_pq_codebooks(spark, path)
 
 
 def refresh_pq_codes(
@@ -1709,8 +1685,7 @@ def refresh_pq_codes(
     from .ivm import _require_watermark_readable
 
     _require_watermark_readable(source, wm, "refresh_pq_codes")
-    # marker-aware: after a rebuild, encode against the REBUILT model
-    books = _maintained_codebooks(spark, path, tx.snapshot())
+    books = _load_pq_codebooks(spark, path)
     feed = source.change_feed(feed_key, wm, src_v)
     live = pq_encode(
         feed.filter(~F.col("_change_type").isin("update_preimage", "delete")),
@@ -1724,83 +1699,6 @@ def refresh_pq_codes(
         F.lit("D").alias("op"),
     )
     tx.merge(live.unionByName(dels), key=id_col, txn=(app_id, src_v))
-    return src_v
-
-
-def rebuild_pq_codes(
-    spark,
-    source,
-    path: str,
-    m: int = 8,
-    ksub: int = 16,
-    n_iter: int = 10,
-    seed: int = 7,
-    train_sample: int = 100_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codebooks: "np.ndarray | None" = None,
-    app_id: str | None = None,
-    log_store=None,
-):
-    """RETRAIN-ON-DRIFT rebuild of the maintained PQ codes — the
-    :func:`rebuild_ivf_index` twin for the memory tier: retrain
-    codebooks on the CURRENT snapshot (or adopt ``codebooks``),
-    re-encode every row, and swap codes + model atomically (the
-    versioned ``codebooks_v{v}.parquet`` artifact lands on disk
-    first; the codes ``overwrite`` carries the ``__pq_codebooks__``
-    marker next to the refresh watermark, so probes/folds always
-    load the model the current codes were encoded with). Same crash
-    and replay contract as the index rebuild. Returns the source
-    version rebuilt against, or None when already rebuilt at it."""
-    from ..sources.txtable import TxTable
-
-    app_id = app_id or f"pq:{path}"
-    src_v = source.latest_version()
-    tx = TxTable(spark, f"{path}/codes_tx", log_store=log_store)
-    if not tx.exists():
-        raise ValueError(
-            f"no maintained PQ codes at {path} — initialize with "
-            f"refresh_pq_codes first"
-        )
-    snap = tx.snapshot()
-    if snap.txns.get(app_id, -1) < 0:
-        raise ValueError(
-            f"table at {path}/codes_tx carries no {app_id!r} "
-            f"watermark — it is not this index's codes table"
-        )
-    if (
-        src_v <= snap.txns.get(_CODEBOOKS_TXN, -1)
-        and src_v <= snap.txns.get(app_id, -1)
-    ):
-        return None
-
-    vectors = source.read(version=src_v).select(id_col, vec_col)
-    if codebooks is not None:
-        books = np.asarray(codebooks, dtype=np.float64)
-    else:
-        books = train_pq(
-            vectors, m=m, ksub=ksub, n_iter=n_iter, seed=seed,
-            train_sample=train_sample, vec_col=vec_col,
-        )
-    mm_, kk, _ = books.shape
-    _write_versioned_model(
-        f"{path}/codebooks_v{src_v}.parquet",
-        pd.DataFrame(
-            {
-                "sub": np.repeat(np.arange(mm_, dtype=np.int32), kk),
-                "code": np.tile(np.arange(kk, dtype=np.int32), mm_),
-                "centroid": [
-                    list(map(float, books[s, c]))
-                    for s in range(mm_)
-                    for c in range(kk)
-                ],
-            }
-        ),
-    )
-    tx.overwrite(
-        pq_encode(vectors, books, id_col=id_col, vec_col=vec_col),
-        txn=[(app_id, src_v), (_CODEBOOKS_TXN, src_v)],
-    )
     return src_v
 
 
@@ -1986,15 +1884,13 @@ def pq_codes_maintained_topk(
     from ..sources.txtable import TxTable
 
     # one Snapshot per table, resolved up front and pinned through
-    # every read (r13, ADVICE r12): codebooks come from the codes
-    # snapshot's marker AND the codes scan reads version=snap.version,
-    # so a rebuild committing between the two cannot pair old books
-    # with re-encoded codes; the IVF tier below pins its postings the
-    # same way. Each table is internally consistent (model matches
-    # data) by construction of the marker-carrying commits.
+    # every read (r13, ADVICE r12): the codes scan reads
+    # version=snap.version against the frozen codebooks, and the IVF
+    # tier below pins its postings — and the marker-resolved centroids
+    # a rebuild may have swapped in — the same way.
     ctx = TxTable(spark, f"{path}/codes_tx")
     csnap = ctx.snapshot()
-    books = _maintained_codebooks(spark, path, csnap)
+    books = _load_pq_codebooks(spark, path)
     codes = ctx.read(version=csnap.version).select(id_col, "codes")
     exploded = codes.select(
         id_col, F.posexplode("codes").alias("__sub", "__code")

@@ -738,20 +738,6 @@ def _bucket_feats(
     )
 
 
-def _contrast_weights(feats: DataFrame, labels: DataFrame, id_col: str) -> DataFrame:
-    """w_b = x⁺_b·N⁻ − x⁻_b·N⁺ from (id, bucket, x) ⋈ (id, y)."""
-    j = feats.join(labels, id_col)
-    per_bucket = j.groupBy("bucket").agg(
-        F.sum(F.when(F.col("__y") == 1, F.col("x")).otherwise(0))
-        .cast("long")
-        .alias("__xp"),
-        F.sum(F.when(F.col("__y") == -1, F.col("x")).otherwise(0))
-        .cast("long")
-        .alias("__xn"),
-    )
-    return _weights_from_bucket_counts(per_bucket)
-
-
 def _weights_from_bucket_counts(per_bucket: DataFrame) -> DataFrame:
     """(bucket, __xp, __xn) → (bucket, w) with the int64 overflow guard."""
     totals = per_bucket.groupBy().agg(
@@ -785,25 +771,6 @@ def _weights_from_bucket_counts(per_bucket: DataFrame) -> DataFrame:
         .cast("long")
         .alias("w"),
     )
-
-
-def train_ngram_classifier(
-    labeled: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    label_col: str = "y",
-    n_buckets: int = TCLS_BUCKETS,
-    seed: int = CLASSIFIER_SEED,
-) -> DataFrame:
-    """One-pass frequency-contrast fit; returns the learned weight
-    table (bucket, w). ``labeled`` needs ``label_col`` in {+1, -1}.
-    Deterministic: the fit is a set aggregate — row order,
-    partitioning, and retries cannot change it."""
-    feats = _bucket_feats(labeled, text_col, id_col, n_buckets, seed)
-    labels = labeled.select(
-        F.col(id_col), F.col(label_col).cast("long").alias("__y")
-    )
-    return _contrast_weights(feats, labels, id_col)
 
 
 def _stop_labels(

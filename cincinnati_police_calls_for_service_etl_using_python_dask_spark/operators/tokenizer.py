@@ -20,8 +20,8 @@ provably-safe prefix of them merges in the same pass (see
 :func:`bpe_train` for the exact-parity batching argument); each merge
 is a codegen ``regexp_replace`` on the word representations. Greedy left-to-right
 non-overlapping application is pinned by a pure-Python reference
-implementation in tests/test_curation_ops.py (exact merge-table and
-segmentation equality at sf0.01).
+implementation in tests/test_curation_ops.py (exact merge-table
+equality at sf0.01).
 
 Symbol representation: a word's symbols are space-joined (chars to
 start, merged symbols later). Merge boundaries use single-char
@@ -256,34 +256,4 @@ def bpe_merge_table(
     schema = "rank long, left string, right string, pair_count long"
     return spark.createDataFrame(
         [(int(r), l, rt, int(c)) for r, l, rt, c in merges], schema
-    )
-
-
-def bpe_segment(
-    df: DataFrame,
-    merges: list[tuple[int, str, str, int]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Apply a trained merge table: (id, word, pieces array<string>,
-    n_pieces) per corpus word occurrence-set — the subword
-    segmentation the trained tokenizer produces. The merge fold is a
-    CHAIN of codegen regexp_replace (merge patterns are literals once
-    training is done), so segmenting 100 TB is a mapped scan."""
-    toks = tokens(F.col(text_col))
-    out = df.select(
-        F.col(id_col), F.explode(toks).alias("word")
-    ).filter(F.col("word") != "")
-    repr_col = F.concat_ws(" ", F.split(F.col("word"), ""))
-    for _, left, right, _cnt in merges:
-        merged = (left + right).replace("\\", "\\\\").replace("$", "\\$")
-        repr_col = F.regexp_replace(
-            repr_col, _merge_pattern(left, right), merged
-        )
-    pieces = F.split(repr_col, " ")
-    return out.select(
-        id_col,
-        "word",
-        pieces.alias("pieces"),
-        F.size(pieces).cast("long").alias("n_pieces"),
     )

@@ -89,7 +89,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # CUBE: all subtotal combinations in one shuffle (A5's manual
-# filter-loop pivot generalized; operators/aggregates.py:cube_agg).
+# filter-loop pivot generalized; operators/aggregates.py:cube_from_partials).
 # ---------------------------------------------------------------------------
 
 

@@ -451,9 +451,9 @@ def q_jaccard_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # REAL image decode (VERDICT r2 #3): genuine PNG payloads synthesized
-# per doc, decoded by an actual codec (Pillow if importable, else the
-# built-in pure-Python PNG parser — CRC-validated chunk walk + inflate
-# + filter reconstruction). The oracle predicts the geometry the
+# per doc, decoded by an actual codec (the built-in pure-Python PNG
+# parser — CRC-validated chunk walk + inflate + filter
+# reconstruction). The oracle predicts the geometry the
 # decoder must RECOVER from the bytes.
 # ---------------------------------------------------------------------------
 

@@ -18,6 +18,7 @@ app.py:957-968) become :func:`full_refresh_write`.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
@@ -32,8 +33,9 @@ DEFAULT_RETRY_SLEEP_S = 60.0     # tests override; reference sleeps 60 s
 
 class JsonLinesClient:
     """Filesystem-backed stand-in for a document store: one JSON-lines
-    file per (collection, partition). Executor-safe: file names are
-    uuid-suffixed so concurrent tasks never collide."""
+    file per (collection, batch), written to a tmp file and renamed. A
+    batch whose docs all carry ``_id`` is named by the sha256 of its
+    sorted ids, so a retried batch replaces its own file (else uuid)."""
 
     def __init__(self, root: str):
         self.root = root
@@ -41,10 +43,16 @@ class JsonLinesClient:
     def insert_many(self, collection: str, docs: list[dict]) -> int:
         cdir = os.path.join(self.root, collection)
         os.makedirs(cdir, exist_ok=True)
-        path = os.path.join(cdir, f"part-{uuid.uuid4().hex}.jsonl")
-        with open(path, "w", encoding="utf-8") as fh:
+        if docs and all("_id" in d for d in docs):
+            ids = "\n".join(sorted(str(d["_id"]) for d in docs))
+            name = hashlib.sha256(ids.encode("utf-8")).hexdigest()
+        else:
+            name = uuid.uuid4().hex
+        path = os.path.join(cdir, f"part-{name}")
+        with open(f"{path}.tmp", "w", encoding="utf-8") as fh:
             for d in docs:
                 fh.write(json.dumps(d, default=str) + "\n")
+        os.replace(f"{path}.tmp", f"{path}.jsonl")
         return len(docs)
 
     def drop_collection(self, collection: str) -> None:
@@ -57,7 +65,7 @@ class JsonLinesClient:
         cdir = os.path.join(self.root, collection)
         docs: list[dict] = []
         if os.path.isdir(cdir):
-            for name in sorted(os.listdir(cdir)):
+            for name in sorted(n for n in os.listdir(cdir) if n.endswith(".jsonl")):
                 with open(os.path.join(cdir, name), encoding="utf-8") as fh:
                     docs.extend(json.loads(line) for line in fh)
         return docs
@@ -122,8 +130,6 @@ def content_id(doc: dict) -> str:
     row content. Identical rows (from a retried batch or a re-executed
     Spark task) map to the same ``_id``, so a unique-key store rejects
     the re-insert instead of duplicating."""
-    import hashlib  # noqa: PLC0415
-
     payload = json.dumps(doc, sort_keys=True, default=str)
     return hashlib.sha256(payload.encode("utf-8")).hexdigest()
 

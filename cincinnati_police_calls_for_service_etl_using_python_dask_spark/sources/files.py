@@ -65,35 +65,6 @@ def read_csv_with_schema(
     return spark.read.schema(schema).option("header", header).csv(path)
 
 
-def read_json_with_schema(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-) -> DataFrame:
-    """Typed JSON-lines scan — the live-API row shape (app.py:171-177)
-    as a file source. The explicit schema skips inference (a full extra
-    scan) AND pins types the way the reference's dtype map did for CSV;
-    malformed records go to NULL columns (PERMISSIVE), matching the
-    reference's coerce-don't-crash posture (F6)."""
-    return spark.read.schema(schema).json(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """JSON-lines sink — the interchange format for the document sink's
-    row shape (each line is exactly a doc of S5's insert_many)."""
-    df.write.mode(mode).json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — same pushdown/pruning story as parquet (predicate →
-    stripe-level row-index pruning), for lakes standardized on ORC."""
-    return spark.read.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).orc(path)
-
-
 def read_testdata(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Load one driver-generated table (TESTDATA.md).
 
@@ -113,38 +84,6 @@ def read_testdata(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: tuple[str, ...],
-    num_buckets: int = 32,
-    sort_cols: tuple[str, ...] = (),
-    mode: str = "overwrite",
-    path: str | None = None,
-) -> None:
-    """Bucketed managed-table sink — the co-location layout for joins
-    and aggregations that repeat on the same key.
-
-    ``bucketBy(n, key)`` hashes rows into a fixed number of files per
-    partition; two tables bucketed the same way join with ZERO
-    exchanges (Catalyst sees the matching ``HashPartitioning`` output
-    from the scan), and groupBy on the bucket key skips its shuffle
-    too. At 100 TB this turns every repeated fact⋈fact join from a
-    full-network shuffle into a local merge — the biggest single
-    layout lever Spark offers. ``sort_cols`` additionally orders
-    within buckets so the join needs no sort either.
-
-    Bucketed tables must go through the catalog (``saveAsTable``) —
-    plain ``.parquet(path)`` writes would lose the bucket metadata.
-    """
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    if path is not None:
-        writer = writer.option("path", path)  # external table location
-    writer.format("parquet").saveAsTable(table)
-
-
 def write_parquet(
     df: DataFrame,
     path: str,
@@ -160,53 +99,3 @@ def write_parquet(
     writer.parquet(path)
 
 
-def write_partition_overwrite(
-    df: DataFrame,
-    path: str,
-    partition_by: tuple[str, ...],
-) -> None:
-    """Incremental refresh: overwrite ONLY the partitions present in
-    ``df``, leave every other partition's files untouched.
-
-    The reference refreshes by dropping every collection and reloading
-    the full 2019→now history daily (drop_collections + full insert,
-    app.py:645-740, 893-959) — a full rewrite of the dataset per run.
-    At 100 TB that is the difference between rewriting ~0.1% (the
-    months the new fetch actually touched) and rewriting everything.
-    Spark's dynamic partitionOverwriteMode scopes mode("overwrite") to
-    the partition values appearing in ``df``: re-ingesting one month
-    replaces exactly that month's directory, atomically per partition.
-
-    The conf is set per-write and restored, so sessions keep Spark's
-    default (static) semantics elsewhere.
-    """
-    if not partition_by:
-        raise ValueError("dynamic overwrite requires partition columns")
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "STATIC")
-    spark.conf.set(key, "dynamic")
-    try:
-        (
-            df.write.mode("overwrite")
-            .partitionBy(*partition_by)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set(key, prev)
-
-
-def read_evolving_parquet(spark: SparkSession, *paths: str) -> DataFrame:
-    """Read parquet batches whose schemas EVOLVED over time (columns
-    added/reordered across batches) as one DataFrame: ``mergeSchema``
-    unions the file footers; rows from batches that predate a column
-    read it as NULL.
-
-    Scale note: schema merging reads every file's FOOTER at planning
-    time — O(files) driver work, so keep batch counts sane (compact
-    small files); data pages are untouched and column pruning /
-    predicate pushdown still apply per file, so a 2-column projection
-    of a 100-column evolved table reads 2 columns from every batch
-    regardless of when they appeared.
-    """
-    return spark.read.option("mergeSchema", "true").parquet(*paths)

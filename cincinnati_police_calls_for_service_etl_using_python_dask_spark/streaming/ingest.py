@@ -20,15 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import TESTDATA_SCHEMAS
-
-
-def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
-    """File-based append stream of events-shaped parquet (one file per
-    micro-batch discovery). ``ts`` must be TIMESTAMP (µs) — see
-    tests/test_streaming.py for the fixture writer."""
-    return spark.readStream.schema(TESTDATA_SCHEMAS["events"]).parquet(path)
-
 
 def watermark_dedup(
     stream: DataFrame,
@@ -40,32 +31,6 @@ def watermark_dedup(
     the reference's re-fetch-then-dedup (app.py:463-480). State for a
     key is dropped once the watermark passes it."""
     return stream.withWatermark(ts_col, watermark).dropDuplicates(keys)
-
-
-def windowed_counts(
-    stream: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    group_cols: list[str] | None = None,
-) -> DataFrame:
-    """Tumbling event-time aggregation (the monthly-chunk analog,
-    app.py:101-134): counts + mean metric per window [+ group cols]."""
-    groups = [F.window(F.col(ts_col), window)] + [
-        F.col(c) for c in (group_cols or [])
-    ]
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(*groups)
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.avg("value"), 4).alias("avg_value"))
-        .select(
-            F.col("window.start").alias("win_start"),
-            F.col("window.end").alias("win_end"),
-            *[F.col(c) for c in (group_cols or [])],
-            "n_events",
-            "avg_value",
-        )
-    )
 
 
 def batch_equivalent_daily_counts(
@@ -106,20 +71,6 @@ def batch_equivalent_daily_counts(
         F.col("win.start").cast("date").cast("string").alias("win_start"),
         "n_events",
     )
-
-
-def run_available_now(result: DataFrame, checkpoint: str, out_path: str) -> None:
-    """Drain everything currently available (the scheduled-batch analog
-    of Trigger.AvailableNow), write parquet, stop. Append mode."""
-    q = (
-        result.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def batch_equivalent_watermark_dedup(

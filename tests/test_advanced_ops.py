@@ -136,19 +136,6 @@ def test_sessionize_gap_boundary(spark):
     assert out == {1: 1, 2: 1, 3: 2, 4: 1}
 
 
-def test_cube_totals_consistency(spark):
-    orders = read_testdata(spark, SF_ORACLE, "orders")
-    cube = ag.cube_agg(
-        orders,
-        keys=["o_orderstatus", "o_orderpriority"],
-        aggs={"n_orders": F.count(F.lit(1))},
-    ).collect()
-    grand = [r for r in cube if r[0] is None and r[1] is None]
-    assert len(grand) == 1 and grand[0]["n_orders"] == orders.count()
-    by_status = sum(r["n_orders"] for r in cube if r[0] is not None and r[1] is None)
-    assert by_status == orders.count()
-
-
 def test_percentiles_are_dyadic_cents(spark):
     df = spark.createDataFrame(
         [("a", 1.01), ("a", 1.02), ("a", 1.03), ("a", 1.06)], "k string, v double"
@@ -249,41 +236,6 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     assert len(glob.glob(f"{out}/day=*")) > 1  # layout actually split
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    # Co-location layout (SURVEY.md §7.2 M6): two tables bucketed the
-    # same way must join with ZERO shuffles — scans report matching
-    # HashPartitioning, so EnsureRequirements inserts no Exchange.
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.files import (
-        read_testdata,
-        write_bucketed,
-    )
-
-    orders = read_testdata(spark, SF_SMOKE, "orders")
-    cust = read_testdata(spark, SF_SMOKE, "customer")
-    write_bucketed(orders, "b_orders", ("o_custkey",), num_buckets=4,
-                   sort_cols=("o_custkey",), path=str(tmp_path / "bo"))
-    write_bucketed(cust, "b_customer", ("c_custkey",), num_buckets=4,
-                   sort_cols=("c_custkey",), path=str(tmp_path / "bc"))
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force a non-broadcast join so the exchange test is meaningful
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("b_orders").join(
-            spark.table("b_customer"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        joined.collect()
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        # correctness: same row count as the plain (shuffled) join
-        want = orders.join(cust, orders.o_custkey == cust.c_custkey).count()
-        assert joined.count() == want > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_customer")
-
-
 def test_approx_profile_error_bounds(spark):
     ev = read_testdata(spark, SF_ORACLE, "events")
     approx = {
@@ -300,44 +252,6 @@ def test_approx_profile_error_bounds(spark):
     }
     for k, est in approx.items():
         assert abs(est - exact[k]) / exact[k] < 0.15  # rsd=0.05, generous bound
-
-
-def test_partition_overwrite_touches_only_new_partitions(spark, tmp_path):
-    """S5/S8 done right at scale: the reference full-refreshes by
-    dropping every collection and reloading all history daily
-    (app.py:645-740, 893-959); dynamic partition overwrite replaces
-    only the partitions present in the incoming frame."""
-    import glob
-    import os as _os
-
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.files import (
-        write_partition_overwrite,
-    )
-
-    out = str(tmp_path / "inc")
-    base = spark.createDataFrame(
-        [(1, "jan", 10.0), (2, "feb", 20.0), (3, "mar", 30.0)],
-        "id long, month string, v double",
-    )
-    write_partition_overwrite(base, out, partition_by=("month",))
-    feb_files_before = sorted(glob.glob(f"{out}/month=feb/*.parquet"))
-    jan_files_before = sorted(glob.glob(f"{out}/month=jan/*.parquet"))
-
-    # re-ingest feb only, with corrected data
-    fix = spark.createDataFrame([(2, "feb", 99.0)], "id long, month string, v double")
-    write_partition_overwrite(fix, out, partition_by=("month",))
-
-    # jan/mar untouched on disk (same files), feb replaced
-    assert sorted(glob.glob(f"{out}/month=jan/*.parquet")) == jan_files_before
-    assert sorted(glob.glob(f"{out}/month=feb/*.parquet")) != feb_files_before
-    back = {r["month"]: r["v"] for r in spark.read.parquet(out).collect()}
-    assert back == {"jan": 10.0, "feb": 99.0, "mar": 30.0}
-    # session conf restored to its prior (static) default
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode").upper()
-        == "STATIC"
-    )
-    assert _os.path.isdir(f"{out}/month=mar")
 
 
 def test_interpolate_daily_hand_computed(spark):

@@ -738,9 +738,11 @@ def test_fused_media_matches_union(spark):
 
     docs = _mm_docs(spark)
     composed = (
-        mm.synth_decode_png(docs).select(F.lit("png").alias("seg"), "*")
+        mm.decode_image_metadata(mm.attach_png_payload(docs))
+        .select(F.lit("png").alias("seg"), "*")
         .unionByName(
-            mm.synth_decode_jpeg(docs).select(F.lit("jpeg").alias("seg"), "*"),
+            mm.decode_jpeg_metadata(mm.attach_jpeg_payload(docs))
+            .select(F.lit("jpeg").alias("seg"), "*"),
             allowMissingColumns=True,
         )
         .unionByName(
@@ -799,9 +801,6 @@ def test_fused_spellings_match_composed(spark):
         mm.attach_png_payload(docs), max_w=6, max_h=6, method="nearest"
     )
     assert rows(mm.synth_resize_png(docs, max_w=6, max_h=6)) == rows(composed_resize)
-
-    composed_decode = mm.decode_image_metadata(mm.attach_png_payload(docs))
-    assert rows(mm.synth_decode_png(docs)) == rows(composed_decode)
 
     payload = mm.attach_binary_payload(docs)
     composed_geo = (
@@ -937,15 +936,7 @@ def test_jpeg_fused_matches_composed(spark):
     )
 
     docs = _mm_docs(spark)
-
-    def rows(df):
-        return sorted(
-            (tuple(r) for r in df.collect()),
-            key=lambda t: tuple((v is None, v) for v in t),
-        )
-
     composed = mm.decode_jpeg_metadata(mm.attach_jpeg_payload(docs))
-    assert rows(mm.synth_decode_jpeg(docs)) == rows(composed)
     got = {r["doc_id"]: r for r in composed.collect()}
     # flat-block contract: checksums predictable straight from the text
     for doc_id, text in [(0, "fused parity doc 0 "), (98, "x"), (97, "")]:
@@ -1007,17 +998,13 @@ def test_contrast_weight_overflow_fails_loudly(spark):
     N⁺·N⁻ = 2⁶² trips the assert; a normal-sized fit is unaffected."""
     import pytest
 
-    feats = spark.createDataFrame(
-        [(1, 0, 1 << 31), (2, 0, 1 << 31)], "doc_id long, bucket int, x long"
-    )
-    labels = spark.createDataFrame([(1, 1), (2, -1)], "doc_id long, __y long")
+    schema = "bucket int, __xp long, __xn long"
+    big = spark.createDataFrame([(0, 1 << 31, 1 << 31)], schema)
     with pytest.raises(Exception, match="contrast-weight overflow"):
-        tx._contrast_weights(feats, labels, "doc_id").collect()
+        tx._weights_from_bucket_counts(big).collect()
 
-    small = spark.createDataFrame(
-        [(1, 0, 5), (2, 0, 3)], "doc_id long, bucket int, x long"
-    )
-    got = tx._contrast_weights(small, labels, "doc_id").collect()
+    small = spark.createDataFrame([(0, 5, 3)], schema)
+    got = tx._weights_from_bucket_counts(small).collect()
     assert [(r["bucket"], r["w"]) for r in got] == [(0, 5 * 3 - 3 * 5)]
 
 
@@ -1083,11 +1070,7 @@ def test_jpeg_color_random_tolerance_and_color_transform_identity():
     got = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3).astype(np.int64)
     exp = np.stack(J.ycbcr_to_rgb_int(yp, cbp, crp), axis=-1).astype(np.int64)
     assert np.abs(got - exp).max() <= 4  # all-ones quant: near-lossless
-    # fixed-point transform: primaries and white land where they must
-    r, g, b = J.rgb_to_ycbcr_int(
-        np.array([255, 255, 0, 0]), np.array([255, 0, 255, 0]), np.array([255, 0, 0, 0])
-    )
-    assert r[0] == 255 and r[3] == 0  # white -> Y=255, black -> Y=0
+    # fixed-point transform: white and black land where they must
     y2, cb2, cr2 = J.ycbcr_to_rgb_int(
         np.array([255, 0]), np.array([128, 128]), np.array([128, 128])
     )
@@ -1518,7 +1501,7 @@ def _ref_bpe(texts, num_merges):
                     out.append(syms[i])
                     i += 1
             reprs[w] = out
-    return merges, reprs
+    return merges
 
 
 def test_bpe_train_matches_reference_at_sf001(spark):
@@ -1532,15 +1515,8 @@ def test_bpe_train_matches_reference_at_sf001(spark):
 
     docs = read_testdata(spark, SF_ORACLE, "documents")
     texts = [r["text"] for r in docs.select("text").collect()]
-    ref_merges, ref_reprs = _ref_bpe(texts, 8)
-    got = tk.bpe_train(docs, num_merges=8)
-    assert got == ref_merges
-    # segmentation with the trained table reproduces the reference reprs
-    seg = {
-        r["word"]: r["pieces"]
-        for r in tk.bpe_segment(docs, got).dropDuplicates(["word"]).collect()
-    }
-    assert seg == {w: p for w, p in ref_reprs.items()}
+    ref_merges = _ref_bpe(texts, 8)
+    assert tk.bpe_train(docs, num_merges=8) == ref_merges
 
 
 def test_bpe_adjacent_overlap_and_early_stop(spark):
@@ -1555,9 +1531,6 @@ def test_bpe_adjacent_overlap_and_early_stop(spark):
     # round 2 ties at count 1 between (aa,aa) and (aa,a); right-asc
     # tie-break picks (aa,a)
     assert merges[1][1:3] == ("aa", "a")
-    seg = {r["word"]: r["pieces"] for r in tk.bpe_segment(docs, merges).collect()}
-    assert seg["aaaa"] == ["aa", "aa"]
-    assert seg["aaa"] == ["aaa"]
     # single-char words: no pairs -> early stop, empty table
     single = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     assert tk.bpe_train(single, num_merges=3) == []
@@ -1565,8 +1538,8 @@ def test_bpe_adjacent_overlap_and_early_stop(spark):
 
 def test_bpe_handles_regex_special_symbols(spark):
     """Words containing regex metacharacters ('.', '$', '\\\\') train
-    and segment correctly — merge patterns are escaped, replacements
-    escape '$' and backslash."""
+    correctly — merge patterns are escaped, replacements escape '$'
+    and backslash."""
     from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators import (
         tokenizer as tk,
     )
@@ -1576,13 +1549,7 @@ def test_bpe_handles_regex_special_symbols(spark):
     )
     merges = tk.bpe_train(docs, num_merges=4)
     texts = ["a.b a.b a.b x$y x$y"]
-    ref_merges, ref_reprs = _ref_bpe(texts, 4)
-    assert merges == ref_merges
-    seg = {
-        r["word"]: r["pieces"]
-        for r in tk.bpe_segment(docs, merges).dropDuplicates(["word"]).collect()
-    }
-    assert seg == ref_reprs
+    assert merges == _ref_bpe(texts, 4)
 
 
 def test_incremental_dedup_statuses(spark):
@@ -1659,7 +1626,7 @@ def test_bpe_train_batched_parity_at_64_merges(spark):
 
     docs = read_testdata(spark, SF_ORACLE, "documents")
     texts = [r["text"] for r in docs.select("text").collect()]
-    ref_merges, _ = _ref_bpe(texts, 64)
+    ref_merges = _ref_bpe(texts, 64)
     got = tk.bpe_train(docs, num_merges=64)
     assert got == ref_merges
     # a tiny candidate window (max batch 2) must yield the same table
@@ -1678,7 +1645,7 @@ def test_bpe_train_batched_accepts_disjoint_merges_in_one_round(spark):
     # counts: (a,b)=9 > (c,d)=7 > (e,f)=5 — pairwise disjoint symbols
     text = " ".join(["ab"] * 9 + ["cd"] * 7 + ["ef"] * 5)
     docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    ref_merges, _ = _ref_bpe([text], 3)
+    ref_merges = _ref_bpe([text], 3)
     orig = tk._pair_counts
     calls = [0]
 
@@ -1725,6 +1692,6 @@ def test_bpe_train_batched_self_pair_cap_regression(spark):
     for text, nm in corpora:
         text = text.strip()
         docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
-        ref_merges, _ = _ref_bpe([text], nm)
+        ref_merges = _ref_bpe([text], nm)
         got = tk.bpe_train(docs, num_merges=nm)
         assert got == ref_merges, f"batched != serial on {text!r}"

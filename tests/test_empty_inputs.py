@@ -107,8 +107,6 @@ _CASES = {
         _docs(s).select("doc_id", F.encode("text", "UTF-8").alias("payload"))
     ),
     "synth_resize_png": lambda s: mm.synth_resize_png(_docs(s)),
-    "synth_decode_png": lambda s: mm.synth_decode_png(_docs(s)),
-    "synth_decode_jpeg": lambda s: mm.synth_decode_jpeg(_docs(s)),
     "synth_video_frames": lambda s: _mp4_mod().synth_video_frames(_docs(s)),
     "synth_video_metadata": lambda s: _mp4_mod().synth_video_metadata(_docs(s)),
     "synth_audio_metadata": lambda s: _audio_mod().synth_audio_metadata(_docs(s)),

@@ -1096,7 +1096,7 @@ def test_optimize_ivf_index_retightens_zone_maps(spark, tmp_path):
 
 
 def test_rebuild_ivf_index_retrains_on_drift(spark, tmp_path):
-    """rebuild_ivf_index + rebuild_pq_codes (r12): the retrain-on-
+    """rebuild_ivf_index (r12): the retrain-on-
     drift complement of the refresh loop. After the corpus walks off
     the training snapshot, a rebuild retrains on the CURRENT snapshot
     and atomically swaps postings+model (the commit references its
@@ -1127,9 +1127,7 @@ def test_rebuild_ivf_index_retrains_on_drift(spark, tmp_path):
         spark, str(tmp_path / "src"), frame(range(32), axes=[0, 1, 2, 3])
     )
     idx = str(tmp_path / "idx")
-    pqp = str(tmp_path / "pq")
     sim.refresh_ivf_index(spark, src, idx, n_lists=4, n_iter=6, seed=21)
-    sim.refresh_pq_codes(spark, src, pqp, m=4, ksub=8, n_iter=4, seed=21)
     postings = TxTable(spark, f"{idx}/postings_tx")
     old_cents = sim._maintained_centroids(spark, idx, postings.snapshot())
 
@@ -1148,18 +1146,14 @@ def test_rebuild_ivf_index_retrains_on_drift(spark, tmp_path):
     src.delete(F.lit(True))
     src.append(frame(range(200, 240), axes=[4, 5, 6, 7]))
     sim.refresh_ivf_index(spark, src, idx)
-    sim.refresh_pq_codes(spark, src, pqp)
     drifted = cohesion(old_cents)
 
-    # rebuilds without an init are refused
+    # a rebuild without an init is refused
     with pytest.raises(ValueError, match="refresh_ivf_index first"):
         sim.rebuild_ivf_index(spark, src, str(tmp_path / "nope"))
-    with pytest.raises(ValueError, match="refresh_pq_codes first"):
-        sim.rebuild_pq_codes(spark, src, str(tmp_path / "nope"))
 
     v = sim.rebuild_ivf_index(spark, src, idx, n_lists=4, n_iter=6, seed=22)
     assert v == src.latest_version()
-    assert sim.rebuild_pq_codes(spark, src, pqp, m=4, ksub=8, seed=22) == v
 
     # the swap is commit-referenced: the snapshot's marker resolves to
     # the versioned artifact, and the retrained model fits the drifted
@@ -1181,8 +1175,7 @@ def test_rebuild_ivf_index_retrains_on_drift(spark, tmp_path):
     got = {(r["vec_id"], r["_list"]) for r in postings.read().collect()}
     assert got == expected
 
-    # probes: exhaustive == brute over the current corpus; the
-    # maintained IVF-PQ composition reads both rebuilt artifacts
+    # probes: exhaustive == brute over the current corpus
     cur = src.read()
     queries = cur.filter(F.col("vec_id").isin(201, 237)).select(
         F.col("vec_id").alias("query_id"),
@@ -1193,23 +1186,15 @@ def test_rebuild_ivf_index_retrains_on_drift(spark, tmp_path):
     )
     want = sorted(map(tuple, sim.brute_force_topk(cur, queries, k=4).collect()))
     assert got_p == want
-    comp = sim.pq_codes_maintained_topk(
-        spark, pqp, queries, cur, k=4, shortlist=10, ivf_path=idx, n_probe=4
-    ).collect()
-    assert {(r["query_id"], r["vec_id"]) for r in comp if r["rank"] == 1} == {
-        (201, 201), (237, 237)
-    }
 
-    # replayed rebuilds no-op (atomic swap is idempotent)
+    # a replayed rebuild no-ops (atomic swap is idempotent)
     hv = postings.latest_version()
     assert sim.rebuild_ivf_index(spark, src, idx, n_lists=4) is None
-    assert sim.rebuild_pq_codes(spark, src, pqp) is None
     assert postings.latest_version() == hv
 
     # the NEXT fold assigns against the rebuilt model
     src.append(frame(range(300, 305), axes=[4, 5, 6, 7]))
     sim.refresh_ivf_index(spark, src, idx)
-    sim.refresh_pq_codes(spark, src, pqp)
     got2 = {(r["vec_id"], r["_list"]) for r in postings.read().collect()}
     for r in src.read().filter(F.col("vec_id") >= 300).collect():
         vv = np.asarray(r["embedding"], dtype=np.float64)
@@ -1218,21 +1203,6 @@ def test_rebuild_ivf_index_retrains_on_drift(spark, tmp_path):
             r["vec_id"],
             int(np.argmax((vv / n if n > 0 else vv) @ new_cents.T)),
         ) in got2
-    # and the maintained codes equal a fresh encode under the REBUILT
-    # codebooks (the fold loaded the versioned artifact, not the
-    # init-era sidecar)
-    new_books = sim._maintained_codebooks(
-        spark, pqp, TxTable(spark, f"{pqp}/codes_tx").snapshot()
-    )
-    fresh_codes = {
-        (r["vec_id"], tuple(r["codes"]))
-        for r in sim.pq_encode(src.read(), new_books).collect()
-    }
-    maint_codes = {
-        (r["vec_id"], tuple(r["codes"]))
-        for r in TxTable(spark, f"{pqp}/codes_tx").read().collect()
-    }
-    assert maint_codes == fresh_codes
 
 
 def test_refresh_minhash_index_maintains_under_dml(spark, tmp_path):
@@ -2035,11 +2005,10 @@ def test_probe_pins_one_snapshot_across_rebuild(spark, tmp_path):
     """ADVICE r12 (snapshot pinning): a probe resolves ONE snapshot
     per table up front and pins every read to it. A rebuild committing
     AFTER the probe plan is constructed but BEFORE its (lazy) action
-    must not mix the old model with new postings/codes: the already-
+    must not mix the old model with new postings: the already-
     constructed plan keeps reading the pinned pre-rebuild version
     (snapshot isolation), and a freshly constructed plan sees the
-    rebuilt pair. Exercised for both maintained probe paths
-    (ivf_index_topk and the fully maintained IVF-PQ composition)."""
+    rebuilt pair. Exercised on the maintained ivf_index_topk probe."""
     import numpy as np
 
     from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.txtable import (
@@ -2062,9 +2031,7 @@ def test_probe_pins_one_snapshot_across_rebuild(spark, tmp_path):
         spark, str(tmp_path / "src"), frame(range(24), axes=[0, 1, 2, 3])
     )
     idx = str(tmp_path / "idx")
-    pqp = str(tmp_path / "pq")
     sim.refresh_ivf_index(spark, src, idx, n_lists=4, n_iter=6, seed=29)
-    sim.refresh_pq_codes(spark, src, pqp, m=4, ksub=8, n_iter=4, seed=29)
 
     cur = src.read(version=0)
     queries = cur.filter(F.col("vec_id").isin(1, 7)).select(
@@ -2072,31 +2039,22 @@ def test_probe_pins_one_snapshot_across_rebuild(spark, tmp_path):
     )
     # plans constructed NOW: model already resolved, data reads lazy
     ivf_plan = sim.ivf_index_topk(spark, idx, queries, k=4, n_probe=4)
-    pq_plan = sim.pq_codes_maintained_topk(
-        spark, pqp, queries, cur, k=4, shortlist=10, ivf_path=idx, n_probe=4
-    )
     want_ivf = sorted(map(tuple, ivf_plan.collect()))
-    want_pq = sorted(map(tuple, pq_plan.collect()))
     assert want_ivf == sorted(
         map(tuple, sim.brute_force_topk(cur, queries, k=4).collect())
     )
 
-    # the race: drift + rebuild BOTH tiers before the plans re-execute
+    # the race: drift + rebuild before the plan re-executes
     src.delete(F.col("vec_id") >= 12)
     src.append(frame(range(200, 224), axes=[4, 5, 6, 7]))
     sim.refresh_ivf_index(spark, src, idx)
-    sim.refresh_pq_codes(spark, src, pqp)
     assert sim.rebuild_ivf_index(
         spark, src, idx, n_lists=4, n_iter=6, seed=30
     ) == src.latest_version()
-    assert sim.rebuild_pq_codes(
-        spark, src, pqp, m=4, ksub=8, n_iter=4, seed=30
-    ) == src.latest_version()
 
-    # pinned plans replay the PRE-rebuild pairing bit-for-bit — no
+    # the pinned plan replays the PRE-rebuild pairing bit-for-bit — no
     # old-model/new-postings mix in either direction
     assert sorted(map(tuple, ivf_plan.collect())) == want_ivf
-    assert sorted(map(tuple, pq_plan.collect())) == want_pq
 
     # a fresh plan resolves the rebuilt snapshot and equals brute
     # force over the current corpus

@@ -18,7 +18,6 @@ from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators.a
     group_agg,
     group_agg_bitmap_fused,
     group_agg_single_distinct,
-    group_agg_split_distinct,
     null_profile,
 )
 from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators.dedup import (
@@ -48,6 +47,48 @@ def test_latest_per_key_tiebreak_and_null_filter(spark):
     )
     got = {r["event_number"]: (r["ind"], r["district"]) for r in out.collect()}
     assert got == {"E1": (1, "D1"), "E2": (4, "D9"), "E3": (6, "D6")}
+
+
+def test_cfs_reference_pipeline_dedups_then_aggregates(spark):
+    # The paper's dataflow end to end on a CFS-shaped frame: string
+    # times parse, the older E1 record goes, the E2 tie on
+    # create_time_incident goes to the higher ind, and E3's null-district
+    # row is dropped before the dedup so its older record survives.
+    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.plans.pipeline import (
+        cfs_reference_pipeline,
+    )
+
+    rows = [
+        ("E1", "2024-03-01T08:00:00.000000", 1, "D1", "P1", 10.0),  # older
+        ("E1", "2024-03-01T09:30:00.000000", 2, "D1", "P1", 20.0),
+        ("E2", "2024-03-01T09:15:00.000000", 3, "D2", "P1", 5.0),   # tie loser
+        ("E2", "2024-03-01T09:15:00.000000", 4, "D2", "P1", 7.0),
+        ("E3", "2024-03-01T09:45:00.000000", 5, None, "P1", 100.0),  # null district
+        ("E3", "2024-03-01T09:05:00.000000", 6, "D3", "P1", 3.0),
+        ("E4", "2024-03-01T10:20:00.000000", 7, "D1", "P2", 8.0),
+    ]
+    raw = spark.createDataFrame(
+        rows,
+        "event_number string, create_time_incident string, ind long, "
+        "district string, priority string, dispatch_minutes double",
+    )
+    out = cfs_reference_pipeline(
+        raw,
+        entity_key="event_number",
+        order_col="create_time_incident",
+        tie_breaker="ind",
+        group_keys=["year", "month", "day", "hour", "priority"],
+        metric_cols=["dispatch_minutes"],
+        not_null_col="district",
+    )
+    assert out.columns == [
+        "year", "month", "day", "hour", "priority",
+        "nunique_event_number", "avg_dispatch_minutes",
+    ]
+    assert sorted(map(tuple, out.collect())) == [
+        (2024, 3, 1, 9, "P1", 3, 10.0),  # (20 + 7 + 3) / 3
+        (2024, 3, 1, 10, "P2", 1, 8.0),
+    ]
 
 
 def test_group_agg_null_keys_and_countdistinct_nulls(spark):
@@ -93,45 +134,10 @@ def test_group_agg_single_distinct_matches_builtin(spark):
     assert fast.dtypes == ref.dtypes
 
 
-def test_group_agg_split_distinct_matches_builtin(spark):
-    """r10 (VERDICT r9 #3): the split spelling (independent branches,
-    null-safe join) must match the built-in plan on the same edges as
-    the cascade — NULL distinct values, NULL group keys, finalizers,
-    avg-of-nulls — and column order/dtypes."""
-    rows = [
-        ("a", "x", 1.0, 100),
-        ("a", "x", 3.0, 200),
-        ("a", None, None, 300),
-        (None, "y", 5.0, 400),
-        (None, "y", 7.0, None),
-        (None, None, None, None),
-    ]
-    df = spark.createDataFrame(rows, "k string, d string, m double, c long")
-    split = group_agg_split_distinct(
-        df, keys=["k"], distinct_col="d", avg=["m"],
-        int_sums={"total_c": F.col("c")},
-        finalize={"total_c": lambda s: s * 10},
-        count_alias="n_rows",
-    )
-    ref = df.groupBy("k").agg(
-        F.countDistinct("d").alias("nunique_d"),
-        F.round(F.avg("m"), 4).alias("avg_m"),
-        (F.sum("c") * 10).alias("total_c"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-    key = lambda r: (r["k"] is not None, r["k"])
-    assert sorted(split.collect(), key=key) == sorted(ref.collect(), key=key)
-    assert split.columns == ref.columns
-    # distinct-only degenerate form
-    donly = group_agg_split_distinct(df, keys=["k"], distinct_col="d")
-    got = {r["k"]: r["nunique_d"] for r in donly.collect()}
-    assert got == {"a": 1, None: 1}
-
-
 def test_group_agg_integral_distinct_bitmap_paths(spark):
     """r11 (VERDICT r10 #4): for an integral distinct column, the
-    split spelling's bitmap branch and the fused one-scan spelling
-    must both match the built-in plan — including NULL ids (excluded
+    fused one-scan bitmap spelling must match the built-in plan —
+    including NULL ids (excluded
     from nunique, kept in n_rows/avgs), NEGATIVE ids (the (k>>6,
     k&63) map is a bijection over all longs), an all-NULL-id group
     (nunique 0, group preserved), and NULL group keys."""
@@ -161,11 +167,10 @@ def test_group_agg_integral_distinct_bitmap_paths(spark):
     )
     key = lambda r: (r["k"] is not None, r["k"])
     expected = sorted(ref.collect(), key=key)
-    for fn in (group_agg_split_distinct, group_agg_bitmap_fused):
-        out = fn(df, **kw)
-        assert sorted(out.collect(), key=key) == expected, fn.__name__
-        assert out.columns == ref.columns
-        assert out.dtypes == ref.dtypes, fn.__name__
+    out = group_agg_bitmap_fused(df, **kw)
+    assert sorted(out.collect(), key=key) == expected
+    assert out.columns == ref.columns
+    assert out.dtypes == ref.dtypes
     with pytest.raises(ValueError, match="integral"):
         group_agg_bitmap_fused(
             df.withColumn("d", F.col("d").cast("string")), **kw
@@ -178,36 +183,6 @@ def test_union_all_ragged_columns(spark):
     b = spark.createDataFrame([(2,)], "id long")
     out = union_all([a, b]).orderBy("id").collect()
     assert [(r["id"], r["extra"]) for r in out] == [(1, "x"), (2, None)]
-
-
-def test_salted_join_matches_plain_join(spark):
-    # Skewed left (one hot key = 80% of rows) joined to a dim with a
-    # duplicate key row and a key missing from the left; salted result
-    # must be row-identical to the plain join for inner AND left.
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators.relational import (
-        salted_join,
-    )
-
-    left = spark.createDataFrame(
-        [("hot", i) for i in range(80)]
-        + [("warm", i) for i in range(15)]
-        + [("rare", 0), ("unmatched", 1)]
-        + [(None, 2)],
-        "k string, v long",
-    )
-    right = spark.createDataFrame(
-        [("hot", "H"), ("warm", "W"), ("warm", "W2"), ("rare", "R"), ("absent", "A")],
-        "k string, attr string",
-    )
-    for how in ("inner", "left"):
-        plain = left.join(right, on="k", how=how)
-        salted = salted_join(left, right, on="k", how=how, salt_buckets=4)
-        assert salted.columns == plain.columns
-        from collections import Counter
-
-        assert Counter(map(tuple, salted.collect())) == Counter(
-            map(tuple, plain.collect())
-        )
 
 
 def test_null_profile_all_null_column(spark):

@@ -18,7 +18,6 @@ from cincinnati_police_calls_for_service_etl_using_python_dask_spark.functions.h
 from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators.aggregates import (
     group_agg_bitmap_fused,
     group_agg_single_distinct,
-    group_agg_split_distinct,
 )
 from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators.dedup import (
     latest_per_key,
@@ -87,24 +86,6 @@ def test_single_distinct_fast_path_property(spark, rows):
     assert sorted(fast.collect(), key=key) == sorted(ref.collect(), key=key)
 
 
-@_SETTINGS
-@given(_rows)
-def test_split_distinct_property(spark, rows):
-    # r10: the split-branch spelling equals the built-in plan for ANY
-    # small frame (NULL keys pair through the null-safe join).
-    df = spark.createDataFrame(rows, "k string, d string, m double")
-    split = group_agg_split_distinct(
-        df, keys=["k"], distinct_col="d", avg=["m"], count_alias="n_rows"
-    )
-    ref = df.groupBy("k").agg(
-        F.countDistinct("d").alias("nunique_d"),
-        F.round(F.avg("m"), 4).alias("avg_m"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-    key = lambda r: (r["k"] is not None, r["k"])
-    assert sorted(split.collect(), key=key) == sorted(ref.collect(), key=key)
-
-
 _int_rows = st.lists(
     st.tuples(
         st.sampled_from(["a", "b", None]),                    # group key
@@ -121,8 +102,7 @@ _int_rows = st.lists(
 def test_integral_distinct_bitmap_property(spark, rows):
     # r11 (VERDICT r10 #4): for ANY small frame with an integral id —
     # including negatives straddling bucket boundaries and NULLs —
-    # both the split bitmap branch and the fused one-scan spelling
-    # equal the built-in plan.
+    # the fused one-scan bitmap spelling equals the built-in plan.
     df = spark.createDataFrame(rows, "k string, d long, m double")
     ref = df.groupBy("k").agg(
         F.countDistinct("d").alias("nunique_d"),
@@ -130,10 +110,10 @@ def test_integral_distinct_bitmap_property(spark, rows):
         F.count(F.lit(1)).alias("n_rows"),
     )
     key = lambda r: (r["k"] is not None, r["k"])
-    expected = sorted(ref.collect(), key=key)
-    for fn in (group_agg_split_distinct, group_agg_bitmap_fused):
-        out = fn(df, keys=["k"], distinct_col="d", avg=["m"], count_alias="n_rows")
-        assert sorted(out.collect(), key=key) == expected, fn.__name__
+    out = group_agg_bitmap_fused(
+        df, keys=["k"], distinct_col="d", avg=["m"], count_alias="n_rows"
+    )
+    assert sorted(out.collect(), key=key) == sorted(ref.collect(), key=key)
 
 
 _dedup_rows = st.lists(

@@ -13,6 +13,9 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from cincinnati_police_calls_for_service_etl_using_python_dask_spark.schemas import (
+    TESTDATA_SCHEMAS,
+)
 from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.docsink import (
     JsonLinesClient,
     full_refresh_write,
@@ -25,15 +28,26 @@ from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.res
     SocrataSource,
 )
 from cincinnati_police_calls_for_service_etl_using_python_dask_spark.streaming.ingest import (
-    read_event_stream,
-    run_available_now,
     watermark_dedup,
-    windowed_counts,
 )
 
 from .conftest import SF_SMOKE
 
 EVENTS_PARQUET = os.path.join(SF_SMOKE, "events.parquet")
+
+
+def run_available_now(result, checkpoint: str, out_path: str) -> None:
+    """Drain everything currently available (Trigger.AvailableNow),
+    append it to a parquet sink, stop."""
+    q = (
+        result.writeStream.trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+        .format("parquet")
+        .option("path", out_path)
+        .start()
+    )
+    q.awaitTermination()
 
 
 @pytest.fixture(scope="module")
@@ -217,36 +231,6 @@ def test_http_transport_http_error_status_retries_then_raises():
     assert len(fake.calls) == 3  # initial + 2 retries, then surfaced
 
 
-def test_json_and_orc_roundtrip_with_schema(spark, tmp_path):
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.files import (
-        read_json_with_schema,
-        read_orc,
-        write_json,
-        write_orc,
-    )
-
-    src = (
-        read_testdata(spark, SF_SMOKE, "orders")
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-        .limit(500)
-    )
-    want = sorted(map(tuple, src.collect()))
-
-    jpath = str(tmp_path / "orders_json")
-    write_json(src, jpath)
-    back_j = read_json_with_schema(spark, jpath, src.schema)
-    assert back_j.schema == src.schema
-    assert sorted(map(tuple, back_j.collect())) == want
-
-    opath = str(tmp_path / "orders_orc")
-    write_orc(src, opath)
-    back_o = read_orc(spark, opath)
-    assert sorted(map(tuple, back_o.collect())) == want
-    # ORC pushes filters to the scan like parquet
-    plan = back_o.filter(F.col("o_orderkey") > 100)._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [IsNotNull(o_orderkey), GreaterThan(o_orderkey,100)]" in plan
-
-
 def test_document_sink_distributed_write_and_refresh(spark, tmp_path):
     root = str(tmp_path / "docstore")
     df = read_testdata(spark, SF_SMOKE, "events").select("event_id", "event_type").limit(100)
@@ -413,6 +397,39 @@ def test_write_documents_mid_batch_crash_retry_exactly_once(spark, tmp_path):
     assert os.path.exists(os.path.join(root, "crashed-once"))
 
 
+class _AckLostClient(JsonLinesClient):
+    """Document store whose first insert_many per client (one client
+    per partition) writes the whole batch, then loses the
+    acknowledgement — the sink retries a batch that already landed."""
+
+    def __init__(self, root):
+        super().__init__(root)
+        self.acked_once = False
+
+    def insert_many(self, collection: str, docs: list[dict]) -> int:
+        n = super().insert_many(collection, docs)
+        if not self.acked_once:
+            self.acked_once = True
+            raise ConnectionError("acknowledgement lost")
+        return n
+
+
+def test_json_lines_client_retry_after_lost_ack_keeps_one_copy(spark, tmp_path):
+    # The retried batch carries the same content-derived _ids, so it
+    # lands in the same file: exactly one copy of each document.
+    root = str(tmp_path / "ackstore")
+    df = (
+        read_testdata(spark, SF_SMOKE, "events")
+        .select("event_id", "event_type")
+        .limit(40)
+        .repartition(2)
+    )
+    write_documents(df, "calls", lambda: _AckLostClient(root), retry_sleep_s=0)
+    docs = JsonLinesClient(root).read_all("calls")
+    assert len(docs) == 40
+    assert len({d["_id"] for d in docs}) == 40
+
+
 def test_mongo_adapter_mid_batch_dup_and_transient_mix():
     # pymongo surface: first call inserts a prefix then raises a
     # TRANSIENT error; the sink-level retry re-sends everything and the
@@ -458,237 +475,6 @@ def test_mongo_adapter_mid_batch_dup_and_transient_mix():
         adapter.insert_many("poison", docs)
 
 
-def test_streaming_windowed_counts_available_now(spark, tmp_path):
-    # Batch-parity check: the streaming windowed agg over a static dir
-    # must equal the same agg computed in batch.
-    src = str(tmp_path / "stream_src")
-    events = read_testdata(spark, SF_SMOKE, "events")
-    # µs timestamps (streaming schema uses TimestampType)
-    events.withColumn("ts", F.col("ts").cast("timestamp")).write.parquet(src)
-
-    stream = read_event_stream(spark, src)
-    result = windowed_counts(stream, window="6 hours", watermark="0 seconds", group_cols=["event_type"])
-    out = str(tmp_path / "stream_out")
-    ckpt = str(tmp_path / "ckpt")
-    run_available_now(result, ckpt, out)
-
-    got = spark.read.parquet(out)
-    # Append mode emits a window only once the watermark passes its end:
-    # the final partial window stays in state. Batch parity therefore
-    # covers windows with end <= max event time.
-    max_ts = events.agg(F.max(F.col("ts").cast("timestamp"))).first()[0]
-    batch = (
-        events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .groupBy(F.window("ts", "6 hours"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.avg("value"), 4).alias("avg_value"))
-        .filter(F.col("window.end") <= F.lit(max_ts))
-    )
-    assert got.count() == batch.count()
-    assert (
-        got.agg(F.sum("n_events")).first()[0]
-        == batch.agg(F.sum("n_events")).first()[0]
-    )
-
-
-def test_stateful_running_counts_across_microbatches(spark, tmp_path):
-    """applyInPandasWithState keeps per-key state across micro-batches:
-    with one file per trigger, the final emission per user equals the
-    batch groupBy count, and multi-batch users show n_batches > 1."""
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.streaming.stateful import (
-        running_user_counts,
-    )
-
-    src = str(tmp_path / "stateful_src")
-    events = read_testdata(spark, SF_SMOKE, "events").select("user_id", "event_id")
-    # three files => three micro-batches under maxFilesPerTrigger=1
-    events.repartition(3).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    result = running_user_counts(stream)
-    out = str(tmp_path / "stateful_out")
-    ckpt = str(tmp_path / "stateful_ckpt")
-    run_available_now(result, ckpt, out)
-
-    got = spark.read.parquet(out)
-    # per user: the LAST emission (max n_batches) carries the full count
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_batches"))
-    final = (
-        got.withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .select("user_id", "n_events")
-    )
-    want = events.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-    assert final.join(want, "user_id").filter(
-        final["n_events"] != want["n_events"]
-    ).count() == 0
-    assert final.count() == want.count()
-    # state actually crossed batches for at least one key
-    assert got.agg(F.max("n_batches")).first()[0] >= 2
-
-
-def test_stateful_running_stats_across_microbatches(spark, tmp_path):
-    """running_user_stats (NoTimeout drain): per-batch updated
-    (count, sum) rows; state accumulates across micro-batches and the
-    largest emission per user equals the batch aggregate."""
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.streaming.stateful import (
-        running_user_stats,
-    )
-
-    src = str(tmp_path / "stats_src")
-    events = read_testdata(spark, SF_SMOKE, "events").select("user_id", "value")
-    events.repartition(2).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    result = running_user_stats(stream, idle_timeout_ms=None)
-    ckpt = str(tmp_path / "stats_ckpt")
-    # update-mode output needs an update-capable sink (parquet is
-    # append-only): drain to a memory table.
-    q = (
-        result.writeStream.trigger(availableNow=True)
-        .outputMode("update")
-        .format("memory")
-        .queryName("stats_mem")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("stats_mem")
-    # the largest non-finalized emission per user carries the full totals
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    final = (
-        got.filter(~F.col("finalized"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .select("user_id", "n_events", "total_value")
-    )
-    want = events.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value")
-    )
-    joined = final.alias("a").join(want.alias("b"), "user_id")
-    assert joined.filter(F.col("a.n_events") != F.col("b.n_events")).count() == 0
-    assert (
-        joined.filter(
-            F.abs(F.col("a.total_value") - F.col("b.total_value")) > 1e-6
-        ).count()
-        == 0
-    )
-    assert final.count() == want.count()
-
-
-def test_stateful_timeout_branch_finalizes_and_evicts():
-    """The ProcessingTimeTimeout transition, driven deterministically
-    against a stub GroupState (a live timeout under AvailableNow keeps
-    scheduling batches — see streaming/stateful.py)."""
-    import pandas as pd
-
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.streaming.stateful import (
-        make_stats_update,
-    )
-
-    class StubState:
-        def __init__(self, value=None, timed_out=False):
-            self._v = value
-            self.hasTimedOut = timed_out
-            self.removed = False
-            self.timeout_set = None
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-        def remove(self):
-            self.removed = True
-            self._v = None
-
-        def setTimeoutDuration(self, ms):
-            self.timeout_set = ms
-
-    update = make_stats_update(idle_timeout_ms=5000)
-
-    # batch 1: fresh key accumulates and arms the timeout
-    st = StubState()
-    [out1] = list(update((7,), iter([pd.DataFrame({"value": [1.5, 2.5]})]), st))
-    assert out1.iloc[0].to_dict() == {
-        "user_id": 7, "n_events": 2, "total_value": 4.0, "finalized": False,
-    }
-    assert st.get == (2, 4.0) and st.timeout_set == 5000 and not st.removed
-
-    # batch 2: same key, more rows — state carries forward
-    [out2] = list(update((7,), iter([pd.DataFrame({"value": [6.0]})]), st))
-    assert out2.iloc[0]["n_events"] == 3 and out2.iloc[0]["total_value"] == 10.0
-
-    # timeout fires: finalized row emitted, state evicted
-    st.hasTimedOut = True
-    [fin] = list(update((7,), iter([]), st))
-    assert bool(fin.iloc[0]["finalized"]) is True
-    assert fin.iloc[0]["n_events"] == 3 and fin.iloc[0]["total_value"] == 10.0
-    assert st.removed
-
-
-def test_stream_stream_interval_join_batch_parity(spark, tmp_path):
-    """Two watermarked parquet streams joined within a 30-min bound must
-    produce exactly the rows the identical batch join produces."""
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.streaming.joins import (
-        interval_join,
-    )
-
-    events = read_testdata(spark, SF_SMOKE, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts")
-    )
-    clicks = events.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"), F.col("event_id").alias("c_id"),
-        F.col("ts").alias("c_ts"),
-    )
-    p_src, c_src = str(tmp_path / "p"), str(tmp_path / "c")
-    purchases.write.parquet(p_src)
-    clicks.write.parquet(c_src)
-
-    p_stream = spark.readStream.schema(purchases.schema).parquet(p_src)
-    c_stream = (
-        spark.readStream.schema(clicks.schema)
-        .parquet(c_src)
-        .withColumnRenamed("c_user", "user_id")
-    )
-    joined = interval_join(
-        p_stream, c_stream, on="user_id", left_ts="p_ts", right_ts="c_ts",
-        max_lag_minutes=30.0,
-    ).select("user_id", "p_id", "c_id")
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    run_available_now(joined, ckpt, out)
-    got = {tuple(r) for r in spark.read.parquet(out).collect()}
-
-    want = {
-        tuple(r)
-        for r in interval_join(
-            purchases, clicks.withColumnRenamed("c_user", "user_id"),
-            on="user_id", left_ts="p_ts", right_ts="c_ts", max_lag_minutes=30.0,
-        ).select("user_id", "p_id", "c_id").collect()
-    }
-    assert got == want and len(want) > 0
-
-
 def test_streaming_watermark_dedup(spark, tmp_path):
     src = str(tmp_path / "dedup_src")
     events = read_testdata(spark, SF_SMOKE, "events").limit(200)
@@ -696,7 +482,7 @@ def test_streaming_watermark_dedup(spark, tmp_path):
     dup = events.unionAll(events)
     dup.withColumn("ts", F.col("ts").cast("timestamp")).write.parquet(src)
 
-    stream = read_event_stream(spark, src)
+    stream = spark.readStream.schema(TESTDATA_SCHEMAS["events"]).parquet(src)
     deduped = watermark_dedup(stream, keys=["event_id"], watermark="1 hour")
     out = str(tmp_path / "dedup_out")
     ckpt = str(tmp_path / "dedup_ckpt")
@@ -1941,36 +1727,6 @@ def test_cadence_table_maintenance_compacts_expires_vacuums(spark, tmp_path):
     assert sorted(map(tuple, t.read().collect())) == sorted(
         rows_before + [(i, i) for i in range(13, 21)]
     )
-
-
-def test_read_evolving_parquet_merges_and_prunes(spark, tmp_path):
-    """Schema evolution: batch 1 lacks a column batch 2 adds; the
-    merged read unions the schema, NULL-fills the old batch, and still
-    pushes projection+filter down to each file's scan."""
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.files import (
-        read_evolving_parquet,
-    )
-
-    p1, p2 = str(tmp_path / "b1"), str(tmp_path / "b2")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id long, name string"
-    ).write.parquet(p1)
-    spark.createDataFrame(
-        [(3, "c", 30.0), (4, "d", 40.0)], "id long, name string, score double"
-    ).write.parquet(p2)
-
-    df = read_evolving_parquet(spark, p1, p2)
-    assert set(df.columns) == {"id", "name", "score"}
-    rows = {r["id"]: (r["name"], r["score"]) for r in df.collect()}
-    assert rows == {1: ("a", None), 2: ("b", None), 3: ("c", 30.0), 4: ("d", 40.0)}
-
-    # pruning still reaches the per-file scan under the merged schema
-    plan = df.filter(F.col("id") > 2).select("id", "score")._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "PushedFilters: [IsNotNull(id), GreaterThan(id,2)]" in plan
-    rs = plan.split("ReadSchema", 1)[1][:200]
-    assert "name" not in rs  # projection pruned at the scan
 
 
 class _FileBackedCollection:
