@@ -91,10 +91,11 @@ def month_windows(
     the requested range, +1-day shift so consecutive windows don't
     overlap.
 
-    Runs at plan-build time on the driver (as in the reference); each
-    window becomes one source partition for the REST source
-    (sources/rest.py) so fetches run in parallel on executors — fixing
-    the reference's sequential-HTTP bottleneck (SURVEY.md §3.1).
+    Runs at plan-build time on the driver (as in the reference). The
+    REST source (sources/rest.py) packs the windows into one contiguous
+    run per core, each run one source partition, so fetches run in
+    parallel on executors — fixing the reference's sequential-HTTP
+    bottleneck (SURVEY.md §3.1).
     """
     if end < start:
         raise ValueError("end before start")

@@ -4,16 +4,19 @@ The reference's Mongo load was the single biggest scalability bug in
 the pipeline: ``data.map_partitions(convert_to_dict).compute()``
 (app.py:690) executes the whole upstream graph and collects EVERY
 record into driver memory before ``insert_many`` — at 100 TB that's a
-dead driver. Here the write runs on EXECUTORS via ``foreachPartition``:
-each task converts its partition to documents and bulk-inserts them,
-with the reference's retry policy (≤6 attempts, sleep between tries;
-app.py:708-740) applied per partition instead of per job.
+dead driver. Here the write runs on EXECUTORS via ``foreachPartition``,
+spread over at least ``defaultParallelism`` tasks: each task converts
+its partition to documents and bulk-inserts them, with the reference's
+retry policy (≤6 attempts, sleep between tries; app.py:708-740) applied
+per partition instead of per job.
 
 The client is pluggable (S10): ``pymongo`` if importable, else any
-callable returning an object with ``insert_many``. Tests use
-:class:`JsonLinesClient`, a filesystem-backed fake with the same
-surface. Full-refresh semantics (S8's drop_collections + reload,
-app.py:957-968) become :func:`full_refresh_write`.
+callable returning an object with ``insert_many``, ``drop_collection``
+and ``rename_collection``. Tests use :class:`JsonLinesClient`, a
+filesystem-backed fake with the same surface. Full-refresh semantics
+(S8's drop_collections + reload, app.py:957-968) become
+:func:`full_refresh_write`, which loads a staging collection and swaps
+it in only after every partition has landed.
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 import time
 import uuid
 from collections.abc import Callable
@@ -56,10 +60,22 @@ class JsonLinesClient:
         return len(docs)
 
     def drop_collection(self, collection: str) -> None:
-        cdir = os.path.join(self.root, collection)
-        if os.path.isdir(cdir):
-            for name in os.listdir(cdir):
-                os.unlink(os.path.join(cdir, name))
+        shutil.rmtree(os.path.join(self.root, collection), ignore_errors=True)
+
+    def rename_collection(self, source: str, target: str) -> None:
+        """Swap ``source`` in as ``target`` by directory ``os.replace``.
+        ``rename(2)`` cannot replace a non-empty directory, so the old
+        target is first renamed aside: for that instant a reader finds
+        no ``target``, never a partial one. A missing ``source`` is an
+        empty collection."""
+        src = os.path.join(self.root, source)
+        dst = os.path.join(self.root, target)
+        os.makedirs(src, exist_ok=True)
+        old = f"{dst}.old-{uuid.uuid4().hex}"
+        if os.path.isdir(dst):
+            os.replace(dst, old)
+        os.replace(src, dst)
+        shutil.rmtree(old, ignore_errors=True)
 
     def read_all(self, collection: str) -> list[dict]:
         cdir = os.path.join(self.root, collection)
@@ -73,7 +89,8 @@ class JsonLinesClient:
 
 class MongoDatabaseAdapter:
     """Adapts a pymongo ``Database`` to the sink's client surface:
-    ``insert_many(collection, docs)`` / ``drop_collection(name)``.
+    ``insert_many(collection, docs)`` / ``drop_collection(name)`` /
+    ``rename_collection(source, target)``.
 
     A raw ``Database`` must NOT be handed to the sink — attribute access
     on pymongo Databases creates Collections, so ``db.insert_many(...)``
@@ -89,6 +106,7 @@ class MongoDatabaseAdapter:
     """
 
     _DUP_KEY = 11000
+    _NS_NOT_FOUND = 26
 
     def __init__(self, db):
         self._db = db
@@ -108,6 +126,17 @@ class MongoDatabaseAdapter:
 
     def drop_collection(self, collection: str) -> None:
         self._db.drop_collection(collection)
+
+    def rename_collection(self, source: str, target: str) -> None:
+        """One server-side ``renameCollection`` with ``dropTarget``. A
+        missing ``source`` (code 26: nothing was inserted) is an empty
+        collection, so the target is dropped."""
+        try:
+            self._db[source].rename(target, dropTarget=True)
+        except Exception as exc:
+            if getattr(exc, "code", None) != self._NS_NOT_FOUND:
+                raise
+            self._db.drop_collection(target)
 
 
 def pymongo_client_factory(uri: str, db: str) -> "Callable[[], object] | None":
@@ -142,9 +171,12 @@ def write_documents(
     retry_sleep_s: float = DEFAULT_RETRY_SLEEP_S,
     deterministic_ids: bool = True,
 ) -> None:
-    """Distributed document write: per-partition toJSON conversion +
+    """Distributed document write: per-partition dict conversion +
     bulk insert with bounded retry. No driver materialization —
-    contrast app.py:690's ``.compute()``.
+    contrast app.py:690's ``.compute()``. An input with fewer
+    partitions than ``defaultParallelism`` (a small aggregate read back
+    from one parquet file) is first spread round-robin over that many,
+    so one Python task does not write every document.
 
     Delivery semantics: the retry loop re-sends the WHOLE partition
     batch after any failure, and Spark may re-execute a task that
@@ -162,10 +194,12 @@ def write_documents(
     duplicate rows must be preserved, include a distinguishing column
     (event id, offset) before writing.
     """
-    columns = df.columns
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < parallelism:
+        df = df.repartition(parallelism)
 
     def handle_partition(rows) -> None:
-        docs = [dict(zip(columns, (row[c] for c in columns))) for row in rows]
+        docs = [row.asDict() for row in rows]
         if not docs:
             return
         if deterministic_ids:
@@ -192,7 +226,21 @@ def full_refresh_write(
     client_factory: Callable[[], JsonLinesClient],
     **kwargs,
 ) -> None:
-    """S8 + S5: idempotent full refresh — drop then reload
-    (drop_collections + db_insert, app.py:957-968)."""
-    client_factory().drop_collection(collection)
-    write_documents(df, collection, client_factory, **kwargs)
+    """S8 + S5: idempotent, atomic full refresh (drop_collections +
+    db_insert, app.py:957-968).
+
+    The load goes to ``<collection>__staging``; only after every
+    partition has landed is it renamed over ``collection``
+    (``rename_collection``). Readers see the previous documents until
+    the swap, never a partial load. A failed load drops the staging
+    collection and re-raises, leaving the previous collection as it
+    was."""
+    staging = f"{collection}__staging"
+    client = client_factory()
+    client.drop_collection(staging)  # left over from a killed run
+    try:
+        write_documents(df, staging, client_factory, **kwargs)
+        client.rename_collection(staging, collection)
+    except BaseException:
+        client.drop_collection(staging)
+        raise

@@ -7,16 +7,22 @@ hand-compiled into the query string (``$where=create_time_incident
 between …``, app.py:133-134). This source keeps both ideas but makes
 them Spark-native:
 
-- each monthly window is one ``InputPartition`` → EXECUTORS fetch all
-  windows in parallel (the reference's biggest ingest bottleneck gone);
+- the monthly windows are packed into ``session._DEFAULT_CPUS``
+  contiguous, in-order runs, and each run is one ``InputPartition`` →
+  EXECUTORS fetch the windows in parallel (the reference's biggest
+  ingest bottleneck gone). A Python task costs a fixed ~0.3 CPU-s
+  before it reads a row, so one task per core beats one per window;
 - ``pushFilters`` accepts time-range predicates against the timestamp
   column and narrows the enumerated windows before any fetch — real
-  source-side predicate pushdown, visible to Catalyst.
+  source-side predicate pushdown, visible to Catalyst;
+- ``read`` yields ``pyarrow.RecordBatch``es cast to the declared
+  schema, never per-value Python tuples.
 
 Transport is pluggable: ``mode=http`` uses ``requests`` (gated behind
-an import-try; not exercised in tests — no network here), ``mode=
-fixture`` reads the same row-shape from a parquet file per window via
-pyarrow, which is how tests drive the source deterministically.
+an import-try; tests inject a fake transport), one query per window
+with its own paging. ``mode=fixture`` reads the same row shape from a
+parquet file via pyarrow, one scan per run, which is how tests and
+the benchmark drive the source deterministically.
 
 Register + use::
 
@@ -46,6 +52,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql import types as T
 
+from .. import session
 from ..functions.temporal import month_windows
 
 DEFAULT_SCHEMA = T.StructType(
@@ -60,14 +67,29 @@ DEFAULT_SCHEMA = T.StructType(
 )
 
 
-class _WindowPartition(InputPartition):
-    def __init__(self, start: str, end: str):
-        self.start = start
-        self.end = end
+class _WindowRun(InputPartition):
+    """A contiguous, in-order run of day-closed ``(start, end)`` windows
+    (ISO dates): one Python task. An empty run reads nothing."""
+
+    def __init__(self, windows: list[tuple[str, str]]):
+        self.windows = windows
 
 
 def _parse_date(s: str) -> dt.date:
     return dt.datetime.strptime(s[:10], "%Y-%m-%d").date()
+
+
+def _pack_windows(windows: list, runs: int) -> list[list]:
+    """Split ``windows`` into ``min(len(windows), runs)`` contiguous,
+    in-order runs whose lengths differ by at most one."""
+    n = min(len(windows), runs)
+    size, extra = divmod(len(windows), n)
+    out, i = [], 0
+    for k in range(n):
+        j = i + size + (k < extra)
+        out.append(windows[i:j])
+        i = j
+    return out
 
 
 class SocrataReader(DataSourceReader):
@@ -114,56 +136,65 @@ class SocrataReader(DataSourceReader):
             return None
         return None
 
-    # -- partition planning (one window = one partition) ---------------
+    # -- partition planning (one run of windows per core) ---------------
     def partitions(self):
         if self.end < self.start:
-            return [_WindowPartition("1970-01-01", "1969-12-31")]  # empty range
-        return [
-            _WindowPartition(s.isoformat(), e.isoformat())
+            return [_WindowRun([])]  # empty range
+        windows = [
+            (s.isoformat(), e.isoformat())
             for s, e in month_windows(self.start, self.end)
+        ]
+        return [
+            _WindowRun(run)
+            for run in _pack_windows(windows, session._DEFAULT_CPUS)
         ]
 
     # -- per-partition fetch (runs on executors) ------------------------
-    def read(self, partition: _WindowPartition):
-        if partition.end < partition.start:
-            return iter(())
+    def read(self, partition: _WindowRun):
+        if not partition.windows:
+            return
         if self.mode == "fixture":
-            yield from self._read_fixture(partition)
+            yield from self._read_fixture(
+                partition.windows[0][0], partition.windows[-1][1]
+            )
         else:
-            yield from self._read_http(partition)
+            for start, end in partition.windows:
+                yield from self._read_http(start, end)
 
-    def _read_fixture(self, partition: _WindowPartition):
-        """Deterministic test transport: parquet rows filtered to the
-        window — same row shape the HTTP path would produce."""
-        import pyarrow.dataset as ds
-        import pyarrow.compute as pc
+    def _arrow_schema(self):
+        from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
 
-        path = self.options["fixture_path"]
-        dataset = ds.dataset(path)
-        lo = dt.datetime.fromisoformat(partition.start)
-        hi = dt.datetime.fromisoformat(partition.end) + dt.timedelta(days=1)
+        return to_arrow_schema(self.schema)
+
+    def _read_fixture(self, start: str, end: str):
+        """Deterministic test transport: one parquet scan over the run's
+        ``[start, end + 1 day)``, the same row shape the HTTP path
+        produces. ``ts_column`` is floored to µs and formatted as
+        ``%Y-%m-%dT%H:%M:%S.%f`` (Arrow's ``%S`` prints the µs
+        fraction); every column is then cast to the declared schema, so
+        a mis-typed fixture column fails here, not inside Spark."""
+        import pyarrow as pa  # noqa: PLC0415
+        import pyarrow.compute as pc  # noqa: PLC0415
+        import pyarrow.dataset as ds  # noqa: PLC0415
+
+        lo = dt.datetime.fromisoformat(start)
+        hi = dt.datetime.fromisoformat(end) + dt.timedelta(days=1)
         col = self.ts_column
-        tbl = dataset.to_table(
-            filter=(pc.field(col) >= lo) & (pc.field(col) < hi)
+        schema = self._arrow_schema()
+        tbl = ds.dataset(self.options["fixture_path"]).to_table(
+            columns=schema.names,
+            filter=(pc.field(col) >= lo) & (pc.field(col) < hi),
         )
-        names = [f.name for f in self.schema.fields]
-        for batch in tbl.to_batches():
-            cols = {}
-            for n in names:
-                c = batch.column(n)
-                if n == col:
-                    cols[n] = [
-                        v.as_py().strftime("%Y-%m-%dT%H:%M:%S.%f") if v.is_valid else None
-                        for v in c
-                    ]
-                else:
-                    cols[n] = [v.as_py() for v in c]
-            for i in range(batch.num_rows):
-                yield tuple(cols[n][i] for n in names)
+        i = tbl.schema.get_field_index(col)
+        if i >= 0:
+            ts = tbl.column(i)
+            us = pc.floor_temporal(ts, unit="microsecond").cast(
+                pa.timestamp("us", tz=ts.type.tz)
+            )
+            tbl = tbl.set_column(i, col, pc.strftime(us, "%Y-%m-%dT%H:%M:%S"))
+        yield from tbl.cast(schema).to_batches()
 
-    def _window_query(
-        self, partition: _WindowPartition, limit: int, offset: int
-    ) -> str:
+    def _window_query(self, start: str, end: str, limit: int, offset: int) -> str:
         """Compile the window + page into the source query string.
 
         The upper bound is ``ts < end + 1 day`` — NOT ``ts <= end``:
@@ -176,10 +207,10 @@ class SocrataReader(DataSourceReader):
         Paging orders by the id column so ``$offset`` is stable across
         pages (Socrata result order is undefined without ``$order``).
         """
-        hi = (_parse_date(partition.end) + dt.timedelta(days=1)).isoformat()
+        hi = (_parse_date(end) + dt.timedelta(days=1)).isoformat()
         order_col = self.options.get("order_column", self.schema.fields[0].name)
         return (
-            f"$where={self.ts_column}>='{partition.start}' "
+            f"$where={self.ts_column}>='{start}' "
             f"AND {self.ts_column}<'{hi}'"
             f"&$order={order_col}&$limit={limit}&$offset={offset}"
         )
@@ -198,12 +229,13 @@ class SocrataReader(DataSourceReader):
             ) from exc
         return requests
 
-    def _read_http(self, partition: _WindowPartition):
-        """Live transport — the reference's GET with the window compiled
-        into $where (app.py:133-134, 168-186), now per-executor, with
-        real paging and bounded retry (the reference's single giant
-        ``$limit=10^12`` GET dies on any transient fault and on any
-        response-size cap).
+    def _read_http(self, start: str, end: str):
+        """Live transport for one window — the reference's GET with the
+        window compiled into $where (app.py:133-134, 168-186), now
+        per-executor, with real paging and bounded retry (the
+        reference's single giant ``$limit=10^12`` GET dies on any
+        transient fault and on any response-size cap). Each page is one
+        ``RecordBatch`` in the declared schema.
 
         Delivery: a page is yielded only after its fetch fully
         succeeds, so an in-page retry never double-yields. A Spark task
@@ -213,15 +245,17 @@ class SocrataReader(DataSourceReader):
         """
         import time as _time  # noqa: PLC0415
 
+        import pyarrow as pa  # noqa: PLC0415
+
         requests = self._requests()
         url = self.options["url"]
         page_size = int(self.options.get("page_size", 50_000))
         max_retries = int(self.options.get("max_retries", 5))
         backoff_s = float(self.options.get("retry_backoff_s", 1.0))
-        names = [f.name for f in self.schema.fields]
+        schema = self._arrow_schema()
         offset = 0
         while True:
-            query = self._window_query(partition, limit=page_size, offset=offset)
+            query = self._window_query(start, end, limit=page_size, offset=offset)
             for attempt in range(max_retries + 1):
                 try:
                     resp = requests.get(url, params=query, timeout=120)
@@ -232,8 +266,7 @@ class SocrataReader(DataSourceReader):
                     if attempt == max_retries:
                         raise
                     _time.sleep(backoff_s * (2**attempt))
-            for rec in recs:
-                yield tuple(rec.get(n) for n in names)
+            yield pa.RecordBatch.from_pylist(recs, schema=schema)
             if len(recs) < page_size:
                 return
             offset += page_size

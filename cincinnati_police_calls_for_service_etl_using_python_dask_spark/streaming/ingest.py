@@ -8,7 +8,7 @@ The reference simulated a stream with a daily full re-fetch + re-dedup
 |--------------------------------------|-------------------------------------|
 | daily re-run over full history       | ``Trigger.AvailableNow`` micro-batch|
 | monthly event-time chunks            | tumbling ``F.window`` aggregation   |
-| re-fetch + dedup of late/dup records | ``withWatermark`` + dropDuplicates  |
+| re-fetch + dedup of late/dup records | ``dropDuplicatesWithinWatermark``   |
 | full-refresh sink                    | ``outputMode(complete)`` / overwrite|
 
 State-store discipline: ``dropDuplicates`` without a watermark grows
@@ -19,18 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def watermark_dedup(
-    stream: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming dedup of late/duplicate records — the streaming form of
-    the reference's re-fetch-then-dedup (app.py:463-480). State for a
-    key is dropped once the watermark passes it."""
-    return stream.withWatermark(ts_col, watermark).dropDuplicates(keys)
 
 
 def batch_equivalent_daily_counts(

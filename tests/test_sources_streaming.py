@@ -9,26 +9,28 @@ import glob
 import json
 import os
 import re
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
-from cincinnati_police_calls_for_service_etl_using_python_dask_spark.schemas import (
-    TESTDATA_SCHEMAS,
-)
+from cincinnati_police_calls_for_service_etl_using_python_dask_spark import session
 from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.docsink import (
     JsonLinesClient,
+    MongoDatabaseAdapter,
     full_refresh_write,
     write_documents,
 )
 from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.files import (
     read_testdata,
 )
-from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.rest import (
-    SocrataSource,
+from cincinnati_police_calls_for_service_etl_using_python_dask_spark.functions.temporal import (
+    month_windows,
 )
-from cincinnati_police_calls_for_service_etl_using_python_dask_spark.streaming.ingest import (
-    watermark_dedup,
+from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.rest import (
+    DEFAULT_SCHEMA,
+    SocrataReader,
+    SocrataSource,
 )
 
 from .conftest import SF_SMOKE
@@ -75,8 +77,137 @@ def test_rest_source_fetches_all_windows(registered, spark):
     df = _load(spark)
     n_expected = read_testdata(spark, SF_SMOKE, "events").count()
     assert df.count() == n_expected
-    # one partition per monthly window (Jan..Dec 2024)
-    assert df.rdd.getNumPartitions() == 12
+    # the 12 monthly windows (Jan..Dec 2024) packed one run per core
+    assert df.rdd.getNumPartitions() == min(12, session._DEFAULT_CPUS)
+
+
+def _month_end(year: int, month: int) -> dt.date:
+    nxt = dt.date(year + month // 12, month % 12 + 1, 1)
+    return nxt - dt.timedelta(days=1)
+
+
+def test_rest_source_packs_windows_into_one_run_per_core(monkeypatch):
+    for n_windows in range(1, 41):
+        year, month = 2020 + (n_windows - 1) // 12, (n_windows - 1) % 12 + 1
+        opts = {"mode": "fixture", "start": "2020-01-15",
+                "end": _month_end(year, month).isoformat()}
+        windows = [
+            (s.isoformat(), e.isoformat())
+            for s, e in month_windows(dt.date(2020, 1, 15), _month_end(year, month))
+        ]
+        assert len(windows) == n_windows
+        for cores in range(1, 9):
+            monkeypatch.setattr(session, "_DEFAULT_CPUS", cores)
+            runs = [p.windows for p in SocrataReader(DEFAULT_SCHEMA, opts).partitions()]
+            assert len(runs) == min(n_windows, cores)
+            assert all(runs)
+            # contiguous and in order: concatenated, they are the windows
+            assert [w for run in runs for w in run] == windows
+            assert max(map(len, runs)) - min(map(len, runs)) <= 1
+
+
+def test_rest_source_empty_range_plans_one_empty_partition():
+    reader = SocrataReader(
+        DEFAULT_SCHEMA, {"mode": "fixture", "start": "2024-02-01", "end": "2024-01-31"}
+    )
+    parts = reader.partitions()
+    assert [p.windows for p in parts] == [[]]
+    assert list(reader.read(parts[0])) == []
+
+
+def _fixture_reader(path):
+    return SocrataReader(
+        DEFAULT_SCHEMA,
+        {"mode": "fixture", "fixture_path": path, "ts_column": "ts",
+         "start": "2024-01-01", "end": "2024-12-31"},
+    )
+
+
+def _read_all(reader):
+    import pyarrow as pa
+
+    batches = [b for p in reader.partitions() for b in reader.read(p)]
+    assert all(isinstance(b, pa.RecordBatch) for b in batches)
+    return pa.Table.from_batches(batches, schema=reader._arrow_schema())
+
+
+def test_rest_fixture_ts_strings_match_datetime_strftime(tmp_path):
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    stamps = [
+        "2024-01-02T03:04:05",  # whole second
+        "2024-03-31T23:59:59.999999",
+        "2024-06-30T12:00:00.123456789",  # ns precision, truncated to µs
+        "NaT",
+    ]
+    rows = {
+        "event_id": pa.array(range(4), pa.int64()),
+        "user_id": pa.array([1, 2, 3, 4], pa.int64()),
+        "event_type": pa.array(["a", "b", "c", "d"]),
+        "value": pa.array([0.5, 1.5, 2.5, 3.5]),
+        "props": pa.array(["{}"] * 4),
+    }
+    ns = np.array(stamps, dtype="datetime64[ns]")
+    for unit in ("us", "ns"):
+        path = str(tmp_path / f"ts_{unit}.parquet")
+        ts = pa.array(ns, mask=np.isnat(ns))
+        if unit == "us":
+            ts = ts.cast(pa.timestamp("us"), safe=False)
+        pq.write_table(pa.table({**rows, "ts": ts}), path)
+        src = pq.read_table(path).column("ts")
+        assert str(src.type) == f"timestamp[{unit}]"
+        # the old per-value spelling over the rows the window holds
+        want = sorted(
+            v.as_py().strftime("%Y-%m-%dT%H:%M:%S.%f")
+            for v in src if v.is_valid
+        )
+        got = _read_all(_fixture_reader(path)).column("ts").to_pylist()
+        # a NULL ts falls in no window: the old path dropped it too
+        assert sorted(got) == want and len(got) == 3
+        assert "2024-01-02T03:04:05.000000" in got
+        assert "2024-06-30T12:00:00.123456" in got
+
+
+def test_rest_fixture_null_cells_and_declared_types(tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "nulls.parquet")
+    pq.write_table(pa.table({
+        "event_id": pa.array([1, 2], pa.int32()),  # widened to LongType
+        "ts": pa.array([dt.datetime(2024, 5, 1, 1, 2, 3), dt.datetime(2024, 5, 2)]),
+        "user_id": pa.array([None, 7], pa.int64()),
+        "event_type": pa.array([None, "x"]),
+        "value": pa.array([None, 2.0]),
+        "props": pa.array(["{}", None]),
+    }), path)
+    tbl = _read_all(_fixture_reader(path))
+    assert tbl.schema == _fixture_reader(path)._arrow_schema()
+    assert tbl.sort_by("event_id").to_pylist() == [
+        {"event_id": 1, "ts": "2024-05-01T01:02:03.000000", "user_id": None,
+         "event_type": None, "value": None, "props": "{}"},
+        {"event_id": 2, "ts": "2024-05-02T00:00:00.000000", "user_id": 7,
+         "event_type": "x", "value": 2.0, "props": None},
+    ]
+
+
+def test_rest_fixture_mistyped_column_fails_at_the_cast(tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "mistyped.parquet")
+    pq.write_table(pa.table({
+        "event_id": pa.array(["12", "not-a-number"]),  # declared LongType
+        "ts": pa.array([dt.datetime(2024, 5, 1), dt.datetime(2024, 5, 2)]),
+        "user_id": pa.array([1, 2], pa.int64()),
+        "event_type": pa.array(["a", "b"]),
+        "value": pa.array([1.0, 2.0]),
+        "props": pa.array(["{}", "{}"]),
+    }), path)
+    with pytest.raises(pa.ArrowInvalid):
+        _read_all(_fixture_reader(path))
 
 
 def test_rest_source_rows_roundtrip(registered, spark):
@@ -113,16 +244,10 @@ def test_rest_source_filter_pushdown_narrows_windows(registered, spark):
 def test_http_window_query_half_open_upper_bound():
     # ts<'end+1day' (not ts<='end'): string-vs-timestamp compare on a
     # day-granularity bound would drop the last day's intraday rows.
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.rest import (
-        SocrataReader,
-        _WindowPartition,
-        DEFAULT_SCHEMA,
-    )
-
     reader = SocrataReader(DEFAULT_SCHEMA, {"ts_column": "ts", "mode": "http"})
     # unbounded by default: the reference fetches 2019 → now
     assert (reader.start, reader.end) == (dt.date(2019, 1, 1), dt.date.today())
-    q = reader._window_query(_WindowPartition("2024-01-01", "2024-01-31"), limit=1000, offset=0)
+    q = reader._window_query("2024-01-01", "2024-01-31", limit=1000, offset=0)
     assert "ts>='2024-01-01'" in q
     assert "ts<'2024-02-01'" in q
     assert "<=" not in q
@@ -162,11 +287,6 @@ class _ScriptedRequests:
 
 
 def _http_reader(fake, page_size=10, max_retries=3):
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.rest import (
-        DEFAULT_SCHEMA,
-        SocrataReader,
-    )
-
     reader = SocrataReader(
         DEFAULT_SCHEMA,
         {
@@ -190,14 +310,22 @@ def _records(n):
     ]
 
 
-def test_http_transport_pages_through_whole_window():
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.rest import (
-        _WindowPartition,
-    )
+def _http_rows(reader, start="2024-01-01", end="2024-01-31"):
+    """Rows of one window read over http, from its page batches."""
+    import pyarrow as pa
 
+    rows = []
+    for batch in reader._read_http(start, end):
+        assert isinstance(batch, pa.RecordBatch)
+        assert batch.schema == reader._arrow_schema()
+        rows.extend(tuple(r.values()) for r in batch.to_pylist())
+    return rows
+
+
+def test_http_transport_pages_through_whole_window():
     fake = _ScriptedRequests(_records(25))
     reader = _http_reader(fake, page_size=10)
-    rows = list(reader._read_http(_WindowPartition("2024-01-01", "2024-01-31")))
+    rows = _http_rows(reader)
     assert len(rows) == 25
     assert [r[0] for r in rows] == list(range(25))  # ordered, no dupes/gaps
     assert len(fake.calls) == 3  # pages of 10, 10, 5
@@ -205,30 +333,37 @@ def test_http_transport_pages_through_whole_window():
 
 
 def test_http_transport_retries_transient_failures_exactly_once():
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.rest import (
-        _WindowPartition,
-    )
-
     # page 2's first two attempts fail (calls 2 and 3): retry must
     # re-fetch ONLY that page — page 1 rows are never re-yielded.
     fake = _ScriptedRequests(_records(25), fail_calls={2, 3})
     reader = _http_reader(fake, page_size=10, max_retries=3)
-    rows = list(reader._read_http(_WindowPartition("2024-01-01", "2024-01-31")))
+    rows = _http_rows(reader)
     assert [r[0] for r in rows] == list(range(25))
     assert len(fake.calls) == 5  # p1 ok, p2 fail, p2 fail, p2 ok, p3 ok
     assert sum("$offset=10" in c for c in fake.calls) == 3
 
 
 def test_http_transport_http_error_status_retries_then_raises():
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.rest import (
-        _WindowPartition,
-    )
-
     fake = _ScriptedRequests(_records(5), fail_calls={1, 2, 3}, fail_with="status")
     reader = _http_reader(fake, page_size=10, max_retries=2)
     with pytest.raises(RuntimeError, match="HTTP 503"):
-        list(reader._read_http(_WindowPartition("2024-01-01", "2024-01-31")))
+        _http_rows(reader)
     assert len(fake.calls) == 3  # initial + 2 retries, then surfaced
+
+
+def test_http_run_reads_each_window_with_its_own_query():
+    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.rest import (
+        _WindowRun,
+    )
+
+    fake = _ScriptedRequests(_records(5))
+    reader = _http_reader(fake, page_size=10)
+    run = _WindowRun([("2024-01-01", "2024-01-31"), ("2024-02-01", "2024-02-29"),
+                      ("2024-03-01", "2024-03-31")])
+    batches = list(reader.read(run))
+    assert [b.num_rows for b in batches] == [5, 5, 5]
+    assert [re.search(r"ts>='([\d-]+)'", c).group(1) for c in fake.calls] == [
+        "2024-01-01", "2024-02-01", "2024-03-01"]
 
 
 def test_document_sink_distributed_write_and_refresh(spark, tmp_path):
@@ -240,9 +375,86 @@ def test_document_sink_distributed_write_and_refresh(spark, tmp_path):
     docs = JsonLinesClient(root).read_all("calls")
     assert len(docs) == 100 and {"event_id", "event_type"} <= set(docs[0])
 
-    # full refresh: drop + reload must not duplicate (app.py:957-968)
+    # full refresh: staged load + swap must not duplicate (app.py:957-968)
     full_refresh_write(df, "calls", factory, retry_sleep_s=0.0)
     assert len(JsonLinesClient(root).read_all("calls")) == 100
+
+
+_POISON_EVENT_TYPE = "poison"
+
+
+class _Poisoned:
+    """Fails every insert of a batch that holds the poison row."""
+
+    def insert_many(self, collection, docs):
+        if any(d.get("event_type") == _POISON_EVENT_TYPE for d in docs):
+            raise ConnectionError("store rejects this partition")
+        return super().insert_many(collection, docs)
+
+
+class _PoisonedJsonLinesClient(_Poisoned, JsonLinesClient):
+    pass
+
+
+class _PoisonedMongoAdapter(_Poisoned, MongoDatabaseAdapter):
+    pass
+
+
+def _jsonlines_store(root):
+    def read(collection):
+        return JsonLinesClient(root).read_all(collection)
+
+    return (lambda: JsonLinesClient(root)), (lambda: _PoisonedJsonLinesClient(root)), read
+
+
+def _mongo_store(root):
+    def read(collection):
+        cdir = os.path.join(root, collection)
+        if not os.path.isdir(cdir):
+            return []
+        docs = []
+        for name in sorted(os.listdir(cdir)):
+            with open(os.path.join(cdir, name), encoding="utf-8") as fh:
+                docs.append(json.load(fh))
+        return docs
+
+    return (
+        lambda: MongoDatabaseAdapter(_FileBackedDatabase(root)),
+        lambda: _PoisonedMongoAdapter(_FileBackedDatabase(root)),
+        read,
+    )
+
+
+@pytest.mark.parametrize("store", [_jsonlines_store, _mongo_store])
+def test_full_refresh_failed_load_keeps_previous_collection(spark, tmp_path, store):
+    # One partition's inserts fail on every attempt: the load raises,
+    # the previous documents stay readable and no staging collection
+    # is left behind.
+    root = str(tmp_path / "store")
+    good_factory, poisoned_factory, read = store(root)
+    before = spark.createDataFrame(
+        [(i, "ok") for i in range(20)], "event_id long, event_type string"
+    )
+    full_refresh_write(before, "calls", good_factory, retry_sleep_s=0.0)
+    previous = sorted(d["event_id"] for d in read("calls"))
+    assert previous == list(range(20))
+
+    after = spark.createDataFrame(
+        [(100 + i, _POISON_EVENT_TYPE if i == 0 else "new") for i in range(40)],
+        "event_id long, event_type string",
+    ).repartition(4)
+    with pytest.raises(Exception, match="store rejects this partition"):
+        full_refresh_write(
+            after, "calls", poisoned_factory, max_retries=3, retry_sleep_s=0.2
+        )
+    assert sorted(d["event_id"] for d in read("calls")) == previous
+    assert not os.path.exists(os.path.join(root, "calls__staging"))
+
+    # the next good load swaps in whole
+    full_refresh_write(after.filter("event_type = 'new'"), "calls", good_factory,
+                       retry_sleep_s=0.0)
+    assert sorted(d["event_id"] for d in read("calls")) == list(range(101, 140))
+    assert sorted(os.listdir(root)) == ["calls"]
 
 
 class _FakeBulkResult:
@@ -256,11 +468,25 @@ class _FakeBulkWriteError(Exception):
         self.details = details
 
 
-class _FakeCollection:
-    """pymongo Collection surface: insert_many(docs, ordered=...)."""
+class _FakeOperationFailure(Exception):
+    def __init__(self, code):
+        super().__init__(f"operation failed ({code})")
+        self.code = code
 
-    def __init__(self):
+
+class _FakeCollection:
+    """pymongo Collection surface: insert_many(docs, ordered=...) and
+    rename(new_name, dropTarget=...)."""
+
+    def __init__(self, db=None, name=None):
         self.docs = {}
+        self.db, self.name = db, name
+
+    def rename(self, new_name, dropTarget=False):
+        if new_name in self.db.collections and not dropTarget:
+            raise _FakeOperationFailure(48)  # NamespaceExists
+        self.db.collections[new_name] = self.db.collections.pop(self.name)
+        self.name = new_name
 
     def insert_many(self, docs, ordered=True):
         dup_errors, inserted = [], []
@@ -287,7 +513,9 @@ class _FakeDatabase:
         self.collections = {}
 
     def __getitem__(self, name):
-        return self.collections.setdefault(name, _FakeCollection())
+        if name not in self.collections:
+            self.collections[name] = _FakeCollection(self, name)
+        return self.collections[name]
 
     def drop_collection(self, name):
         self.collections.pop(name, None)
@@ -310,6 +538,12 @@ def test_mongo_adapter_against_pymongo_database_surface(spark):
     # Retry of the same batch: duplicate-key errors swallowed, no dupes.
     assert adapter.insert_many("calls", docs) == 0
     assert len(db.collections["calls"].docs) == 2
+
+    # full-refresh swap: the staged collection replaces the live one
+    assert adapter.insert_many("calls__staging", [{"_id": "c", "v": 3}]) == 1
+    adapter.rename_collection("calls__staging", "calls")
+    assert set(db.collections) == {"calls"}
+    assert set(db.collections["calls"].docs) == {"c"}
 
     adapter.drop_collection("calls")
     assert "calls" not in db.collections
@@ -387,7 +621,9 @@ def test_write_documents_mid_batch_crash_retry_exactly_once(spark, tmp_path):
         read_testdata(spark, SF_SMOKE, "events")
         .select("event_id", "event_type")
         .limit(40)
-        .coalesce(1)  # one partition -> one scripted crash
+        # one input partition; the sink spreads it over several tasks,
+        # and every task that starts before the marker exists crashes once
+        .coalesce(1)
     )
     write_documents(
         df, "calls", lambda: _FlakyKeyedStoreClient(root), retry_sleep_s=0.0
@@ -473,22 +709,6 @@ def test_mongo_adapter_mid_batch_dup_and_transient_mix():
     db.collections["poison"] = _PoisonCollection()
     with pytest.raises(_PoisonError):
         adapter.insert_many("poison", docs)
-
-
-def test_streaming_watermark_dedup(spark, tmp_path):
-    src = str(tmp_path / "dedup_src")
-    events = read_testdata(spark, SF_SMOKE, "events").limit(200)
-    # duplicate every record (the re-fetch overlap scenario)
-    dup = events.unionAll(events)
-    dup.withColumn("ts", F.col("ts").cast("timestamp")).write.parquet(src)
-
-    stream = spark.readStream.schema(TESTDATA_SCHEMAS["events"]).parquet(src)
-    deduped = watermark_dedup(stream, keys=["event_id"], watermark="1 hour")
-    out = str(tmp_path / "dedup_out")
-    ckpt = str(tmp_path / "dedup_ckpt")
-    run_available_now(deduped, ckpt, out)
-
-    assert spark.read.parquet(out).count() == 200
 
 
 def test_available_now_checkpoint_resumes_incrementally(spark, tmp_path):
@@ -1735,7 +1955,19 @@ class _FileBackedCollection:
     the same store — the piece the in-memory _FakeDatabase can't do."""
 
     def __init__(self, root, name):
+        self.root = root
         self.dir = os.path.join(root, name)
+
+    def rename(self, new_name, dropTarget=False):
+        dst = os.path.join(self.root, new_name)
+        if not os.path.isdir(self.dir):
+            raise _FakeOperationFailure(26)  # NamespaceNotFound
+        if os.path.isdir(dst):
+            if not dropTarget:
+                raise _FakeOperationFailure(48)
+            shutil.rmtree(dst)
+        os.replace(self.dir, dst)
+        self.dir = dst
 
     def insert_many(self, docs, ordered=True):
         os.makedirs(self.dir, exist_ok=True)
@@ -1767,10 +1999,7 @@ class _FileBackedDatabase:
         return _FileBackedCollection(self.root, name)
 
     def drop_collection(self, name):
-        cdir = os.path.join(self.root, name)
-        if os.path.isdir(cdir):
-            for f in os.listdir(cdir):
-                os.unlink(os.path.join(cdir, f))
+        shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
 
 
 def test_mongo_adapter_drives_write_documents_end_to_end(spark, tmp_path):
@@ -1801,6 +2030,10 @@ def test_mongo_adapter_drives_write_documents_end_to_end(spark, tmp_path):
     # full refresh drops through the SAME adapter surface then reloads
     full_refresh_write(df.limit(10), "calls", factory, retry_sleep_s=0.0)
     assert len(os.listdir(os.path.join(root, "calls"))) == 10
+    # an empty load stages nothing (renameCollection: code 26), and
+    # still replaces the collection with an empty one
+    full_refresh_write(df.limit(0), "calls", factory, retry_sleep_s=0.0)
+    assert not os.path.exists(os.path.join(root, "calls"))
 
 
 def test_pymongo_client_factory_wiring(monkeypatch):
