@@ -113,12 +113,10 @@ _CONSTRUCTION_EAGER = {
     "ann_ivf_pq_maintained",
     "ann_ivf_maintained_drift",
     "retrieval_suite",
-    # r13: the join-probe twin shares the same cached scratch dir;
-    # warm runs time the distributed-LUT probe. The clone lifecycle's
-    # scratch DML runs at construction; warm runs time the clone READ
-    # (external parquet + external DV sidecar + local divergence in
-    # one plan) — the steady-state cost of serving a zero-copy clone.
-    "ann_ivf_pq_maintained_join",
+    # r13: the clone lifecycle's scratch DML runs at construction;
+    # warm runs time the clone READ (external parquet + external DV
+    # sidecar + local divergence in one plan) — the steady-state cost
+    # of serving a zero-copy clone.
     "txtable_clone_events",
     # r13: maintained MinHash-LSH index — scratch DML + init + fold at
     # construction; warm runs time pairs/probe serving from stored
@@ -289,11 +287,6 @@ _NEW_R10 = [
 ]
 
 _NEW_R11 = [
-    # JOIN-probe ADC tiers: query set stays a DataFrame (distributed
-    # mapInPandas LUT + pure-JVM posexplode ⋈ LUT scoring) — the
-    # corpus-vs-corpus path, benched alongside its driver-probe twin
-    "ann_pq_topk_join",
-    "ann_ivf_pq_topk_join",
     # IVM over a JOIN: scratch tables + DML at construction; warm runs
     # time the snapshot-join state + Δ(A⋈B) fold (join_delta)
     "ivm_join_view_orders_lineitem",
@@ -320,10 +313,6 @@ _NEW_R12 = [
 ]
 
 _NEW_R13 = [
-    # DataFrame-scale twin of the fully maintained IVF-PQ probe:
-    # Arrow-batched probe assignment + _lut_frame distributed LUT —
-    # the query table never collects (construction-eager; see above)
-    "ann_ivf_pq_maintained_join",
     # shallow-CLONE read path: mixed external/local/DV-sidecar snapshot
     # scan (scratch DML at construction; see _CONSTRUCTION_EAGER)
     "txtable_clone_events",

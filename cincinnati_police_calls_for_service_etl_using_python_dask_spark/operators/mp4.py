@@ -434,19 +434,6 @@ VIDEO_FRAME_SCHEMA = T.StructType(
     ]
 )
 
-VIDEO_META_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("dur_ms", T.LongType()),
-        T.StructField("fr_sum", T.LongType()),
-        T.StructField("fr_wsum", T.LongType()),
-        T.StructField("status", T.StringType()),
-    ]
-)
-
 
 def _frame_rows(payload: bytes):
     """Parse + locate + checksum every sample (capped at MAX_FRAMES).
@@ -502,10 +489,9 @@ def synth_video_frames(docs: DataFrame, parallelism: int | None = None) -> DataF
 
 
 def video_meta_rows(doc_ids, texts) -> dict:
-    """Batch kernel shared by :func:`synth_video_metadata` and the
-    fused media-decode crossing (multimodal.synth_decode_media):
-    demux one fixture MP4 per (doc_id, text) and return column
-    lists."""
+    """Batch kernel of the fused media-decode crossing's 'video' seg
+    (multimodal.synth_decode_media): demux one fixture MP4 per
+    (doc_id, text) and return column lists."""
     out = {k: [] for k in (
         "doc_id", "width", "height", "n_frames", "dur_ms",
         "fr_sum", "fr_wsum", "status")}
@@ -528,31 +514,3 @@ def video_meta_rows(doc_ids, texts) -> dict:
         out["fr_wsum"].append(sum(r[4] for r in rows))
         out["status"].append("mp4-decoded")
     return out
-
-
-def synth_video_metadata(docs: DataFrame, parallelism: int | None = None) -> DataFrame:
-    """Per-doc container metadata recovered by the parser: tkhd
-    geometry, sample count, mdhd duration (ms), whole-stream byte
-    checksums. The decode-gate 'video' seg."""
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame(video_meta_rows(pdf["doc_id"], pdf["text"]))
-
-    src = docs.select("doc_id", "text")
-    if parallelism:
-        src = src.repartition(parallelism)
-    return src.mapInPandas(run, VIDEO_META_SCHEMA).select(
-        "doc_id",
-        F.col("width").cast("int").alias("width"),
-        F.col("height").cast("int").alias("height"),
-        F.col("n_frames").cast("int").alias("n_frames"),
-        F.col("dur_ms").cast("long").alias("dur_ms"),
-        F.col("fr_sum").cast("long").alias("fr_sum"),
-        F.col("fr_wsum").cast("long").alias("fr_wsum"),
-        "status",
-    )

@@ -11,14 +11,15 @@ Two decode tiers:
 - :func:`decode_image_metadata` — REAL decode through the built-in
   pure-Python PNG codec (:func:`decode_png`: chunk walk + CRC
   validation + inflate + filter reconstruction).
-  :func:`resize_image` resamples REAL pixels (nearest/box, exact
-  integer arithmetic) on top of the same codec.
+  :func:`multimodal_pipeline` resamples REAL pixels (nearest/box,
+  exact integer arithmetic) on top of the same codec.
 
 Video/audio (round 5): REAL container parsing lives in sibling
 modules — :mod:`.mp4` (ISO-BMFF box walk + stts/stsc/stsz/stco sample
 resolution feeding frame sampling) and :mod:`.audio` (RIFF/WAVE PCM
-decode). The byte-length stubs here (:func:`frame_sample`,
-:func:`extract_features`) remain as the codec-free fixture tier.
+decode). The byte-length stubs here (:func:`decode_metadata`,
+:func:`resize_metadata`, :func:`frame_sample`) remain as the
+codec-free fixture tier.
 Lossy av codecs (r7/r8): :mod:`.h264` (Annex-B/AVCC NAL walk, SPS
 parse, AU/slice structure) and :mod:`.aac` (ADTS frame walk, config
 parse) cover the BITSTREAM-STRUCTURE tier — their real boundary,
@@ -110,9 +111,8 @@ def resize_metadata(df: DataFrame, max_w: int = 224, max_h: int = 224) -> DataFr
     The geometry (integer floor of the uniform scale that fits the
     bounding box, never upscaling) is the real product logic and runs
     vectorized in numpy. This variant is the codec-free FIXTURE (dims
-    derived from payload length, no decode); :func:`resize_image` is
-    the real-kernel version that decodes the PNG and resamples actual
-    pixels.
+    derived from payload length, no decode); :func:`_resize_kernel` is
+    the real kernel that decodes the PNG and resamples actual pixels.
     """
 
     def run(batches: Iterator) -> Iterator:
@@ -199,88 +199,6 @@ GEOMETRY_FRAMES_SCHEMA = T.StructType(
         T.StructField("frame_ts_ms", T.IntegerType()),
     ]
 )
-
-
-def geometry_frames(df: DataFrame, max_w: int = 224, max_h: int = 224) -> DataFrame:
-    """Fused stub spelling of
-    ``resize_metadata(df) ⋈ frame_sample(df)`` on doc_id — one Arrow
-    crossing and no join, row-identical to the composed pair (pinned by
-    test). Each Python stage pays a fixed runner handshake, so a suite
-    combining both per-doc geometries fuses them; the granular
-    operators remain the composable production spellings."""
-
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            n_bytes = pdf["payload"].map(len).to_numpy().astype("int64")
-            w = n_bytes % 640 + 1
-            h = n_bytes % 480 + 1
-            scale = np.minimum(1.0, np.minimum(max_w / w, max_h / h))
-            ow = np.maximum(1, np.floor(w * scale)).astype("int64")
-            oh = np.maximum(1, np.floor(h * scale)).astype("int64")
-            n = np.minimum(n_bytes // FRAME_INTERVAL_MS + 1, MAX_FRAMES)
-            rep = np.repeat(np.arange(len(n)), n)
-            idx = (
-                np.concatenate([np.arange(k) for k in n])
-                if len(n)
-                else np.array([], dtype="int64")
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy()[rep],
-                    "src_width": w[rep].astype("int32"),
-                    "src_height": h[rep].astype("int32"),
-                    "out_width": ow[rep].astype("int32"),
-                    "out_height": oh[rep].astype("int32"),
-                    "frame_idx": idx.astype("int32"),
-                    "frame_ts_ms": (idx * FRAME_INTERVAL_MS).astype("int32"),
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(run, GEOMETRY_FRAMES_SCHEMA)
-
-
-FEATURE_DIM = 8
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def extract_features(df: DataFrame) -> DataFrame:
-    """Per-payload feature vector (``array<float>``) via ``mapInPandas``
-    — the embedding-production shape. The stub kernel hashes byte
-    windows into ``FEATURE_DIM`` deterministic floats in [0, 1); a real
-    model swaps in its forward pass over the same Arrow batches, which
-    is exactly how GPU inference is batched from Spark."""
-
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            feats = []
-            for b in pdf["payload"]:
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                chunks = np.array_split(arr, FEATURE_DIM)
-                feats.append(
-                    np.array(
-                        [(c.sum() % 1000) / 1000.0 if len(c) else 0.0 for c in chunks],
-                        dtype=np.float32,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "features": feats})
-
-    return df.select("doc_id", "payload").mapInPandas(run, FEATURE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -748,20 +666,6 @@ def decode_image_metadata(df: DataFrame) -> DataFrame:
 # rounding to diverge between engines.
 # ---------------------------------------------------------------------------
 
-RESIZE_IMAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("src_width", T.IntegerType()),
-        T.StructField("src_height", T.IntegerType()),
-        T.StructField("out_width", T.IntegerType()),
-        T.StructField("out_height", T.IntegerType()),
-        T.StructField("px_count", T.LongType()),
-        T.StructField("px_sum", T.LongType()),
-        T.StructField("px_wsum", T.LongType()),
-        T.StructField("status", T.StringType()),
-    ]
-)
-
 
 def _resize_kernel(pdf, max_w: int, max_h: int, method: str):
     """Batch-vectorized resample over one Arrow batch (round 5 — the
@@ -857,36 +761,12 @@ def _resize_kernel(pdf, max_w: int, max_h: int, method: str):
     )
 
 
-def resize_image(
-    df: DataFrame, max_w: int = 224, max_h: int = 224, method: str = "nearest"
-) -> DataFrame:
-    """Aspect-fit resize with a REAL pixel kernel: decodes the PNG
-    payload (built-in codec — CRC walk, inflate, filter
-    reconstruction), resamples actual pixels (``nearest`` center
-    sampling or ``box`` area averaging, both in exact integer
-    arithmetic), and emits geometry plus checksums of the resampled
-    bytes: px_sum (content) and px_wsum (Σ (idx+1)·pixel — pins pixel
-    ORDER, so a transposed or shuffled resample cannot pass).
-
-    Same mapInPandas batching contract as :func:`decode_image_metadata`;
-    a poisoned payload yields status='error', never a dead batch.
-    ``resize_metadata`` stays as the codec-free geometry fixture.
-    """
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            if len(pdf):
-                yield _resize_kernel(pdf, max_w, max_h, method)
-
-    return df.select("doc_id", "payload").mapInPandas(run, RESIZE_IMAGE_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # Fused fixture spellings (round 5). Each Python stage costs a fixed
 # Arrow-runner handshake (~0.15-0.2 s at local[32] regardless of data
 # size — measured: an identity pandas_udf over the same scan is 0.21 s
 # vs 0.06 s native), so chaining attach_png_payload (pandas_udf) into
-# resize_image / decode_image_metadata (mapInPandas) pays it twice.
+# a decode or resample mapInPandas pays it twice.
 # These run the IDENTICAL codec round trip — batch encode → CRC-walk
 # parse → inflate → batched unfilter → vectorized resample — in ONE
 # crossing; row-identity with the composed spellings is test-pinned.
@@ -906,38 +786,6 @@ def _with_parallelism(df: DataFrame, parallelism: int | None) -> DataFrame:
     if parallelism is None:
         return df
     return df.repartition(parallelism, F.col("doc_id"))
-
-
-def synth_resize_png(
-    df: DataFrame,
-    text_col: str = "text",
-    max_w: int = 224,
-    max_h: int = 224,
-    method: str = "nearest",
-    parallelism: int | None = None,
-) -> DataFrame:
-    """One-crossing spelling of
-    ``resize_image(attach_png_payload(df), ...)``."""
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = _encode_png_batch(
-                [("" if t is None else t).encode("utf-8") for t in pdf[text_col]]
-            )
-            yield _resize_kernel(
-                pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads}),
-                max_w,
-                max_h,
-                method,
-            )
-
-    return _with_parallelism(df.select("doc_id", text_col), parallelism).mapInPandas(
-        run, RESIZE_IMAGE_SCHEMA
-    )
 
 
 MULTIMODAL_PIPELINE_SCHEMA = T.StructType(
@@ -966,8 +814,10 @@ def multimodal_pipeline(
     geometry × frame fanout × real-pixel resample checksums, emitted as
     the already-joined per-(doc, frame) row. Row-identical to
 
-        geometry_frames(attach_binary_payload(df))
-          ⋈ synth_resize_png(df, px_max_w, px_max_h)   (on doc_id)
+        resize_metadata(attach_binary_payload(df), max_w, max_h)
+          ⋈ frame_sample(attach_binary_payload(df))
+          ⋈ _resize_kernel(attach_png_payload(df), px_max_w, px_max_h)
+                                                       (on doc_id)
 
     (test-pinned). The real codec round trip — batch PNG encode →
     CRC-walk parse → inflate → batched unfilter → vectorized resample —

@@ -95,6 +95,20 @@ def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
     return F.when((F.size(a) == dim) & (F.size(b) == dim), raw)
 
 
+def _rank_topk(
+    scored: DataFrame, k: int, query_id_col: str, id_col: str
+) -> DataFrame:
+    """The shared rank tail of every top-k path: (query, id, rank
+    1..k) by ``_score`` desc with the id as the deterministic
+    tie-break."""
+    w = Window.partitionBy(query_id_col).orderBy(F.desc("_score"), F.asc(id_col))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select(query_id_col, id_col, "rank")
+    )
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -164,12 +178,7 @@ def brute_force_topk(
         .crossJoin(F.broadcast(queries.select(*q_cols)))
         .select(F.col(query_id_col), F.col(id_col), score.alias("_score"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("_score"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank")
-    )
+    return _rank_topk(scored, k, query_id_col, id_col)
 
 
 def _within_bucket_pairs(bucketed: "DataFrame", threshold: float) -> "DataFrame":
@@ -1012,63 +1021,7 @@ def ivf_ann_topk(
         F.col(id_col),
         cosine(F.col(vec_col), F.col(query_vec_col), dim).alias("_score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("_score"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Persistent IVF index (round 5): build once, probe many — across
-# SESSIONS, not just within the process-local centroid LRU. The true
-# at-scale property is in the STORAGE LAYOUT: postings are written
-# partitioned by list id, so a probe reads only the n_probe/n_lists
-# fraction of the index from disk (partition pruning), sub-linear I/O
-# the way a real IVF index (FAISS on object storage, Milvus segments)
-# behaves.
-# ---------------------------------------------------------------------------
-
-
-def build_ivf_index(
-    vectors: DataFrame,
-    path: str,
-    n_lists: int = 16,
-    train_sample: int = 100_000,
-    n_iter: int = 8,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Train the coarse quantizer and persist the index:
-
-    - ``{path}/centroids`` — (list_id, centroid array<double>), tiny;
-    - ``{path}/postings`` — the corpus with its ``_list`` assignment,
-      ``partitionBy("_list")`` so every list is its own directory.
-
-    Assignment is the same Arrow-batched BLAS kernel as the ad-hoc
-    tier (one matmul per batch, map-side); the corpus is scanned once
-    at build time and never again in full at query time."""
-    centroids = _sample_centroids(
-        vectors, n_lists, train_sample, n_iter, seed, vec_col
-    )
-    _write_centroids(vectors.sparkSession, path, centroids)
-
-    # Cluster rows by list BEFORE the partitioned write: without it
-    # every map task emits a file into every list dir (tasks × n_lists
-    # tiny files — measured 8× probe-scan overhead at small SF, and a
-    # small-file problem at any SF). Hash-repartitioning on _list lands
-    # each list in one task => one file per list here; at larger
-    # corpora Spark splits big files on read, so probe parallelism is
-    # preserved while file count stays O(n_lists).
-    (
-        vectors.withColumn("_list", _assign_list_udf(centroids)(F.col(vec_col)))
-        .repartition(F.col("_list"))
-        .write.mode("overwrite")
-        .partitionBy("_list")
-        .parquet(f"{path}/postings")
-    )
+    return _rank_topk(scored, k, query_id_col, id_col)
 
 
 def _write_centroids(spark, path: str, centroids: np.ndarray) -> None:
@@ -1129,63 +1082,47 @@ def _write_versioned_model(path: str, pdf: "pd.DataFrame") -> None:
 def _postings_frame(
     spark, path: str, probed_lists, snap=None, id_ranges=None
 ) -> DataFrame:
-    """The probed slice of the index's postings. Two layouts:
+    """The probed slice of the index's maintained postings
+    (``{path}/postings_tx``, a TxTable written by
+    :func:`refresh_ivf_index`). Zone-map file pruning on ``_list``
+    (a stats column) keeps probe I/O at the probed lists: the build
+    clusters one list per file, so the [min, max] interval plus the
+    residual IN filter opens only probed lists' files;
+    refresh-churned files have looser zone maps until an
+    ``optimize(zorder_by=["_list"])`` re-tightens them, which only
+    costs extra file OPENS, never wrong rows.
 
-    - maintained (``{path}/postings_tx`` is a TxTable,
-      :func:`refresh_ivf_index`): zone-map file pruning on ``_list``
-      (stats column) plays the role directory pruning plays below —
-      the build clusters one list per file, so the [min, max] interval
-      plus the residual IN filter opens only probed lists' files;
-      refresh-churned files have looser zone maps until an
-      ``optimize(zorder_by=["_list"])`` re-tightens them, which only
-      costs extra file OPENS, never wrong rows.
-    - static (``{path}/postings``, :func:`build_ivf_index`): plain
-      parquet ``partitionBy("_list")`` directories, pruned by the IN
-      literal (PartitionFilters in the scan node).
-
-    ``snap`` (r13, ADVICE r12): the maintained-postings Snapshot the
-    probe already resolved its MODEL from. Probe routing is computed
+    ``snap`` (r13, ADVICE r12): the postings Snapshot the probe
+    already resolved its MODEL from. Probe routing is computed
     against that snapshot's centroids, so the postings read MUST be
     pinned to the same version — without it, a DataFrame read is lazy
     and a rebuild committing between model load and action would
     route old-model probes against new-model postings (exactly the
     mixed-model window the ``_CENTROIDS_TXN`` marker exists to
-    close). Every maintained probe path passes its resolved snapshot
-    through; ``None`` keeps the latest-snapshot behavior for the
-    static layout and for direct diagnostics use.
+    close). Every probe path passes its resolved snapshot through;
+    ``None`` reads the latest snapshot, for direct diagnostics use.
 
     ``id_ranges`` (r14, the filtered probe): extra
     ``(column, lo, hi)`` zone-map constraints intersected with the
-    ``_list`` pruning on the maintained layout — the maintained
-    postings carry stats on the id column too, so a range-restricted
-    filtered search skips files on BOTH dimensions before Spark sees
-    a path. The static layout applies the same ranges as scan
-    filters (parquet row-group stats do the skipping there)."""
+    ``_list`` pruning — the postings carry stats on the id column
+    too, so a range-restricted filtered search skips files on BOTH
+    dimensions before Spark sees a path."""
     from ..sources.txtable import TxTable
 
     probed_lists = list(probed_lists)
-    id_ranges = list(id_ranges or [])
     tx = TxTable(spark, f"{path}/postings_tx")
-    if snap is not None or tx.exists():
-        if snap is None:
-            snap = tx.snapshot()
-        if not probed_lists:
-            # empty query set: the static path's isin([]) returns an
-            # empty frame gracefully; min()/max() over an empty probe
-            # set would raise instead (ADVICE r11) — short-circuit to
-            # the same typed empty relation without opening any file.
-            return empty_frame(spark, snap.schema)
-        pruned = tx.read_pruned(
-            "_list", min(probed_lists), max(probed_lists),
-            version=snap.version, extra=id_ranges,
-        )
-        return pruned.where(F.col("_list").isin(probed_lists))
-    out = spark.read.parquet(f"{path}/postings").where(
-        F.col("_list").isin(probed_lists)
+    if snap is None:
+        snap = tx.snapshot()
+    if not probed_lists:
+        # empty query set: min()/max() over an empty probe set would
+        # raise (ADVICE r11) — short-circuit to the typed empty
+        # relation without opening any file.
+        return empty_frame(spark, snap.schema)
+    pruned = tx.read_pruned(
+        "_list", min(probed_lists), max(probed_lists),
+        version=snap.version, extra=list(id_ranges or []),
     )
-    for c, lo, hi in id_ranges:
-        out = out.where((F.col(c) >= lo) & (F.col(c) <= hi))
-    return out
+    return pruned.where(F.col("_list").isin(probed_lists))
 
 
 def refresh_ivf_index(
@@ -1210,7 +1147,7 @@ def refresh_ivf_index(
     incremental answer to the reference's rebuild-everything-nightly
     shape (app.py:50, 957-968, 991-995 re-ingests and re-derives every
     artifact daily regardless of how little changed). At the
-    100 TB design point a nightly ``build_ivf_index`` re-scans and
+    100 TB design point a nightly rebuild re-scans and
     re-writes the whole corpus; this REWRITES O(changed rows): each
     refresh is one feed read + one MERGE whose copy-on-write touches
     only the files holding changed keys. (Feed-read locality, r13:
@@ -1226,15 +1163,15 @@ def refresh_ivf_index(
     ``CadenceRunner.for_index_refresh(optimize_every=N)`` to
     re-tighten them.)
 
-    Layout: ``{path}/centroids`` exactly as :func:`build_ivf_index`;
-    postings live in a TxTable at ``{path}/postings_tx`` with ``_list``
-    as a stats column (zone-map pruning replaces the static layout's
-    directory pruning — see :func:`_postings_frame`).
-    :func:`ivf_index_topk` probes both layouts transparently.
+    Layout: ``{path}/centroids`` — (list_id, centroid array<double>),
+    tiny; postings live in a TxTable at ``{path}/postings_tx`` with
+    ``_list`` as a stats column, so a probe opens only the probed
+    lists' files (zone-map pruning — see :func:`_postings_frame`).
+    :func:`ivf_index_topk` probes this layout.
 
     First call initializes: train the coarse quantizer on the source
-    snapshot (``train_sample``/``n_iter``/``seed`` as in
-    :func:`build_ivf_index`) — or adopt a caller-trained ``centroids``
+    snapshot (``train_sample``/``n_iter``/``seed``, see
+    :func:`_sample_centroids`) — or adopt a caller-trained ``centroids``
     matrix (r12, the FAISS bring-your-own-quantizer shape: train the
     model offline/elsewhere, hand the index its frozen artifact; also
     what makes a replay oracle possible, since the caller controls
@@ -1286,7 +1223,7 @@ def refresh_ivf_index(
         # explicit count is exempt from AQE partition coalescing, so
         # clustering survives at any data size. ~one list per file;
         # at large corpora Spark splits big files on read, preserving
-        # probe parallelism (same doctrine as build_ivf_index).
+        # probe parallelism.
         assigned = vectors.withColumn(
             "_list", _assign_list_udf(centroids)(F.col(vec_col))
         ).repartitionByRange(max(1, n_lists), F.col("_list"))
@@ -1350,8 +1287,8 @@ def optimize_ivf_index(spark, path: str, log_store=None) -> int | None:
     """Re-tighten the maintained postings layout after refresh churn
     (r12, VERDICT r11 #2): every :func:`refresh_ivf_index` MERGE
     rewrites its matched files with mixed-list contents, so each fold
-    loosens the ``_list`` zone maps that stand in for the static
-    layout's directory pruning — correctness never moves (the residual
+    loosens the ``_list`` zone maps that prune probe reads —
+    correctness never moves (the residual
     IN filter holds), but probe I/O trends toward a full postings scan
     under sustained churn. This runs the lakehouse answer: one
     ``OPTIMIZE`` that range-clusters the live rows back to ~one list
@@ -1703,51 +1640,31 @@ def refresh_pq_codes(
 
 
 # Driver-probe guardrails (r13). _MAX_DRIVER_QUERIES bounds how many
-# query rows a probe="driver" path will silently collect (VERDICT r12
-# #5): driver probes are for bounded, interactive/artifact-sized query
-# sets; above the bound they raise a pointed error naming probe="join"
-# instead of OOM-ing the driver on a query TABLE. _LUT_VALUES_MAX_ROWS
-# bounds the VALUES-SQL spelling of the driver LUT (ADVICE r12): each
-# LUT row inlines as a literal tuple in one SQL string, so past a few
-# hundred KB of text the parse cost eats the LocalTableScan win —
-# larger (still driver-bounded) LUTs fall back to the RDD-backed
-# createDataFrame path, which scales gracefully.
+# query rows a driver probe will collect (VERDICT r12 #5): probes are
+# for bounded, interactive/artifact-sized query sets; above the bound
+# they raise a pointed error instead of OOM-ing the driver on a query
+# TABLE. _LUT_VALUES_MAX_ROWS bounds the VALUES-SQL spelling of the
+# driver LUT (ADVICE r12): each LUT row inlines as a literal tuple in
+# one SQL string, so past a few hundred KB of text the parse cost eats
+# the LocalTableScan win — larger (still driver-bounded) LUTs fall
+# back to the RDD-backed createDataFrame path, which scales gracefully.
 _MAX_DRIVER_QUERIES = 65_536
 _LUT_VALUES_MAX_ROWS = 100_000
 
-# Hard-broadcast ceiling for the DISTRIBUTED LUT relation (r14, ADVICE
-# r13): the all-pairs probe="join" branch broadcasts the LUT on
-# purpose (the (__sub, __code) key has only m×ksub distinct values, so
-# a shuffled join collapses to that key cardinality) — but LUT rows
-# are Q·m·ksub, LINEAR in the query table, so an unbounded query table
-# must not force a driver-sized broadcast. Above this bound the join
-# goes hint-free: AQE broadcasts a small build side or shuffle-joins
-# with skew-split (oversized key groups are split with the other side
-# duplicated — mechanical salting), trading bounded parallelism for
-# bounded driver memory. ~1M rows of (id, int, int, long) ≈ 32 MB.
-_LUT_BROADCAST_MAX_ROWS = 1_000_000
 
-
-def _collect_query_rows(
-    queries: DataFrame, cols, op: str, max_driver_queries: int | None = None
-):
+def _collect_query_rows(queries: DataFrame, cols, op: str):
     """Bounded driver-side collect of a probe query set. The bound is
     enforced IN the collecting scan (``limit(bound+1)``), so an
     oversized query table costs one truncated read, never a full
     driver materialization, before the refusal."""
-    bound = (
-        max_driver_queries
-        if max_driver_queries is not None
-        else _MAX_DRIVER_QUERIES
-    )
+    bound = _MAX_DRIVER_QUERIES
     rows = queries.select(*cols).limit(bound + 1).collect()
     if len(rows) > bound:
         raise ValueError(
             f"{op}: query set exceeds the driver-probe bound "
-            f"({bound} rows). probe='driver' collects the query set "
-            f"driver-side — pass probe='join' to keep an unbounded "
-            f"query table distributed end-to-end, or raise "
-            f"max_driver_queries if this size is intentional."
+            f"({bound} rows). The probe collects the query set "
+            f"driver-side — split the query table into batches of at "
+            f"most {bound} rows."
         )
     return rows
 
@@ -1758,11 +1675,9 @@ def _lut_local_frame(
     books: np.ndarray,
     query_id_col: str,
     query_vec_col: str,
-    max_driver_queries: int | None = None,
 ) -> DataFrame:
     """Driver-built integer ADC LUT relation (query_id, __sub, __code,
-    __part) — the bounded-query-set twin of :func:`_lut_frame`, same
-    :func:`_pq_luts` integers.
+    __part) from the :func:`_pq_luts` integers.
 
     Spelled as a VALUES LocalRelation for integral query ids (the
     registry/bench shape), NOT ``createDataFrame``: an RDD-backed
@@ -1778,8 +1693,7 @@ def _lut_local_frame(
     :func:`_collect_query_rows`."""
     m, ksub, _ = books.shape
     qrows = _collect_query_rows(
-        queries, [query_id_col, query_vec_col],
-        "driver ADC LUT", max_driver_queries,
+        queries, [query_id_col, query_vec_col], "driver ADC LUT"
     )
     qpdf = pd.DataFrame(
         {
@@ -1839,8 +1753,6 @@ def pq_codes_maintained_topk(
     dim: int | None = None,
     ivf_path: str | None = None,
     n_probe: int | None = None,
-    max_driver_queries: int | None = None,
-    probe: str = "driver",
 ) -> DataFrame:
     """ADC top-k over a MAINTAINED codes table: the probe never
     re-encodes the corpus — codes are read from ``{path}/codes_tx``
@@ -1859,28 +1771,10 @@ def pq_codes_maintained_topk(
     Routing and memory tiers both come from CDC-maintained state;
     nothing corpus-sized is recomputed at probe time.
 
-    ``probe`` (r13, VERDICT r12 #3 — the r9 ``probe="join"`` doctrine
-    applied to the maintained layout):
-
-    - ``"driver"`` (default): collects the query set once (guarded by
-      ``max_driver_queries``) — probe lists from one driver matmul,
-      LUT as a VALUES LocalRelation. Right for bounded interactive
-      query sets; the only path with zero probe-side jobs.
-    - ``"join"``: the query TABLE stays a DataFrame end-to-end —
-      probe assignment runs in the same Arrow-batched kernel shape as
-      :func:`ivf_index_topk`'s join probe (broadcast-captured
-      marker-resolved centroids, map-side), probes explode to
-      (query, _list) rows and join the maintained postings on
-      ``_list`` so each list's queries co-locate with that list's
-      zone-map-pruned scan, and the integer LUT relation is built by
-      ONE ``mapInPandas`` over the query table (:func:`_lut_frame`,
-      keyed (query_id, __sub, __code), hint-free — AQE broadcasts a
-      small LUT, shuffle-joins an unbounded one). The only
-      driver-side collections are the two model artifacts and the
-      ≤ n_lists distinct probed list ids that drive file pruning;
-      nothing scales with the query table, and the rerank join does
-      not broadcast the queries. Row-identical to ``"driver"``
-      (shared :func:`_pq_luts` integers; parity-tested)."""
+    The query set is collected once (bounded by
+    :func:`_collect_query_rows`): probe lists come from one driver
+    matmul and the LUT is a VALUES LocalRelation, so the probe side
+    runs no jobs."""
     from ..sources.txtable import TxTable
 
     # one Snapshot per table, resolved up front and pinned through
@@ -1899,75 +1793,14 @@ def pq_codes_maintained_topk(
     if ivf_path is not None and n_probe is None:
         raise ValueError("pass n_probe with ivf_path")
 
-    if probe == "join":
-        lut = _lut_frame(queries, books, query_id_col, query_vec_col)
-        if ivf_path is not None:
-            psnap = TxTable(spark, f"{ivf_path}/postings_tx").snapshot()
-            probe_lists = _probe_lists_udf(
-                _maintained_centroids(spark, ivf_path, psnap), n_probe
-            )
-            probes = queries.select(
-                query_id_col,
-                F.explode(probe_lists(F.col(query_vec_col))).alias("_list"),
-            )
-            # bounded: ≤ n_lists ints — file pruning needs literals
-            probed_lists = sorted(
-                r["_list"]
-                for r in probes.select("_list").distinct().collect()
-            )
-            cand_ids = (
-                _postings_frame(spark, ivf_path, probed_lists, snap=psnap)
-                .select(id_col, "_list")
-                .join(probes, "_list")
-                .select(query_id_col, id_col)
-            )
-            # hint-free LUT join on full-cardinality key (AQE decides)
-            scored = (
-                cand_ids.join(exploded, [id_col])
-                .join(lut, [query_id_col, "__sub", "__code"])
-                .groupBy(query_id_col, id_col)
-                .agg(F.sum("__part").alias("__adc"))
-            )
-        else:
-            # all-pairs: broadcast the LUT on purpose — the join key
-            # (__sub, __code) has only m×ksub distinct values, so a
-            # shuffled join would collapse to ≤128 partitions (the
-            # pq_adc_topk probe="join" rationale). But LUT rows grow
-            # LINEARLY with the query table (Q·m·ksub), so the hint is
-            # gated on a cheap count (ADVICE r13): above
-            # _LUT_BROADCAST_MAX_ROWS the join goes hint-free and AQE
-            # decides (broadcast if it fits, else shuffle + skew-split,
-            # which splits oversized key groups mechanically).
-            m, ksub = int(books.shape[0]), int(books.shape[1])
-            lut_rows = queries.count() * m * ksub
-            lut_side = (
-                F.broadcast(lut)
-                if lut_rows <= _LUT_BROADCAST_MAX_ROWS
-                else lut
-            )
-            scored = (
-                exploded.join(lut_side, ["__sub", "__code"])
-                .groupBy(query_id_col, id_col)
-                .agg(F.sum("__part").alias("__adc"))
-            )
-        return _adc_tail(
-            scored, vectors, queries, k, shortlist, id_col, vec_col,
-            query_id_col, query_vec_col, dim, broadcast_queries=False,
-        )
-    if probe != "driver":
-        raise ValueError(f"probe must be 'driver' or 'join', got {probe!r}")
-
-    lut = _lut_local_frame(
-        spark, queries, books, query_id_col, query_vec_col,
-        max_driver_queries,
-    )
+    lut = _lut_local_frame(spark, queries, books, query_id_col, query_vec_col)
 
     if ivf_path is not None:
         psnap = TxTable(spark, f"{ivf_path}/postings_tx").snapshot()
         centroids = _maintained_centroids(spark, ivf_path, psnap)
         q_rows = _collect_query_rows(
             queries, [query_id_col, query_vec_col],
-            "pq_codes_maintained_topk driver probe", max_driver_queries,
+            "pq_codes_maintained_topk driver probe",
         )
         probe_mat = _probe_order(
             _unit_rows(pd.Series([r[query_vec_col] for r in q_rows])),
@@ -2020,7 +1853,7 @@ def pq_codes_maintained_topk(
         )
     return _adc_tail(
         scored, vectors, queries, k, shortlist, id_col, vec_col,
-        query_id_col, query_vec_col, dim, broadcast_queries=True,
+        query_id_col, query_vec_col, dim,
     )
 
 
@@ -2035,16 +1868,16 @@ def ivf_index_topk(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     dim: int | None = None,
-    probe: str = "driver",
-    max_driver_queries: int | None = None,
     where=None,
     where_range: "tuple | None" = None,
 ) -> DataFrame:
-    """Probe a :func:`build_ivf_index` index. Only the probed lists'
-    partitions are READ (`.where(_list IN ...)` prunes the
-    ``partitionBy`` directories — assert `PartitionFilters` in the
-    scan node); candidates are exactly cosine-reranked as in
-    :func:`ivf_ann_topk`. Centroids load from the tiny sidecar table.
+    """Probe a :func:`refresh_ivf_index` index. Only the probed lists'
+    postings files are READ (``_list`` zone-map pruning, see
+    :func:`_postings_frame`); candidates are exactly cosine-reranked
+    as in :func:`ivf_ann_topk`. Probe selection is one driver-side
+    matmul over the collected query set (bounded by
+    :func:`_collect_query_rows`), shipped as a VALUES LocalRelation
+    broadcast — no per-action probe job.
 
     FILTERED SEARCH (r14): ``where`` is a residual predicate over the
     postings columns (a ``Column`` or SQL string, e.g. a tenant/shard
@@ -2054,89 +1887,37 @@ def ivf_index_topk(
     ``n_probe = n_lists`` makes the filtered result exact, the same
     guarantee-shape as the unfiltered probe). ``where_range`` is the
     scale path for range-shaped predicates: a ``(column, lo, hi)``
-    triple that, on the maintained layout, zone-map-prunes FILES on
-    that column's stats intersected with the ``_list`` pruning
-    (conjunctive data skipping — the postings table keeps stats on
-    the id column precisely for this), and on the static layout rides
-    parquet row-group stats. Filters never touch the query side, and
-    the filtered slice flows through the same partial-top-k rerank,
-    so the shuffle carries only matching candidates.
-
-    ``probe`` picks where probe selection runs (VERDICT r8 #7):
-
-    - ``"driver"`` (default): one driver-side matmul over the query
-      set, probes shipped as a VALUES LocalRelation broadcast — right
-      for interactive top-k probes (bounded, artifact-sized query
-      sets), and the only path that avoids a per-action probe job.
-    - ``"join"``: the query set stays a DataFrame at ANY size — an
-      Arrow-batched kernel assigns each query its ``n_probe`` lists
-      (broadcast-captured centroids, map-side), probes explode to
-      (query, _list) rows, and the candidate join shuffles probes BY
-      ``_list`` so each list's queries co-locate with that list's
-      postings scan (AQE splits skewed lists). The only driver-side
-      collections are the centroids and the ≤ ``n_lists`` distinct
-      probed list ids that drive partition pruning — nothing scales
-      with the query table. Row-identical to the driver path
-      (parity-tested)."""
+    triple that zone-map-prunes FILES on that column's stats
+    intersected with the ``_list`` pruning (conjunctive data
+    skipping — the postings table keeps stats on the id column
+    precisely for this). Filters never touch the query side, and the
+    filtered slice flows through the same partial-top-k rerank, so
+    the shuffle carries only matching candidates."""
     from ..sources.txtable import TxTable
 
-    # marker-aware (r12): a maintained index's probe must route with
-    # the model its CURRENT postings were assigned against — after a
-    # rebuild that is the commit-referenced versioned artifact, never
-    # the init-era sidecar (see _CENTROIDS_TXN). ONE snapshot is
-    # resolved here and pinned through every read (r13, ADVICE r12):
-    # the centroids load from it AND the postings frame reads
-    # version=snap.version, so a rebuild committing between model
-    # load and the (lazy) postings action cannot mix models — the
-    # probe sees one consistent (model, postings) pair end-to-end.
-    _mtx = TxTable(spark, f"{path}/postings_tx")
-    _snap = _mtx.snapshot() if _mtx.exists() else None
-    centroids = (
-        _maintained_centroids(spark, path, _snap)
-        if _snap is not None
-        else _load_centroids(spark, path)
-    )
-
-    _ranges = [tuple(where_range)] if where_range is not None else None
-
-    def _filtered(postings: DataFrame) -> DataFrame:
-        if where is None:
-            return postings
-        return postings.where(
-            F.expr(where) if isinstance(where, str) else where
+    mtx = TxTable(spark, f"{path}/postings_tx")
+    if not mtx.exists():
+        raise ValueError(
+            f"no IVF index at {path} (no postings_tx table) — build it "
+            f"with refresh_ivf_index first"
         )
-
-    if probe == "join":
-        probes = queries.select(
-            query_id_col,
-            query_vec_col,
-            F.explode(
-                _probe_lists_udf(centroids, n_probe)(F.col(query_vec_col))
-            ).alias("_list"),
-        )
-        # bounded: ≤ n_lists ints — partition pruning needs literals
-        probed_lists = sorted(
-            r["_list"] for r in probes.select("_list").distinct().collect()
-        )
-        postings = _filtered(
-            _postings_frame(
-                spark, path, probed_lists, snap=_snap, id_ranges=_ranges
-            )
-        )
-        candidates = postings.join(probes, on="_list", how="inner")
-        return _ivf_rank_topk(
-            candidates, k, id_col, vec_col, query_id_col, query_vec_col, dim
-        )
-    if probe != "driver":
-        raise ValueError(f"probe must be 'driver' or 'join', got {probe!r}")
+    # marker-aware (r12): the probe must route with the model its
+    # CURRENT postings were assigned against — after a rebuild that is
+    # the commit-referenced versioned artifact, never the init-era
+    # sidecar (see _CENTROIDS_TXN). ONE snapshot is resolved here and
+    # pinned through every read (r13, ADVICE r12): the centroids load
+    # from it AND the postings frame reads version=snap.version, so a
+    # rebuild committing between model load and the (lazy) postings
+    # action cannot mix models — the probe sees one consistent
+    # (model, postings) pair end-to-end.
+    snap = mtx.snapshot()
+    centroids = _maintained_centroids(spark, path, snap)
 
     q_rows = _collect_query_rows(
-        queries, [query_id_col, query_vec_col],
-        "ivf_index_topk driver probe", max_driver_queries,
+        queries, [query_id_col, query_vec_col], "ivf_index_topk driver probe"
     )
-    # the 'join' probe kernel's math over the collected rows: an
-    # all-zero query stays zero (arbitrary-but-defined probe order)
-    # instead of NaN-poisoning its argsort, so both modes agree on it
+    # an all-zero query stays zero (arbitrary-but-defined probe order)
+    # instead of NaN-poisoning its argsort
     probe = _probe_order(
         _unit_rows(pd.Series([r[query_vec_col] for r in q_rows])),
         centroids, n_probe,
@@ -2164,38 +1945,21 @@ def ivf_index_topk(
         f"SELECT col1 AS {query_id_col}, col2 AS {query_vec_col},"
         f" col3 AS _list FROM VALUES {vals}"
     )
-    postings = _filtered(
-        _postings_frame(
-            spark, path, probed_lists, snap=_snap, id_ranges=_ranges
+    id_ranges = [tuple(where_range)] if where_range is not None else None
+    postings = _postings_frame(
+        spark, path, probed_lists, snap=snap, id_ranges=id_ranges
+    )
+    if where is not None:
+        postings = postings.where(
+            F.expr(where) if isinstance(where, str) else where
         )
-    )
     candidates = postings.join(F.broadcast(probes), on="_list", how="inner")
-    return _ivf_rank_topk(
-        candidates, k, id_col, vec_col, query_id_col, query_vec_col, dim
-    )
-
-
-def _ivf_rank_topk(
-    candidates: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-    query_vec_col: str,
-    dim: int | None,
-) -> DataFrame:
-    """Shared exact-cosine rerank tail of the IVF index probe paths."""
     scored = candidates.select(
         F.col(query_id_col),
         F.col(id_col),
         cosine(F.col(vec_col), F.col(query_vec_col), dim).alias("_score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("_score"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank")
-    )
+    return _rank_topk(scored, k, query_id_col, id_col)
 
 
 def lsh_ann_topk(
@@ -2245,12 +2009,7 @@ def lsh_ann_topk(
         F.col(id_col),
         cosine(F.col(vec_col), F.col(query_vec_col), dim).alias("_score"),
     ).dropDuplicates([query_id_col, id_col])
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("_score"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank")
-    )
+    return _rank_topk(scored, k, query_id_col, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -2377,44 +2136,48 @@ def semdedup(
 # making the approximate tier itself oracle-gateable (rare among ANN
 # implementations). A zero vector quantizes to all zeros.
 #
-# Distributed shape: quantization is a pure map-side array transform
-# (one higher-order fn per VECTOR — the fine-grained-per-seed HOF
-# pitfall doesn't apply, same reasoning as the cosine fold above); no
-# shuffle, no Python. The prefilter integer dot is explode-on-position
-# against the BROADCAST quantized query set with a map-combined sum
-# (shuffle carries (query, vec, partial) never vectors); integer
-# addition is associative, so any combine order is exact. For large
-# query batches swap the explode-join for the Arrow-BLAS int32 matmul
-# kernel (ivf assignment uses the same shape).
+# Distributed shape: quantization is a pure map-side projection on the
+# exploded vector elements (one array_max per VECTOR, then plain
+# codegen expressions per element); no shuffle, no Python. The
+# prefilter integer dot is explode-on-position against the BROADCAST
+# quantized query set with a map-combined sum (shuffle carries
+# (query, vec, partial) never vectors); integer addition is
+# associative, so any combine order is exact. For large query batches
+# swap the explode-join for the Arrow-BLAS int32 matmul kernel (ivf
+# assignment uses the same shape).
 # ---------------------------------------------------------------------------
 
 
-def quantize_int8(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, qvec array<long>, scale double): symmetric per-vector int8
-    quantization — see the section comment for exactness/scale.
+def _int8_exploded(rel: DataFrame, rid: str, rvec: str, out: str) -> DataFrame:
+    """(rid, __i, out): every vector element's int8 code, one row per
+    position — see the section comment for the quantization. A NULL
+    vector yields no rows.
 
-    This array-valued form is for STORING/SHIPPING the quantized
-    index. Do not ``posexplode`` its output: exploding a
-    transform-built array re-evaluates the lambda per output row
-    (O(dim²) interpreted work per vector); positional consumers
-    should quantize on the exploded raw array instead, as
-    :func:`int8_rerank_topk` does internally."""
-    xd = _to_double(F.col(vec_col))
-    amax = F.array_max(F.transform(xd, F.abs))
-    base = vectors.select(id_col, xd.alias("__xd"), amax.alias("scale"))
-    return base.select(
-        id_col,
-        F.transform(
-            F.col("__xd"),
-            lambda x: F.when(F.col("scale") == 0.0, F.lit(0))
-            .otherwise(F.floor(x * F.lit(127.0) / F.col("scale") + F.lit(0.5)))
-            .cast("long"),
-        ).alias("qvec"),
-        "scale",
+    Not an array transform + posexplode: exploding a transform-built
+    array re-evaluates the lambda per OUTPUT row — O(dim²) interpreted
+    work per vector (measured 0.86 s vs 0.10 s at sf0.1). Instead:
+    amax once per row in its own projection (Generate replicates the
+    computed attribute), explode the RAW array, quantize each element
+    with plain codegen exprs."""
+    amax = F.array_max(
+        F.transform(F.col(rvec), lambda x: F.abs(x.cast("double")))
+    )
+    return rel.select(rid, amax.alias("__amax"), rvec).select(
+        rid,
+        F.posexplode(rvec).alias("__i", "__xf"),
+        "__amax",
+    ).select(
+        rid,
+        "__i",
+        F.when(F.col("__amax") == 0.0, F.lit(0))
+        .otherwise(
+            F.floor(
+                F.col("__xf").cast("double") * F.lit(127.0) / F.col("__amax")
+                + F.lit(0.5)
+            )
+        )
+        .cast("long")
+        .alias(out),
     )
 
 
@@ -2433,36 +2196,8 @@ def int8_rerank_topk(
     vectors → exact float cosine rerank of the ``shortlist`` →
     (query_id, vec_id, rank 1..k). Both stages deterministic
     (integer stage exactly; rerank with vec_id tie-break)."""
-    def _q_exploded(rel: DataFrame, rid: str, rvec: str, out: str) -> DataFrame:
-        # NOT quantize_int8 + posexplode(qvec): exploding a transform-
-        # built array re-evaluates the lambda per OUTPUT row — O(dim²)
-        # interpreted work per vector (measured 0.86 s vs 0.10 s at
-        # sf0.1). Instead: amax once per row in its own projection
-        # (Generate replicates the computed attribute), explode the RAW
-        # array, quantize each element with plain codegen exprs.
-        amax = F.array_max(
-            F.transform(F.col(rvec), lambda x: F.abs(x.cast("double")))
-        )
-        return rel.select(rid, amax.alias("__amax"), rvec).select(
-            rid,
-            F.posexplode(rvec).alias("__i", "__xf"),
-            "__amax",
-        ).select(
-            rid,
-            "__i",
-            F.when(F.col("__amax") == 0.0, F.lit(0))
-            .otherwise(
-                F.floor(
-                    F.col("__xf").cast("double") * F.lit(127.0) / F.col("__amax")
-                    + F.lit(0.5)
-                )
-            )
-            .cast("long")
-            .alias(out),
-        )
-
-    qq = _q_exploded(queries, query_id_col, query_vec_col, "__qq")
-    cq = _q_exploded(vectors, id_col, vec_col, "__cq")
+    qq = _int8_exploded(queries, query_id_col, query_vec_col, "__qq")
+    cq = _int8_exploded(vectors, id_col, vec_col, "__cq")
     scored = (
         cq.join(F.broadcast(qq), ["__i"])
         .groupBy(query_id_col, id_col)
@@ -2488,12 +2223,7 @@ def int8_rerank_topk(
             cosine(F.col(vec_col), F.col(query_vec_col), dim).alias("_score"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("_score"), F.asc(id_col))
-    return (
-        rer.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank")
-    )
+    return _rank_topk(rer, k, query_id_col, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -2634,11 +2364,10 @@ def _pq_luts(qmat: np.ndarray, books: np.ndarray) -> np.ndarray:
     The subspace inner products are computed as broadcast-multiply +
     ``sum(axis=-1)`` rather than a BLAS matmul on purpose: numpy's
     reduce over a fixed-length axis uses the same pairwise summation
-    tree for any batch size, so the driver LUT path and the executor
-    per-Arrow-batch path (``probe="join"``) produce BIT-IDENTICAL
-    integers for the same query regardless of how queries are
-    batched. A gemm's accumulation order may vary with operand shape;
-    dsub is tiny (dim/m), so the explicit form costs nothing."""
+    tree for any batch size, so a query's integers are BIT-IDENTICAL
+    however many queries share the call. A gemm's accumulation order
+    may vary with operand shape; dsub is tiny (dim/m), so the
+    explicit form costs nothing."""
     m, ksub, dsub = books.shape
     out = np.empty((qmat.shape[0], m, ksub), dtype=np.int64)
     for s in range(m):
@@ -2646,62 +2375,6 @@ def _pq_luts(qmat: np.ndarray, books: np.ndarray) -> np.ndarray:
         ips = (qsub[:, None, :] * books[s][None, :, :]).sum(axis=2)
         out[:, s, :] = np.rint(ips * _PQ_LUT_SCALE).astype(np.int64)
     return out
-
-
-def _lut_frame(
-    queries: DataFrame,
-    books: np.ndarray,
-    query_id_col: str,
-    query_vec_col: str,
-) -> DataFrame:
-    """Distributed integer-ADC lookup tables as a DataFrame (r11,
-    VERDICT r10 #1): ONE ``mapInPandas`` over the QUERY table only →
-    (query_id, __sub, __code, __part), Q×m×ksub rows of longs. The
-    query vectors never leave their executor batch — downstream
-    scoring joins this relation against exploded corpus codes
-    entirely JVM-side, so the join probe ships codes + LUT rows only:
-    the FAISS memory story (a query costs m×ksub ints, not dim
-    floats, once its LUT exists). Integers come from the shared
-    :func:`_pq_luts` builder, so they are bit-identical to the driver
-    LUT path for any query batching."""
-    import pandas as pd  # executor-side import mirrors kernel use
-
-    m, ksub, _ = books.shape
-    qid_field = queries.select(query_id_col).schema.fields[0]
-    out_schema = T.StructType([
-        T.StructField(query_id_col, qid_field.dataType, qid_field.nullable),
-        T.StructField("__sub", T.IntegerType(), False),
-        T.StructField("__code", T.IntegerType(), False),
-        T.StructField("__part", T.LongType(), False),
-    ])
-
-    def kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            qmat = np.stack(pdf[query_vec_col].to_numpy()).astype(np.float64)
-            qnorms = np.linalg.norm(qmat, axis=1, keepdims=True)
-            np.divide(qmat, qnorms, out=qmat, where=qnorms > 0)
-            luts = _pq_luts(qmat, books)  # (nq, m, ksub) int64
-            nq = len(pdf)
-            yield pd.DataFrame(
-                {
-                    query_id_col: np.repeat(
-                        pdf[query_id_col].to_numpy(), m * ksub
-                    ),
-                    "__sub": np.tile(
-                        np.repeat(np.arange(m, dtype=np.int32), ksub), nq
-                    ),
-                    "__code": np.tile(
-                        np.arange(ksub, dtype=np.int32), nq * m
-                    ),
-                    "__part": luts.reshape(-1),
-                }
-            )
-
-    return queries.select(query_id_col, query_vec_col).mapInPandas(
-        kernel, out_schema
-    )
 
 
 def _adc_tail(
@@ -2715,12 +2388,9 @@ def _adc_tail(
     query_id_col: str,
     query_vec_col: str,
     dim: int | None,
-    broadcast_queries: bool,
 ) -> DataFrame:
     """Shared ADC tail: integer-shortlist window → exact-cosine
-    rerank. ``broadcast_queries=False`` on the join path keeps the
-    rerank a plain equi-join (AQE decides) so an unbounded query
-    table never forces a driver-sized broadcast."""
+    rerank against the broadcast (driver-bounded) query set."""
     wa = Window.partitionBy(query_id_col).orderBy(
         F.desc("__adc"), F.asc(id_col)
     )
@@ -2729,11 +2399,10 @@ def _adc_tail(
         .filter(F.col("__ra") <= shortlist)
         .select(query_id_col, id_col)
     )
-    qsel = queries.select(query_id_col, query_vec_col)
     rer = (
         short.join(vectors.select(id_col, vec_col), [id_col])
         .join(
-            F.broadcast(qsel) if broadcast_queries else qsel,
+            F.broadcast(queries.select(query_id_col, query_vec_col)),
             [query_id_col],
         )
         .select(
@@ -2742,12 +2411,7 @@ def _adc_tail(
             cosine(F.col(vec_col), F.col(query_vec_col), dim).alias("_score"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("_score"), F.asc(id_col))
-    return (
-        rer.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank")
-    )
+    return _rank_topk(rer, k, query_id_col, id_col)
 
 
 def pq_adc_topk(
@@ -2766,34 +2430,16 @@ def pq_adc_topk(
     query_vec_col: str = "query_vec",
     dim: int | None = None,
     index_cache_key: str | None = None,
-    probe: str = "driver",
-    max_driver_queries: int | None = None,
 ) -> DataFrame:
     """Two-stage PQ retrieval: integer-ADC shortlist over PQ codes →
     exact float cosine rerank → (query_id, vec_id, rank 1..k).
 
-    ``probe`` picks where the ADC lookup tables are built (r10,
-    VERDICT r9 #1 — the same split as :func:`ivf_index_topk`):
-
-    - ``"driver"`` (default): the query set is collected driver-side
-      into one broadcast LUT relation and scoring is pure JVM codegen
-      (posexplode ⋈ broadcast ⋈ map-side sum). Right for bounded,
-      model-artifact-sized query sets — the fast path at bench scale.
-    - ``"join"``: the query set STAYS a DataFrame end-to-end — the
-      integer LUT relation is built by ONE ``mapInPandas`` over the
-      query table (:func:`_lut_frame`, Q×m×ksub long rows) and
-      scoring is the same pure-JVM shape as the driver path
-      (posexplode(codes) ⋈ LUT → map-combined sum), so the pair
-      relation carries ids + integers ONLY — no per-pair query-vector
-      Arrow payload anywhere (r11, VERDICT r10 #1). The rerank join
-      does not broadcast the queries. Row-identical to ``"driver"``:
-      both paths draw their integers from :func:`_pq_luts`.
-      Scale envelope: all-pairs ADC is only sane when one side is
-      bounded, and a bounded side's LUT (128 longs per query at
-      m=8, ksub=16) broadcasts far past any collectable query-vector
-      set; for unbounded-×-unbounded use :func:`ivf_pq_topk`, whose
-      candidate restriction keys the LUT join on query_id and lets
-      AQE shuffle it.
+    The query set is collected driver-side (bounded by
+    :func:`_collect_query_rows`) into one broadcast LUT relation, and
+    scoring is pure JVM codegen (posexplode ⋈ broadcast ⋈ map-side
+    sum). All-pairs ADC is only sane when the query side is bounded;
+    for large query sets use :func:`ivf_pq_topk`, whose candidate
+    restriction shrinks the ADC volume to the probed lists.
 
     Codebooks are cached under ``index_cache_key`` in the shared
     trained-index LRU (see :func:`ivf_ann_topk` for the staleness
@@ -2812,35 +2458,12 @@ def pq_adc_topk(
         if cache_key:
             _ivf_cache_put(cache_key, books)
 
-    if probe == "join":
-        codes = pq_encode(vectors, books, id_col=id_col, vec_col=vec_col)
-        lut = _lut_frame(queries, books, query_id_col, query_vec_col)
-        exploded = codes.select(
-            id_col, F.posexplode("codes").alias("__sub", "__code")
-        )
-        # broadcast on purpose: the join key (__sub, __code) has only
-        # m×ksub distinct values, so a shuffled join would collapse to
-        # ≤128 partitions; the broadcast hash join streams the N×m×Q
-        # match expansion straight into the map-side partial sum.
-        scored = (
-            exploded.join(F.broadcast(lut), ["__sub", "__code"])
-            .groupBy(query_id_col, id_col)
-            .agg(F.sum("__part").alias("__adc"))
-        )
-        return _adc_tail(
-            scored, vectors, queries, k, shortlist, id_col, vec_col,
-            query_id_col, query_vec_col, dim, broadcast_queries=False,
-        )
-    if probe != "driver":
-        raise ValueError(f"probe must be 'driver' or 'join', got {probe!r}")
-
     # Per-query integer LUT: (query_id, sub, code, part). n_q × m × ksub
     # rows of longs — broadcastable at any corpus size, built as a
     # VALUES LocalRelation (r12: the ExistingRDD spelling re-ran a
     # tiny broadcast-rebuild job at every action, ~0.25 s fixed tax).
     lut = _lut_local_frame(
-        vectors.sparkSession, queries, books, query_id_col, query_vec_col,
-        max_driver_queries,
+        vectors.sparkSession, queries, books, query_id_col, query_vec_col
     )
 
     codes = pq_encode(vectors, books, id_col=id_col, vec_col=vec_col)
@@ -2854,7 +2477,7 @@ def pq_adc_topk(
     )
     return _adc_tail(
         scored, vectors, queries, k, shortlist, id_col, vec_col,
-        query_id_col, query_vec_col, dim, broadcast_queries=True,
+        query_id_col, query_vec_col, dim,
     )
 
 
@@ -3009,8 +2632,6 @@ def ivf_pq_topk(
     query_vec_col: str = "query_vec",
     dim: int | None = None,
     index_cache_key: str | None = None,
-    probe: str = "driver",
-    max_driver_queries: int | None = None,
 ) -> DataFrame:
     """IVF-PQ: the FAISS ``IVFPQ`` composition, Spark-first — the
     coarse quantizer restricts candidates to ``n_probe`` inverted
@@ -3024,23 +2645,10 @@ def ivf_pq_topk(
     ``index_cache_key``. Recall trades via (n_probe, shortlist);
     gated against brute force in tests like the other tiers.
 
-    ``probe`` (r10, VERDICT r9 #1): ``"driver"`` collects the query
-    set once for the broadcast probe relation + broadcast integer LUT
-    (pure-JVM scoring; right for bounded query sets).  ``"join"``
-    keeps the query set a DataFrame end-to-end: probe lists come from
-    a pandas_udf over the query rows, candidates form by joining the
-    list-assigned corpus on ``_list``, and ADC scoring is the same
-    pure-JVM posexplode(codes) ⋈ LUT shape as the driver path, with
-    the LUT relation built distributed by ONE ``mapInPandas`` over
-    the query table (:func:`_lut_frame`) — no ``toPandas()`` of the
-    query table anywhere, no per-pair query-vector payload in the
-    candidate relation (r11, VERDICT r10 #1), rerank join not
-    broadcast. Unlike :func:`pq_adc_topk`'s all-pairs join probe,
-    the LUT join here keys on (query_id, __sub, __code) — full
-    cardinality — and carries no broadcast hint, so AQE broadcasts a
-    small LUT and shuffle-joins an unbounded one: the true
-    corpus-vs-corpus scale path. Row-identical to ``"driver"``
-    (shared :func:`_pq_luts` integers; parity-tested)."""
+    The query set is collected once (bounded by
+    :func:`_collect_query_rows`) for the broadcast integer LUT; probe
+    lists come from the same Arrow-batched kernel as
+    :func:`ivf_ann_topk`, and scoring is pure JVM."""
     # --- coarse quantizer (same contract as ivf_ann_topk) ----------
     centroids = _sample_centroids(
         vectors, n_lists, train_sample, n_iter, seed, vec_col, index_cache_key
@@ -3064,41 +2672,8 @@ def ivf_pq_topk(
         if pkey:
             _ivf_cache_put(pkey, books)
 
-    if probe == "join":
-        indexed = vectors.withColumn("_list", assign_list(F.col(vec_col)))
-        codes = pq_encode(indexed, books, id_col=id_col, vec_col=vec_col)
-        probes = queries.select(
-            query_id_col,
-            F.explode(probe_lists(F.col(query_vec_col))).alias("_list"),
-        )
-        cand_ids = (
-            indexed.select(id_col, "_list")
-            .join(probes, "_list")
-            .select(query_id_col, id_col)
-        )
-        lut = _lut_frame(queries, books, query_id_col, query_vec_col)
-        exploded = codes.select(
-            id_col, F.posexplode("codes").alias("__sub", "__code")
-        )
-        # no broadcast hint: the (query_id, __sub, __code) key is full-
-        # cardinality, so AQE broadcasts a small LUT and shuffle-joins
-        # an unbounded one — candidates and LUT both stay distributed.
-        scored = (
-            cand_ids.join(exploded, [id_col])
-            .join(lut, [query_id_col, "__sub", "__code"])
-            .groupBy(query_id_col, id_col)
-            .agg(F.sum("__part").alias("__adc"))
-        )
-        return _adc_tail(
-            scored, vectors, queries, k, shortlist, id_col, vec_col,
-            query_id_col, query_vec_col, dim, broadcast_queries=False,
-        )
-    if probe != "driver":
-        raise ValueError(f"probe must be 'driver' or 'join', got {probe!r}")
-
     lut = _lut_local_frame(
-        vectors.sparkSession, queries, books, query_id_col, query_vec_col,
-        max_driver_queries,
+        vectors.sparkSession, queries, books, query_id_col, query_vec_col
     )
 
     # --- candidate restriction THEN integer-ADC, all JVM-side -------
@@ -3130,7 +2705,7 @@ def ivf_pq_topk(
     )
     return _adc_tail(
         scored, vectors, queries, k, shortlist, id_col, vec_col,
-        query_id_col, query_vec_col, dim, broadcast_queries=True,
+        query_id_col, query_vec_col, dim,
     )
 
 

@@ -773,23 +773,6 @@ def _weights_from_bucket_counts(per_bucket: DataFrame) -> DataFrame:
     )
 
 
-def _stop_labels(
-    df: DataFrame, text_col: str, id_col: str
-) -> DataFrame:
-    """Weak labels from the text: +1 iff stopword density >= 1/16."""
-    toked = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("__tok"))
-    return toked.groupBy(id_col).agg(
-        F.when(
-            F.lit(TCLS_STOP_DENSITY)
-            * F.sum(F.col("__tok").isin(*TCLS_STOPWORDS).cast("long"))
-            >= F.count(F.lit(1)),
-            F.lit(1),
-        )
-        .otherwise(F.lit(-1))
-        .alias("y")
-    )
-
-
 def trained_classifier_weights(
     df: DataFrame,
     text_col: str = "text",

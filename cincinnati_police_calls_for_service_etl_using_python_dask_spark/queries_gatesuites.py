@@ -128,7 +128,7 @@ _suite(
 # the tail (k-means isn't SQL-expressible; tests pin its equivalence).
 # Round 5: the int8 two-stage retrieval joins the gated family — its
 # quantization is IEEE-exact, so even this approximate tier carries a
-# full oracle (rare for ANN; see similarity.py:quantize_int8).
+# full oracle (rare for ANN; see similarity.py:_int8_exploded).
 #
 # Round 6 (VERDICT r5 #5): fused spelling — both the cos_pairs and
 # semdedup members are views over the SAME ≥0.4 cosine pair set
@@ -283,9 +283,8 @@ _suite(
 #
 # r12 (VERDICT r11 #1): the maintained-ANN-index family joins the
 # gated slot — ann_ivf_index_maintained (the r11 flagship: CDC-
-# maintained postings, exhaustive-probe-exact, DML-replay oracle),
-# the two distributed-LUT ADC join-probe twins (replay oracles shared
-# with their driver-probe spellings), and the r12 fully maintained
+# maintained postings, exhaustive-probe-exact, DML-replay oracle) and
+# the r12 fully maintained
 # IVF-PQ composition (maintained postings × maintained codes, frozen
 # models, all-pairs PQ replay oracle over the DML corpus). Every
 # member keeps its granular tail registration for bench continuity;
@@ -299,10 +298,8 @@ _suite(
 # document frequency (ivm_text_df_view) and full BM25 with zero corpus
 # access (bm25_maintained_topk), the drift probe over the maintained
 # postings (ann_ivf_maintained_drift: per-list occupancy + quantized
-# cohesion vs the marker-resolved model), and the DataFrame-scale join
-# twin of the fully maintained IVF-PQ composition
-# (ann_ivf_pq_maintained_join). All four carry full oracles; the two
-# index fixtures (the DML'd TxTable corpus and the maintained text
+# cohesion vs the marker-resolved model). All three carry full
+# oracles; the two index fixtures (the DML'd TxTable corpus and the maintained text
 # state) are session-cached, so the suite's warm runs time serving,
 # not construction.
 _suite(
@@ -311,10 +308,7 @@ _suite(
         ("bm25", "bm25_topk_docs"),
         ("cms_topk", "cms_top_tokens_docs"),
         ("ivf_maintained", "ann_ivf_index_maintained"),
-        ("pq_join", "ann_pq_topk_join"),
-        ("ivf_pq_join", "ann_ivf_pq_topk_join"),
         ("ivf_pq_maintained", "ann_ivf_pq_maintained"),
-        ("ivf_pq_maintained_join", "ann_ivf_pq_maintained_join"),
         ("drift", "ann_ivf_maintained_drift"),
         ("text_df_view", "ivm_text_df_view"),
         ("bm25_maintained", "bm25_maintained_topk"),

@@ -708,41 +708,6 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# r11 (VERDICT r10 #1/#5): the JOIN-probe twins as first-class
-# registered queries. probe="join" keeps the query set a DataFrame
-# end-to-end (distributed LUT via one mapInPandas over queries; pure-
-# JVM posexplode(codes) ⋈ LUT scoring; no query-vector payload in the
-# pair relation) and is row-identical to the driver path by
-# construction (shared _pq_luts integers, pytest parity-pinned), so
-# both reuse the SAME replay oracle. Tail-registered: locally
-# oracle-gated + benched + scale-panelled; the driver-probe spellings
-# keep the 50-window slots.
-
-
-@register("ann_pq_topk_join", _ann_pq_oracle)
-def q_ann_pq_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = read_testdata(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return sim.pq_adc_topk(
-        emb, queries, k=10, m=8, ksub=16, shortlist=50,
-        index_cache_key=sf_dir, dim=64, probe="join",
-    )
-
-
-@register("ann_ivf_pq_topk_join", _ann_ivf_pq_oracle)
-def q_ann_ivf_pq_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = read_testdata(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return sim.ivf_pq_topk(
-        emb, queries, k=10, n_lists=16, n_probe=4, m=8, ksub=16,
-        shortlist=50, index_cache_key=sf_dir, dim=64, probe="join",
-    )
-
-
 @register(
     "embedding_norms",
     """
@@ -895,7 +860,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shortlist → exact float cosine rerank. The integer stage re-derives
 # bit-identically in DuckDB (floor(x·127/amax + 0.5) is exact IEEE on
 # both engines), so even the APPROXIMATE tier is fully oracle-gated —
-# see operators/similarity.py:quantize_int8.
+# see operators/similarity.py:_int8_exploded.
 # ---------------------------------------------------------------------------
 
 _I8_K = 10

@@ -674,8 +674,8 @@ def q_multimodal_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round 5: the whole suite is ONE Arrow crossing
     # (mm.multimodal_pipeline) — stub geometry × frame fanout ×
     # real-pixel resample checksums emitted pre-joined. Row-identical
-    # to the composed spelling geometry_frames ⋈ synth_resize_png ⋈ …
-    # (test-pinned); each extra Python stage costs a fixed runner
+    # to the composed spelling resize_metadata ⋈ frame_sample ⋈ the
+    # resample kernel (test-pinned); each extra Python stage costs a fixed runner
     # handshake (~0.2 s at local[32]), which dominated this gate's r4
     # wall-clock, so the gate uses the fused form.
     docs = _t(spark, sf_dir, "documents")

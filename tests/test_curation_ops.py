@@ -597,10 +597,39 @@ def test_checks_empty_relation_reports_zero_violations(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round-4: real pixel resampling (resize_image). Goldens come from an
-# INDEPENDENT pure-Python reimplementation (per-pixel loops, no numpy)
-# so a kernel bug can't validate itself.
+# Round-4: real pixel resampling (the resample kernel that
+# multimodal_pipeline runs). Goldens come from an INDEPENDENT
+# pure-Python reimplementation (per-pixel loops, no numpy) so a kernel
+# bug can't validate itself.
 # ---------------------------------------------------------------------------
+
+
+def _resize_image(df, max_w=224, max_h=224, method="nearest"):
+    """The resample kernel over a (doc_id, payload) frame, one row per
+    doc: geometry plus px_count / px_sum / px_wsum checksums, and
+    status 'error' for a payload that is not a PNG."""
+    from pyspark.sql import types as T
+
+    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators import (
+        multimodal as mm,
+    )
+
+    schema = T.StructType(
+        [T.StructField("doc_id", T.LongType())]
+        + [
+            T.StructField(c, T.IntegerType())
+            for c in ("src_width", "src_height", "out_width", "out_height")
+        ]
+        + [T.StructField(c, T.LongType()) for c in ("px_count", "px_sum", "px_wsum")]
+        + [T.StructField("status", T.StringType())]
+    )
+
+    def run(batches):
+        for pdf in batches:
+            if len(pdf):
+                yield mm._resize_kernel(pdf, max_w, max_h, method)
+
+    return df.select("doc_id", "payload").mapInPandas(run, schema)
 
 
 def _reference_resample(px, w, h, ch, max_w, max_h, method):
@@ -641,7 +670,7 @@ def test_resize_image_matches_reference_impl(spark, method):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: r.asDict()
-        for r in mm.resize_image(
+        for r in _resize_image(
             mm.attach_png_payload(df), max_w=5, max_h=5, method=method
         ).collect()
     }
@@ -670,7 +699,7 @@ def test_resize_image_identity_when_fits(spark):
         [(1, "identity test payload"), (2, "x")], "doc_id long, text string"
     )
     for method in ("nearest", "box"):
-        for r in mm.resize_image(
+        for r in _resize_image(
             mm.attach_png_payload(df), max_w=64, max_h=64, method=method
         ).collect():
             assert (r["out_width"], r["out_height"]) == (
@@ -699,7 +728,7 @@ def test_resize_image_poisoned_payload_is_error_row(spark):
     )
     out = {
         r["doc_id"]: r["status"]
-        for r in mm.resize_image(
+        for r in _resize_image(
             good.select("doc_id", "payload").unionByName(bad), max_w=4, max_h=4
         ).collect()
     }
@@ -719,6 +748,29 @@ def _mm_docs(spark, n=40):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _video_metadata(docs):
+    """Per-doc container metadata of the fixture MP4s, one mapInPandas
+    over the parser's batch kernel — the granular 'video' seg that
+    synth_decode_media fuses."""
+    import pandas as pd
+
+    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators import (
+        mp4 as m4,
+    )
+
+    schema = (
+        "doc_id long, width int, height int, n_frames int, dur_ms long, "
+        "fr_sum long, fr_wsum long, status string"
+    )
+
+    def run(batches):
+        for pdf in batches:
+            if len(pdf):
+                yield pd.DataFrame(m4.video_meta_rows(pdf["doc_id"], pdf["text"]))
+
+    return docs.select("doc_id", "text").mapInPandas(run, schema)
+
+
 def test_fused_media_matches_union(spark):
     """synth_decode_media (one Arrow crossing) is row-identical to the
     4-way seg-discriminated unionByName of the granular decode
@@ -728,9 +780,6 @@ def test_fused_media_matches_union(spark):
 
     from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators import (
         audio as aud,
-    )
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators import (
-        mp4 as m4,
     )
     from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators import (
         multimodal as mm,
@@ -746,7 +795,7 @@ def test_fused_media_matches_union(spark):
             allowMissingColumns=True,
         )
         .unionByName(
-            m4.synth_video_metadata(docs).select(F.lit("video").alias("seg"), "*"),
+            _video_metadata(docs).select(F.lit("video").alias("seg"), "*"),
             allowMissingColumns=True,
         )
         .unionByName(
@@ -797,11 +846,6 @@ def test_fused_spellings_match_composed(spark):
             key=lambda t: tuple((v is None, v) for v in t),
         )
 
-    composed_resize = mm.resize_image(
-        mm.attach_png_payload(docs), max_w=6, max_h=6, method="nearest"
-    )
-    assert rows(mm.synth_resize_png(docs, max_w=6, max_h=6)) == rows(composed_resize)
-
     payload = mm.attach_binary_payload(docs)
     composed_geo = (
         mm.resize_metadata(payload, max_w=100, max_h=100)
@@ -811,21 +855,17 @@ def test_fused_spellings_match_composed(spark):
             "frame_idx", "frame_ts_ms",
         )
     )
-    assert rows(mm.geometry_frames(payload, max_w=100, max_h=100)) == rows(composed_geo)
 
-    from pyspark.sql import functions as F
-
-    composed_pipeline = (
-        mm.geometry_frames(payload, max_w=100, max_h=100)
-        .join(
-            mm.synth_resize_png(docs, max_w=6, max_h=6).select(
-                "doc_id",
-                F.col("out_width").alias("rs_out_w"),
-                F.col("out_height").alias("rs_out_h"),
-                "px_count", "px_sum", "px_wsum",
-            ),
+    composed_pipeline = composed_geo.join(
+        _resize_image(
+            mm.attach_png_payload(docs), max_w=6, max_h=6, method="nearest"
+        ).select(
             "doc_id",
-        )
+            F.col("out_width").alias("rs_out_w"),
+            F.col("out_height").alias("rs_out_h"),
+            "px_count", "px_sum", "px_wsum",
+        ),
+        "doc_id",
     )
     fused = mm.multimodal_pipeline(
         docs, max_w=100, max_h=100, px_max_w=6, px_max_h=6, parallelism=2
@@ -962,6 +1002,22 @@ def test_jpeg_fused_matches_composed(spark):
 # ---------------------------------------------------------------------------
 
 
+def _stop_labels(df, text_col, id_col):
+    """Weak labels from the text: +1 iff stopword density >= 1/16 —
+    the held-out truth the trained classifier is scored against."""
+    toked = df.select(F.col(id_col), F.explode(tx.tokens(text_col)).alias("__tok"))
+    return toked.groupBy(id_col).agg(
+        F.when(
+            F.lit(tx.TCLS_STOP_DENSITY)
+            * F.sum(F.col("__tok").isin(*tx.TCLS_STOPWORDS).cast("long"))
+            >= F.count(F.lit(1)),
+            F.lit(1),
+        )
+        .otherwise(F.lit(-1))
+        .alias("y")
+    )
+
+
 def test_trained_classifier_heldout_accuracy_lift(spark):
     from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators.sampling import (
         _key_expr,
@@ -978,7 +1034,7 @@ def test_trained_classifier_heldout_accuracy_lift(spark):
     )
     truth = {
         r["doc_id"]: ("keep" if r["y"] == 1 else "drop")
-        for r in tx._stop_labels(heldout, "text", "doc_id").collect()
+        for r in _stop_labels(heldout, "text", "doc_id").collect()
     }
     trained = {r["doc_id"]: r["label"] for r in tx.trained_quality_classifier(docs).collect()}
     placebo = {r["doc_id"]: r["label"] for r in tx.hashed_ngram_classifier(docs).collect()}

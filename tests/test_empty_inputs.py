@@ -100,15 +100,7 @@ _CASES = {
     "pack_sequences": lambda s: pk.pack_sequences(
         _docs(s).select("doc_id", F.lit(3).alias("n_tok")), "n_tok", 10, key_cols=["doc_id"]
     ),
-    "resize_image": lambda s: mm.resize_image(
-        _docs(s).select("doc_id", F.encode("text", "UTF-8").alias("payload"))
-    ),
-    "geometry_frames": lambda s: mm.geometry_frames(
-        _docs(s).select("doc_id", F.encode("text", "UTF-8").alias("payload"))
-    ),
-    "synth_resize_png": lambda s: mm.synth_resize_png(_docs(s)),
     "synth_video_frames": lambda s: _mp4_mod().synth_video_frames(_docs(s)),
-    "synth_video_metadata": lambda s: _mp4_mod().synth_video_metadata(_docs(s)),
     "synth_audio_metadata": lambda s: _audio_mod().synth_audio_metadata(_docs(s)),
     "synth_h264_metadata": lambda s: mm.synth_h264_metadata(_docs(s)),
     "synth_aac_metadata": lambda s: mm.synth_aac_metadata(_docs(s)),
@@ -123,7 +115,6 @@ _CASES = {
         dim=64,
     ),
     "semdedup": lambda s: sim.semdedup(_emb(s)),
-    "quantize_int8": lambda s: sim.quantize_int8(_emb(s)),
     "int8_rerank_topk": lambda s: sim.int8_rerank_topk(
         _emb(s),
         _emb(s).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")),

@@ -434,20 +434,6 @@ def test_multimodal_frame_sample_fanout(spark):
         assert sorted(frames) == [(i, i * 250) for i in range(expected)]
 
 
-def test_multimodal_extract_features_shape(spark):
-    docs = read_testdata(spark, SF_SMOKE, "documents").limit(10)
-    out = mm.extract_features(mm.attach_binary_payload(docs)).collect()
-    assert len(out) == 10
-    for r in out:
-        assert len(r["features"]) == mm.FEATURE_DIM
-        assert all(0.0 <= f < 1.0 for f in r["features"])
-    # deterministic: same input -> identical vectors on rerun
-    again = mm.extract_features(mm.attach_binary_payload(docs)).collect()
-    assert {r["doc_id"]: r["features"] for r in out} == {
-        r["doc_id"]: r["features"] for r in again
-    }
-
-
 def test_bpe_like_token_count(spark):
     df = spark.createDataFrame(
         [(1, "don't stop"), (2, ""), (3, "a1b2"), (4, "hello, world! 42")],
@@ -729,20 +715,26 @@ def test_decode_image_metadata_real_bytes(spark):
 
 
 def test_ivf_persistent_index_matches_adhoc_and_prunes(spark, tmp_path):
-    """build_ivf_index/ivf_index_topk (round 5): the persisted index
-    must return row-identical results to the ad-hoc tier with the same
-    hyperparameters, and the probe scan must carry a PartitionFilter on
-    _list — only the probed lists' directories are read (sub-linear
-    index I/O, the property that matters at 100 TB)."""
-    import io
-    from contextlib import redirect_stdout
+    """refresh_ivf_index/ivf_index_topk: the persisted index must return
+    row-identical results to the ad-hoc tier with the same centroids,
+    and a probe must open fewer postings files than the index holds —
+    only the probed lists' files are read (sub-linear index I/O, the
+    property that matters at 100 TB)."""
+    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.txtable import (
+        TxTable,
+    )
 
     emb = read_testdata(spark, SF_SMOKE, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
+    src = TxTable.create(
+        spark, str(tmp_path / "src"), emb.select("vec_id", "embedding")
+    )
     path = str(tmp_path / "ivf")
-    sim.build_ivf_index(emb, path, n_lists=8, n_iter=4, seed=7)
+    # the ad-hoc tier's quantizer: same sample rows, same hyperparameters
+    cents = sim._sample_centroids(emb, 8, 100_000, 4, 7, "embedding")
+    sim.refresh_ivf_index(spark, src, path, centroids=cents)
     got = sorted(
         map(tuple, sim.ivf_index_topk(spark, path, queries, k=5, n_probe=4).collect())
     )
@@ -750,12 +742,13 @@ def test_ivf_persistent_index_matches_adhoc_and_prunes(spark, tmp_path):
         map(tuple, sim.ivf_ann_topk(emb, queries, k=5, n_lists=8, n_probe=4, n_iter=4, seed=7).collect())
     )
     assert got == adhoc
-    # partition pruning: the postings scan must filter on _list
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        sim.ivf_index_topk(spark, path, queries, k=5, n_probe=2).explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan and "_list" in plan
+    # file pruning: a one-list probe opens only that list's files
+    total = len(TxTable(spark, f"{path}/postings_tx").snapshot().files)
+    one = queries.filter(F.col("query_id") == 0)
+    opened = len(
+        sim.ivf_index_topk(spark, path, one, k=5, n_probe=1).inputFiles()
+    )
+    assert 0 < opened < total
 
 
 def test_refresh_ivf_index_maintains_under_dml(spark, tmp_path):
@@ -823,16 +816,6 @@ def test_refresh_ivf_index_maintains_under_dml(spark, tmp_path):
     )
     brute = sorted(map(tuple, sim.brute_force_topk(cur, queries, k=5).collect()))
     assert maintained == brute
-    # the join-probe path reads the maintained layout identically
-    joined = sorted(
-        map(
-            tuple,
-            sim.ivf_index_topk(
-                spark, idx, queries, k=5, n_probe=4, probe="join"
-            ).collect(),
-        )
-    )
-    assert joined == maintained
 
     # crash-after-commit replay: no new commit, no data change
     hist = len(postings.history())
@@ -1835,141 +1818,6 @@ def test_minhash_index_serving_honors_hot_bucket_cap(spark, tmp_path):
     assert got == {(p, c) for p in (n - 2, n - 1) for c in range(cap)}
 
 
-def test_pq_codes_maintained_join_probe_parity(spark, tmp_path):
-    """VERDICT r12 #3: pq_codes_maintained_topk(probe='join') — the
-    DataFrame-scale twin of the driver probe over the maintained
-    layout. Row-identical to probe='driver' for both shapes (all-pairs
-    ADC and the full IVF-PQ composition), including after DML churn;
-    and the join path never collects the query table (it works above
-    a driver bound that makes the driver path refuse)."""
-    import numpy as np
-
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.txtable import (
-        TxTable,
-    )
-
-    rng = np.random.default_rng(47)
-
-    def frame(ids):
-        return spark.createDataFrame(
-            [(i, [float(x) for x in rng.normal(size=8)]) for i in ids],
-            "vec_id long, embedding array<float>",
-        )
-
-    src = TxTable.create(spark, str(tmp_path / "src"), frame(range(40)))
-    pqp, idx = str(tmp_path / "pq"), str(tmp_path / "idx")
-    sim.refresh_pq_codes(spark, src, pqp, m=4, ksub=8, n_iter=4, seed=47)
-    sim.refresh_ivf_index(spark, src, idx, n_lists=4, n_iter=4, seed=47)
-    # churn both tiers so the parity covers folded state, not just init
-    src.delete(F.col("vec_id") % 10 == 3)
-    src.update(
-        F.col("vec_id") < 4,
-        {"embedding": F.transform(F.col("embedding"), lambda x: -x)},
-    )
-    src.append(frame(range(100, 106)))
-    sim.refresh_pq_codes(spark, src, pqp)
-    sim.refresh_ivf_index(spark, src, idx)
-
-    cur = src.read()
-    queries = cur.filter(F.col("vec_id").isin(1, 18, 101)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    for extra in (
-        {},
-        {"ivf_path": idx, "n_probe": 4},
-        {"ivf_path": idx, "n_probe": 2},
-    ):
-        drv = sorted(
-            map(
-                tuple,
-                sim.pq_codes_maintained_topk(
-                    spark, pqp, queries, cur, k=5, shortlist=12, **extra
-                ).collect(),
-            )
-        )
-        jn = sorted(
-            map(
-                tuple,
-                sim.pq_codes_maintained_topk(
-                    spark, pqp, queries, cur, k=5, shortlist=12,
-                    probe="join", **extra,
-                ).collect(),
-            )
-        )
-        assert jn == drv, extra
-    # r11 doctrine holds on the maintained layout too: the pair
-    # relation ships codes + LUT ints only — no plan node carries the
-    # query vector alongside the codes
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        sim.pq_codes_maintained_topk(
-            spark, pqp, queries, cur, k=5, shortlist=12,
-            ivf_path=idx, n_probe=4, probe="join",
-        ).explain(True)
-    offending = [
-        ln for ln in buf.getvalue().splitlines()
-        if "codes" in ln and "query_vec" in ln
-    ]
-    assert not offending, offending
-    # the join path is the scale escape hatch the driver guard names
-    with pytest.raises(ValueError, match="probe='join'"):
-        sim.pq_codes_maintained_topk(
-            spark, pqp, queries, cur, k=5, shortlist=12,
-            ivf_path=idx, n_probe=4, max_driver_queries=2,
-        )
-    over = sim.pq_codes_maintained_topk(
-        spark, pqp, queries, cur, k=5, shortlist=12,
-        ivf_path=idx, n_probe=4, max_driver_queries=2, probe="join",
-    )
-    assert over.count() == 15  # 3 queries × k=5, no collect anywhere
-    with pytest.raises(ValueError, match="probe must be"):
-        sim.pq_codes_maintained_topk(
-            spark, pqp, queries, cur, k=5, probe="nope"
-        )
-
-
-def test_lut_broadcast_guard_falls_back_exactly(spark, tmp_path, monkeypatch):
-    """ADVICE r13: the all-pairs probe='join' branch force-broadcasts
-    a LUT whose row count is Q·m·ksub — linear in the query table.
-    Above _LUT_BROADCAST_MAX_ROWS the hint is dropped (AQE decides).
-    Forcing the threshold to 0 must change ONLY the plan: rows stay
-    identical, and the plan carries no forced broadcast of the LUT
-    mapInPandas subtree."""
-    import numpy as np
-
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.txtable import (
-        TxTable,
-    )
-
-    rng = np.random.default_rng(53)
-    vecs = spark.createDataFrame(
-        [(i, [float(x) for x in rng.normal(size=8)]) for i in range(30)],
-        "vec_id long, embedding array<float>",
-    )
-    src = TxTable.create(spark, str(tmp_path / "src"), vecs)
-    pqp = str(tmp_path / "pq")
-    sim.refresh_pq_codes(spark, src, pqp, m=4, ksub=8, n_iter=3, seed=53)
-    cur = src.read()
-    queries = cur.limit(3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    kw = dict(k=4, shortlist=10, probe="join")
-    want = sorted(
-        map(
-            tuple,
-            sim.pq_codes_maintained_topk(spark, pqp, queries, cur, **kw)
-            .collect(),
-        )
-    )
-    monkeypatch.setattr(sim, "_LUT_BROADCAST_MAX_ROWS", 0)
-    guarded = sim.pq_codes_maintained_topk(spark, pqp, queries, cur, **kw)
-    assert sorted(map(tuple, guarded.collect())) == want
-    # the logical plan must not carry a broadcast HINT on the LUT side
-    # (AQE may still choose broadcast at runtime — that's the point)
-    lp = guarded._jdf.queryExecution().optimizedPlan().toString()
-    assert "ResolvedHint" not in lp
-
-
 def test_skew_rebuild_trigger_threads_sample_fraction(spark, tmp_path):
     """ADVICE r13: the scheduled drift trigger accepts the sampled
     read added for exactly its cadence-scale case. fraction=1.0 is a
@@ -2096,6 +1944,20 @@ def test_postings_frame_empty_probe_set_returns_typed_empty(spark, tmp_path):
     assert {"vec_id", "embedding", "_list"} <= set(out.columns)
 
 
+def test_ivf_index_topk_without_postings_table_names_refresh(spark, tmp_path):
+    """A path with no maintained postings table is refused up front
+    with a ValueError that names refresh_ivf_index — never a Spark
+    path-not-found error from reading a missing parquet sidecar."""
+    queries = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0])], "query_id long, query_vec array<float>"
+    )
+    empty_dir = tmp_path / "empty"
+    empty_dir.mkdir()
+    for path in (str(tmp_path / "missing"), str(empty_dir)):
+        with pytest.raises(ValueError, match="refresh_ivf_index"):
+            sim.ivf_index_topk(spark, path, queries, k=3, n_probe=1)
+
+
 def test_brute_force_topk_plan_is_scale_safe(spark):
     """r13 (the r12 weak item, pinned as a regression test alongside
     the PLANS.md rows): the ranking exchange must be BOUNDED — a
@@ -2124,14 +1986,17 @@ def test_brute_force_topk_plan_is_scale_safe(spark):
     assert p.count("SQRT(aggregate") == 2, p.count("SQRT(aggregate")
 
 
-def test_driver_probe_query_bound_refused(spark, tmp_path):
-    """VERDICT r12 #5: probe='driver' paths collect the query set —
-    above the configurable bound they must refuse with a pointed
-    error naming probe='join', not silently materialize a query TABLE
-    on the driver. The refusing read is itself bounded
-    (limit(bound+1)), so even the refusal never collects the full
-    set."""
+def test_driver_probe_query_bound_refused(spark, tmp_path, monkeypatch):
+    """VERDICT r12 #5: the probes collect the query set driver-side —
+    above the bound they must refuse with a pointed error, not
+    silently materialize a query TABLE on the driver. The refusing
+    read is itself bounded (limit(bound+1)), so even the refusal never
+    collects the full set. Checked on all four probe functions."""
     import numpy as np
+
+    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.txtable import (
+        TxTable,
+    )
 
     rng = np.random.default_rng(41)
     vecs = spark.createDataFrame(
@@ -2141,29 +2006,34 @@ def test_driver_probe_query_bound_refused(spark, tmp_path):
     queries = vecs.limit(6).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    with pytest.raises(ValueError, match="probe='join'"):
-        sim.pq_adc_topk(
-            vecs, queries, k=3, m=4, ksub=4, n_iter=2,
-            max_driver_queries=3,
-        )
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.txtable import (
-        TxTable,
-    )
-
     src = TxTable.create(spark, str(tmp_path / "bsrc"), vecs)
-    idx = str(tmp_path / "bidx")
+    idx, pqp = str(tmp_path / "bidx"), str(tmp_path / "bpq")
     sim.refresh_ivf_index(spark, src, idx, n_lists=2, n_iter=2, seed=41)
-    with pytest.raises(ValueError, match="probe='join'"):
-        sim.ivf_index_topk(
-            spark, idx, queries, k=3, n_probe=2, max_driver_queries=3
-        )
-    # within the bound both paths work unchanged
-    assert (
-        sim.ivf_index_topk(
-            spark, idx, queries, k=3, n_probe=2, max_driver_queries=6
-        ).count()
-        > 0
-    )
+    sim.refresh_pq_codes(spark, src, pqp, m=4, ksub=4, n_iter=2, seed=41)
+    cur = src.read()
+    probes = {
+        "pq_adc_topk": lambda: sim.pq_adc_topk(
+            vecs, queries, k=3, m=4, ksub=4, n_iter=2
+        ),
+        "ivf_pq_topk": lambda: sim.ivf_pq_topk(
+            vecs, queries, k=3, n_lists=2, n_probe=1, m=4, ksub=4, n_iter=2,
+            pq_iter=2,
+        ),
+        "ivf_index_topk": lambda: sim.ivf_index_topk(
+            spark, idx, queries, k=3, n_probe=2
+        ),
+        "pq_codes_maintained_topk": lambda: sim.pq_codes_maintained_topk(
+            spark, pqp, queries, cur, k=3, shortlist=6, ivf_path=idx, n_probe=2
+        ),
+    }
+    monkeypatch.setattr(sim, "_MAX_DRIVER_QUERIES", 3)
+    for probe in probes.values():
+        with pytest.raises(ValueError, match="driver-probe bound"):
+            probe()
+    # within the bound every probe works unchanged
+    monkeypatch.setattr(sim, "_MAX_DRIVER_QUERIES", 6)
+    for name, probe in probes.items():
+        assert probe().count() > 0, name
 
 
 def test_lut_values_threshold_falls_back_exactly(spark, monkeypatch):
@@ -2189,13 +2059,42 @@ def test_lut_values_threshold_falls_back_exactly(spark, monkeypatch):
     assert got == want
 
 
+def _quantize_int8(vectors, id_col="vec_id", vec_col="embedding"):
+    """Reference array form of symmetric per-vector int8 quantization,
+    (id, qvec array<long>, scale double): q_i = floor(x_i·127/scale +
+    0.5) with scale = max|x|, zeros for a zero vector."""
+    xd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    amax = F.array_max(F.transform(xd, F.abs))
+    base = vectors.select(id_col, xd.alias("__xd"), amax.alias("scale"))
+    return base.select(
+        id_col,
+        F.transform(
+            F.col("__xd"),
+            lambda x: F.when(F.col("scale") == 0.0, F.lit(0))
+            .otherwise(F.floor(x * F.lit(127.0) / F.col("scale") + F.lit(0.5)))
+            .cast("long"),
+        ).alias("qvec"),
+        "scale",
+    )
+
+
 def test_int8_quantization_invariants(spark):
     emb = read_testdata(spark, SF_SMOKE, "embeddings")
     zero = spark.createDataFrame(
         [(9_000_001, [0.0] * 64)], "vec_id long, embedding array<float>"
     )
-    q = sim.quantize_int8(emb.select("vec_id", "embedding").unionByName(zero))
+    corpus = emb.select("vec_id", "embedding").unionByName(zero)
+    q = _quantize_int8(corpus)
     rows = q.collect()
+    # the kept per-element kernel of int8_rerank_topk equals the
+    # reference array form, position by position
+    kernel = {
+        (r["vec_id"], r["__i"]): r["q"]
+        for r in sim._int8_exploded(corpus, "vec_id", "embedding", "q").collect()
+    }
+    assert kernel == {
+        (r["vec_id"], i): v for r in rows for i, v in enumerate(r["qvec"])
+    }
     assert len(rows) == emb.count() + 1
     by_id = {r["vec_id"]: r for r in rows}
     for r in rows:
@@ -2294,8 +2193,10 @@ def test_int8_null_embedding_degrades_not_poisons(spark):
         [(9_000_002, None)], "vec_id long, embedding array<float>"
     )
     corpus = emb.select("vec_id", "embedding").unionByName(nulled)
-    q = {r["vec_id"]: r for r in sim.quantize_int8(corpus).collect()}
+    q = {r["vec_id"]: r for r in _quantize_int8(corpus).collect()}
     assert q[9_000_002]["qvec"] is None and q[9_000_002]["scale"] is None
+    kernel = sim._int8_exploded(corpus, "vec_id", "embedding", "q")
+    assert kernel.filter(F.col("vec_id") == 9_000_002).count() == 0
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -2418,44 +2319,13 @@ def test_pq_distributed_training_recall_and_determinism(spark):
     assert recall >= 0.6, f"PQ recall degenerated: {recall}"
 
 
-def test_ivf_index_join_probe_matches_driver_probe(spark, tmp_path):
-    """r9 (VERDICT r8 #7): the distributed probe path (query set stays
-    a DataFrame; probes shuffle by _list) must be row-identical to the
-    driver-side probe path, keep partition pruning, and reject unknown
-    probe modes."""
-    import io
-    from contextlib import redirect_stdout
-
-    emb = read_testdata(spark, SF_SMOKE, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 25).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    path = str(tmp_path / "ivfj")
-    sim.build_ivf_index(emb, path, n_lists=8, n_iter=4, seed=7)
-    drv = sorted(map(tuple, sim.ivf_index_topk(
-        spark, path, queries, k=5, n_probe=3, probe="driver").collect()))
-    jnd = sorted(map(tuple, sim.ivf_index_topk(
-        spark, path, queries, k=5, n_probe=3, probe="join").collect()))
-    assert drv == jnd
-    # the join path must still prune postings partitions on _list
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        sim.ivf_index_topk(
-            spark, path, queries, k=5, n_probe=2, probe="join"
-        ).explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan and "_list" in plan
-    with pytest.raises(ValueError, match="driver.*join"):
-        sim.ivf_index_topk(spark, path, queries, probe="bogus")
-
-
 def test_ivf_index_probe_modes_agree_on_zero_norm_query(spark, tmp_path):
     """r10 (r9 advisory): an all-zero query vector must not NaN-poison
-    the driver probe's argsort — both probe modes normalize with the
-    same where=norm>0 guard and stay row-identical on it. An all-zero
-    CORPUS row gets the same list from every path that assigns (static
-    build, CDC refresh, ad-hoc probe: one shared kernel), trains no
-    NaN into the centroids, and scores NULL, so it ranks last."""
+    the driver probe's argsort — it normalizes with the where=norm>0
+    guard and still returns its k rows. An all-zero CORPUS row gets
+    the same list from every path that assigns (CDC refresh, ad-hoc
+    probe: one shared kernel), trains no NaN into the centroids, and
+    scores NULL, so it ranks last."""
     import numpy as np
 
     from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.txtable import (
@@ -2477,25 +2347,19 @@ def test_ivf_index_probe_modes_agree_on_zero_norm_query(spark, tmp_path):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     ).unionByName(zq)
-    path = str(tmp_path / "ivfz")
-    sim.build_ivf_index(emb, path, n_lists=4, n_iter=3, seed=7)
-    drv = sorted(map(tuple, sim.ivf_index_topk(
-        spark, path, queries, k=3, n_probe=2, probe="driver").collect()))
-    jnd = sorted(map(tuple, sim.ivf_index_topk(
-        spark, path, queries, k=3, n_probe=2, probe="join").collect()))
-    assert drv == jnd
-    assert all(r == r for t in drv for r in t if isinstance(r, float))  # no NaN
-
-    cen = sim._load_centroids(spark, path)
+    cen = sim._sample_centroids(emb, 4, 100_000, 3, 7, "embedding")
     assert np.isfinite(cen).all()
+    src = TxTable.create(spark, str(tmp_path / "src"), emb)
+    maint = str(tmp_path / "maint")
+    sim.refresh_ivf_index(spark, src, maint, centroids=cen)
+    drv = sorted(map(tuple, sim.ivf_index_topk(
+        spark, maint, queries, k=3, n_probe=2).collect()))
+    assert all(r == r for t in drv for r in t if isinstance(r, float))  # no NaN
+    assert sum(1 for t in drv if t[0] == 9001) == 3
 
     def zero_list(postings) -> int:
         return postings.filter(F.col("vec_id") == zid).select("_list").first()[0]
 
-    built = zero_list(spark.read.parquet(f"{path}/postings"))
-    src = TxTable.create(spark, str(tmp_path / "src"), emb)
-    maint = str(tmp_path / "maint")
-    sim.refresh_ivf_index(spark, src, maint, centroids=cen)
     refreshed = zero_list(TxTable(spark, f"{maint}/postings_tx").read())
     # ad hoc: each centroid, as a one-list probe, returns its whole list
     cq = spark.createDataFrame(
@@ -2507,92 +2371,11 @@ def test_ivf_index_probe_modes_agree_on_zero_norm_query(spark, tmp_path):
     ).collect()
     hits = [r for r in adhoc if r["vec_id"] == zid]
     assert len(hits) == 1
-    assert built == refreshed == hits[0]["query_id"]
+    assert refreshed == hits[0]["query_id"]
     # a NaN score would sort FIRST under desc; NULL sorts last
     assert hits[0]["rank"] == max(
-        r["rank"] for r in adhoc if r["query_id"] == built
+        r["rank"] for r in adhoc if r["query_id"] == refreshed
     )
-
-
-def test_pq_adc_join_probe_matches_driver_probe(spark):
-    """r10 (VERDICT r9 #1): pq_adc_topk(probe='join') keeps the query
-    set a DataFrame (executor-side per-Arrow-batch LUTs) and must be
-    row-identical to the driver LUT path — both draw their integers
-    from the shared _pq_luts builder."""
-    emb = read_testdata(spark, SF_SMOKE, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 37 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    drv = sorted(map(tuple, sim.pq_adc_topk(
-        emb, queries, k=5, shortlist=40, probe="driver").collect()))
-    jnd = sorted(map(tuple, sim.pq_adc_topk(
-        emb, queries, k=5, shortlist=40, probe="join").collect()))
-    assert drv == jnd and len(drv) > 0
-    # r11 (VERDICT r10 #1): the pair relation ships codes + LUT ints
-    # only — no plan node may carry the query vector alongside codes
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        sim.pq_adc_topk(
-            emb, queries, k=5, shortlist=40, probe="join"
-        ).explain(True)
-    offending = [
-        ln for ln in buf.getvalue().splitlines()
-        if "codes" in ln and "query_vec" in ln
-    ]
-    assert not offending, offending
-    with pytest.raises(ValueError, match="driver.*join"):
-        sim.pq_adc_topk(emb, queries, probe="bogus")
-
-
-def test_ivf_pq_join_probe_matches_driver_probe(spark):
-    """r10 (VERDICT r9 #1): ivf_pq_topk(probe='join') — probe lists
-    from a pandas_udf over query rows, candidates via the _list join,
-    executor-side ADC — must be row-identical to the driver path."""
-    emb = read_testdata(spark, SF_SMOKE, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 41 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    kw = dict(k=5, n_lists=8, n_probe=3, shortlist=40)
-    drv = sorted(map(tuple, sim.ivf_pq_topk(
-        emb, queries, probe="driver", **kw).collect()))
-    jnd = sorted(map(tuple, sim.ivf_pq_topk(
-        emb, queries, probe="join", **kw).collect()))
-    assert drv == jnd and len(drv) > 0
-    # r11 (VERDICT r10 #1): candidate relation = ids + codes + LUT
-    # ints; the query vector never rides along with the codes
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        sim.ivf_pq_topk(emb, queries, probe="join", **kw).explain(True)
-    offending = [
-        ln for ln in buf.getvalue().splitlines()
-        if "codes" in ln and "query_vec" in ln
-    ]
-    assert not offending, offending
-    with pytest.raises(ValueError, match="driver.*join"):
-        sim.ivf_pq_topk(emb, queries, probe="bogus")
-
-
-def test_pq_adc_join_probe_zero_norm_query_parity(spark):
-    """Degenerate input: an all-zero query vector must produce the
-    same rows on both ADC probe paths (NULL cosine ranks by id
-    tie-break; LUT integers are rint(0×scale)=0 on both)."""
-    emb = read_testdata(spark, SF_SMOKE, "embeddings")
-    dim = len(emb.select("embedding").first()[0])
-    zq = spark.createDataFrame(
-        [(9001, [0.0] * dim)], "query_id long, query_vec array<float>"
-    )
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    ).unionByName(zq)
-    drv = sorted(map(tuple, sim.pq_adc_topk(
-        emb, queries, k=3, probe="driver").collect()))
-    jnd = sorted(map(tuple, sim.pq_adc_topk(
-        emb, queries, k=3, probe="join").collect()))
-    assert drv == jnd
-    assert {q for q, _, _ in drv} == {0, 1, 2, 9001}
 
 
 def test_rrf_fuse_semantics(spark):
@@ -2686,9 +2469,9 @@ def test_hybrid_rrf_topk_matches_manual_fusion(spark):
 
 def test_ivf_filtered_probe_parity_and_pruning(spark, tmp_path):
     """Filtered ANN (r14): the predicate restricts the top-k to
-    matching rows only — on BOTH probe modes and BOTH index layouts —
-    and `where_range` skips files via the maintained postings' id
-    zone maps (conjunctive with the `_list` pruning)."""
+    matching rows only, and `where_range` skips files via the
+    maintained postings' id zone maps (conjunctive with the `_list`
+    pruning)."""
     import numpy as np
 
     from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.txtable import (
@@ -2716,16 +2499,8 @@ def test_ivf_filtered_probe_parity_and_pruning(spark, tmp_path):
         where="vec_id % 2 = 0", where_range=("vec_id", 100, 299),
     )
 
-    # static layout (partitionBy directories)
-    static = str(tmp_path / "static")
-    sim.build_ivf_index(emb, static, n_lists=6, n_iter=4, seed=3)
-    for probe in ("driver", "join"):
-        got = sorted(map(tuple, sim.ivf_index_topk(
-            spark, static, queries, probe=probe, **kw).collect()))
-        assert got == want, probe
-
-    # maintained layout: one file per id-range slice => zone maps on
-    # vec_id can skip files the range excludes
+    # one source file per id-range slice => zone maps on vec_id can
+    # skip files the range excludes
     src = TxTable.create(
         spark, str(tmp_path / "src"),
         emb.filter("vec_id < 100").repartition(1),
@@ -2740,10 +2515,8 @@ def test_ivf_filtered_probe_parity_and_pruning(spark, tmp_path):
     assert sim.refresh_ivf_index(
         spark, src, maint, n_lists=6, n_iter=4, seed=3
     ) == 4
-    for probe in ("driver", "join"):
-        got = sorted(map(tuple, sim.ivf_index_topk(
-            spark, maint, queries, probe=probe, **kw).collect()))
-        assert got == want, probe
+    got = sorted(map(tuple, sim.ivf_index_topk(spark, maint, queries, **kw).collect()))
+    assert got == want
 
     # the conjunctive skip itself, on a layout where the second
     # dimension is actually clustered: one file per (bucket, id

@@ -232,24 +232,25 @@ def test_asof_join_matches_pandas_merge_asof(spark, left_rows, right_rows, direc
     )
 )
 def test_int8_quantization_properties(spark, vecs):
-    """Invariants of symmetric SQ8 for arbitrary float32 vectors:
-    range [-127,127], sign preservation, max-|x| element hits ±127,
-    zero vector → zeros, scale == max|x| exactly."""
+    """Invariants of symmetric SQ8 as int8_rerank_topk quantizes, for
+    arbitrary float32 vectors: each code is floor(x·127/max|x| + 0.5)
+    exactly, in [-127,127], sign-preserving; the max-|x| element hits
+    ±127; a zero vector → zeros."""
     from cincinnati_police_calls_for_service_etl_using_python_dask_spark.operators import (
         similarity as sim,
     )
 
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {r["vec_id"]: r for r in sim.quantize_int8(df).collect()}
+    out: dict[int, dict[int, int]] = {}
+    for r in sim._int8_exploded(df, "vec_id", "embedding", "q").collect():
+        out.setdefault(r["vec_id"], {})[r["__i"]] = r["q"]
     import numpy as np
 
     for i, v in enumerate(vecs):
         v32 = np.array(v, dtype=np.float32).astype(np.float64)
         amax = float(np.max(np.abs(v32)))
-        r = out[i]
-        assert r["scale"] == amax
-        q = r["qvec"]
+        q = [out[i][j] for j in range(len(v))]
         assert all(-127 <= x <= 127 for x in q)
         if amax == 0.0:
             assert all(x == 0 for x in q)

@@ -1052,15 +1052,13 @@ def main() -> None:
             "list pruning intact",
             lambda p: "GreaterThanOrEqual(vec_id,100)" in p
             and "LessThanOrEqual(vec_id,399)" in p
-            and re.search(r"PartitionFilters: \[[^\]]*_list", p),
-            "r14 filtered ANN: the where_range predicate reaches the "
-            "postings scan as PushedFilters (row-group/file skipping "
-            "— the maintained layout additionally zone-map-prunes "
-            "files BEFORE Spark sees a path) while the `_list IN` "
-            "partition pruning still restricts the probe to routed "
-            "lists: conjunctive data skipping, so a tenant-filtered "
-            "search of a 100 TB index reads only matching slices of "
-            "probed lists",
+            and re.search(r"PushedFilters: \[[^\]]*In\(_list", p),
+            "r14 filtered ANN: the where_range predicate and the "
+            "`_list IN` routing filter both reach the postings scan as "
+            "PushedFilters, after the maintained postings' zone maps "
+            "pruned files on both columns BEFORE Spark sees a path: "
+            "conjunctive data skipping, so a tenant-filtered search of "
+            "a 100 TB index reads only matching slices of probed lists",
         ),
         (
             "ann_ivf_filtered_topk",

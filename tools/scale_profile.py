@@ -66,11 +66,8 @@ QUERIES = [
     # r11 (VERDICT r10 #5): the maintained-view fold (construction-
     # eager table build; warm timings cover base-state scan + CDC
     # delta aggregate + merge + finalize vs DuckDB's from-scratch
-    # recompute) and the two JOIN-probe ADC tiers (distributed LUT,
-    # no driver collect of the query set).
+    # recompute).
     "ivm_maintained_view_events",
-    "ann_pq_topk_join",
-    "ann_ivf_pq_topk_join",
     # r11: the CDC-maintained IVF index — construction-eager (source
     # table + init + DML + fold); warm timings cover the exhaustive
     # probe of the maintained postings TxTable vs DuckDB's brute-force
@@ -89,11 +86,9 @@ QUERIES = [
     "ann_ivf_maintained_drift",
     # r13 (VERDICT r12 #1/#3): the maintained text-index serving paths
     # (df finalize / BM25 from the stored state vs DuckDB re-tokenizing
-    # the replayed corpus from scratch) and the maintained IVF-PQ
-    # join-probe twin.
+    # the replayed corpus from scratch).
     "ivm_text_df_view",
     "bm25_maintained_topk",
-    "ann_ivf_pq_maintained_join",
     # r13: the maintained MinHash-LSH index's pair serving (stored
     # signatures vs DuckDB re-hashing the replayed corpus from scratch)
     "dedup_lsh_maintained",
