@@ -243,14 +243,14 @@ _CONTINUITY_R6 = [
 # timed warm runs measure the snapshot READ path).
 _NEW_R6 = [
     "txtable_merge_events",
-    # format-API read path: pushdown prune + in-partition DV mask
+    # zone-map-pruned snapshot range read over a MOR delete
     "txbatch_read_events",
 ]
 
 _NEW_R7 = [
-    # batch table_changes through the DataFrame API: per-commit CDC
-    # events via the distributed partition taxonomy (table build +
-    # DELETE run at construction; warm runs time the CDC read itself)
+    # batch table_changes (TxTable.table_changes_native): per-commit
+    # CDC events read from writer change files (table build + DELETE
+    # run at construction; warm runs time the CDC read itself)
     "txbatch_change_feed_events",
     # H.264 Annex-B demux + Exp-Golomb SPS parse (bitstream tier of
     # lossy-video support; slice pixel decode out of scope)
@@ -403,8 +403,8 @@ _UNBENCHED_TWINS = {
     "ngram_jaccard_pairs": "deliberately unbenched quadratic ground-"
                            "truth tier (see module docstring)",
     "txtable_change_feed_events": "merge_suite cdc_feed member; the "
-                                  "batch twin txbatch_change_feed_events "
-                                  "is benched",
+                                  "per-commit twin "
+                                  "txbatch_change_feed_events is benched",
 }
 
 

@@ -362,9 +362,9 @@ def refresh_view(
     O(files the DML rewrote) — O(changed rows) when source churn is
     key-clustered (range-partitioned writes, zone-mapped DML), but a
     predicate scattered across every file rewrites every file and the
-    feed degenerates to a corpus re-read. Cluster churned keys, or
-    stream the writer-side CDC files (change_data_feed=True +
-    readChangeFeed) for strict O(changed rows) at any churn shape.
+    feed degenerates to a corpus re-read. Cluster churned keys, or read
+    writer-side CDC files (change_data_feed=True + table_changes_native
+    or readChangeFeed) for strict O(changed rows) at any churn shape.
 
     ``feed_key`` is REQUIRED: it is the source table's row identity,
     which ``change_feed`` diffs versions on — an empty key would

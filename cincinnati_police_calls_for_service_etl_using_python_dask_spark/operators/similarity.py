@@ -109,6 +109,17 @@ def _rank_topk(
     )
 
 
+def _empty_topk(
+    spark, query_id: T.StructField, vec_id: T.StructField
+) -> DataFrame:
+    """Typed (query, id, rank) result of a probe over an empty query
+    set."""
+    fields = [T.StructField(f.name, f.dataType) for f in (query_id, vec_id)]
+    return empty_frame(
+        spark, T.StructType(fields + [T.StructField("rank", T.LongType())])
+    )
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -1671,9 +1682,9 @@ def _collect_query_rows(queries: DataFrame, cols, op: str):
 
 def _lut_local_frame(
     spark,
-    queries: DataFrame,
+    qrows: list,
+    qid_field: T.StructField,
     books: np.ndarray,
-    query_id_col: str,
     query_vec_col: str,
 ) -> DataFrame:
     """Driver-built integer ADC LUT relation (query_id, __sub, __code,
@@ -1689,45 +1700,28 @@ def _lut_local_frame(
     :data:`_LUT_VALUES_MAX_ROWS` (ADVICE r12: n_q × m × ksub literal
     tuples is SQL text to PARSE; hundreds of MB of it at ~10k queries)
     — fall back to the RDD-backed frame (correct, just not job-free).
-    Collecting the query set at all is guarded by
-    :func:`_collect_query_rows`."""
+    ``qrows`` is the query set as collected by
+    :func:`_collect_query_rows`; ``qid_field`` types its id column."""
     m, ksub, _ = books.shape
-    qrows = _collect_query_rows(
-        queries, [query_id_col, query_vec_col], "driver ADC LUT"
+    query_id_col = qid_field.name
+    luts = _pq_luts(
+        _unit_rows(pd.Series([r[query_vec_col] for r in qrows])), books
     )
-    qpdf = pd.DataFrame(
-        {
-            query_id_col: [r[query_id_col] for r in qrows],
-            query_vec_col: [r[query_vec_col] for r in qrows],
-        }
-    )
-    qmat = np.stack(qpdf[query_vec_col].to_numpy()).astype(np.float64)
-    qnorms = np.linalg.norm(qmat, axis=1, keepdims=True)
-    np.divide(qmat, qnorms, out=qmat, where=qnorms > 0)
-    luts = _pq_luts(qmat, books)
-    qid_field = queries.select(query_id_col).schema.fields[0]
-    qids = qpdf[query_id_col].tolist()
+    lut_rows = [
+        (r[query_id_col], s, c, int(luts[qi, s, c]))
+        for qi, r in enumerate(qrows) for s in range(m) for c in range(ksub)
+    ]
     if (
         isinstance(qid_field.dataType, (T.LongType, T.IntegerType))
-        and len(qids) * m * ksub <= _LUT_VALUES_MAX_ROWS
+        and len(lut_rows) <= _LUT_VALUES_MAX_ROWS
     ):
-        vals = ",".join(
-            f"({int(qid)}L,{s},{c},{int(luts[qi, s, c])}L)"
-            for qi, qid in enumerate(qids)
-            for s in range(m)
-            for c in range(ksub)
-        )
+        vals = ",".join(f"({int(q)}L,{s},{c},{p}L)" for q, s, c, p in lut_rows)
         return spark.sql(
             f"SELECT CAST(col1 AS {qid_field.dataType.simpleString()})"
             f" AS {query_id_col},"
             f" CAST(col2 AS INT) AS __sub, CAST(col3 AS INT) AS __code,"
             f" col4 AS __part FROM VALUES {vals}"
         )
-    lut_rows = []
-    for qi, qid in enumerate(qids):
-        for s in range(m):
-            for code in range(ksub):
-                lut_rows.append((qid, s, code, int(luts[qi, s, code])))
     return spark.createDataFrame(
         lut_rows,
         T.StructType([
@@ -1793,21 +1787,23 @@ def pq_codes_maintained_topk(
     if ivf_path is not None and n_probe is None:
         raise ValueError("pass n_probe with ivf_path")
 
-    lut = _lut_local_frame(spark, queries, books, query_id_col, query_vec_col)
+    q_rows = _collect_query_rows(
+        queries, [query_id_col, query_vec_col],
+        "pq_codes_maintained_topk driver probe",
+    )
+    qid_field = queries.schema[query_id_col]
+    if not q_rows:
+        return _empty_topk(spark, qid_field, vectors.schema[id_col])
+    lut = _lut_local_frame(spark, q_rows, qid_field, books, query_vec_col)
 
     if ivf_path is not None:
         psnap = TxTable(spark, f"{ivf_path}/postings_tx").snapshot()
         centroids = _maintained_centroids(spark, ivf_path, psnap)
-        q_rows = _collect_query_rows(
-            queries, [query_id_col, query_vec_col],
-            "pq_codes_maintained_topk driver probe",
-        )
         probe_mat = _probe_order(
             _unit_rows(pd.Series([r[query_vec_col] for r in q_rows])),
             centroids, n_probe,
         )
         probed_lists = sorted({int(l) for row in probe_mat for l in row})
-        qid_field = queries.select(query_id_col).schema.fields[0]
         if isinstance(qid_field.dataType, (T.LongType, T.IntegerType)):
             # VALUES LocalRelation: no per-action broadcast-rebuild job
             # (same doctrine as _lut_local_frame / ivf_index_topk)
@@ -1916,6 +1912,9 @@ def ivf_index_topk(
     q_rows = _collect_query_rows(
         queries, [query_id_col, query_vec_col], "ivf_index_topk driver probe"
     )
+    if not q_rows:  # VALUES ids below are bigint
+        qid = T.StructField(query_id_col, T.LongType())
+        return _empty_topk(spark, qid, snap.schema[id_col])
     # an all-zero query stays zero (arbitrary-but-defined probe order)
     # instead of NaN-poisoning its argsort
     probe = _probe_order(
@@ -2444,6 +2443,12 @@ def pq_adc_topk(
     Codebooks are cached under ``index_cache_key`` in the shared
     trained-index LRU (see :func:`ivf_ann_topk` for the staleness
     contract)."""
+    qrows = _collect_query_rows(
+        queries, [query_id_col, query_vec_col], "driver ADC LUT"
+    )
+    qid_field = queries.schema[query_id_col]
+    if not qrows:
+        return _empty_topk(vectors.sparkSession, qid_field, vectors.schema[id_col])
     cache_key = (
         ("pq", index_cache_key, m, ksub, n_iter, seed, train_sample)
         if index_cache_key is not None
@@ -2458,12 +2463,10 @@ def pq_adc_topk(
         if cache_key:
             _ivf_cache_put(cache_key, books)
 
-    # Per-query integer LUT: (query_id, sub, code, part). n_q × m × ksub
-    # rows of longs — broadcastable at any corpus size, built as a
-    # VALUES LocalRelation (r12: the ExistingRDD spelling re-ran a
-    # tiny broadcast-rebuild job at every action, ~0.25 s fixed tax).
+    # per-query integer LUT (query_id, sub, code, part): n_q × m × ksub
+    # rows, broadcastable at any corpus size (see _lut_local_frame)
     lut = _lut_local_frame(
-        vectors.sparkSession, queries, books, query_id_col, query_vec_col
+        vectors.sparkSession, qrows, qid_field, books, query_vec_col
     )
 
     codes = pq_encode(vectors, books, id_col=id_col, vec_col=vec_col)
@@ -2649,6 +2652,12 @@ def ivf_pq_topk(
     :func:`_collect_query_rows`) for the broadcast integer LUT; probe
     lists come from the same Arrow-batched kernel as
     :func:`ivf_ann_topk`, and scoring is pure JVM."""
+    qrows = _collect_query_rows(
+        queries, [query_id_col, query_vec_col], "driver ADC LUT"
+    )
+    qid_field = queries.schema[query_id_col]
+    if not qrows:
+        return _empty_topk(vectors.sparkSession, qid_field, vectors.schema[id_col])
     # --- coarse quantizer (same contract as ivf_ann_topk) ----------
     centroids = _sample_centroids(
         vectors, n_lists, train_sample, n_iter, seed, vec_col, index_cache_key
@@ -2673,18 +2682,14 @@ def ivf_pq_topk(
             _ivf_cache_put(pkey, books)
 
     lut = _lut_local_frame(
-        vectors.sparkSession, queries, books, query_id_col, query_vec_col
+        vectors.sparkSession, qrows, qid_field, books, query_vec_col
     )
 
     # --- candidate restriction THEN integer-ADC, all JVM-side -------
     indexed = vectors.withColumn("_list", assign_list(F.col(vec_col)))
     codes = pq_encode(indexed, books, id_col=id_col, vec_col=vec_col)
-    # codes joined back by id would shuffle; recompute the list id on
-    # the codes side instead? No: keep ONE Arrow crossing — carry the
-    # list id THROUGH the encode by encoding the indexed frame's two
-    # columns together via a join-free select: pq_encode preserves only
-    # (id, codes), so join codes to the (id, _list) pair — both sides
-    # are the same scan and AQE broadcasts the small probe instead.
+    # pq_encode keeps only (id, codes): join codes to the (id, _list)
+    # pairs — both sides are the same scan, AQE broadcasts the probe.
     cand_ids = indexed.select(id_col, "_list").join(
         F.broadcast(
             queries.select(

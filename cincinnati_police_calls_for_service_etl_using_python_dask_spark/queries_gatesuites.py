@@ -362,13 +362,7 @@ _suite(
         ("txtable_lifecycle", "txtable_merge_events"),
         # r6: CDC change feed across a deletion-vector re-point
         ("cdc_feed", "txtable_change_feed_events"),
-        # r7 (VERDICT r6 #2): the batch DataFrame API
-        # (read/write.format("txtable"): two-phase writer, pushFilters
-        # zone-map prune, in-partition DV mask) joins the gated slot so
-        # every table-format binding sits inside the driver's window.
-        # The seg carries the Python-DataSource fixed spin-up (~0.3 s
-        # flat, SCALE.md's falling-ratio panel row) — a constant, not
-        # a scale term.
+        # zone-map-pruned snapshot range read over a MOR delete
         ("txbatch_read", "txbatch_read_events"),
         # r8: metadata-only RENAME/DROP COLUMN (column mapping) — the
         # logical/physical name boundary (read select, write rename,

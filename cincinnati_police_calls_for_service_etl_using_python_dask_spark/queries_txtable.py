@@ -290,37 +290,27 @@ WHERE event_id % 97 = 0
 
 @register("txbatch_change_feed_events", _BATCH_CDC_ORACLE)
 def q_txbatch_change_feed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch CDC through the DataFrame API (r7):
-    ``spark.read.format("txtable").option("readChangeFeed", "true")``
-    replays a merge-on-read DELETE commit as row-level delete events —
-    the per-commit ``table_changes`` spelling of the driver-side
-    ``change_feed`` gate, exercising the distributed CDC partition
-    taxonomy (here: per-file DV-delta partitions, index-take, no join)
-    under the full value-hash oracle."""
-    from .sources.txbatch import TxTableBatchSource
-
-    spark.dataSource.register(TxTableBatchSource)
+    """Per-commit batch CDC (Delta's ``table_changes``) under the full
+    value-hash oracle: a change-data-feed table takes a merge-on-read
+    DELETE, and ``TxTable.table_changes_native`` replays that commit
+    as row-level delete events tagged ``_commit_version = 1`` — the
+    per-commit spelling of the endpoint-diff ``change_feed`` gate,
+    read from the writer's change files as plain parquet scans."""
     events = read_testdata(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
     n = events.count()
     scratch = tempfile.mkdtemp(prefix="txbcdc_")
     atexit.register(shutil.rmtree, scratch, ignore_errors=True)
-    path = os.path.join(scratch, "t")
     t = TxTable.create(
         spark,
-        path,
+        os.path.join(scratch, "t"),
         events.filter(F.col("event_id") < int(0.5 * n)),
         stats_columns=["event_id"],
+        change_data_feed=True,
     )
     t.delete(F.col("event_id") % 97 == 0, strategy="mor")
-    return (
-        spark.read.format("txtable")
-        .option("readChangeFeed", "true")
-        .option("key", "event_id")
-        .option("startingVersion", "1")
-        .load(path)
-    )
+    return t.table_changes_native(0)
 
 
 _BATCH_ORACLE = """
@@ -333,44 +323,27 @@ WHERE event_id >= 1000 AND event_id < 2000
 
 @register("txbatch_read_events", _BATCH_ORACLE)
 def q_txbatch_read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The format's batch WRITE API under the full oracle: events
-    land through ``df.write.format("txtable")`` (two-phase writer
-    commit, task-side zone-map stats), take a sparse merge-on-read
-    DELETE, and come back through the NATIVE snapshot read with a
-    range filter — zone-map file prune driver-side, ``Scan parquet``
-    with PushedFilters, deletion vectors masked JVM-side (one
-    broadcast anti-join).
-
-    r15 (VERDICT r14 #3, guide §4 — the cfb08f2 pattern): the read
-    was ``spark.read.format("txtable")`` through the Python
-    DataSource, whose fixed per-action planning round-trip (a Python
-    worker for schema()/partitions()/pushFilters) walled ~0.3 s flat
-    — the dominant merge_suite residue. A plain snapshot-range read
-    needs nothing the Python protocol uniquely provides, so it takes
-    the native fast path (``TxTable.read_pruned``: same zone-map
-    prune, now driver-side; same DV semantics, now a broadcast
-    anti-join the planner sees through, so the range predicate
-    reaches the parquet scan). Reads that DO need the Python protocol
-    keep it: ``txbatch_change_feed_events`` still goes through
-    ``format("txtable")`` + readChangeFeed (the per-commit CDC
-    partition taxonomy), and tests/test_txbatch.py gates the full
-    DataSource read/pushdown/DV surface unchanged. For BIGINT ids,
-    ``[1000, 1999]`` is exactly the old ``>= 1000 AND < 2000`` slice;
-    the oracle hash pins that."""
-    from .sources.txbatch import TxTableBatchSource
-
-    spark.dataSource.register(TxTableBatchSource)
+    """The format's batch write + pruned read under the full oracle:
+    events land in a zone-mapped table over four files, take a sparse
+    merge-on-read DELETE, and come back through the native snapshot
+    range read (``TxTable.read_pruned``) — zone-map file prune
+    driver-side, ``Scan parquet`` with PushedFilters, deletion vectors
+    masked JVM-side (one broadcast anti-join). For BIGINT ids,
+    ``[1000, 1999]`` is exactly the ``>= 1000 AND < 2000`` slice; the
+    oracle hash pins that."""
     events = read_testdata(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
     scratch = tempfile.mkdtemp(prefix="txbatch_")
     atexit.register(shutil.rmtree, scratch, ignore_errors=True)
-    path = os.path.join(scratch, "t")
-    events.repartition(4).write.format("txtable").option(
-        "statsColumns", "event_id"
-    ).mode("append").save(path)
-    TxTable(spark, path).delete(F.col("event_id") % 11 == 0, strategy="mor")
-    return TxTable(spark, path).read_pruned("event_id", 1000, 1999)
+    t = TxTable.create(
+        spark,
+        os.path.join(scratch, "t"),
+        events.repartition(4),
+        stats_columns=["event_id"],
+    )
+    t.delete(F.col("event_id") % 11 == 0, strategy="mor")
+    return t.read_pruned("event_id", 1000, 1999)
 
 
 _APPLY_ORACLE = """
@@ -734,14 +707,14 @@ def q_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     scratch = tempfile.mkdtemp(prefix="txtable_ivmj_")
     atexit.register(shutil.rmtree, scratch, ignore_errors=True)
     # Feed spelling (r11, measured): change_data_feed=True + the
-    # per-commit batch CDC reader. The endpoint-diff change_feed must
-    # re-scan every file a COW delete rewrote (a 3% key-spread delete
-    # rewrites ALL files → the diff walks old+new of the whole table,
-    # 0.62 s of the fold's ~1.0 s here); the writer-recorded change
-    # files read O(changed rows) (0.28 s). Per-commit insert+delete
-    # pairs telescope to the same endpoint delta — weights cancel in
-    # the fold (parity-tested equal states) — so join_delta accepts
-    # either feed.
+    # per-commit feed (table_changes_native). The endpoint-diff
+    # change_feed must re-scan every file a COW delete rewrote (a 3%
+    # key-spread delete rewrites ALL files → the diff walks old+new of
+    # the whole table, 0.62 s of the fold's ~1.0 s here); the
+    # writer-recorded change files read O(changed rows) (0.28 s).
+    # Per-commit insert+delete pairs telescope to the same endpoint
+    # delta — weights cancel in the fold (parity-tested equal states)
+    # — so join_delta accepts either feed.
     fact = TxTable.create(
         spark,
         os.path.join(scratch, "fact"),
@@ -772,32 +745,15 @@ def q_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim.update(F.col("okey") % 11 == 0, {"prio": F.lit("MOVED")})
     dim.delete(F.col("okey") % 13 == 0)
 
-    def cdc_feed(t, key):
-        # r14 (VERDICT r13 #6): both tables are CDF with blind-append/
-        # change-file-only histories, so the fold reads its two feeds
-        # as plain JVM parquet scans (table_changes_native) — the
-        # previous format("txtable") spelling paid the Python-
-        # DataSource fixed spin-up TWICE per refresh (~0.6 s of the
-        # 0.8 s warm wall; the scans themselves are O(changed rows)
-        # either way). The reader fallback keeps non-CDF sources
-        # working; parity is pinned in tests/test_txbatch.py.
-        nat = t.table_changes_native(0)
-        if nat is not None:
-            return nat.drop("_commit_version")
-        from .sources.txbatch import TxTableBatchSource
-
-        spark.dataSource.register(TxTableBatchSource)
-        return (
-            spark.read.format("txtable")
-            .option("readChangeFeed", "true")
-            .option("key", key)
-            .option("startingVersion", "1")
-            .load(t.path)
-            .drop("_commit_version")
-        )
-
+    # both tables are CDF with blind-append/change-file-only
+    # histories, so the fold reads its two feeds as plain JVM parquet
+    # scans, O(changed rows)
     dj = ivm.join_delta(
-        fact_v0, cdc_feed(fact, "k"), dim.read(), cdc_feed(dim, "okey"), "okey"
+        fact_v0,
+        fact.table_changes_native(0).drop("_commit_version"),
+        dim.read(),
+        dim.table_changes_native(0).drop("_commit_version"),
+        "okey",
     )
     state = ivm.merge_states(
         state, ivm.delta_state(dj, keys, sums, weight_col="__ivm_w"), keys

@@ -229,22 +229,14 @@ class TxTableStreamReader(DataSourceStreamReader):
     # -- reading (executors) -------------------------------------------
 
     def read(self, partition: _FilePartition) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
         from pyspark.sql.pandas.types import to_arrow_schema
 
         want = to_arrow_schema(self.schema)
-        table = pq.read_table(partition.path)
-        cols = []
-        for f in want:
-            src_name = self.column_mapping.get(f.name, f.name)
-            if src_name in table.column_names:
-                cols.append(table.column(src_name).cast(f.type))
-            else:
-                # pre-evolution file: NULL-fill, like the batch reader
-                cols.append(pa.nulls(len(table), f.type))
-        yield from pa.Table.from_arrays(cols, schema=want).to_batches()
+        yield from align_to(
+            pq.read_table(partition.path), want, physical=self.column_mapping
+        ).to_batches()
 
     def commit(self, end: dict) -> None:
         pass  # the engine's checkpoint is the only consumption state
@@ -345,6 +337,40 @@ def _dv_positions(dv_path: str | None, file: str):
         dv_path, filters=[("file", "==", os.path.basename(file))]
     )
     return t.column("pos").to_numpy().astype(np.int64, copy=False)
+
+
+def read_masked_table(file: str, dv: str | None):
+    """pyarrow-read one data file with its deletion-vector sidecar
+    applied by physical row index (no join)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(file)
+    if dv is not None:
+        mask = np.ones(len(table), dtype=bool)
+        mask[_dv_positions(dv, file)] = False
+        table = table.filter(pa.array(mask))
+    return table
+
+
+def align_to(table, want, physical: dict | None = None):
+    """Cast/NULL-fill an arrow table to the arrow schema ``want``
+    (pre-evolution files lack late columns). ``physical`` maps a
+    wanted LOGICAL field name to the PHYSICAL parquet column that
+    stores it (column mapping — see txtable.Snapshot.column_mapping);
+    absent entries mean identity."""
+    import pyarrow as pa
+
+    physical = physical or {}
+    cols = []
+    for f in want:
+        src = physical.get(f.name, f.name)
+        if src in table.column_names:
+            cols.append(table.column(src).cast(f.type))
+        else:
+            cols.append(pa.nulls(len(table), f.type))
+    return pa.Table.from_arrays(cols, schema=want)
 
 
 def _slice_filter(table, keys: list[str], slice_idx: int, n_slices: int):
@@ -619,8 +645,6 @@ class TxTableChangeFeedReader(DataSourceStreamReader):
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
-
-        from .txbatch import align_to, read_masked_table
 
         want, tbl_schema = self._arrow_schemas()
 

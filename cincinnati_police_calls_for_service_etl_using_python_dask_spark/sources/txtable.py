@@ -211,7 +211,7 @@ class Snapshot:
     # rewritten at any table size. Identity entries are omitted; an
     # empty dict means every column is stored under its logical name
     # (the pre-mapping layout, bit-compatible with old logs). All
-    # FILE-LEVEL metadata (zone-map stats, nullCounts, bloom bitmaps,
+    # FILE-LEVEL metadata (zone-map stats, bloom bitmaps,
     # parquet column names, CDC files) is keyed PHYSICAL; everything
     # user-facing (schema, statsColumns, bloomSpec columns, CHECK
     # exprs, predicates) is LOGICAL, translated at the boundary.
@@ -350,8 +350,6 @@ class TxTable:
                         "numRecords": a.get("numRecords"),
                         "stats": a.get("stats", {}),
                     }
-                    if a.get("nullCounts") is not None:
-                        meta["nullCounts"] = a["nullCounts"]
                     if a.get("dv"):
                         meta["dv"] = a["dv"]
                         meta["dvRows"] = a.get("dvRows", 0)
@@ -668,12 +666,7 @@ class TxTable:
         back = self.spark.read.parquet(*[os.path.join(self.path, m) for m in moved])
         aggs = [F.count(F.lit(1)).alias("__n")]
         for c in stats_columns:
-            aggs += [
-                F.min(c).alias(f"__min_{c}"),
-                F.max(c).alias(f"__max_{c}"),
-                # null count rides the SAME pass: count(*) - count(col)
-                (F.count(F.lit(1)) - F.count(c)).alias(f"__nc_{c}"),
-            ]
+            aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
         rows = (
             back.groupBy(F.input_file_name().alias("__f")).agg(*aggs).collect()
         )
@@ -691,10 +684,6 @@ class TxTable:
                 c: [r[f"__min_{c}"], r[f"__max_{c}"]] for c in stats_columns
             }
             a = {"path": m, "numRecords": r["__n"], "stats": stats}
-            if stats_columns:
-                a["nullCounts"] = {
-                    c: r[f"__nc_{c}"] for c in stats_columns
-                }
             if m in blooms:
                 a["bloom"] = blooms[m]
             adds.append({"add": a})
@@ -897,7 +886,8 @@ class TxTable:
         as_of_timestamp_ms: int | None = None,
     ) -> DataFrame:
         """Snapshot read, optionally time-traveled to ``version`` or to
-        the latest commit at/before ``as_of_timestamp_ms``."""
+        the latest commit at/before ``as_of_timestamp_ms``. The SQL
+        surface is ``TxTable(...).read().createOrReplaceTempView(...)``."""
         if version is not None and as_of_timestamp_ms is not None:
             raise ValueError("pass version OR as_of_timestamp_ms, not both")
         if as_of_timestamp_ms is not None:
@@ -2511,39 +2501,46 @@ class TxTable:
 
     def table_changes_native(
         self, v_from: int, v_to: int | None = None
-    ) -> "DataFrame | None":
-        """JVM-only per-commit CDC feed over ``(v_from, v_to]`` (r14,
-        VERDICT r13 #6): when every commit in the window is either a
-        blind append (its added files ARE the insert set), a
-        metadata/txn-only commit, an OPTIMIZE (row set unchanged — the
-        change feed's documented silence), or a DML that recorded
-        writer change files (``change_data_feed=True``), the feed is
-        a plain union of parquet scans — table columns +
-        ``_change_type`` + ``_commit_version`` — with NO Python
-        DataSource in the plan. Returns ``None`` when any commit
-        needs the general diff taxonomy (COW/MOR DML without change
-        files, CLONE, RESTORE, a schema/metadata change mid-window,
-        or a column-mapped table) — callers fall back to the
-        streaming/batch CDC reader, which handles all of it.
+    ) -> DataFrame:
+        """Per-commit CDC feed over ``(v_from, v_to]`` (Delta's
+        ``table_changes``): table columns + ``_change_type`` +
+        ``_commit_version``, one event per row change PER COMMIT — an
+        insert later deleted inside the window yields both events,
+        unlike :meth:`change_feed`, which diffs the endpoint snapshots.
 
-        Why it exists: every ``format("txtable")`` read pays a fixed
-        Python-DataSource planning + worker spin-up (~0.3 s flat at
-        any SF — SCALE.md's panel row). An IVM fold reads TWO feeds
-        per refresh, so on CDF tables — the recommended configuration
-        for any table that feeds maintained state — this path turns
-        the fold's dominant fixed cost into two ordinary JVM scans,
-        while at 100 TB both spellings read the same O(changed rows)
-        change files."""
+        Every commit in the window must be a blind append (its added
+        files ARE the insert set), a metadata/txn-only commit, an
+        OPTIMIZE (row set unchanged — the change feed's documented
+        silence), or a DML that recorded writer change files
+        (``change_data_feed=True``). The feed is then a plain union of
+        parquet scans that Catalyst plans like any other, reading
+        O(changed rows). Any other window raises ``ValueError`` naming
+        its reason: DML without change files, a schema change, a
+        column-mapped table, or commits below an ``expire_log`` cut.
+        Those windows are served by :meth:`change_feed` (net changes)
+        or the ``txtable_stream`` change feed (``readChangeFeed=true``,
+        sources/txstream.py), whose partition taxonomy diffs any
+        commit."""
         vs = self._versions()
         v_to = vs[-1] if v_to is None else v_to
+
+        def unserved(reason: str) -> ValueError:
+            return ValueError(
+                f"table_changes_native({v_from}, {v_to}) at {self.path}: "
+                f"{reason}. Read net changes with change_feed(), or "
+                f"per-commit events through the txtable_stream change "
+                f"feed (readChangeFeed=true)."
+            )
+
         if vs and v_from + 1 < vs[0]:
-            # expire_log cut commits out of the window: silently
-            # skipping them would drop changes — fall back to the
-            # reader, whose retention error names the problem
-            return None
+            # silently skipping expired commits would drop changes
+            raise unserved(
+                f"commits {v_from + 1}..{vs[0] - 1} are below the "
+                f"expire_log cut"
+            )
         snap = self.snapshot(version=v_to)
         if snap.column_mapping:
-            return None
+            raise unserved("the table is column-mapped")
         groups: list[tuple[int, str, list[str]]] = []  # (v, ctype, paths)
         for v in vs:
             if not (v_from < v <= v_to):
@@ -2566,7 +2563,7 @@ class TxTable:
                     groups.append((v, "", paths))
                 continue
             if any("metaData" in a for a in actions) and v > 0:
-                return None  # schema changed mid-window: realign via reader
+                raise unserved(f"commit {v} changes the schema")
             if op in ("CREATE", "APPEND", "STREAM_APPEND"):
                 adds = [
                     os.path.join(self.path, a["add"]["path"])
@@ -2576,12 +2573,17 @@ class TxTable:
                 if any(
                     "add" in a and a["add"].get("dv") for a in actions
                 ):
-                    return None
+                    raise unserved(
+                        f"commit {v} ({op}) adds files under deletion "
+                        f"vectors"
+                    )
                 if adds:
                     groups.append((v, "insert", adds))
                 continue
             if any("add" in a or "remove" in a or "cdc" in a for a in actions):
-                return None  # DML without change files: general taxonomy
+                raise unserved(
+                    f"commit {v} ({op}) is DML without change files"
+                )
             # txn/protocol/metadata-only commit: no row changes
         cols = [f.name for f in snap.schema.fields]
         out: DataFrame | None = None
@@ -2944,8 +2946,6 @@ def _add_action(path: str, meta: dict, dv: str | None = None,
         a["dvRows"] = meta.get("dvRows", 0)
     if meta.get("bloom"):
         a["bloom"] = meta["bloom"]
-    if meta.get("nullCounts") is not None:
-        a["nullCounts"] = meta["nullCounts"]
     return {"add": a}
 
 

@@ -1986,54 +1986,104 @@ def test_brute_force_topk_plan_is_scale_safe(spark):
     assert p.count("SQRT(aggregate") == 2, p.count("SQRT(aggregate")
 
 
-def test_driver_probe_query_bound_refused(spark, tmp_path, monkeypatch):
-    """VERDICT r12 #5: the probes collect the query set driver-side —
-    above the bound they must refuse with a pointed error, not
-    silently materialize a query TABLE on the driver. The refusing
-    read is itself bounded (limit(bound+1)), so even the refusal never
-    collects the full set. Checked on all four probe functions."""
+@pytest.fixture(scope="module")
+def driver_probes(spark, tmp_path_factory):
+    """A 16-row corpus, its maintained IVF index and PQ codes, and the
+    four driver-probe top-k functions over them, each taking the
+    query frame."""
     import numpy as np
 
     from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.txtable import (
         TxTable,
     )
 
+    base = tmp_path_factory.mktemp("driver_probes")
     rng = np.random.default_rng(41)
     vecs = spark.createDataFrame(
         [(i, [float(x) for x in rng.normal(size=8)]) for i in range(16)],
         "vec_id long, embedding array<float>",
     )
-    queries = vecs.limit(6).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    src = TxTable.create(spark, str(tmp_path / "bsrc"), vecs)
-    idx, pqp = str(tmp_path / "bidx"), str(tmp_path / "bpq")
+    src = TxTable.create(spark, str(base / "bsrc"), vecs)
+    idx, pqp = str(base / "bidx"), str(base / "bpq")
     sim.refresh_ivf_index(spark, src, idx, n_lists=2, n_iter=2, seed=41)
     sim.refresh_pq_codes(spark, src, pqp, m=4, ksub=4, n_iter=2, seed=41)
     cur = src.read()
     probes = {
-        "pq_adc_topk": lambda: sim.pq_adc_topk(
-            vecs, queries, k=3, m=4, ksub=4, n_iter=2
+        "pq_adc_topk": lambda q: sim.pq_adc_topk(
+            vecs, q, k=3, m=4, ksub=4, n_iter=2
         ),
-        "ivf_pq_topk": lambda: sim.ivf_pq_topk(
-            vecs, queries, k=3, n_lists=2, n_probe=1, m=4, ksub=4, n_iter=2,
+        "ivf_pq_topk": lambda q: sim.ivf_pq_topk(
+            vecs, q, k=3, n_lists=2, n_probe=1, m=4, ksub=4, n_iter=2,
             pq_iter=2,
         ),
-        "ivf_index_topk": lambda: sim.ivf_index_topk(
-            spark, idx, queries, k=3, n_probe=2
+        "ivf_index_topk": lambda q: sim.ivf_index_topk(
+            spark, idx, q, k=3, n_probe=2
         ),
-        "pq_codes_maintained_topk": lambda: sim.pq_codes_maintained_topk(
-            spark, pqp, queries, cur, k=3, shortlist=6, ivf_path=idx, n_probe=2
+        "pq_codes_maintained_topk": lambda q: sim.pq_codes_maintained_topk(
+            spark, pqp, q, cur, k=3, shortlist=6, ivf_path=idx, n_probe=2
         ),
     }
+    return vecs, probes
+
+
+def _probe_queries(vecs, n):
+    return vecs.limit(n).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+
+
+def test_driver_probe_query_bound_refused(driver_probes, monkeypatch):
+    """VERDICT r12 #5: the probes collect the query set driver-side —
+    above the bound they must refuse with a pointed error, not
+    silently materialize a query TABLE on the driver. The refusing
+    read is itself bounded (limit(bound+1)), so even the refusal never
+    collects the full set. Checked on all four probe functions."""
+    vecs, probes = driver_probes
+    queries = _probe_queries(vecs, 6)
     monkeypatch.setattr(sim, "_MAX_DRIVER_QUERIES", 3)
     for probe in probes.values():
         with pytest.raises(ValueError, match="driver-probe bound"):
-            probe()
+            probe(queries)
     # within the bound every probe works unchanged
     monkeypatch.setattr(sim, "_MAX_DRIVER_QUERIES", 6)
     for name, probe in probes.items():
-        assert probe().count() > 0, name
+        assert probe(queries).count() > 0, name
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["ivf_index_topk", "pq_adc_topk", "ivf_pq_topk", "pq_codes_maintained_topk"],
+)
+def test_driver_probe_empty_query_set_yields_typed_empty_frame(
+    driver_probes, name
+):
+    """An empty query frame probes nothing: the typed (query_id,
+    vec_id, rank) top-k frame comes back empty instead of numpy
+    raising on a zero-row stack."""
+    vecs, probes = driver_probes
+    out = probes[name](_probe_queries(vecs, 0))
+    assert out.collect() == []
+    assert out.dtypes == [
+        ("query_id", "bigint"), ("vec_id", "bigint"), ("rank", "bigint")
+    ]
+
+
+def test_maintained_ivf_pq_probe_collects_query_set_once(
+    driver_probes, monkeypatch
+):
+    """pq_codes_maintained_topk(ivf_path=...) feeds the LUT and the
+    probe routing from ONE bounded collect of the query set."""
+    vecs, probes = driver_probes
+    calls = []
+    collect = sim._collect_query_rows
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return collect(*args, **kwargs)
+
+    monkeypatch.setattr(sim, "_collect_query_rows", counting)
+    assert probes["pq_codes_maintained_topk"](_probe_queries(vecs, 3)).count() > 0
+    assert len(calls) == 1
 
 
 def test_lut_values_threshold_falls_back_exactly(spark, monkeypatch):

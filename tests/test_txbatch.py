@@ -1,22 +1,20 @@
-"""Batch DataSource surface for the table format
-(sources/txbatch.py): spark.read/write.format("txtable"), pushdown
-file pruning through zone maps + blooms, DV masking in-partition,
-two-phase writer commit (create / append / overwrite / abort)."""
+"""Batch surfaces of the table format: the per-commit change feed
+(``TxTable.table_changes_native``) against the ``txtable_stream``
+change feed, and ``file:`` URI paths."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.txbatch import (
-    TxTableBatchReader,
-    TxTableBatchSource,
+from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.txstream import (
+    TxTableStreamSource,
 )
 from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.txtable import (
     TxTable,
 )
+
+from .test_txstream import _drain
 
 
 def _mk(spark, lo, hi):
@@ -28,170 +26,15 @@ def _mk(spark, lo, hi):
 
 @pytest.fixture(scope="module", autouse=True)
 def _register(spark):
-    spark.dataSource.register(TxTableBatchSource)
-
-
-def test_format_read_matches_native_read(spark, tmp_path):
-    p = str(tmp_path / "t1")
-    t = TxTable.create(spark, p, _mk(spark, 0, 100).coalesce(1))
-    t.append(_mk(spark, 100, 200).coalesce(1))
-    t.delete(F.col("k").isin(5, 150), strategy="mor")  # DV in-partition
-    got = spark.read.format("txtable").load(p)
-    assert sorted(r["k"] for r in got.collect()) == [
-        k for k in range(200) if k not in (5, 150)
-    ]
-    # time travel via option
-    v0 = spark.read.format("txtable").option("version", "0").load(p)
-    assert v0.count() == 100
-
-
-def test_pushdown_prunes_files(spark, tmp_path):
-    """A plain df.filter on the format reader plans only the claiming
-    files: zone maps serve ranges, blooms serve equality."""
-    p = str(tmp_path / "t2")
-    t = TxTable.create(
-        spark,
-        p,
-        _mk(spark, 0, 100).coalesce(1),
-        stats_columns=["k"],
-        bloom_columns=["k"],
-    )
-    for lo in (100, 200, 300):
-        t.append(_mk(spark, lo, lo + 100).coalesce(1))
-    # reader-level check (partitions after pushFilters)
-    from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual, LessThan
-
-    r = TxTableBatchReader(t.snapshot().schema, {"path": p})
-    r.pushFilters([GreaterThanOrEqual(("k",), 200), LessThan(("k",), 250)])
-    assert len(r.partitions()) == 1
-    r2 = TxTableBatchReader(t.snapshot().schema, {"path": p})
-    r2.pushFilters([EqualTo(("k",), 123)])
-    assert len(r2.partitions()) == 1
-    r3 = TxTableBatchReader(t.snapshot().schema, {"path": p})
-    r3.pushFilters([EqualTo(("k",), 999_999)])  # bloom: nobody claims it
-    assert len(r3.partitions()) == 0
-    # end-to-end: values exact after Spark re-applies the filter
-    got = (
-        spark.read.format("txtable")
-        .load(p)
-        .filter((F.col("k") >= 200) & (F.col("k") < 250))
-    )
-    assert sorted(r["k"] for r in got.collect()) == list(range(200, 250))
-    assert (
-        spark.read.format("txtable").load(p).filter(F.col("k") == 123).count()
-        == 1
-    )
-
-
-def test_format_write_create_append_overwrite(spark, tmp_path):
-    p = str(tmp_path / "t3")
-    df = _mk(spark, 0, 50)
-    df.write.format("txtable").option("statsColumns", "k").mode("append").save(p)
-    t = TxTable(spark, p)
-    assert t.read().count() == 50
-    assert t.snapshot().stats_columns == ["k"]
-    # stats computed task-side, no post-write job: zone maps present
-    assert all(
-        m["stats"]["k"][0] is not None
-        for m in t.snapshot().files.values()
-        if m["numRecords"]
-    )
-    _mk(spark, 50, 80).write.format("txtable").mode("append").save(p)
-    assert sorted(r["k"] for r in t.read().collect()) == list(range(80))
-    _mk(spark, 500, 510).write.format("txtable").mode("overwrite").save(p)
-    assert sorted(r["k"] for r in t.read().collect()) == list(range(500, 510))
-    # history shows the writer protocol mapped onto log operations
-    assert [h["operation"] for h in t.history()] == [
-        "CREATE",
-        "APPEND",
-        "OVERWRITE",
-    ]
-    # schema mismatch rejected before any task runs
-    with pytest.raises(Exception):
-        spark.range(3).write.format("txtable").mode("append").save(p)
-    # native reader interop: TxTable sees writer-path commits
-    assert t.read(version=1).count() == 80
-
-
-def test_format_write_interops_with_native_paths(spark, tmp_path):
-    """Writer-path files flow through native DELETE/MERGE/OPTIMIZE and
-    the format reader sees native commits — one log, two APIs."""
-    p = str(tmp_path / "t4")
-    _mk(spark, 0, 100).coalesce(1).write.format("txtable").option(
-        "statsColumns", "k"
-    ).mode("append").save(p)
-    t = TxTable(spark, p)
-    t.delete(F.col("k") < 10, strategy="mor")
-    got = spark.read.format("txtable").load(p)
-    assert sorted(r["k"] for r in got.collect()) == list(range(10, 100))
-    t.optimize(target_file_rows=50, sort_by=["k"])
-    assert spark.read.format("txtable").load(p).count() == 90
-
-
-def test_batch_change_feed_read(spark, tmp_path):
-    """readChangeFeed=true on the batch reader: per-commit row-level
-    events over a version range (Delta's table_changes), same
-    partition taxonomy as the streaming feed — and per-commit
-    semantics, so an insert later deleted in the range yields BOTH
-    events, unlike the endpoint-diff change_feed."""
-    p = str(tmp_path / "cdc_b")
-    t = TxTable.create(spark, p, _mk(spark, 0, 20).coalesce(1))       # v0
-    t.delete(F.col("k") < 3, strategy="mor")                          # v1
-    t.update(F.col("k") == 5, {"v": F.lit(999).cast("long")})         # v2
-    t.optimize(target_file_rows=1000)                                 # v3
-    t.append(_mk(spark, 100, 103).coalesce(1))                        # v4
-    t.delete(F.col("k") == 100)                                       # v5
-
-    def feed(**opts):
-        r = (
-            spark.read.format("txtable")
-            .option("readChangeFeed", "true")
-            .option("key", "k")
-        )
-        for kk, vv in opts.items():
-            r = r.option(kk, vv)
-        return {
-            (row["k"], row["_change_type"], row["_commit_version"])
-            for row in r.load(p).collect()
-        }
-
-    ev = feed()
-    assert {(k, "insert", 0) for k in range(20)} <= ev
-    assert {(k, "delete", 1) for k in (0, 1, 2)} <= ev
-    assert (5, "update_preimage", 2) in ev and (5, "update_postimage", 2) in ev
-    assert not any(cv == 3 for _k, _c, cv in ev)  # OPTIMIZE silent
-    # per-commit: k=100 appears as BOTH its insert and its delete
-    assert (100, "insert", 4) in ev and (100, "delete", 5) in ev
-    # range selection
-    assert feed(startingVersion="4", endingVersion="4") == {
-        (100, "insert", 4), (101, "insert", 4), (102, "insert", 4),
-    }
-    assert feed(startingVersion="5") == {(100, "delete", 5)}
-    # writer-CDC table produces the same events through the batch API
-    p2 = str(tmp_path / "cdc_b2")
-    t2 = TxTable.create(
-        spark, p2, _mk(spark, 0, 20).coalesce(1), change_data_feed=True
-    )
-    t2.delete(F.col("k") < 3, strategy="mor")
-    r2 = (
-        spark.read.format("txtable")
-        .option("readChangeFeed", "true")
-        .option("key", "k")
-        .option("startingVersion", "1")
-        .load(p2)
-    )
-    assert {
-        (row["k"], row["_change_type"]) for row in r2.collect()
-    } == {(0, "delete"), (1, "delete"), (2, "delete")}
+    spark.dataSource.register(TxTableStreamSource)
 
 
 def test_table_changes_native_parity_and_fallback(spark, tmp_path):
-    """r14 (VERDICT r13 #6): TxTable.table_changes_native — the
-    JVM-only CDC feed for CDF-table windows. Multiset-identical
-    (values + dtypes) to the batch reader over a blind-append +
-    change-file history; no Python source node in its plan; precise
-    fallback (None) when any commit in the window needs the general
-    taxonomy; empty typed frame for an all-silent window."""
+    """TxTable.table_changes_native — the JVM-only per-commit CDC feed.
+    Multiset-identical (values + dtypes) to the txtable_stream change
+    feed over a blind-append + change-file history; no Python source
+    node in its plan; a named ValueError for every window it cannot
+    serve; empty typed frame for an all-silent window."""
     p = str(tmp_path / "cdc_nat")
     t = TxTable.create(
         spark, p, _mk(spark, 0, 20).coalesce(1), change_data_feed=True
@@ -208,20 +51,16 @@ def test_table_changes_native_parity_and_fallback(spark, tmp_path):
     )                                                                 # v5
 
     nat = t.table_changes_native(0)
-    assert nat is not None
-    reader = (
-        spark.read.format("txtable")
-        .option("readChangeFeed", "true")
-        .option("key", "k")
-        .option("startingVersion", "1")
-        .load(p)
-    )
+    opts = {"readChangeFeed": "true", "key": "k", "startingVersion": "1"}
+    stream = spark.readStream.format("txtable_stream").options(**opts).load(p)
     cols = sorted(nat.columns)
-    assert cols == sorted(reader.columns)
-    assert sorted(map(tuple, nat.select(*cols).collect())) == sorted(
-        map(tuple, reader.select(*cols).collect())
-    )
-    assert dict(nat.dtypes) == dict(reader.dtypes)
+    assert cols == sorted(stream.columns)
+    streamed = [
+        tuple(r[c] for c in cols)
+        for r in _drain(spark, p, str(tmp_path / "cdc_nat_ck"), **opts)
+    ]
+    assert sorted(map(tuple, nat.select(*cols).collect())) == sorted(streamed)
+    assert dict(nat.dtypes) == dict(stream.dtypes)
     # no Python anywhere: the whole feed is parquet scans + unions
     plan = nat._jdf.queryExecution().executedPlan().toString()
     assert "PythonDataSource" not in plan and "EvalPython" not in plan
@@ -232,24 +71,36 @@ def test_table_changes_native_parity_and_fallback(spark, tmp_path):
     silent = t.table_changes_native(2, 3)
     assert silent.count() == 0 and sorted(silent.columns) == cols
 
-    # fallback: a non-CDF table's DML needs the diff taxonomy
+    # a non-CDF table's DML has no change files to scan
     p2 = str(tmp_path / "cdc_nat2")
     t2 = TxTable.create(spark, p2, _mk(spark, 0, 10).coalesce(1))
     t2.delete(F.col("k") < 2)
-    assert t2.table_changes_native(0) is None
-    # ... but its blind-append-only window is still native-readable
+    with pytest.raises(ValueError, match="DML without change files"):
+        t2.table_changes_native(0)
+    # ... but its blind-append-only window is still served
     t2.append(_mk(spark, 50, 52).coalesce(1))
     win = t2.table_changes_native(1)
     assert {(r["k"], r["_change_type"]) for r in win.collect()} == {
         (50, "insert"), (51, "insert"),
     }
-    # column-mapped tables always fall back
+    # column-mapped tables are never served
     t2.rename_column("v", "val")
-    assert t2.table_changes_native(1) is None
+    with pytest.raises(ValueError, match="column-mapped"):
+        t2.table_changes_native(1)
 
-    # a window reaching below an expire_log cut falls back (the
-    # reader raises the pointed retention error) instead of silently
-    # skipping the expired commits
+    # a schema change inside the window is never served
+    p4 = str(tmp_path / "cdc_nat4")
+    t4 = TxTable.create(spark, p4, _mk(spark, 0, 5).coalesce(1))
+    t4.append(
+        _mk(spark, 5, 7).withColumn("w", F.lit(1).cast("long")),
+        merge_schema=True,
+    )
+    with pytest.raises(ValueError, match="changes the schema"):
+        t4.table_changes_native(0)
+
+    # a window reaching below an expire_log cut raises instead of
+    # silently skipping the expired commits, and names the feeds that
+    # serve everything else
     p3 = str(tmp_path / "cdc_nat3")
     t3 = TxTable.create(spark, p3, _mk(spark, 0, 5).coalesce(1))
     for i in range(12):  # past the checkpoint interval
@@ -257,116 +108,25 @@ def test_table_changes_native_parity_and_fallback(spark, tmp_path):
     t3.expire_log()
     cut = t3._versions()[0]
     assert cut > 1
-    # (cut-2, ...] needs the expired commit cut-1 -> fallback;
+    # (cut-2, ...] needs the expired commit cut-1 -> raises;
     # (cut-1, ...] is fully inside surviving history -> served
-    assert t3.table_changes_native(cut - 2) is None
+    with pytest.raises(ValueError, match="expire_log cut.*change_feed"):
+        t3.table_changes_native(cut - 2)
     assert t3.table_changes_native(cut - 1).count() > 0
 
 
 def test_file_uri_paths_accepted(spark, tmp_path):
     """Every binding normalizes file: URIs — the spelling SQL-facing
     layers hand to sources — to plain paths (the native API's form).
-    (CREATE TABLE ... USING txtable itself is not supported: Spark
-    constructs Python DataSource READERS for catalog tables with empty
-    options; register a temp view over read.format("txtable") for a
-    SQL surface.)"""
+    The SQL surface is a temp view over the native read."""
     p = str(tmp_path / "uri")
-    t = TxTable.create(spark, p, _mk(spark, 0, 10).coalesce(1))
+    TxTable.create(spark, p, _mk(spark, 0, 10).coalesce(1))
     uri = "file:" + p
-    assert TxTable(spark, uri).read().count() == 10
-    got = spark.read.format("txtable").load(uri)
+    got = TxTable(spark, uri).read()
     assert sorted(r["k"] for r in got.collect()) == list(range(10))
-    got.createOrReplaceTempView("uri_tx")  # the supported SQL spelling
+    got.createOrReplaceTempView("uri_tx")
     assert spark.sql("SELECT count(*) AS n FROM uri_tx").collect()[0]["n"] == 10
-    cdc = (
-        spark.read.format("txtable")
-        .option("readChangeFeed", "true")
-        .option("key", "k")
-        .load(uri)
+    cdc = _drain(
+        spark, uri, str(tmp_path / "uri_ck"), readChangeFeed="true", key="k"
     )
-    assert cdc.count() == 10  # v0 inserts
-
-
-def test_null_count_stats_prune_is_null_filters(spark, tmp_path):
-    """r8: per-file nullCounts (recorded in the same one-pass stats
-    job) let IS NULL open only null-bearing files and IS NOT NULL skip
-    all-NULL files; files without the stat conservatively stay, and a
-    deletion vector never un-prunes (physical counts only shrink)."""
-    from pyspark.sql.datasource import IsNotNull, IsNull
-
-    p = str(tmp_path / "nc1")
-    with_nulls = spark.createDataFrame(
-        [(1, None), (2, 20), (3, None)], "k long, v long"
-    ).coalesce(1)
-    no_nulls = spark.createDataFrame(
-        [(10, 100), (11, 110)], "k long, v long"
-    ).coalesce(1)
-    all_nulls = spark.createDataFrame(
-        [(20, None), (21, None)], "k long, v long"
-    ).coalesce(1)
-    t = TxTable.create(spark, p, with_nulls, stats_columns=["k", "v"])
-    t.append(no_nulls)
-    t.append(all_nulls)
-
-    def n_parts(filters):
-        r = TxTableBatchReader(t.snapshot().schema, {"path": p})
-        r.pushFilters(filters)
-        return len(r.partitions())
-
-    assert n_parts([IsNull(("v",))]) == 2       # with_nulls + all_nulls
-    assert n_parts([IsNotNull(("v",))]) == 2    # with_nulls + no_nulls
-    assert n_parts([IsNull(("k",))]) == 0       # k never NULL anywhere
-    assert n_parts([IsNotNull(("k",))]) == 3
-    # end-to-end row-exactness after Spark re-applies the filter
-    got = (
-        spark.read.format("txtable").load(p).filter(F.col("v").isNull())
-    )
-    assert sorted(r["k"] for r in got.collect()) == [1, 3, 20, 21]
-    got2 = (
-        spark.read.format("txtable").load(p).filter(F.col("v").isNotNull())
-    )
-    assert sorted(r["k"] for r in got2.collect()) == [2, 10, 11]
-    # format-writer shards carry the stat too
-    p2 = str(tmp_path / "nc2")
-    with_nulls.write.format("txtable").option(
-        "statsColumns", "v"
-    ).mode("append").save(p2)
-    no_nulls.write.format("txtable").mode("append").save(p2)
-    t2 = TxTable(spark, p2)
-    ncs = sorted(
-        (m.get("nullCounts") or {}).get("v")
-        for m in t2.snapshot().files.values()
-    )
-    assert ncs == [0, 2]
-    r = TxTableBatchReader(t2.snapshot().schema, {"path": p2})
-    r.pushFilters([IsNull(("v",))])
-    assert len(r.partitions()) == 1
-
-
-def test_timestamp_as_of_option_time_travels(spark, tmp_path):
-    """format('txtable').option('timestampAsOf', epoch_ms): resolved by
-    the at-or-before rule, mutually exclusive with 'version'."""
-    p = str(tmp_path / "ts1")
-    t = TxTable.create(spark, p, _mk(spark, 0, 10).coalesce(1))
-    t.append(_mk(spark, 10, 20).coalesce(1))
-    hist = {h["version"]: h["timestamp"] for h in t.history()}
-    got = (
-        spark.read.format("txtable")
-        .option("timestampAsOf", str(hist[0]))
-        .load(p)
-    )
-    assert got.count() == 10
-    got2 = (
-        spark.read.format("txtable")
-        .option("timestampAsOf", str(hist[1] + 10_000))
-        .load(p)
-    )
-    assert got2.count() == 20
-    with pytest.raises(Exception, match="not both"):
-        (
-            spark.read.format("txtable")
-            .option("timestampAsOf", str(hist[0]))
-            .option("version", "1")
-            .load(p)
-            .count()
-        )
+    assert len(cdc) == 10  # v0 inserts

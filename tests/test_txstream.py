@@ -528,19 +528,6 @@ def test_rate_limit_and_starting_timestamp(spark, tmp_path):
             schema,
             {"path": p, "startingversion": "1", "startingtimestamp": "5"},
         )
-    # batch CDC reader honours startingTimestamp through the delegate
-    spark.dataSource.register(__import__(
-        "cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.txbatch",
-        fromlist=["TxTableBatchSource"],
-    ).TxTableBatchSource)
-    got = (
-        spark.read.format("txtable")
-        .option("readChangeFeed", "true")
-        .option("key", "k")
-        .option("startingTimestamp", str(hist[3]))
-        .load(p)
-    )
-    assert sorted(r["k"] for r in got.collect()) == [30, 31, 40, 41]
 
 
 def test_rate_limit_restart_never_regresses_offset(spark, tmp_path):

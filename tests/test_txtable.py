@@ -260,8 +260,21 @@ def test_crashed_write_is_invisible_and_vacuumed(spark, tmp_path):
 
 
 def test_checkpoint_bounds_log_replay(spark, tmp_path):
+    import json
+
     p = str(tmp_path / "t9")
     t = TxTable.create(spark, p, _mk(spark, 0, 10).coalesce(1))
+    # older writers recorded per-file nullCounts in each add action: a
+    # log that still carries them loads, replays and checkpoints as usual
+    v0 = os.path.join(p, "_txlog", f"{0:020d}.json")
+    with open(v0) as f:
+        actions = [json.loads(line) for line in f]
+    for a in actions:
+        if "add" in a:
+            a["add"]["nullCounts"] = {"k": 0, "v": 0}
+    with open(v0, "w") as f:
+        f.writelines(json.dumps(a) + "\n" for a in actions)
+    assert all("nullCounts" not in m for m in t.snapshot().files.values())
     for i in range(CHECKPOINT_INTERVAL + 2):
         t.append(_mk(spark, 10 * (i + 1), 10 * (i + 2)).coalesce(1))
     cps = t._checkpoints()
@@ -1193,13 +1206,7 @@ def test_check_constraints_enforced_on_every_write_path(spark, tmp_path):
 def test_check_constraints_alter_lifecycle_and_batch_writer(spark, tmp_path):
     """add_check_constraint validates EXISTING data before publishing
     (violating history rejects it), drop_check_constraint removes
-    enforcement, both survive checkpoints, and the format('txtable')
-    batch writer refuses constrained tables instead of silently
-    skipping enforcement."""
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.txbatch import (
-        TxTableBatchSource,
-    )
-
+    enforcement, and both survive checkpoints."""
     p = str(tmp_path / "ck2")
     t = TxTable.create(spark, p, _mk(spark, 0, 10).coalesce(1))
     # existing data violates -> rejected, nothing committed
@@ -1217,10 +1224,6 @@ def test_check_constraints_alter_lifecycle_and_batch_writer(spark, tmp_path):
     assert TxTable(spark, p).snapshot().check_constraints == {
         "v_nonneg": "v >= 0"
     }
-    # batch writer refuses the constrained table
-    spark.dataSource.register(TxTableBatchSource)
-    with pytest.raises(Exception, match="cannot\\s+enforce"):
-        _mk(spark, 900, 905).write.format("txtable").mode("append").save(p)
     # drop -> writes flow again (including previously-violating rows)
     t.drop_check_constraint("v_nonneg")
     with pytest.raises(ValueError, match="no CHECK constraint"):
@@ -1443,27 +1446,6 @@ def test_bloom_skipping_survives_rename(spark, tmp_path):
     assert 1 <= len(keep) < len(t.snapshot().files)
     got = t.read_point("label", "42")
     assert got.count() == 1 and got.first()["k"] == 42
-
-
-def test_batch_datasource_reads_renamed_table(spark, tmp_path):
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.txbatch import (
-        TxTableBatchSource,
-    )
-
-    p = str(tmp_path / "cm7")
-    t = TxTable.create(spark, p, _mk(spark, 0, 25), stats_columns=["v"])
-    t.rename_column("v", "val")
-    t.append(
-        spark.range(25, 30).select(
-            F.col("id").alias("k"), F.col("id").cast("long").alias("val")
-        )
-    )
-    spark.dataSource.register(TxTableBatchSource)
-    got = spark.read.format("txtable").load(p)
-    assert got.columns == ["k", "val"]
-    assert got.count() == 30
-    # zone-map pushdown still prunes on the renamed column
-    assert got.filter(F.col("val") >= 25).count() == 5
 
 
 def test_optimize_reclaims_dropped_column_bytes(spark, tmp_path):
@@ -1695,17 +1677,6 @@ def test_generated_column_blocks_rename_drop_and_batch_writer(spark, tmp_path):
         t.rename_column("bucket", "b2")     # the generated col itself
     t.drop_column("v")                       # unrelated col still drops
     assert t.read().columns == ["k", "bucket"]
-    # the Arrow batch writer refuses generated tables (cannot evaluate
-    # SQL exprs executor-side) — same boundary as CHECK constraints
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.txbatch import (
-        TxTableBatchSource,
-    )
-
-    spark.dataSource.register(TxTableBatchSource)
-    with pytest.raises(Exception, match="generated"):
-        spark.range(3).select(
-            F.col("id").alias("k"), F.expr("id div 10").alias("bucket")
-        ).write.format("txtable").mode("append").save(str(tmp_path / "g4"))
 
 
 # ---------------------------------------------------------------------------
@@ -2065,19 +2036,3 @@ def test_clone_at_timestamp_matches_version_clone(spark, tmp_path):
     assert c_ts.history()[0]["sourceVersion"] == 0
     with pytest.raises(ValueError, match="not both"):
         t.clone(str(tmp_path / "tc_c"), version=1, as_of_timestamp_ms=hist[0])
-
-
-def test_clone_readable_through_batch_datasource(spark, tmp_path):
-    from cincinnati_police_calls_for_service_etl_using_python_dask_spark.sources.txbatch import (
-        TxTableBatchSource,
-    )
-
-    spark.dataSource.register(TxTableBatchSource)
-    src = str(tmp_path / "clsrc5")
-    t = TxTable.create(spark, src, _mk(spark, 0, 15), stats_columns=["k"])
-    t.delete(F.col("k") < 3, strategy="mor")   # absolute dv reference
-    c = t.clone(str(tmp_path / "clone5"))
-    got = sorted(
-        r["k"] for r in spark.read.format("txtable").load(c.path).collect()
-    )
-    assert got == list(range(3, 15))

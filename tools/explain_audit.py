@@ -1043,8 +1043,7 @@ def main() -> None:
             "protocol uniquely provides, so it serves as native "
             "parquet scans (zone-map file prune driver-side, DV mask "
             "one broadcast anti-join, range pushed to the scan). "
-            "Python-protocol reads stay gated via "
-            "txbatch_change_feed_events + tests/test_txbatch.py",
+            "The Python batch DataSource has since been deleted",
         ),
         (
             "ann_ivf_filtered_topk",

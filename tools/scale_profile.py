@@ -178,12 +178,12 @@ Nothing in the suite's ratio is a data-proportional defect.
 
 The dominant member, ivm_join (0.80 s of the suite's ~1.7 s warm
 wall), was paying its fixed cost TWICE over: each refresh read two
-CDC feeds through format("txtable"), and every Python-DataSource read
-carries the flat ~0.3 s planning + worker spin-up the txbatch_read
-panel row measures. r14 adds TxTable.table_changes_native — a
+CDC feeds through the Python batch DataSource (since deleted), and
+each such read carried a flat ~0.3 s planning + worker spin-up (the
+txbatch_read panel row). r14 adds TxTable.table_changes_native — a
 JVM-only per-commit CDC feed for windows made of blind appends +
 writer change files (exactly what a change_data_feed=True table
-produces) with a reader fallback for the general taxonomy — and the
+produces; other windows raise a named ValueError) — and the
 fold now reads both feeds as ordinary parquet scans:
 **ivm_join 0.80 → 0.35 s warm** (same oracle, parity-tested against
 the reader). Post-change member walls (sf0.1, same window):
@@ -441,9 +441,9 @@ def main() -> None:
         "r14 #3) serves the snapshot range read as native parquet scans",
         "(zone-map prune driver-side, broadcast anti-join DV mask) and",
         "the row now reads ~0.06 s at sf0.01/sf0.1 — construction (the",
-        "format-API write + DELETE) still dominates the sf0.001 cold",
-        "column. The Python-protocol read cost remains measured by the",
-        "txbatch_change_feed_events row, the binding that still needs it.",
+        "write + DELETE) still dominates the sf0.001 cold column. The",
+        "Python batch DataSource is deleted: txbatch_change_feed_events",
+        "reads the writer change files as native parquet scans too.",
         "",
         "text_profile_docs' r12 COMPARE move (1.23x -> 1.63x on an",
         "unchanged PLANS.md-pinned zero-exchange single-codegen-scan",
